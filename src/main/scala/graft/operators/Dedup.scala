@@ -46,17 +46,4 @@ object Dedup {
       .agg(max_by(struct(payload.map(col): _*), struct(ord: _*)).as("__best"))
       .select(keys.map(col) ++ payload.map(c => col(s"__best.$c").as(c)): _*)
   }
-
-  /** Exact duplicate removal on a projection (reference: bronze.py:111
-    * `select("_id").dropDuplicates()`). Map-side partial aggregation makes
-    * this a single shuffle of distinct keys, not of all rows.
-    */
-  def distinctKeys(keys: String*): DataFrame => DataFrame =
-    _.select(keys.map(col): _*).dropDuplicates()
-
-  /** True iff `key` is unique within df (reference guard: bronze.py:101-103).
-    * Two jobs; both are count-only aggregations with partial combine.
-    */
-  def isUniqueOn(df: DataFrame, key: String): Boolean =
-    df.select(key).distinct().count() == df.count()
 }

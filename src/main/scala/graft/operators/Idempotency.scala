@@ -22,10 +22,4 @@ object Idempotency {
     val existingKeys = existing.select(keys.map(col): _*).dropDuplicates()
     batch.join(existingKeys, keys, "left_anti")
   }
-
-  /** EXCEPT-on-key as a set operation, semantically equal to newKeysOnly
-    * on the key projection (SURVEY.md §2.7).
-    */
-  def exceptKeys(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame =
-    a.select(keys.map(col): _*).exceptAll(b.select(keys.map(col): _*)).dropDuplicates()
 }

@@ -1,22 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Text standardization / validation operators.
-  *
-  * Re-expresses the reference's bronze/silver column standardization
-  * (reference: notebooks/bronze.py:84-95, notebooks/silver.py:38-49) as
-  * composable `DataFrame => DataFrame` functions. Every expression here is
-  * a Spark built-in, so the whole block stays inside WholeStageCodegen and
-  * pushes no work to the driver — the cost at 100 TB is one narrow map
-  * over the scan, no shuffle.
+/** Text standardization operators (reference: notebooks/bronze.py:84-95,
+  * notebooks/silver.py:38-49). The stages inline their upper/trim, regex
+  * flag and null-out steps as plain Column expressions; what lives here is
+  * the one expression two sides must share. It is made of Spark built-ins,
+  * so it stays inside WholeStageCodegen — one narrow map, no shuffle.
   */
 object Standardize {
-
-  /** upper(trim(col)) in place, for each named column. */
-  def upperTrim(cols: String*): DataFrame => DataFrame = df =>
-    cols.foldLeft(df)((d, c) => d.withColumn(c, upper(trim(col(c)))))
 
   /** Canonical join-key normalization: upper/trim then strip non-alphanumerics
     * (reference: notebooks/silver.py:49, sql/breed_mapping.py:583). Both the
@@ -25,23 +18,4 @@ object Standardize {
     */
   def normalizedKey(c: Column): Column =
     regexp_replace(upper(trim(c)), "[^A-Z0-9]", "")
-
-  def withNormalizedKey(src: String, dst: String): DataFrame => DataFrame =
-    _.withColumn(dst, normalizedKey(col(src)))
-
-  /** Regex validity flag (reference: FSA check `^[A-Z][0-9][A-Z]$`,
-    * notebooks/bronze.py:83,91).
-    */
-  def withRegexFlag(src: String, pattern: String, flag: String): DataFrame => DataFrame =
-    df => df.withColumn(flag, col(src).isNotNull && col(src).rlike(pattern))
-
-  /** Null-out values that fail a regex (reference: notebooks/silver.py:43). */
-  def nullOutInvalid(src: String, pattern: String): DataFrame => DataFrame =
-    df => df.withColumn(src, when(col(src).rlike(pattern), col(src)))
-
-  /** Whitelist predicate (reference: ANIMAL_TYPE IN (DOG, CAT),
-    * notebooks/bronze.py:105).
-    */
-  def whitelist(c: String, allowed: Seq[String]): DataFrame => DataFrame =
-    _.filter(col(c).isin(allowed: _*))
 }

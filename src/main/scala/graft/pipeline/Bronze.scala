@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Idempotency}
 import Model._
 
 /** Raw CSV → Bronze (reference: notebooks/bronze.py lifecycle, SURVEY.md
@@ -11,10 +10,14 @@ import Model._
   * ledger, explicit-schema CSV scan, standardization, hard guards,
   * anti-join idempotency, partitioned append.
   *
-  * Scale notes: the only shuffle is the anti-join against existing bronze
-  * ids (key projection only); the write partitions by (Year, ANIMAL_TYPE)
-  * so downstream partition pruning is free. Everything else is a narrow
-  * codegen'd map over the CSV scan.
+  * Scale notes: the shuffles are the guard aggregate's distinct ids and the
+  * anti-join against existing bronze ids (key projection only); the write
+  * partitions by (Year, ANIMAL_TYPE) so downstream partition pruning is
+  * free. Everything else is a narrow codegen'd map over the CSV scan.
+  * Actions per run: the date probe, the ledger probe (once the ledger
+  * exists), then `GuardedAppend`'s guard aggregate and count, the append
+  * and the ledger write. A ledger hit stops after the two probes; an empty
+  * batch writes nothing.
   */
 object Bronze {
 
@@ -53,24 +56,15 @@ object Bronze {
     // 6. standardize (bronze.py:84-95)
     val std = standardize(raw, cfg)
 
-    // 7. hard guards (bronze.py:98-107) — abort the run, never load bad data
-    require(std.filter(col("_id").isNull).isEmpty, "guard: null _id in batch")
-    require(Dedup.isUniqueOn(std, "_id"), "guard: duplicate _id within batch")
-    require(std.filter(!col("ANIMAL_TYPE").isin(AnimalTypes: _*)).isEmpty,
+    // 7-10. hard guards, anti-join vs current bronze snapshot, empty-batch
+    // short-circuit, partitioned append (bronze.py:98-115) — abort the
+    // run, never load bad data
+    val n = GuardedAppend(spark, std, cfg.bronzeDir,
+      "guard: null _id in batch", "guard: duplicate _id within batch",
       s"guard: ANIMAL_TYPE outside ${AnimalTypes.mkString("{", ",", "}")}")
+    if (n == 0) return SkippedEmptyBatch
 
-    // 8. insert-only anti-join vs current bronze snapshot (bronze.py:111-112)
-    val fresh =
-      if (tableExists(spark, cfg.bronzeDir))
-        Idempotency.newKeysOnly(std, spark.read.parquet(cfg.bronzeDir), Seq("_id"))
-      else std
-
-    // 9. empty-batch short-circuit (bronze.py:114-115)
-    if (fresh.isEmpty) return SkippedEmptyBatch
-
-    // 10-11. partitioned append + ledger
-    val n = fresh.count()
-    fresh.write.partitionBy(PartitionCols: _*).mode("append").parquet(cfg.bronzeDir)
+    // 11. ledger
     LoadControl.record(spark, cfg.controlDir, Dataset, cfg.ingestionDate, cfg.now)
     Loaded(n)
   }
@@ -94,8 +88,4 @@ object Bronze {
     Seq(s).toDF("d").select(try_to_date(col("d"), "yyyy-MM-dd"))
       .first().get(0) != null
   }
-
-  /** Object-store-safe existence probe (Hadoop FS, not java.io.File). */
-  private[pipeline] def tableExists(spark: SparkSession, dir: String): Boolean =
-    graft.sources.Sources.dirNonEmpty(spark, dir)
 }

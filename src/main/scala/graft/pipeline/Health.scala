@@ -9,8 +9,9 @@ import Model._
 /** Health views — the continuously-queryable invariants of SURVEY.md §5.2
   * (reference: v_bronze_health notebooks/bronze.py:151-158,
   * v_silver_health silver.py:166-175, runbook validation SQL
-  * docs/runbook.md:83-99). Single global aggregates: one job, partial
-  * combine, negligible at any scale.
+  * docs/runbook.md:83-99). Single global aggregates with partial combine,
+  * negligible at any scale. Actions per run: one per collected health
+  * view, and one for `validate`.
   */
 object Health {
 
@@ -43,18 +44,19 @@ object Health {
     * healthy table.
     */
   def validate(silver: DataFrame): Map[String, Boolean] = {
-    val h = silverHealth(silver).first()
-    val dupProbe = silver.groupBy("_id").count().filter(col("count") > 1).isEmpty
-    // null-safe <=>: Silver's bare rlike leaves FSA_VALID NULL on null-FSA
-    // rows; a null-unsafe =!= would silently drop those rows from the probe
-    val fsaConsistent = silver
-      .filter(!(col("FSA_VALID") <=> col("FSA").isNotNull)).isEmpty
-    val typesOk = silver
-      .filter(!col("ANIMAL_TYPE").isin(AnimalTypes: _*)).isEmpty
+    val id = col("_id")
+    val h = silver.agg(
+      count(lit(1)), count(id), countDistinct(id),
+      // null-safe <=>: a NULL FSA_VALID must count as inconsistent, not
+      // silently drop out of the probe as under a null-unsafe =!=
+      count(when(!(col("FSA_VALID") <=> col("FSA").isNotNull), 1)),
+      count(when(!col("ANIMAL_TYPE").isin(AnimalTypes: _*), 1))).first()
+    val (rows, ids, distinctIds) = (h.getLong(0), h.getLong(1), h.getLong(2))
     Map(
-      "ids_unique" -> (h.getAs[Long]("total_rows") == h.getAs[Long]("distinct_ids")),
-      "no_duplicate_ids" -> dupProbe,
-      "fsa_flag_consistent" -> fsaConsistent,
-      "animal_type_whitelisted" -> typesOk)
+      "ids_unique" -> (rows == distinctIds),
+      // a GROUP BY _id probe: all null ids fall in one group
+      "no_duplicate_ids" -> (ids == distinctIds && rows - ids <= 1),
+      "fsa_flag_consistent" -> (h.getLong(3) == 0),
+      "animal_type_whitelisted" -> (h.getLong(4) == 0))
   }
 }

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources
+
 /** Run ledger (reference: notebooks/bronze.py:41-56 `pets.core.load_control`):
   * whole-run skip detection for incremental batch ingestion. Plain parquet
   * append — the reference's own idempotency never needs ACID because the
@@ -12,15 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object LoadControl {
 
-  private def exists(spark: SparkSession, dir: String): Boolean =
-    graft.sources.Sources.dirNonEmpty(spark, dir)
-
   /** True iff (dataset, ingestionDate) was already loaded. Cheap probe —
     * the ledger has one row per run (reference uses limit(1).count()).
     */
   def alreadyLoaded(spark: SparkSession, dir: String, dataset: String,
       ingestionDate: String): Boolean =
-    exists(spark, dir) && !spark.read.parquet(dir)
+    Sources.dirNonEmpty(spark, dir) && !spark.read.parquet(dir)
       .filter(col("dataset") === dataset &&
         col("ingestion_date") === to_date(lit(ingestionDate)))
       .isEmpty

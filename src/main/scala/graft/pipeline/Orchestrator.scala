@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Sources
+
 /** Daily pipeline runner (reference: Workflow/Daily_Licensed_Pets.yaml —
   * a 4-task DAG with per-task retries and one shared `ingestion_date`
   * parameter; the fetch-to-raw task is external to the engine).
@@ -76,32 +78,25 @@ object Orchestrator {
       mapping: Option[DataFrame] = None,
       sleep: Long => Unit = Thread.sleep): RunReport = {
     val dim = mapping.getOrElse(BreedMapping.referenceDim(spark))
+    def skipped(done: StageResult*) = RunReport(done ++
+      Seq("raw_to_bronze", "bronze_to_silver", "silver_to_gold").drop(done.size)
+        .map(StageResult(_, 0, "skipped")))
 
     val (bronzeRes, bronzeOk) =
       runStage("raw_to_bronze", BronzeRetry, sleep)(Bronze.run(spark, cfg))
-    if (bronzeOk.isEmpty)
-      return RunReport(Seq(bronzeRes,
-        StageResult("bronze_to_silver", 0, "skipped"),
-        StageResult("silver_to_gold", 0, "skipped")))
     // bronze can legitimately skip before the table's first load (no CSV
     // drop yet) — silver would otherwise fail reading a missing dir and
     // burn both retries on a no-op day
-    if (!Bronze.tableExists(spark, cfg.bronzeDir))
-      return RunReport(Seq(bronzeRes,
-        StageResult("bronze_to_silver", 0, "skipped"),
-        StageResult("silver_to_gold", 0, "skipped")))
+    if (bronzeOk.isEmpty || !Sources.dirNonEmpty(spark, cfg.bronzeDir))
+      return skipped(bronzeRes)
 
     val (silverRes, silverOk) =
       runStage("bronze_to_silver", SilverRetry, sleep)(Silver.run(spark, cfg, dim))
-    if (silverOk.isEmpty)
-      return RunReport(Seq(bronzeRes, silverRes,
-        StageResult("silver_to_gold", 0, "skipped")))
-
     // a day can legitimately produce no silver rows (empty batch) before
     // the table's first load — gold then has nothing to register
-    if (!Bronze.tableExists(spark, cfg.silverDir))
-      return RunReport(Seq(bronzeRes, silverRes,
-        StageResult("silver_to_gold", 0, "skipped")))
+    if (silverOk.isEmpty || !Sources.dirNonEmpty(spark, cfg.silverDir))
+      return skipped(bronzeRes, silverRes)
+
     val (goldRes, _) = runStage("silver_to_gold", GoldRetry, sleep) {
       Gold.registerAll(spark.read.parquet(cfg.silverDir))
     }

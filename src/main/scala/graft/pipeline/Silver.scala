@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Enrich, Idempotency, Standardize}
+import graft.operators.{Dedup, Enrich, Standardize}
 import Model._
 
 /** Bronze → Silver (reference: notebooks/silver.py:30-135, SURVEY.md §3.1):
@@ -14,8 +14,11 @@ import Model._
   *
   * Scale notes: the bronze scan is pruned to one ingestion_date (partition
   * filter pushed to the parquet dirs); the mapping dim is tiny (~560 rows)
-  * so the enrichment join is broadcast — no shuffle; the only shuffles are
-  * the dedup window on _id and the anti-join, both on the narrow key.
+  * so the enrichment join is broadcast — no shuffle; the other shuffles are
+  * the dedup window on _id, the guard aggregate's distinct ids and the
+  * anti-join, all on the narrow key. Actions per run: `GuardedAppend`'s
+  * guard aggregate and count, then the append; a re-run of a loaded day
+  * counts zero new rows and writes nothing.
   */
 object Silver {
 
@@ -34,25 +37,11 @@ object Silver {
     val bronze = spark.read.parquet(cfg.bronzeDir)
       .filter(col("ingestion_date") === to_date(lit(cfg.ingestionDate)))
 
-    val silverBatch = transform(bronze, mapping, cfg)
-
-    // guards (silver.py:113-121) — same hard asserts as bronze
-    require(silverBatch.filter(col("_id").isNull).isEmpty, "guard: null _id")
-    require(Dedup.isUniqueOn(silverBatch, "_id"), "guard: duplicate _id post-dedup")
-    require(silverBatch.filter(!col("ANIMAL_TYPE").isin(AnimalTypes: _*)).isEmpty,
+    // guards + anti-join vs current silver snapshot (silver.py:113-125)
+    val n = GuardedAppend(spark, transform(bronze, mapping, cfg), cfg.silverDir,
+      "guard: null _id", "guard: duplicate _id post-dedup",
       "guard: ANIMAL_TYPE outside whitelist")
-
-    // anti-join vs current silver snapshot (silver.py:124-125)
-    val fresh =
-      if (Bronze.tableExists(spark, cfg.silverDir))
-        Idempotency.newKeysOnly(silverBatch, spark.read.parquet(cfg.silverDir), Seq("_id"))
-      else silverBatch
-
-    if (fresh.isEmpty) return SkippedEmptyBatch
-
-    val n = fresh.count()
-    fresh.write.partitionBy(PartitionCols: _*).mode("append").parquet(cfg.silverDir)
-    Loaded(n)
+    if (n == 0) SkippedEmptyBatch else Loaded(n)
   }
 
   /** The pure batch transform (testable without IO) — reference:

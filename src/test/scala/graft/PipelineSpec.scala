@@ -3,12 +3,18 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerSync
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline._
 import graft.pipeline.Model.PipelineConfig
+import graft.sources.Sources
 
 /** End-to-end pipeline parity spec (reference lifecycle SURVEY.md §3.1):
   * raw CSV → bronze → silver → gold views, plus the idempotency
@@ -28,7 +34,6 @@ class PipelineSpec extends AnyFunSuite {
         now = Timestamp.valueOf("2025-06-01 10:00:41"))
       test(root, cfg)
     } finally {
-      import scala.jdk.CollectionConverters._
       Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
   }
@@ -85,18 +90,64 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("bronze guards abort on null id, duplicate id, and bad animal type") {
-    withPipelineDirs { (_, cfg) =>
-      writeRawCsv(cfg.rawDir, cfg.ingestionDate, Seq(",2024,M5V,DOG,MIX"))
-      assertThrows[IllegalArgumentException](Bronze.run(spark, cfg))
+    // the first violated guard in the reference's order names the abort,
+    // and an aborted run writes neither bronze nor the ledger
+    val nullId = "guard: null _id in batch"
+    val duplicateId = "guard: duplicate _id within batch"
+    val badType = "guard: ANIMAL_TYPE outside {DOG,CAT}"
+    Seq(
+      Seq(",2024,M5V,DOG,MIX") -> nullId,
+      Seq("1,2024,M5V,DOG,MIX", "1,2024,M5V,DOG,MIX") -> duplicateId,
+      Seq("1,2024,M5V,BIRD,PARROT") -> badType,
+      // two guards broken at once: the earlier one in the order fires
+      Seq(",2024,M5V,DOG,MIX", "2,2024,M5V,BIRD,PARROT") -> nullId,
+      Seq("1,2024,M5V,DOG,MIX", "1,2024,M5V,BIRD,PARROT") -> duplicateId
+    ).foreach { case (rows, message) =>
+      withPipelineDirs { (_, cfg) =>
+        writeRawCsv(cfg.rawDir, cfg.ingestionDate, rows)
+        val e = intercept[IllegalArgumentException](Bronze.run(spark, cfg))
+        assert(e.getMessage == s"requirement failed: $message", s"batch $rows")
+        assert(!Sources.dirNonEmpty(spark, cfg.bronzeDir), s"batch $rows wrote bronze")
+        assert(!Sources.dirNonEmpty(spark, cfg.controlDir), s"batch $rows wrote the ledger")
+      }
     }
+    // a NULL type is not outside the whitelist: the row loads
     withPipelineDirs { (_, cfg) =>
-      writeRawCsv(cfg.rawDir, cfg.ingestionDate,
-        Seq("1,2024,M5V,DOG,MIX", "1,2024,M5V,DOG,MIX"))
-      assertThrows[IllegalArgumentException](Bronze.run(spark, cfg))
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, Seq("1,2024,M5V,,MIX"))
+      assert(Bronze.run(spark, cfg) == Bronze.Loaded(1))
     }
+  }
+
+  /** Names of the SQL actions `body` runs, in completion order. */
+  private def actions(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit = seen.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = seen.add(funcName)
+    }
+    ListenerSync.waitUntilEmpty(sc)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerSync.waitUntilEmpty(sc)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
+
+  test("bronze, silver and a silver re-run each run a pinned number of actions") {
     withPipelineDirs { (_, cfg) =>
-      writeRawCsv(cfg.rawDir, cfg.ingestionDate, Seq("1,2024,M5V,BIRD,PARROT"))
-      assertThrows[IllegalArgumentException](Bronze.run(spark, cfg))
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      val dim = mapping(spark)
+      // date probe, guard aggregate, count, append, ledger append
+      val bronze = actions(assert(Bronze.run(spark, cfg) == Bronze.Loaded(5)))
+      assert(bronze.size == 5, bronze)
+      // guard aggregate, count, append
+      val silver = actions(assert(Silver.run(spark, cfg, dim) == Silver.Loaded(5)))
+      assert(silver.size == 3, silver)
+      // guard aggregate, count of zero new rows; nothing written
+      val rerun = actions(assert(Silver.run(spark, cfg, dim) == Silver.SkippedEmptyBatch))
+      assert(rerun.size == 2, rerun)
     }
   }
 

@@ -118,6 +118,23 @@ class SkewHealthSpec extends AnyFunSuite {
     assert(!badChecks("ids_unique") && !badChecks("no_duplicate_ids"))
     assert(!badChecks("animal_type_whitelisted"))
 
+    // null edges, pinned to what the per-probe form (a GROUP BY _id
+    // duplicate probe and one filter per check) answered
+    def validate(rows: (Option[Int], Option[String], Option[String], Option[Boolean])*) =
+      graft.pipeline.Health.validate(rows.toDF("_id", "ANIMAL_TYPE", "FSA", "FSA_VALID")
+        .withColumn("Year", lit(2024)).withColumn("breed_mapped", lit(true))
+        .withColumn("processed_ts", lit(ts)))
+    def healthy(broken: String*) = Seq("ids_unique", "no_duplicate_ids",
+      "fsa_flag_consistent", "animal_type_whitelisted").map(k => k -> !broken.contains(k)).toMap
+    val ok = (Option(1), Option("DOG"), Option("M5V"), Option(true))
+    val nullId = ok.copy(_1 = None)
+    assert(validate(ok, nullId) == healthy("ids_unique"))
+    assert(validate(ok, nullId, nullId) == healthy("ids_unique", "no_duplicate_ids"))
+    assert(validate(ok, (Option(2), None, Option("M5V"), Option(true))) == healthy())
+    assert(validate(ok, (Option(2), Option("DOG"), None, Option(false))) == healthy())
+    assert(validate(ok, (Option(2), Option("DOG"), None, None)) ==
+      healthy("fsa_flag_consistent"))
+
     val bh = graft.pipeline.Health.bronzeHealth(
       silver.withColumn("ingestion_ts", col("processed_ts"))).first()
     assert(bh.getAs[Long]("invalid_fsa_rows") == 1)
