@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** I/O calibration anchor (round-15), the disk-side sibling of the
@@ -72,88 +71,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // Best-of-N per query: a single-pass time is hostage to one noisy
     // scheduling window on a shared box (the round-2 artifact recorded
     // 3x reality from co-tenant load). The min of N trials estimates
     // the code's cost; raw trials ship in the JSON for auditability.
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "2").toInt.max(1)
-    // Shuffle parallelism must scale with the data, not the core count:
-    // at 100x the bench SF a 32-partition shuffle is ~500 MB/partition
-    // and every sort/agg spills (measured super-linear wall time; the
-    // sf100 ladder went from 15.8x/decade at 32 partitions to ~linear at
-    // 256). Derive it from the input size — one shuffle partition per
-    // 64 MB of compressed parquet, floored at the core count — and let
-    // AQE coalesce DOWN at runtime when a stage's actual shuffle volume
-    // is small. 16 GB (sf100) / 64 MB = 256, exactly the value the
-    // hand-tuned ladder converged on; no per-run env knob. On a real
-    // cluster this is the same policy: initialPartitionNum sized to the
-    // job's input, AQE coalescing to the observed bytes.
-    val inputBytes = {
-      def dirBytes(p: java.nio.file.Path): Long =
-        try {
-          val s = java.nio.file.Files.walk(p)
-          try s.filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
-          finally s.close()
-        } catch { case e: Throwable =>
-          // a mistyped/unreadable sfDir must not silently fall back to
-          // core-count parallelism — the later read failure would hide
-          // why the partition count was wrong
-          System.err.println(
-            s"[bench] could not size $p (${e.getMessage}); " +
-              "falling back to core-count shuffle partitions")
-          0L
-        }
-      dirBytes(java.nio.file.Paths.get(sfDir))
-    }
-    val shufflePartitions =
-      math.max(cpus.toInt, (inputBytes / (64L << 20)).toInt)
-    // Size-based AQE coalescing (r17) needs a SCALE-AWARE advisory
-    // size: with the 64 MB default, a local[32] session only reaches
-    // full width on shuffles ≥ 2 GB, and the r18 sf10 ladder showed the
-    // dedup family serializing onto a handful of reducers (q53 13.6 →
-    // 27.7 s against the r16 tree on identical data). Derive it from
-    // the input: advisory = clamp(inputBytes / (4 × cores), 1 MiB,
-    // 64 MiB) — at sf0.1 the 1 MiB floor still coalesces KB-scale
-    // exchanges to one task (the r17 win), at sf10 a multi-hundred-MB
-    // dedup shuffle spreads across the cores, and at sf100+ the value
-    // saturates at the same 64 MiB the session ran before (on a real
-    // cluster input/(4·cores) lands in the guide's 100 MB–1 GB band by
-    // itself; the cap only binds small hosts).
-    val advisoryBytes = math.min(64L << 20,
-      math.max(1L << 20, inputBytes / (4L * cpus.toInt)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sources.v2.GraftSqlExtension")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); session-level, never set
-      // inside a query (see SparkEntry.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 (the legacy default) carries no usable footer statistics;
-      // MICROS makes staged timestamp columns footer-stats-servable
-      // (DataSkipping.footerStats) and is the modern parquet encoding
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // AQE pinned on: the 100 TB story leans on runtime coalescing and
-      // skew-join splitting, so the bench measures the plans we'd ship.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Size-based shuffle coalescing (guide §2.2/§9): the default
-      // parallelism-first mode re-splits every small shuffle into up to
-      // defaultParallelism ~1 MB partitions — pure task overhead for
-      // KB-scale exchanges, and at scale the 100 MB-1 GB-partition
-      // guidance wants the advisory size respected, not overridden.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sfDir)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // Untimed warmup: initializes codegen, parquet readers, shuffle,
     // hash-aggregate, distinct-expand, decimal-sum, higher-order-function
     // and custom-expression machinery across ALL the tables the timed
@@ -217,12 +142,12 @@ object Bench {
     // three JVMs, cpus=32. The reference is ONLY valid at cpus=32 (the
     // driver's setting): at other core counts the fixed 32-slice job
     // times a different parallelism and host_drift would read ~8x
-    // inflated at the local[4] default — so the anchor runs (and its
+    // inflated on a 4-core host — so the anchor runs (and its
     // derived fields are emitted) only at cpus=32, or when forced via
     // SPARK_GRAFT_ANCHOR=1 for ad-hoc calibration (raw anchor_sec only,
     // drift fields stay null).
     val AnchorRefSec = 1.17
-    val anchorValid = cpus.toInt == 32
+    val anchorValid = cpus == 32
     val anchorSec: Option[Double] =
       if (!anchorValid && !sys.env.get("SPARK_GRAFT_ANCHOR").contains("1"))
         None

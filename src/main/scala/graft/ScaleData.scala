@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for bench runs beyond the provided scale factors:
@@ -24,15 +24,9 @@ object ScaleData {
     val src = args(0)
     val dst = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(src)
+    // DuckDB (dev/check.py) reads the scaled tables: keep them INT96
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -185,6 +185,15 @@ object SparkEntry {
       math.min(mib / 8, s.sparkContext.defaultParallelism), mib / 64))
   }
 
+  /** Per-sfDir name tag for JVM-global fixtures (scratch dirs, catalog
+    * tables): the first 64 bits of the SHA-256 of the full path, not the
+    * 32-bit `hashCode`, which two dirs can share ("/x/Aa", "/x/BB") and
+    * so silently share one fixture.
+    */
+  private[graft] def fixtureTag(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+
   private def scratchPath(tag: String): String = {
     scratchHookInstalled
     val p = System.getProperty("java.io.tmpdir") + s"/graft_${tag}_$jvmId"
@@ -236,7 +245,7 @@ object SparkEntry {
       build: String => Unit): String =
     vtBaseCache.computeIfAbsent((dir, kind), _ => {
       val tmp = scratchPath(
-        s"vtbase_${kind}_${Integer.toHexString(dir.hashCode)}")
+        s"vtbase_${kind}_${fixtureTag(dir)}")
       val p = new org.apache.hadoop.fs.Path(tmp)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       build(tmp)
@@ -491,10 +500,10 @@ object SparkEntry {
       // The bucketed layout is the IMMUTABLE input fixture — built once
       // per (JVM, dir) under the amortization rule; the gate prices the
       // exchange-free join over it, which re-runs every trial.
-      // catalog names carry the dir hash: the memo is per sfDir, so the
+      // catalog names carry the dir tag: the memo is per sfDir, so the
       // JVM-global table names must be too — otherwise a second dir's
       // build would overwrite the first dir's tables under the same name
-      val dirTag = Integer.toHexString(dir.hashCode)
+      val dirTag = fixtureTag(dir)
       q36BucketedBuilt.computeIfAbsent(dir, _ => {
         val tmp = scratchPath(s"q36_$dirTag")
         Bucketing.writeBucketed(Tables.orders(s, dir),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,52 +8,12 @@ object Verify {
     // optional trailing args: run only the named queries (dev loop);
     // the driver passes exactly two args and gets the full registry
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sources.v2.GraftSqlExtension")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); session-level, never set
-      // inside a query (see SparkEntry.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Verify deliberately KEEPS the INT96 default (unlike Bench /
-      // the test session, which write TIMESTAMP_MICROS for footer
-      // stats): the oracle checker reads Verify's OUTPUT parquet, and
-      // INT96 is the encoding DuckDB renders as a naive timestamp —
-      // MICROS (isAdjustedToUTC) would re-render every event-timestamp
-      // answer as timestamptz and fail the string compare on encoding,
-      // not on values. Staged ts stats fall back to the scan path
-      // here; answers are identical either way.
-      // Same AQE posture as Bench: verify the plans we'd actually run.
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Size-based shuffle coalescing (guide §2.2/§9): the default
-      // parallelism-first mode re-splits every small shuffle into up to
-      // defaultParallelism ~1 MB partitions — pure task overhead for
-      // KB-scale exchanges, and at scale the 100 MB-1 GB-partition
-      // guidance wants the advisory size respected, not overridden.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // scale-aware advisory size, mirroring Bench: clamp(input /
-      // (4 × cores), 1 MiB, 64 MiB) — see Bench.scala for the sf10
-      // ladder evidence behind the derivation
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", {
-        def dirBytes(p: java.nio.file.Path): Long =
-          try {
-            val s = java.nio.file.Files.walk(p)
-            try s.filter(java.nio.file.Files.isRegularFile(_))
-              .mapToLong(java.nio.file.Files.size(_)).sum()
-            finally s.close()
-          } catch { case _: Throwable => 0L }
-        math.min(64L << 20, math.max(1L << 20,
-          dirBytes(java.nio.file.Paths.get(sfDir)) / (4L * cpus.toInt)))
-          .toString
-      })
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sfDir)
+    // DuckDB (dev/check.py) reads this output: INT96 is the encoding it
+    // renders as a naive timestamp, where MICROS (isAdjustedToUTC) would
+    // re-render every event-timestamp answer as timestamptz and fail the
+    // string compare on encoding, not on values
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

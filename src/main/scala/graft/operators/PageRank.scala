@@ -68,16 +68,20 @@ object PageRank {
     // (GlobalLimit stops the scan at cap+1; only a long returns), so an
     // over-cap graph never ships ~cap rows to the driver just to
     // discard them — the collect runs only once the count proves the
-    // graph fits. Above the cap the distributed path below is
-    // authoritative — per-decade ladder runs exercise it. PageRankSpec
-    // pins driver ≡ distributed (1e-12).
+    // graph fits, and is itself capped at cap+1 rows: a source that grows
+    // between probe and collect falls through to the distributed path
+    // instead of shipping unboundedly. Above the cap the distributed path
+    // below is authoritative — per-decade ladder runs exercise it.
+    // PageRankSpec pins driver ≡ distributed (1e-12).
     if (maxDriverEdges > 0 && eSel.schema.fields.forall(
         _.dataType == org.apache.spark.sql.types.LongType)) {
       val bounded = eSel.limit(maxDriverEdges + 1).count()
       if (bounded <= maxDriverEdges) {
-        val sample = eSel.collect()
-        return driverPageRank(edges.sparkSession,
-          sample.map(r => (r.getLong(0), r.getLong(1))), iterations, damping)
+        val sample = eSel.limit(maxDriverEdges + 1).collect()
+        if (sample.length <= maxDriverEdges)
+          return driverPageRank(edges.sparkSession,
+            sample.map(r => (r.getLong(0), r.getLong(1))), iterations,
+            damping)
       }
     }
     // edges re-read every iteration: partition by the join key ONCE and

@@ -5,16 +5,18 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.graft.GraftInternal
+import org.apache.spark.sql.graft.{GraftFunctions, GraftInternal}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
 
 import graft.sources.VersionedTable
 
-/** Session extension completing the SQL-text DML surface over the
-  * versioned-table format — `UPDATE` and `MERGE INTO` (plus a richer
-  * `DELETE FROM` than the v1-Filter vocabulary allows):
+/** The one session extension ([[graft.Session]] configures it). It
+  * injects the custom SQL functions of [[GraftFunctions]] (`simhash64`,
+  * `hamming_distance`, `doc_fingerprint`) and completes the SQL-text DML
+  * surface over the versioned-table format — `UPDATE` and `MERGE INTO`
+  * (plus a richer `DELETE FROM` than the v1-Filter vocabulary allows):
   *
   * {{{
   *   spark.builder.config("spark.sql.extensions",
@@ -48,8 +50,10 @@ import graft.sources.VersionedTable
   * table's (or for MERGE, the source plan's) columns.
   */
 class GraftSqlExtension extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPostHocResolutionRule(_ => GraftDmlRule)
+    GraftFunctions.functions.foreach(ext.injectFunction)
+  }
 }
 
 private[v2] object GraftDmlRule extends Rule[LogicalPlan] {

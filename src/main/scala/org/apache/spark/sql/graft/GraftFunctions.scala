@@ -1,22 +1,14 @@
-// Same package rationale as GraftExpressions.scala: sessionState /
-// SparkSessionExtensions function-injection APIs are private[sql].
+// Lives beside the expressions it names (GraftExpressions.scala).
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SQL-surface registration of the custom Catalyst expressions, so
+/** The SQL names of the custom Catalyst expressions, so
   * `spark.sql("SELECT simhash64(...)")` works alongside the Column API.
-  *
-  * Two paths:
-  *   - `GraftFunctions.register(spark)`: imperative, for an existing
-  *     session (tests, notebooks).
-  *   - `GraftSparkExtensions` via
-  *     `spark.sql.extensions=org.apache.spark.sql.graft.GraftSparkExtensions`:
-  *     the deployment path — functions exist in every session of the
-  *     cluster without code changes.
+  * [[graft.sources.v2.GraftSqlExtension]] injects every entry, so the one
+  * `spark.sql.extensions` entry of [[graft.Session]] gives a session both
+  * these functions and SQL-text DML.
   */
 object GraftFunctions {
 
@@ -38,19 +30,4 @@ object GraftFunctions {
         case other => throw new IllegalArgumentException(
           s"doc_fingerprint window must be an integer literal, got $other")
       }))
-
-  /** Register into an existing session's function registry. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, inf, builder) =>
-      spark.sessionState.functionRegistry
-        .registerFunction(ident, inf, builder)
-    }
-}
-
-/** Session-extensions entry point for `spark.sql.extensions`. */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftFunctions.functions.foreach { case (ident, inf, builder) =>
-      ext.injectFunction((ident, inf, builder))
-    }
 }

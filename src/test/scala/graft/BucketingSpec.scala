@@ -9,6 +9,11 @@ class BucketingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  test("q36 fixture tags differ for sf dirs with equal hash codes") {
+    assert("/x/Aa".hashCode == "/x/BB".hashCode)
+    assert(SparkEntry.fixtureTag("/x/Aa") != SparkEntry.fixtureTag("/x/BB"))
+  }
+
   test("bucketed co-located join eliminates the shuffle on both sides") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bucketed")
     val orders = Tables.orders(spark, SparkTestSession.sfTiny)

@@ -135,7 +135,7 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("custom SQL functions registered: simhash64 / hamming_distance / doc_fingerprint") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    // no manual registration: the session's configured extension injects them
     val row = spark.sql(
       """SELECT simhash64(array('a','b','c')) AS sh,
         |  hamming_distance(simhash64(array('a','b','c')), simhash64(array('a','b','d'))) AS hd,

@@ -22,23 +22,8 @@ object SparkTestSession {
       // carries it.)
       .master("local[4, 2]")
       .appName("graft-test")
-      // SQL-text DML over versioned tables (UPDATE/MERGE INTO/rich
-      // DELETE) — the same line a production session would carry
-      .config("spark.sql.extensions", "graft.sources.v2.GraftSqlExtension")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); session-level, never set
-      // inside a query (see SparkEntry.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 (the legacy default) carries no usable footer statistics;
-      // MICROS makes staged timestamp columns footer-stats-servable
-      // (DataSkipping.footerStats) and is the modern parquet encoding
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // same AQE posture as Bench/Verify (asserted by PlansSpec)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      // the production session policy at 4 cores, sized for no input
+      .config(Session.conf(4, 0L).toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for the named queries to
   * `<outDir>/<query>_<suffix>.txt`, under the bench's exact session
   * config (same master/AQE/shuffle-partition policy), so plan shape
@@ -18,44 +16,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     java.nio.file.Files.createDirectories(outDir)
-    val inputBytes = {
-      def dirBytes(p: java.nio.file.Path): Long = {
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-      dirBytes(java.nio.file.Paths.get(sfDir))
-    }
-    val shufflePartitions =
-      math.max(cpus.toInt, (inputBytes / (64L << 20)).toInt)
-    // scale-aware advisory size, mirroring Bench (see Bench.scala)
-    val advisoryBytes = math.min(64L << 20,
-      math.max(1L << 20, inputBytes / (4L * cpus.toInt)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sources.v2.GraftSqlExtension")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 (the legacy default) carries no usable footer statistics;
-      // MICROS makes staged timestamp columns footer-stats-servable
-      // (DataSkipping.footerStats) and is the modern parquet encoding
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
     names.foreach { n =>
       val fn = graft.SparkEntry.queries.getOrElse(n,
         sys.error(s"unknown query $n"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-time profile of one registered query, run solo under the
   * bench's exact session config. Usage:
@@ -17,43 +16,7 @@ object QueryProfile {
       sys.error("usage: QueryProfile <queryName> [sfDir] [nRuns]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val nRuns = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val inputBytes = {
-      def dirBytes(p: java.nio.file.Path): Long = {
-        val s = java.nio.file.Files.walk(p)
-        try s.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally s.close()
-      }
-      dirBytes(java.nio.file.Paths.get(sfDir))
-    }
-    val shufflePartitions =
-      math.max(cpus.toInt, (inputBytes / (64L << 20)).toInt)
-    // scale-aware advisory size, mirroring Bench (see Bench.scala)
-    val advisoryBytes = math.min(64L << 20,
-      math.max(1L << 20, inputBytes / (4L * cpus.toInt)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.sources.v2.GraftSqlExtension")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 (the legacy default) carries no usable footer statistics;
-      // MICROS makes staged timestamp columns footer-stats-servable
-      // (DataSkipping.footerStats) and is the modern parquet encoding
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
 
