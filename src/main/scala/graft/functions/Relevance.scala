@@ -152,6 +152,8 @@ object Relevance {
       StructField("rnk", IntegerType, nullable = false))))
   }
 
+  private val MaxFusedRows = 100000 // far above any Σkᵢ of real top-k lists
+
   /** Reciprocal-rank fusion of N top-k rankings (the standard hybrid
     * lexical+vector search combiner): each list contributes
     * `1/(k + rank)` for the ids it contains, 0 for the ones it misses;
@@ -160,9 +162,10 @@ object Relevance {
     * engine-comparable, unlike an aggregated SUM).
     *
     * Inputs are (idCol, rankCol) frames — TOP-K LISTS, i.e. bounded
-    * (≤ Σkᵢ rows reach the fusion), which is why the final global
-    * `fused_rank` window over one partition is safe; never feed a
-    * whole-corpus ranking through this.
+    * (≤ Σkᵢ rows reach the fusion); never feed a whole-corpus ranking
+    * through this. The operator is EAGER, not lazy: the call itself runs
+    * the joins and collects the fused list to assign `fused_rank` on the
+    * driver, and fails loudly if that list exceeds `MaxFusedRows`.
     */
   def rrf(rankings: Seq[DataFrame], idCol: String, rankCol: String,
       k: Int = 60): DataFrame = {
@@ -178,18 +181,14 @@ object Relevance {
     val nLists = rankings.indices
       .map(i => when(col(s"__r_$i").isNull, lit(0L)).otherwise(lit(1L)))
       .reduceLeft[Column](_ + _)
-    // fused ranks assign DRIVER-SIDE over the bounded sorted collect
-    // (inputs are top-k lists — ≤ Σkᵢ rows reach the fusion, see
-    // scaladoc): the scores/joins stay in Spark, only the final
-    // row-numbering of the tiny fused list leaves the cluster, which
-    // removes the unpartitioned single-partition WindowExec this
-    // operator used to plan
+    // ranks assign on the driver, so no unpartitioned window is planned
     val fused = joined
       .withColumn("rrf_score", terms.reduceLeft[Column](_ + _))
       .withColumn("n_lists", nLists)
       .select(col(idCol), col("n_lists"), col("rrf_score"))
     val spark = fused.sparkSession
-    val rows = fused.orderBy(col("rrf_score").desc, col(idCol).asc).collect()
+    val rows = graft.Driver.collectBounded(
+      fused.orderBy(col("rrf_score").desc, col(idCol).asc), MaxFusedRows, "rrf fused list")
     val out = rows.toSeq.zipWithIndex.map { case (r, i) =>
       org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), (i + 1).toLong)
     }

@@ -29,12 +29,6 @@ object Aggregates {
     when(denom === 0, lit(null).cast("double"))
       .otherwise(round(lit(100.0) * num.cast("double") / denom.cast("double"), scale))
 
-  /** Second-level re-aggregation: SUM over previously counted groups
-    * (reference A9: notebooks/gold.py:347-349).
-    */
-  def reAggregate(keys: Seq[String], src: String, out: String): DataFrame => DataFrame =
-    _.groupBy(keys.map(col): _*).agg(sum(col(src)).as(out))
-
   /** Mergeable distinct-count sketch STORE — incremental cardinality
     * across snapshots, the sketch-family member of the incremental
     * posture (signature store, label store, and now a cardinality

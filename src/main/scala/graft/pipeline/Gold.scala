@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,11 +11,16 @@ import graft.operators.{Aggregates, Rankings}
   * function (SURVEY.md §1.3: testable, no catalog dependency); use
   * `registerAll` for a temp-view façade when SQL access is wanted.
   *
-  * Scale notes: every view groups/windows on low-cardinality keys
-  * (Year × ANIMAL_TYPE × breed/FSA) — partial aggregation collapses the
-  * fact rows map-side, so the shuffles move only group cardinality, not
-  * data volume. The source view's filters push down through the whole DAG
-  * into the silver parquet scan (partition pruning on Year).
+  * Scale notes: each view aggregates silver once, on low-cardinality keys
+  * (Year × ANIMAL_TYPE × breed/FSA), and takes a group total as a window
+  * sum over those counts, never from a second aggregate joined back.
+  * Partial aggregation collapses the fact rows map-side, so the shuffles
+  * move group cardinality, not data volume. A top-N view's rank limit runs
+  * above the total's window, so not map-side: its window exchange moves
+  * every per-breed count (fewer jobs, more shuffle bytes). Collecting a
+  * view runs 3 Spark jobs (quality 2; breed stats and daily totals 4). The
+  * source view's filters push down into the silver scan (partition
+  * pruning on Year).
   */
 object Gold {
 
@@ -34,31 +39,23 @@ object Gold {
     * with share of the group total.
     */
   def totalsByYearType(src: DataFrame): DataFrame = {
-    val totals = src.groupBy(col("Year"), col("ANIMAL_TYPE"))
-      .agg(count(lit(1)).as("total_count"))
-    val breedCounts = src.groupBy(col("Year"), col("ANIMAL_TYPE"), col("breed_standard"))
-      .agg(count(lit(1)).as("breed_count"))
-    val ranked = Rankings.topNPerGroup(
-      Seq("ANIMAL_TYPE", "Year"),
-      Seq(col("breed_count").desc, col("breed_standard").asc), 10,
-      rankName = "popularity")(breedCounts)
-    totals.join(ranked, Seq("Year", "ANIMAL_TYPE"))
+    // topNPerGroup's keys, in its order, so both windows share one exchange
+    val keys = Seq("ANIMAL_TYPE", "Year")
+    val counted = breedCounts(src).withColumn("total_count", groupTotal("cnt", keys))
+    Rankings.topNPerGroup(keys, Seq(col("cnt").desc, col("breed").asc), 10,
+      rankName = "popularity")(counted)
       .select(col("Year"), col("ANIMAL_TYPE"), col("total_count"),
-        col("popularity"), col("breed_standard").as("Top_Breeds"),
-        col("breed_count").as("Breed_Count"),
-        round(lit(100.0) * col("breed_count") / col("total_count"), 2).as("top_breed_pct"))
+        col("popularity"), col("breed").as("Top_Breeds"), col("cnt").as("Breed_Count"),
+        round(lit(100.0) * col("cnt") / col("total_count"), 2).as("top_breed_pct"))
   }
 
   /** v_breed_stats (gold.py:88-136): share + rank + LAG year-over-year
     * deltas on count and share.
     */
   def breedStats(src: DataFrame): DataFrame = {
-    val base = src.groupBy(col("Year"), col("ANIMAL_TYPE"),
-      col("breed_standard").as("breed"))
-      .agg(count(lit(1)).as("cnt"))
     val group = Window.partitionBy("Year", "ANIMAL_TYPE")
     val series = Window.partitionBy("ANIMAL_TYPE", "breed").orderBy("Year")
-    val withShare = base
+    val withShare = breedCounts(src)
       .withColumn("total_in_group", sum("cnt").over(group))
       .withColumn("rnk", rank().over(group.orderBy(col("cnt").desc, col("breed").asc)))
       .withColumn("share", round(col("cnt") / col("total_in_group"), 4))
@@ -83,15 +80,17 @@ object Gold {
   /** Shared shape of v_fsa_top3_breeds / v_fsa2_top3_breeds
     * (gold.py:149-208, 219-278): per-area top-3 pivoted to columns.
     */
-  private def top3Pivot(src: DataFrame, areaCol: String): DataFrame = {
+  private def top3Pivot(src: DataFrame, area: Column, areaCol: String): DataFrame = {
     val keys = Seq("Year", "ANIMAL_TYPE", areaCol)
-    val totals = src.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("total"))
-    val byBreed = src.groupBy(col("Year"), col("ANIMAL_TYPE"), col(areaCol), col("breed"))
+    val byBreed = src.groupBy(col("Year"), col("ANIMAL_TYPE"), area.as(areaCol),
+      col("breed_standard").as("breed"))
       .agg(count(lit(1)).as("cnt"))
+      .withColumn("total", groupTotal("cnt", keys))
     val ranked = Rankings.topNPerGroup(keys,
       Seq(col("cnt").desc, col("breed").asc), 3)(byBreed)
-    val pivoted = ranked.groupBy(col("Year"), col("ANIMAL_TYPE"), col(areaCol))
+    // `total` is constant within a group, so grouping on it keeps the groups
+    // and places it before the picks
+    ranked.groupBy((keys :+ "total").map(col): _*)
       .agg(
         max(when(col("rnk") === 1, col("breed"))).as("top1_breed"),
         max(when(col("rnk") === 1, col("cnt"))).as("top1_cnt"),
@@ -99,28 +98,17 @@ object Gold {
         max(when(col("rnk") === 2, col("cnt"))).as("top2_cnt"),
         max(when(col("rnk") === 3, col("breed"))).as("top3_breed"),
         max(when(col("rnk") === 3, col("cnt"))).as("top3_cnt"))
-    pivoted.join(totals, Seq("Year", "ANIMAL_TYPE", areaCol))
-      .select(col("Year"), col("ANIMAL_TYPE").as("Animal_Type"), col(areaCol),
-        col("total"), col("top1_breed"), col("top1_cnt"),
-        col("top2_breed"), col("top2_cnt"), col("top3_breed"), col("top3_cnt"))
+      .withColumnRenamed("ANIMAL_TYPE", "Animal_Type")
   }
 
   /** v_fsa_top3_breeds (gold.py:149-208). */
   def fsaTop3Breeds(src: DataFrame): DataFrame =
-    top3Pivot(
-      src.filter(col("FSA").isNotNull)
-        .select(col("Year"), col("ANIMAL_TYPE"), col("FSA"),
-          col("breed_standard").as("breed")),
-      "FSA")
+    top3Pivot(src.filter(col("FSA").isNotNull), col("FSA"), "FSA")
 
   /** v_fsa2_top3_breeds (gold.py:219-278): 2-char FSA prefix variant. */
   def fsa2Top3Breeds(src: DataFrame): DataFrame =
-    top3Pivot(
-      src.filter(col("FSA").isNotNull && length(col("FSA")) >= 2)
-        .select(col("Year"), col("ANIMAL_TYPE"),
-          substring(col("FSA"), 1, 2).as("FSA2"),
-          col("breed_standard").as("breed")),
-      "FSA2")
+    top3Pivot(src.filter(col("FSA").isNotNull && length(col("FSA")) >= 2),
+      substring(col("FSA"), 1, 2), "FSA2")
 
   /** licensed_pets_gold_quality (gold.py:289-309) — reads silver directly. */
   def quality(silver: DataFrame): DataFrame =
@@ -141,29 +129,29 @@ object Gold {
       .agg(count(lit(1)).as("total"))
       .orderBy("day")
 
-  /** v_breed_share_citywide (gold.py:341-353): second-level re-aggregation
-    * of breed counts.
+  /** v_breed_share_citywide (gold.py:341-353): each breed's share of its
+    * Year × type total.
     */
-  def breedShareCitywide(src: DataFrame): DataFrame = {
-    val c = src.groupBy(col("Year"), col("ANIMAL_TYPE"),
-      col("breed_standard").as("breed"))
-      .agg(count(lit(1)).as("cnt"))
-    val t = c.groupBy(col("Year"), col("ANIMAL_TYPE"))
-      .agg(sum("cnt").as("tot"))
-    c.join(t, Seq("Year", "ANIMAL_TYPE"))
-      .select(col("Year"), col("ANIMAL_TYPE"), col("breed"), col("cnt"),
-        round(col("cnt") / col("tot"), 4).as("share"))
-  }
+  def breedShareCitywide(src: DataFrame): DataFrame =
+    breedCounts(src).withColumn("share",
+      round(col("cnt") / groupTotal("cnt", Seq("Year", "ANIMAL_TYPE")), 4))
 
   /** v_breed_rank_citywide (gold.py:364-373). */
-  def breedRankCitywide(src: DataFrame): DataFrame = {
-    val c = src.groupBy(col("Year"), col("ANIMAL_TYPE"),
-      col("breed_standard").as("breed"))
-      .agg(count(lit(1)).as("cnt"))
-    c.withColumn("rnk", row_number().over(
+  def breedRankCitywide(src: DataFrame): DataFrame =
+    breedCounts(src).withColumn("rnk", row_number().over(
       Window.partitionBy("Year", "ANIMAL_TYPE")
         .orderBy(col("cnt").desc, col("breed").asc)))
-  }
+
+  /** Rows per Year × type × breed: the one aggregate of the breed views. */
+  private def breedCounts(src: DataFrame): DataFrame =
+    src.groupBy(col("Year"), col("ANIMAL_TYPE"), col("breed_standard").as("breed"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** Sum of `counts` over the group: its row count, as `src` has no null
+    * breed. Coalesced so that it stays non-null like a count.
+    */
+  private def groupTotal(counts: String, keys: Seq[String]): Column =
+    coalesce(sum(counts).over(Window.partitionBy(keys.map(col): _*)), lit(0L))
 
   /** Optional SQL façade: register silver + every view as temp views. */
   def registerAll(silver: DataFrame): Unit = {

@@ -12,8 +12,9 @@ import Model._
   * validity filters → window dedup keep-newest → final 13-col projection →
   * hard guards → anti-join idempotency → partitioned append.
   *
-  * Scale notes: the bronze scan is pruned to one ingestion_date (partition
-  * filter pushed to the parquet dirs); the mapping dim is tiny (~560 rows)
+  * Scale notes: bronze is partitioned by (Year, ANIMAL_TYPE), so the
+  * ingestion_date filter is a pushed data filter, not a partition filter:
+  * every run opens every bronze file's footer; the mapping dim is tiny (~560 rows)
   * so the enrichment join is broadcast — no shuffle; the other shuffles are
   * the dedup window on _id, the guard aggregate's distinct ids and the
   * anti-join, all on the narrow key. Actions per run: `GuardedAppend`'s
