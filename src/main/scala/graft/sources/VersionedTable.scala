@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Minimal versioned-table commit layer — the lakehouse ACID properties
   * the reference outsources to Delta (`MERGE INTO` staging in
@@ -1977,6 +1977,229 @@ object VersionedTable {
       prevOpt.flatMap(_.tableId), constraints = cons, generatedCols = gens)
   }
 
+  /** The DML verbs as the planner ([[dml]]) receives them. */
+  private[graft] object Dml {
+    sealed trait Verb {
+      def name: String
+      /** The operation the commit records. */
+      def op: String = name
+      /** Stats columns staged files add to the table's tracked ones. */
+      def statsCols: Seq[String] = Nil
+    }
+    final case class Delete(predicate: Column) extends Verb {
+      def name = "delete"
+    }
+    final case class Update(predicate: Column, set: Map[String, Column])
+        extends Verb {
+      def name = "update"
+    }
+    final case class Merge(updates: DataFrame, keys: Seq[String],
+        override val statsCols: Seq[String] = Nil,
+        override val op: String = "merge") extends Verb {
+      def name = "merge"
+    }
+  }
+
+  /** One verb as the planner runs it: the predicate that prunes and
+    * rebases, the `__vt_hit` marker over a positional scan (TRUE = the
+    * row matches; it may project the scan down to the positions), and
+    * the row function over the rewrite-lane rows and, when `usesHits`,
+    * the full DV-matched rows, which the planner then persists for
+    * their second reader (the sidecar).
+    */
+  private final case class VerbPlan(pred: Column,
+      mark: DataFrame => DataFrame,
+      rows: (Option[DataFrame], Option[DataFrame]) => Option[DataFrame],
+      usesHits: Boolean = false)
+
+  /** The DML planner behind DELETE, UPDATE and MERGE under both per-file
+    * policies. Each step runs once, whatever the verb:
+    *  1. pre-checks: `maxAttempts`, the density threshold, no SET of a
+    *     generated column, and the table schema. A table committed
+    *     before schema tracking reads its footer schema once and the
+    *     DML commit records it; `prev` stays unpatched, so a rebase
+    *     still compares against what the manifest said;
+    *  2. pruning: [[DataSkipping.prune]] on the predicate, or on the
+    *     merge keys' range ([[mergePreAgg]]), finds the touched files;
+    *  3. shape per file. Copy-on-write (`dvThreshold = None`) rewrites
+    *     every touched file and runs no pricing job. The deletion-vector
+    *     policy runs ONE `vt:dml-price` aggregate (live and matching
+    *     rows per touched file), then leaves a file untouched (no live
+    *     row matches — a pruning over-approximation), drops it by
+    *     reference (DELETE, every live row matches), rewrites it (every
+    *     live row matches, or previous DV + this DML kills more than
+    *     `dvThreshold` of it — its DV history folds away), or DVs it;
+    *  4. staging: one sidecar write for the DV positions, one data write
+    *     for all data rows — generated columns recomputed, CHECK
+    *     constraints guarded, fresh stats on every tracked column;
+    *  5. commit: one loop. A lost version race re-commits the staged
+    *     result against the new latest once [[rebaseOrConflict]] proves
+    *     the competitors disjoint, else [[ConflictingCommitException]].
+    *
+    * A verb supplies only its row function: DELETE keeps the rewrite
+    * lane's non-matching rows; UPDATE applies its SET
+    * ([[applyUpdateSet]]) to the rewrite lane plus the DV-matched rows;
+    * MERGE upserts its source into the rewrite lane — one full-outer
+    * join whose unmatched source rows are the DV-matched post-images and
+    * the inserts. `onStaged` is the race-window test seam, mirroring
+    * [[appendRebase]].
+    */
+  private[graft] def dml(spark: SparkSession, dir: String, verb: Dml.Verb,
+      dvThreshold: Option[Double], maxAttempts: Int,
+      onStaged: () => Unit = () => ()): Snapshot = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    require(maxAttempts >= 1, "maxAttempts must be at least 1")
+    dvThreshold.foreach(t => require(t > 0.0 && t <= 1.0,
+      s"densityThreshold must be in (0, 1]; got $t"))
+    var prev = latest(spark, dir).getOrElse(
+      sys.error(s"table $dir has no commits"))
+    // a table from before schema tracking: read the footer schema once;
+    // `snap` scans and commits with it, `prev` stays as recorded
+    val schema = prev.schema.getOrElse(
+      spark.read.parquet(prev.files.map(resolveRef(dir, _)): _*).schema)
+    val snap = prev.copy(schemaJson =
+      prev.schemaJson.orElse(Some(schema.json)))
+    val fields = schema.fieldNames.toSeq.map(n => col(n).as(n))
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = {
+      cached += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    def matching(p: Column)(scan: DataFrame): DataFrame =
+      scan.withColumn("__vt_hit", coalesce(p, lit(false)))
+    try {
+    val plan = verb match {
+      case Dml.Delete(p) => VerbPlan(p, matching(p),
+        (rw, _) => rw.map(_.filter(!coalesce(p, lit(false)))))
+      case Dml.Update(p, set) =>
+        requireNotGenerated(prev, set.keys)
+        VerbPlan(p, matching(p), (rw, hits) =>
+          (rw ++ hits).reduceOption(_ unionByName _)
+            .map(applyUpdateSet(_, p, set)), usesHits = true)
+      case Dml.Merge(updates, keys, _, _) =>
+        keys.foreach(k => require(schema.fieldNames.contains(k),
+          s"merge key $k not in table schema " +
+            schema.fieldNames.mkString("[", ",", "]")))
+        // Update rows complete their generated columns (computed if
+        // omitted, validated if supplied — a matched row takes the update
+        // row wholesale) and align to the table's columns by name. Under
+        // the DV policy the source is materialized (Delta's
+        // materializeSource: spillable persist), so the prune bounds, the
+        // pricing join and the upsert do not each re-evaluate its lineage;
+        // copy-on-write reads it only twice, and a persist would cost a
+        // cache-building job. Carried files keep the recorded types, so a
+        // MERGE never changes them.
+        val aligned = applyGenerated(updates, prev.generatedCols)
+          .select(fields: _*)
+        val src = if (dvThreshold.isEmpty) aligned else keep(aligned)
+        require(schema.fields.map(_.dataType).toSeq ==
+          src.schema.fields.map(_.dataType).toSeq,
+          s"merge cannot change column types (${schema.simpleString} -> " +
+            s"${src.schema.simpleString}); use overwrite for type changes")
+        // SQL MERGE rule ("cannot update the same row twice") and the
+        // key-range prune bounds in ONE job. A file may hold a matched
+        // row only if EVERY key column's range intersects the updates'
+        // [min, max] — a necessary condition, so pruning on it is sound;
+        // NULL update keys match no target row, and min/max ignore them.
+        val b = mergePreAgg(src, keys)
+        requireUniqueKeys(src, keys, b)
+        val keyRange = keys.zipWithIndex.map { case (k, i) =>
+          col(k) >= lit(b.get(2 * i + 1)) && col(k) <= lit(b.get(2 * i + 2))
+        }.reduce(_ && _)
+        // keys are unique on the source side (dup rule above), so the
+        // left-outer join never fans out; the narrow (file, pos, hit)
+        // projection persists and serves the pricing and the DV lane
+        val hit = src.select(keys.map(col): _*)
+          .withColumn("__vt_hit", lit(true))
+        VerbPlan(keyRange,
+          scan => keep(scan.join(hit, keys, "left_outer").select(
+            col("__vt_file"), col("__vt_pos"),
+            coalesce(col("__vt_hit"), lit(false)).as("__vt_hit"))),
+          (rw, _) => Some(rw.fold(src)(
+            graft.operators.Merge.upsert(_, src, keys))))
+    }
+    val (touched, _) = DataSkipping.prune(spark, dir, snap, plan.pred)
+    // only the DV policy reads positions; copy-on-write prices nothing
+    val scan =
+      if (dvThreshold.isEmpty || touched.isEmpty) None
+      else Some(scanWithPos(spark, dir, snap, touched))
+    val marked = scan.map(plan.mark)
+    // ONE aggregation job prices every touched file (live rows under the
+    // existing DVs, matches) — one result row per file, driver-bounded
+    // like the manifest itself
+    val counts = marked.fold(Map.empty[String, (Long, Long)])(m =>
+      withJobDesc(spark, "vt:dml-price") {
+        m.groupBy(col("__vt_file"))
+          .agg(count(lit(1)).as("__n"),
+            sum(when(col("__vt_hit"), 1L).otherwise(0L)).as("__m"))
+          .collect()
+      }.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    var rwSet = Vector.empty[String]
+    var dvSet = Vector.empty[String]
+    var dead = Vector.empty[String]
+    val dvnB = Map.newBuilder[String, Long]
+    touched.foreach { f =>
+      val (nLive, nMatch) = counts.getOrElse(f, (0L, 0L))
+      val prevDel = prev.dvn.getOrElse(f, 0L)
+      dvThreshold match {
+        case None => rwSet :+= f
+        case Some(_) if nMatch == 0L => ()
+        case Some(_) if nMatch == nLive && verb.isInstanceOf[Dml.Delete] =>
+          dead :+= f
+        case Some(t) if nMatch == nLive ||
+            (prevDel + nMatch).toDouble / (nLive + prevDel) > t => rwSet :+= f
+        case Some(_) => dvSet :+= f; dvnB += f -> (prevDel + nMatch)
+      }
+    }
+    val v = prev.version + 1
+    def lane(df: DataFrame, files: Seq[String]): DataFrame =
+      df.join(broadcast(files.toDF("__vt_file")), Seq("__vt_file"))
+    // the DV-matched rows feed the positional sidecar and, for UPDATE,
+    // the post-images: persisted once when both read them (bounded by
+    // the density threshold), so the DV files are scanned once
+    val hits = Some(dvSet).filter(_.nonEmpty).map { fs =>
+      val h = lane(marked.get, fs).filter(col("__vt_hit"))
+      if (plan.usesHits) keep(h) else h
+    }
+    val dvAdds = hits.fold(Seq.empty[String])(h =>
+      stageFiles(h.select(col("__vt_file"), col("__vt_pos")), dir, v))
+    // live rows only: a rewrite must not resurrect soft-deleted rows,
+    // and the commit's removes fold the rewritten files' DV history away
+    val rw = Some(rwSet).filter(_.nonEmpty).map(fs =>
+      scan.fold(readFilesWithDv(spark, dir, snap, fs))(lane(_, fs))
+        .select(fields: _*))
+    val (adds, addStats) = plan.rows(rw,
+        hits.filter(_ => plan.usesHits).map(_.select(fields: _*))) match {
+      case None =>
+        (Seq.empty[String], Map.empty[String, DataSkipping.FileStats])
+      // staged files keep every tracked stats column prunable: a DML
+      // must never silently turn off skipping on a column it served
+      case Some(rows) => rethrowConstraintViolation(stageWithStats(
+        constraintGuard(applyGenerated(rows, prev.generatedCols,
+          recompute = true), prev.constraints),
+        dir, v, (verb.statsCols ++ prev.stats.values.flatMap(_.cols.keys))
+          .distinct, snap.schema))
+    }
+    onStaged()
+    var attempt = 1
+    while (true) {
+      try return commitDelta(spark, dir, prev, verb.op, adds, rwSet ++ dead,
+        addStats, snap.schemaJson, dvAdds, dvnB.result())
+      catch {
+        case e: ConcurrentCommitException =>
+          if (attempt >= maxAttempts) throw e
+          attempt += 1
+          val np = rebaseOrConflict(spark, dir, prev, plan.pred, touched,
+            verb.name)
+          pace(prev.version, np.version, attempt)
+          prev = np
+      }
+    }
+    sys.error("unreachable")
+    } finally cached.foreach(_.unpersist())
+  }
+
   /** MERGE (upsert) into the table as a new version: matched keys take
     * the update row's values (even NULLs — SQL MERGE semantics via
     * [[graft.operators.Merge.upsert]]), unmatched rows carry over,
@@ -1986,27 +2209,26 @@ object VersionedTable {
     * `MERGE INTO` + snapshot-isolation pair the reference leans on
     * (sql/breed_mapping.py:596-618), without Delta jars.
     *
-    * STATS-PRUNED, like [[delete]]/[[update]]: one small aggregation
-    * computes the update keys' per-column min/max, and only files whose
-    * skipping stats say they MAY hold a key in that range are read,
-    * upserted, and rewritten — every other file (and its stats) carries
-    * into the new version BY REFERENCE, unread and unwritten. The
-    * skipping analyzer's soundness contract (never prune a file that
-    * may match) is exactly the carry-over-safety contract: a carried
-    * file provably holds no matched key, and rows with NULL keys can
-    * never match an update (SQL join semantics), so carrying them is
-    * correct too. Unmatched updates always insert — they ride the
-    * rewritten partition (or a pure-insert commit when NO file may
-    * match). At 100 TB this is the difference between a daily MERGE
-    * that rewrites a few key-clustered files and one that rewrites the
-    * table; pair with [[cluster]] on the merge key so update key ranges
-    * map to few files. Tables without key stats degrade to the full
-    * rewrite (every file "may match").
+    * The copy-on-write policy of the DML planner ([[dml]]): only files
+    * whose skipping stats say they MAY hold a key in the updates'
+    * [min, max] range are read, upserted and rewritten; every other file
+    * (and its stats) carries into the new version BY REFERENCE, unread
+    * and unwritten. The skipping analyzer's soundness contract (never
+    * prune a file that may match) is exactly the carry-over-safety
+    * contract, and NULL keys never match. Unmatched updates ride the
+    * rewrite, or a pure-insert commit when no file may match. At 100 TB
+    * this is the difference between a daily MERGE that rewrites a few
+    * key-clustered files and one that rewrites the table; pair with
+    * [[cluster]] on the merge key. Tables without key stats degrade to
+    * the full rewrite. The update frame aligns to the table's columns by
+    * name and must keep their types; rewritten files keep every tracked
+    * stats column prunable, plus `statsCols`.
     */
   def merge(updates: DataFrame, dir: String, keys: Seq[String],
       statsCols: Seq[String] = Seq.empty,
       maxAttempts: Int = 5): Snapshot =
-    mergeRebase(updates, dir, keys, statsCols, maxAttempts)
+    dml(updates.sparkSession, dir, Dml.Merge(updates, keys, statsCols),
+      dvThreshold = None, maxAttempts)
 
   /** ONE job over the update frame pricing both merge preconditions:
     * per-key counts rolled up into (max per-key count, per-key
@@ -2049,89 +2271,6 @@ object VersionedTable {
               "nondeterministic MERGE source)")}")
     }
   }
-
-  /** Core merge loop; `onStaged` is the race-window test seam,
-    * mirroring [[appendRebase]]. On losing the version race with
-    * `maxAttempts > 1`, the staged result re-commits against the new
-    * latest once [[rebaseOrConflict]] proves the competitors could not
-    * hold a merge-key match (predicate = the update keys' range), else
-    * [[ConflictingCommitException]].
-    */
-  private[graft] def mergeRebase(updates0: DataFrame, dir: String,
-      keys: Seq[String], statsCols: Seq[String], maxAttempts: Int,
-      onStaged: () => Unit = () => ()): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    val spark = updates0.sparkSession
-    import org.apache.spark.sql.functions._
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits — use create"))
-    // update rows complete their generated columns first (computed if
-    // omitted, validated if supplied) — the matched row takes the
-    // update row wholesale, so its generated values must be right
-    val updates = applyGenerated(updates0, prev.generatedCols)
-    // SQL MERGE rule ("cannot update the same row twice"): duplicate
-    // update keys would silently fan target rows out through upsert's
-    // full-outer join and COMMIT the corruption — fail before staging.
-    // The dup rule and the key-range prune bounds price in ONE job
-    // ([[mergePreAgg]]); a file may hold a matched row only if EVERY
-    // key column's file range intersects the updates' [min, max] for
-    // that column — a necessary condition, so pruning on it is sound.
-    // min/max ignore NULL update keys, correctly: a NULL key matches
-    // no target row.
-    val b = mergePreAgg(updates, keys)
-    requireUniqueKeys(updates, keys, b)
-    val keyRangePred = keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(b.get(2 * i + 1)) && col(k) <= lit(b.get(2 * i + 2))
-    }.reduce(_ && _)
-    val (touched, untouched) = DataSkipping.prune(spark, dir, prev, keyRangePred)
-    // DV-aware: soft-deleted rows of touched files must NOT resurrect
-    // through the merge rewrite
-    val touchedDf =
-      if (touched.nonEmpty) readFilesWithDv(spark, dir, prev, touched)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        prev.schema.getOrElse(updates.schema))
-    val merged = graft.operators.Merge.upsert(touchedDf, updates, keys)
-    // carried files keep the recorded table schema, so a merge that
-    // would change column types is only legal as a full rewrite
-    val schemaOut = prev.schema match {
-      case Some(ps) =>
-        val same = ps.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq ==
-          merged.schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
-        if (same) prev.schemaJson
-        else if (untouched.isEmpty) Some(merged.schema.json)
-        else sys.error(
-          s"merge cannot change column types (${ps.simpleString} -> " +
-            s"${merged.schema.simpleString}) while carrying files by " +
-            "reference; use overwrite for type changes")
-      case None => Some(merged.schema.json)
-    }
-    // rewritten files keep every previously tracked stats column
-    // prunable (plus any the caller adds) — a MERGE must never silently
-    // turn off skipping on a column it used to serve
-    val effStats =
-      (statsCols ++ prev.stats.values.flatMap(_.cols.keys)).distinct
-    val (files, st) = rethrowConstraintViolation(stageWithStats(
-      constraintGuard(merged, prev.constraints), dir, prev.version + 1,
-      effStats, prev.schema))
-    onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, "merge", files, touched, st,
-        schemaOut)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, keyRangePred, touched,
-            "merge")
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** Decide whether a DML operation that lost the version race can
     * safely REBASE onto the new latest snapshot, Delta-style. The DML
     * read exactly `touched` (every file whose stats said it may hold a
@@ -2192,78 +2331,11 @@ object VersionedTable {
     now
   }
 
-  /** Copy-on-write core for DELETE/UPDATE: data skipping decides which
-    * files MAY hold predicate-true rows — only those are rewritten by
-    * `rewrite`; every other file (and its stats) carries into the new
-    * version BY REFERENCE, unread and unwritten. At 100 TB this is the
-    * difference between a DML statement that rewrites a few files and
-    * one that rewrites the table; the skipping analyzer's soundness
-    * contract (never prune a file that may match) is exactly the
-    * carry-over-safety contract needed here. Rewritten files get fresh
-    * stats on the union of previously tracked columns.
-    *
-    * With `maxAttempts > 1`, losing the version race triggers the
-    * optimistic-concurrency completion: data is staged exactly once,
-    * and each retry re-commits the SAME staged files against the new
-    * latest after [[rebaseOrConflict]] proves the competitor commits
-    * are semantically disjoint (otherwise [[ConflictingCommitException]]
-    * — never a silently wrong rebase). `onStaged` is the test seam that
-    * runs inside the race window, mirroring [[appendRebase]].
-    */
-  private[graft] def copyOnWrite(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column, op: String,
-      rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame,
-      maxAttempts: Int = 1,
-      onStaged: () => Unit = () => (),
-      setCols: Iterable[String] = Nil): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    requireNotGenerated(prev, setCols)
-    val (touched, _) = DataSkipping.prune(spark, dir, prev, predicate)
-    val (files, st, schemaOut) =
-      if (touched.isEmpty)
-        (Nil, Map.empty[String, DataSkipping.FileStats], prev.schemaJson)
-      else {
-        // DV-aware: the rewrite starts from LIVE rows only, and the
-        // removes fold the touched files' DV history away
-        val touchedDf = readFilesWithDv(spark, dir, prev, touched)
-        val statsCols =
-          prev.stats.values.flatMap(_.cols.keys).toSet.toSeq.sorted
-        // UPDATE's SET can mint violating values; DELETE's survivors
-        // revalidate for free (the guard fuses into the rewrite scan).
-        // Generated columns recompute unconditionally: the SET may have
-        // touched a source column, and recomputing a pure function over
-        // untouched rows is a no-op
-        val (fs, s) = rethrowConstraintViolation(stageWithStats(
-          constraintGuard(
-            applyGenerated(rewrite(touchedDf, predicate),
-              prev.generatedCols, recompute = true),
-            prev.constraints),
-          dir, prev.version + 1, statsCols, prev.schema))
-        (fs, s, prev.schemaJson.orElse(Some(touchedDf.schema.json)))
-      }
-    onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, op, files, touched, st,
-        schemaOut)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, predicate, touched, op)
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-  }
-
   /** SQL DELETE: remove rows where `predicate` is TRUE (FALSE and NULL
     * rows survive — three-valued SQL semantics), committed as one
-    * atomic new version. Only may-match files are rewritten
-    * ([[copyOnWrite]]); deleting every row leaves a readable empty
+    * atomic new version. The copy-on-write policy of the DML planner
+    * ([[dml]]): only may-match files are rewritten, every other file
+    * carries by reference; deleting every row leaves a readable empty
     * version. The pre-delete version stays time-travelable.
     *
     * Concurrency (Delta parity, all DML entry points alike): losing
@@ -2277,145 +2349,57 @@ object VersionedTable {
     */
   def delete(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
-      maxAttempts: Int = 5): Snapshot = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    copyOnWrite(spark, dir, predicate, "delete",
-      (df, p) => df.filter(coalesce(not(p), lit(true))),
-      maxAttempts = maxAttempts)
-  }
+      maxAttempts: Int = 5): Snapshot =
+    dml(spark, dir, Dml.Delete(predicate), dvThreshold = None, maxAttempts)
 
-  /** SQL DELETE via DELETION VECTORS (merge-on-read): rows where
-    * `predicate` is TRUE are soft-deleted by recording their positions
-    * in a DV sidecar instead of rewriting their files — the answer is
-    * identical to [[delete]] (readers apply the DV as a positional
-    * anti-filter), but a point delete against a 1 GB file costs a
-    * KB-scale sidecar write, not a 1 GB rewrite. This is the
-    * write-amplification fix deletion vectors exist for in
-    * Delta/Iceberg (the modern half of the reference's own Delta
-    * maintenance story, docs/runbook.md:55-58).
+  /** SQL DELETE via DELETION VECTORS (merge-on-read): the deletion-vector
+    * policy of the DML planner ([[dml]]). Rows where `predicate` is TRUE
+    * are soft-deleted by recording their positions in a DV sidecar
+    * instead of rewriting their files — the answer is identical to
+    * [[delete]] (readers apply the DV as a positional anti-filter), but
+    * a point delete against a 1 GB file costs a KB-scale sidecar write,
+    * not a 1 GB rewrite. This is the write-amplification fix deletion
+    * vectors exist for in Delta/Iceberg (the modern half of the
+    * reference's own Delta maintenance story, docs/runbook.md:55-58).
     *
-    * Per touched file the commit picks the cheapest sound shape:
-    *  - no matching live rows (skipping over-approximation) → file
-    *    untouched, not even referenced by the commit;
-    *  - every live row matches → the file is dropped BY REFERENCE (no
-    *    rewrite, no DV — an empty rewrite would be pure overhead);
-    *  - cumulative deleted fraction (previous DV + this delete) above
-    *    `densityThreshold` → copy-on-write fallback: the file rewrites
-    *    clean (fresh stats on all previously tracked columns) and its
-    *    DV history is folded away — unbounded DV accumulation on a
-    *    hot-delete file is how merge-on-read tables rot;
-    *  - otherwise → positions append to the DV (one sidecar dataset
-    *    per commit; a file's DV is the union across commits, so no
-    *    sidecar is ever rewritten).
+    * One pricing job counts each touched file's live and matching rows;
+    * then per file: no match → untouched, not even referenced; every
+    * live row matches → dropped BY REFERENCE (no rewrite, no DV);
+    * cumulative deleted fraction (previous DV + this delete) above
+    * `densityThreshold` → rewritten clean with its DV history folded
+    * away (unbounded DV accumulation on a hot-delete file is how
+    * merge-on-read tables rot); otherwise → positions append to the DV
+    * (one sidecar dataset per commit; a file's DV is the union across
+    * commits, so no sidecar is ever rewritten).
     *
-    * All shapes land in ONE atomic delta commit; pre-delete versions
-    * stay time-travelable, vacuum treats live sidecars as referenced
-    * data, and [[compactTable]]/[[cluster]]/[[overwrite]] fold every DV
-    * into clean files. Stats stay sound: per-file min/max/null over-
-    * approximate the live rows (pruning unaffected) and
-    * [[countBounds]] prices rows as `rowCount - dvn`.
-    *
-    * Rebase contract mirrors [[delete]]: with `maxAttempts > 1` a lost
-    * version race re-commits the staged result iff the competitors
-    * provably touched neither the files nor the DVs this delete read
-    * ([[rebaseOrConflict]]).
+    * All shapes land in ONE atomic delta commit; vacuum treats live
+    * sidecars as referenced data, and [[compactTable]]/[[cluster]]/
+    * [[overwrite]] fold every DV into clean files. Stats stay sound:
+    * per-file min/max/null over-approximate the live rows and
+    * [[countBounds]] prices rows as `rowCount - dvn`. Rebase contract as
+    * [[delete]].
     */
   def deleteWithDv(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
       densityThreshold: Double = 0.15,
       maxAttempts: Int = 5,
-      onStaged: () => Unit = () => ()): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    require(densityThreshold > 0.0 && densityThreshold <= 1.0,
-      s"densityThreshold must be in (0, 1]; got $densityThreshold")
-    import org.apache.spark.sql.functions._
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    val (touched, _) = DataSkipping.prune(spark, dir, prev, predicate)
-    val (adds, removes, addStats, dvAdds, dvnSets) =
-      if (touched.isEmpty)
-        (Seq.empty[String], Seq.empty[String],
-          Map.empty[String, DataSkipping.FileStats],
-          Seq.empty[String], Map.empty[String, Long])
-      else {
-        val schema = prev.schema.getOrElse(sys.error(
-          s"deleteWithDv needs a recorded table schema on $dir; " +
-            "use delete() on pre-schema-tracking tables"))
-        val pTrue = coalesce(predicate, lit(false))
-        val scan = scanWithPos(spark, dir, prev, touched)
-        // ONE aggregation job prices every touched file: live rows
-        // (existing DV applied) and predicate matches — one result row
-        // per touched file, driver-bounded like the manifest itself
-        val counts = withJobDesc(spark, "vt:dml-price") {
-          scan.groupBy(col("__vt_file"))
-            .agg(count(lit(1)).as("__n"),
-              sum(when(pTrue, 1L).otherwise(0L)).as("__m"))
-            .collect()
-        }.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        var dvSet = Vector.empty[String]
-        var rwSet = Vector.empty[String]
-        var dead = Vector.empty[String]
-        val dvnB = Map.newBuilder[String, Long]
-        touched.foreach { f =>
-          val (nLive, nMatch) = counts.getOrElse(f, (0L, 0L))
-          val prevDel = prev.dvn.getOrElse(f, 0L)
-          if (nMatch == 0L) () // pruning over-approximation: untouched
-          else if (nMatch == nLive) dead :+= f
-          else if ((prevDel + nMatch).toDouble / (nLive + prevDel)
-              > densityThreshold) rwSet :+= f
-          else { dvSet :+= f; dvnB += f -> (prevDel + nMatch) }
-        }
-        val v = prev.version + 1
-        import spark.implicits._
-        val staged =
-          if (dvSet.isEmpty) Nil
-          else stageFiles(
-            scan.join(broadcast(dvSet.toDF("__vt_file")), Seq("__vt_file"))
-              .filter(pTrue)
-              .select(col("__vt_file"), col("__vt_pos")), dir, v)
-        val (rw, rwStats) =
-          if (rwSet.isEmpty)
-            (Seq.empty[String], Map.empty[String, DataSkipping.FileStats])
-          else stageWithStats(
-            scan.join(broadcast(rwSet.toDF("__vt_file")), Seq("__vt_file"))
-              .filter(!pTrue)
-              .select(schema.fieldNames.map(col).toSeq: _*), dir, v,
-            prev.stats.values.flatMap(_.cols.keys).toSet.toSeq.sorted,
-            prev.schema)
-        (rw, (rwSet ++ dead): Seq[String], rwStats, staged, dvnB.result())
-      }
-    onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, "delete", adds, removes,
-        addStats, prev.schemaJson, dvAdds, dvnSets)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, predicate, touched,
-            "delete")
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-  }
+      onStaged: () => Unit = () => ()): Snapshot =
+    dml(spark, dir, Dml.Delete(predicate), Some(densityThreshold),
+      maxAttempts, onStaged)
 
   /** SQL UPDATE ... SET: rows where `predicate` is TRUE take the `set`
     * expressions (all of them evaluated against the OLD row — one
     * select, not chained withColumns), everything else is untouched.
     * Set values cast to the column's existing type so the table schema
-    * is stable. Copy-on-write: only may-match files rewrite.
+    * is stable. The copy-on-write policy of the DML planner ([[dml]]):
+    * only may-match files rewrite. Rebase contract as [[delete]].
     */
   def update(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       maxAttempts: Int = 5): Snapshot =
-    copyOnWrite(spark, dir, predicate, "update", maxAttempts = maxAttempts,
-      rewrite = (df, p) => applyUpdateSet(df, p, set),
-      setCols = set.keys)
-
+    dml(spark, dir, Dml.Update(predicate, set), dvThreshold = None,
+      maxAttempts)
   /** Fail fast when a DML SET targets a generated column: its value is
     * GENERATED ALWAYS — it recomputes when its sources change and can
     * never be assigned directly (Delta's rule).
@@ -2429,8 +2413,7 @@ object VersionedTable {
           .map(_._2).getOrElse("?")}); update its source columns and " +
         "it recomputes"))
 
-  /** UPDATE's SET evaluator, shared by the copy-on-write and
-    * merge-on-read paths: matched rows take every `set` expression
+  /** UPDATE's row function in the DML planner ([[dml]]): matched rows take every `set` expression
     * (all evaluated against the OLD row — one select, not chained
     * withColumns, so `SET a = b, b = a` swaps instead of clobbering),
     * cast to the column's existing type so the table schema is stable;
@@ -2456,165 +2439,52 @@ object VersionedTable {
     }.toSeq: _*)
   }
 
-  /** SQL UPDATE via DELETION VECTORS (merge-on-read): matched rows are
-    * soft-deleted positionally — their OLD positions land in a DV
-    * sidecar, exactly [[deleteWithDv]]'s shape — and their post-images
-    * APPEND as new data files, all in ONE atomic commit. The answer is
-    * identical to [[update]]; the cost model is not: a point update
-    * against a 1 GB file writes a KB-scale sidecar plus the updated
-    * rows, never the untouched 1 GB. This is Delta/Iceberg's
-    * merge-on-read UPDATE, the second half of the write-amplification
-    * story [[deleteWithDv]] opened.
+  /** SQL UPDATE via DELETION VECTORS (merge-on-read): the deletion-vector
+    * policy of the DML planner ([[dml]]). Matched rows are soft-deleted
+    * positionally — their OLD positions land in a DV sidecar, exactly
+    * [[deleteWithDv]]'s shape — and their post-images APPEND as new data
+    * files, all in ONE atomic commit. The answer is identical to
+    * [[update]]; the cost model is not: a point update against a 1 GB
+    * file writes a KB-scale sidecar plus the updated rows, never the
+    * untouched 1 GB (Delta/Iceberg's merge-on-read UPDATE).
     *
-    * Per touched file the commit picks the cheapest sound shape,
-    * mirroring [[deleteWithDv]]:
-    *  - no matching live rows → untouched, unreferenced;
-    *  - every live row matches → copy-on-write (the post-images ARE a
-    *    full rewrite; a DV that kills every live row would leave a
-    *    fully-dead file as permanent read-side weight);
-    *  - cumulative dead fraction (previous DV + this update) above
-    *    `densityThreshold` → copy-on-write fallback, folding the
-    *    file's DV history into a clean rewrite;
-    *  - otherwise → positions append to the DV and post-image rows
-    *    stage as new data files (with fresh skipping stats on all
-    *    previously tracked columns).
+    * Per touched file, as [[deleteWithDv]] except that a file whose
+    * every live row matches is rewritten (the post-images ARE a full
+    * rewrite; a DV killing every live row would leave a fully-dead file
+    * as permanent read-side weight). Post-images and rewritten rows
+    * stage in one write with fresh stats on every tracked column.
     *
     * CDC pairs the two halves back up: the change feed classifies a
     * DV'd pre-image and its appended post-image as
     * `update_preimage`/`update_postimage` on the key, not as a
-    * delete+insert ([[ChangeFeed]] joins DV-deleted rows on the
-    * removed side). Vacuum/restore/compaction/conflict semantics are
-    * [[deleteWithDv]]'s: live sidecars are referenced data, rewrites
-    * fold them, and a competitor touching a file (or its DVs) this
-    * update read is a [[ConflictingCommitException]], never a silently
-    * wrong rebase.
+    * delete+insert ([[ChangeFeed]] joins DV-deleted rows on the removed
+    * side). Vacuum/restore/compaction/conflict semantics are
+    * [[deleteWithDv]]'s.
     */
   def updateWithDv(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       densityThreshold: Double = 0.15,
       maxAttempts: Int = 5,
-      onStaged: () => Unit = () => ()): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    require(densityThreshold > 0.0 && densityThreshold <= 1.0,
-      s"densityThreshold must be in (0, 1]; got $densityThreshold")
-    import org.apache.spark.sql.functions._
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    requireNotGenerated(prev, set.keys)
-    val (touched, _) = DataSkipping.prune(spark, dir, prev, predicate)
-    val (adds, removes, addStats, dvAdds, dvnSets) =
-      if (touched.isEmpty)
-        (Seq.empty[String], Seq.empty[String],
-          Map.empty[String, DataSkipping.FileStats],
-          Seq.empty[String], Map.empty[String, Long])
-      else {
-        // positional scans need a recorded schema; fail with intent
-        prev.schema.getOrElse(sys.error(
-          s"updateWithDv needs a recorded table schema on $dir; " +
-            "use update() on pre-schema-tracking tables"))
-        val pTrue = coalesce(predicate, lit(false))
-        val scan = scanWithPos(spark, dir, prev, touched)
-        // ONE aggregation job prices every touched file (live rows
-        // under the existing DVs, predicate matches) — one result row
-        // per touched file, driver-bounded like the manifest itself
-        val counts = withJobDesc(spark, "vt:dml-price") {
-          scan.groupBy(col("__vt_file"))
-            .agg(count(lit(1)).as("__n"),
-              sum(when(pTrue, 1L).otherwise(0L)).as("__m"))
-            .collect()
-        }.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        var dvSet = Vector.empty[String]
-        var rwSet = Vector.empty[String]
-        val dvnB = Map.newBuilder[String, Long]
-        touched.foreach { f =>
-          val (nLive, nMatch) = counts.getOrElse(f, (0L, 0L))
-          val prevDel = prev.dvn.getOrElse(f, 0L)
-          if (nMatch == 0L) () // pruning over-approximation: untouched
-          else if (nMatch == nLive ||
-              (prevDel + nMatch).toDouble / (nLive + prevDel)
-                > densityThreshold) rwSet :+= f
-          else { dvSet :+= f; dvnB += f -> (prevDel + nMatch) }
-        }
-        val v = prev.version + 1
-        val statsCols =
-          prev.stats.values.flatMap(_.cols.keys).toSet.toSeq.sorted
-        import spark.implicits._
-        def lane(files: Vector[String]): DataFrame =
-          scan.join(broadcast(files.toDF("__vt_file")), Seq("__vt_file"))
-        // The DV lane's two consumers — the positional sidecar and the
-        // post-image rewrite — both read exactly the MATCHED rows of
-        // the dvSet files; materializing them once (spillable persist,
-        // bounded by the density threshold: ≤ threshold·|dvSet rows|)
-        // halves the dvSet parquet scans and drops a lookup/DV-anti
-        // join re-evaluation per lane (guide §1.4/§2.4). Released after
-        // staging, before the commit loop.
-        val dvMatched =
-          if (dvSet.isEmpty) None
-          else Some(lane(dvSet).filter(pTrue).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-        val staged = dvMatched.fold(Seq.empty[String])(m =>
-          stageFiles(m.select(col("__vt_file"), col("__vt_pos")), dir, v))
-        // post-image and CoW-rewrite rows both recompute generated
-        // columns (the SET may have touched a source) before the CHECK
-        // guard, and stage in ONE write job (the commit treats their
-        // files identically — only `removes` distinguishes a rewrite;
-        // CDC classifies row-level by key): one write, one listing,
-        // one footer-stats batch instead of two of each (guide §1.4)
-        val postRows = dvMatched.map(m => applyUpdateSet(m, predicate, set))
-        val rwRows =
-          if (rwSet.isEmpty) None
-          else Some(applyUpdateSet(lane(rwSet), predicate, set))
-        val (added, addedStats) = (postRows.toSeq ++ rwRows.toSeq)
-            .reduceOption(_ unionByName _) match {
-          case None =>
-            (Seq.empty[String], Map.empty[String, DataSkipping.FileStats])
-          case Some(rows) => rethrowConstraintViolation(stageWithStats(
-            constraintGuard(applyGenerated(rows,
-              prev.generatedCols, recompute = true),
-              prev.constraints),
-            dir, v, statsCols, prev.schema))
-        }
-        (added, rwSet: Seq[String], addedStats, staged, dvnB.result())
-        } finally dvMatched.foreach(_.unpersist())
-      }
-    onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, "update", adds, removes,
-        addStats, prev.schemaJson, dvAdds, dvnSets)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, predicate, touched,
-            "update")
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-  }
+      onStaged: () => Unit = () => ()): Snapshot =
+    dml(spark, dir, Dml.Update(predicate, set), Some(densityThreshold),
+      maxAttempts, onStaged)
 
-  /** SQL MERGE via DELETION VECTORS (merge-on-read): matched target
-    * rows are soft-deleted positionally and EVERY update row appends —
+  /** SQL MERGE via DELETION VECTORS (merge-on-read): the deletion-vector
+    * policy of the DML planner ([[dml]]). Matched target rows are
+    * soft-deleted positionally and EVERY update row appends —
     * post-images for the matches, plain inserts for the rest — in ONE
     * atomic commit. Same answer as [[merge]] (upsert semantics: the
     * update row replaces the matched row entirely, NULLs included);
     * radically different cost model: [[merge]] rewrites every file the
     * update keys' range may touch, this writes a KB-scale sidecar plus
-    * exactly `|updates|` rows. For the medallion pattern's hot path —
-    * a small upsert batch against a huge dimension — that is the
+    * exactly `|updates|` rows. For the medallion pattern's hot path — a
+    * small upsert batch against a huge dimension — that is the
     * difference between an incremental refresh and a table rewrite.
     *
-    * Per touched file the same shape choice as [[updateWithDv]]:
-    * untouched when no live row matches; copy-on-write (folding the
-    * file's DV history into a clean upsert rewrite) when every live
-    * row matches or cumulative dead density crosses
-    * `densityThreshold`; DV + append otherwise. Update rows folded
-    * into a CoW rewrite are excluded from the append lane, so each
-    * update row lands exactly once.
+    * Per touched file the same shape choice as [[updateWithDv]]; a file
+    * that rewrites takes the upsert of the batch, whose unmatched rows
+    * are the append lane, so each update row lands exactly once.
     *
     * CDC classifies the halves as `update_preimage`/`update_postimage`
     * on the key and unmatched update rows as `insert` ([[ChangeFeed]]
@@ -2625,161 +2495,14 @@ object VersionedTable {
     * sink commits `merge#<batchId>` so the tag ledger can replay-skip,
     * the same contract as [[appendTagged]].
     */
-  def mergeWithDv(updates0: DataFrame, dir: String, keys: Seq[String],
+  def mergeWithDv(updates: DataFrame, dir: String, keys: Seq[String],
       statsCols: Seq[String] = Seq.empty,
       densityThreshold: Double = 0.15,
       maxAttempts: Int = 5,
       onStaged: () => Unit = () => (),
-      opTag: String = "merge"): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    require(densityThreshold > 0.0 && densityThreshold <= 1.0,
-      s"densityThreshold must be in (0, 1]; got $densityThreshold")
-    val spark = updates0.sparkSession
-    import org.apache.spark.sql.functions._
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits — use create"))
-    val schema = prev.schema.getOrElse(sys.error(
-      s"mergeWithDv needs a recorded table schema on $dir; " +
-        "use merge() on pre-schema-tracking tables"))
-    // complete the update rows' generated columns before alignment
-    val updates = applyGenerated(updates0, prev.generatedCols)
-    keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"merge key $k not in table schema " +
-        schema.fieldNames.mkString("[", ",", "]")))
-    // Materialized MERGE source (Delta's materializeSource discipline):
-    // the update frame feeds the dup/prune pricing, the per-file match
-    // pricing join, the DV-lane and rewrite-lane semi-joins, and the
-    // insert anti-join — without a persist each consumer re-evaluates
-    // the whole source lineage (a SQL MERGE's USING clause re-read the
-    // source parquet per lane). Spillable persist, released after the
-    // commit; a MERGE batch is bounded by the caller, not the table.
-    val aligned = updates.select(schema.fieldNames.map(col).toSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // carried files always exist on this path — type changes are only
-    // legal as a full rewrite, exactly mergeRebase's carry rule
-    require(schema.fields.map(f =>
-        (f.name.toLowerCase, f.dataType)).toSeq ==
-      aligned.schema.fields.map(f =>
-        (f.name.toLowerCase, f.dataType)).toSeq,
-      s"mergeWithDv cannot change column types " +
-        s"(${schema.simpleString} -> ${aligned.schema.simpleString}); " +
-        "use merge()/overwrite for type changes")
-    // SQL MERGE dup rule + key-range prune bounds in ONE job (see
-    // [[mergePreAgg]]; the first action also materializes the persist)
-    val b = mergePreAgg(aligned, keys)
-    requireUniqueKeys(aligned, keys, b)
-    val keyRangePred = keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(b.get(2 * i + 1)) && col(k) <= lit(b.get(2 * i + 2))
-    }.reduce(_ && _)
-    val (touched, _) = DataSkipping.prune(spark, dir, prev, keyRangePred)
-    val effStats =
-      (statsCols ++ prev.stats.values.flatMap(_.cols.keys)).distinct
-    val (adds, removes, addStats, dvAdds, dvnSets) =
-      if (touched.isEmpty) {
-        // no file may hold a match: the whole batch is an insert append
-        val (fs, st) = rethrowConstraintViolation(stageWithStats(
-          constraintGuard(aligned, prev.constraints), dir,
-          prev.version + 1, effStats, prev.schema))
-        (fs, Seq.empty[String], st, Seq.empty[String],
-          Map.empty[String, Long])
-      } else {
-        val scan = scanWithPos(spark, dir, prev, touched)
-        val uKeys = aligned.select(keys.map(col): _*)
-        val hit = uKeys.withColumn("__u_hit", lit(true))
-        // ONE narrow pass over the touched files prices every lane:
-        // the (file, pos, matched?, keys) projection of the pricing
-        // join persists spillably and feeds (a) the per-file counts,
-        // (b) the DV-lane matched positions, (c) the rewrite-lane
-        // matched keys — the previous shape re-scanned the touched
-        // parquet and re-ran a shuffled semi-join per lane (DV lane,
-        // rewrite-key lane twice), up to 4 reads of the same files
-        // (guide §1.4/§2.4). Keys are unique on the update side (dup
-        // rule, enforced above), so the left-outer join never fans out
-        // and `__u_hit` marks exactly the semi-join survivors.
-        val priced = scan.join(hit, keys, "left_outer")
-          .select((Seq(col("__vt_file"), col("__vt_pos"),
-            coalesce(col("__u_hit"), lit(false)).as("__u_hit")) ++
-            keys.map(col)): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-        // the counts collect also materializes the persist
-        val counts = withJobDesc(spark, "vt:dml-price") {
-          priced.groupBy(col("__vt_file"))
-            .agg(count(lit(1)).as("__n"),
-              sum(when(col("__u_hit"), 1L).otherwise(0L)).as("__m"))
-            .collect()
-        }.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        var dvSet = Vector.empty[String]
-        var rwSet = Vector.empty[String]
-        val dvnB = Map.newBuilder[String, Long]
-        touched.foreach { f =>
-          val (nLive, nMatch) = counts.getOrElse(f, (0L, 0L))
-          val prevDel = prev.dvn.getOrElse(f, 0L)
-          if (nMatch == 0L) () // key range matched, no key did: carry
-          else if (nMatch == nLive ||
-              (prevDel + nMatch).toDouble / (nLive + prevDel)
-                > densityThreshold) rwSet :+= f
-          else { dvSet :+= f; dvnB += f -> (prevDel + nMatch) }
-        }
-        val v = prev.version + 1
-        import spark.implicits._
-        def lane(files: Vector[String]): DataFrame =
-          scan.join(broadcast(files.toDF("__vt_file")), Seq("__vt_file"))
-        // matched target rows of `files`, served from the priced cache
-        // (no parquet re-scan, no re-join — __u_hit already encodes the
-        // semi-join)
-        def pricedLane(files: Vector[String]): DataFrame =
-          priced.filter(col("__u_hit"))
-            .join(broadcast(files.toDF("__vt_file")), Seq("__vt_file"))
-        val staged =
-          if (dvSet.isEmpty) Nil
-          else stageFiles(pricedLane(dvSet)
-            .select(col("__vt_file"), col("__vt_pos")), dir, v)
-        // keys folded into CoW rewrites leave the append lane — each
-        // update row lands exactly once
-        val rwKeys =
-          if (rwSet.isEmpty) None
-          else Some(pricedLane(rwSet).select(keys.map(col): _*))
-        val appendRows = rwKeys match {
-          case None => aligned
-          case Some(rk) => aligned.join(rk, keys, "left_anti")
-        }
-        // append lane and CoW-rewrite lane stage in ONE write job (the
-        // commit treats their files identically — only `removes`
-        // distinguishes a rewrite; CDC classifies row-level by key, not
-        // by file): one write, one listing, one footer-stats batch
-        // instead of two of each (guide §1.4)
-        val rewriteRows = rwKeys.map { rk =>
-          graft.operators.Merge.upsert(
-            lane(rwSet).select(schema.fieldNames.map(col).toSeq: _*),
-            aligned.join(rk, keys, "left_semi"), keys)
-        }
-        val outRows = rewriteRows.foldLeft(appendRows)(_ unionByName _)
-        val (added, addedStats) = rethrowConstraintViolation(stageWithStats(
-          constraintGuard(outRows, prev.constraints), dir, v,
-          effStats, prev.schema))
-        (added, rwSet: Seq[String], addedStats, staged, dvnB.result())
-        } finally priced.unpersist()
-      }
-    onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, opTag, adds, removes,
-        addStats, prev.schemaJson, dvAdds, dvnSets)
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, keyRangePred, touched,
-            "merge")
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-    } finally aligned.unpersist() // all staging/commit actions are done
-  }
+      opTag: String = "merge"): Snapshot =
+    dml(updates.sparkSession, dir, Dml.Merge(updates, keys, statsCols, opTag),
+      Some(densityThreshold), maxAttempts, onStaged)
 
   /** Rewrite the current contents into `targetFiles` files as a new
     * version — answer-preserving OPTIMIZE. Readers of any version,

@@ -493,10 +493,12 @@ class VersionedTableSpec extends AnyFunSuite {
       .count() === 100L)
   }
 
-  // delete's rewrite, for driving copyOnWrite's race-window seam directly
-  private val deleteRw: (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.Column) => org.apache.spark.sql.DataFrame =
-    (df, p) => df.filter(coalesce(not(p), lit(true)))
+  // copy-on-write DELETE through the DML planner, for driving its
+  // race-window seam directly
+  private def cowDelete(dir: String, p: org.apache.spark.sql.Column,
+      onStaged: () => Unit): VersionedTable.Snapshot =
+    VersionedTable.dml(spark, dir, VersionedTable.Dml.Delete(p),
+      dvThreshold = None, maxAttempts = 3, onStaged = onStaged)
 
   test("delete rebases over a concurrent stats-disjoint append") {
     val dir = tmp()
@@ -505,8 +507,7 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.create(df, dir, Seq("id"))
     // competitor appends ids 200.. WITH id stats — provably disjoint
     // from id < 10, so the loser re-commits its staged files
-    val snap = VersionedTable.copyOnWrite(spark, dir, col("id") < 10L,
-      "delete", deleteRw, maxAttempts = 3,
+    val snap = cowDelete(dir, col("id") < 10L,
       onStaged = () => {
         VersionedTable.append((200L until 210L).toDF("id")
           .withColumn("v", lit("y")), dir, Seq("id"))
@@ -519,8 +520,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // a competitor append WITHOUT stats may hold matching rows —
     // rebase must refuse rather than silently skip those rows
     val e = intercept[graft.sources.ConflictingCommitException] {
-      VersionedTable.copyOnWrite(spark, dir, col("id") < 10L,
-        "delete", deleteRw, maxAttempts = 3,
+      cowDelete(dir, col("id") < 10L,
         onStaged = () => {
           VersionedTable.append(Seq((300L, "z")).toDF("id", "v"), dir)
           ()
@@ -535,8 +535,7 @@ class VersionedTableSpec extends AnyFunSuite {
       .repartitionByRange(2, col("id"))
     VersionedTable.create(df, dir, Seq("id"))
     val e = intercept[graft.sources.ConflictingCommitException] {
-      VersionedTable.copyOnWrite(spark, dir, col("id") < 10L,
-        "delete", deleteRw, maxAttempts = 3,
+      cowDelete(dir, col("id") < 10L,
         onStaged = () => {
           VersionedTable.delete(spark, dir, col("id") === 5L)
           ()
@@ -552,9 +551,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = tmp()
     VersionedTable.create((0L until 50L).map(i => (i, s"v$i"))
       .toDF("id", "v"), dir, Seq("id"))
-    val snap = VersionedTable.mergeRebase(
-      Seq((1L, "upd"), (60L, "new")).toDF("id", "v"), dir, Seq("id"),
-      Seq("id"), maxAttempts = 3,
+    val snap = VersionedTable.dml(spark, dir, VersionedTable.Dml.Merge(
+      Seq((1L, "upd"), (60L, "new")).toDF("id", "v"), Seq("id"),
+      Seq("id")), dvThreshold = None, maxAttempts = 3,
       onStaged = () => {
         VersionedTable.append(Seq((200L, "c")).toDF("id", "v"), dir,
           Seq("id"))
@@ -574,8 +573,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // the competitor's rows are key-disjoint, but it evolved the
     // schema — rebasing would commit a stale schemaJson over it
     val e = intercept[graft.sources.ConflictingCommitException] {
-      VersionedTable.copyOnWrite(spark, dir, col("id") < 5L,
-        "delete", deleteRw, maxAttempts = 3,
+      cowDelete(dir, col("id") < 5L,
         onStaged = () => {
           VersionedTable.append(Seq((100L, "y", true))
             .toDF("id", "v", "extra"), dir, Seq("id"), mergeSchema = true)
@@ -1608,5 +1606,232 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.vacuum(spark, dir, retainVersions = 2)
     assert(!java.nio.file.Files.exists(debris),
       "vacuum must sweep unknown below-head manifest debris")
+  }
+
+  // ------------------------------------------------------ DML planner
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.mkString("|")).toSeq.sorted
+
+  /** A byte-identical twin of a table directory (data, sidecars,
+    * manifests), so two policies start from exactly the same state.
+    */
+  private def copyTable(src: String): String = {
+    val dst = tmp()
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(src), new java.io.File(dst))
+    dst
+  }
+
+  /** Run one DML under copy-on-write and under deletion vectors on twin
+    * copies of `base`; both must leave the same table and emit the same
+    * change feed for the commit. Returns the shapes the DV twin used.
+    */
+  private def samePolicies(base: String, what: String)(
+      cow: String => Any, dv: String => Any): Set[String] = {
+    val before = VersionedTable.latest(spark, base).get
+    val from = before.version
+    val (a, b) = (copyTable(base), copyTable(base))
+    cow(a); dv(b)
+    val after = VersionedTable.latest(spark, b).get
+    // one action per comparison: both twins' rows, tagged by twin
+    def twins(f: String => org.apache.spark.sql.DataFrame) = {
+      val got = f(a).withColumn("twin", lit("cow"))
+        .unionByName(f(b).withColumn("twin", lit("dv"))).collect()
+        .groupBy(_.getAs[String]("twin"))
+        .map { case (k, rs) =>
+          k -> rs.map(_.toSeq.init.mkString("|")).toSeq.sorted }
+      assert(got.getOrElse("cow", Nil) === got.getOrElse("dv", Nil), what)
+    }
+    twins(VersionedTable.read(spark, _))
+    twins(graft.sources.ChangeFeed.readChanges(spark, _, from, from + 1,
+      Seq("id")).select("id", "v", "n", "_change_type", "_commit_version"))
+    Set("dv" -> after.dvn.exists { case (f, n) =>
+        !before.dvn.get(f).contains(n) },
+      "removed" -> before.files.exists(f => !after.files.contains(f)))
+      .collect { case (shape, true) => shape }
+  }
+
+  test("policy sweep: copy-on-write and deletion vectors leave the same " +
+      "table and change feed for DELETE, UPDATE and MERGE") {
+    val shapes = scala.collection.mutable.Set.empty[String]
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val files = 3 + rnd.nextInt(3)
+      val per = 30 + rnd.nextInt(30)
+      val top = files * per
+      val base = tmp()
+      VersionedTable.create((1 to top).map(i => (i.toLong, s"v$i",
+        if (i % 11 == 0) None else Some(i % 7))).toDF("id", "v", "n")
+        .repartitionByRange(files, col("id")), base, Seq("id", "n"))
+      // even seeds start from prior DVs the DML must extend or fold
+      if (seed % 2 == 0) VersionedTable.deleteWithDv(spark, base,
+        col("id") % 9L === 4L, densityThreshold = 0.5)
+      def pick(): org.apache.spark.sql.Column = rnd.nextInt(5) match {
+        case 0 => col("id") % (2 + rnd.nextInt(9)) === rnd.nextInt(2)
+        case 1 => col("id") <= 1 + rnd.nextInt(top) // whole files die
+        case 2 => col("n") > rnd.nextInt(7)          // NULL n never matches
+        case 3 => col("id") > top - rnd.nextInt(2 * per) && col("id") % 3 === 0
+        case _ => col("id") === 1 + rnd.nextInt(top)
+      }
+      val t = Seq(0.05, 0.15, 0.5, 1.0)(rnd.nextInt(4))
+      val pd = pick()
+      shapes ++= samePolicies(base, s"seed $seed: delete $pd at $t")(
+        VersionedTable.delete(spark, _, pd),
+        VersionedTable.deleteWithDv(spark, _, pd, densityThreshold = t))
+      val pu = pick()
+      val set = Map("v" -> concat(col("v"), lit("!")), "n" -> (col("n") + 1))
+      shapes ++= samePolicies(base, s"seed $seed: update $pu at $t")(
+        VersionedTable.update(spark, _, pu, set),
+        VersionedTable.updateWithDv(spark, _, pu, set, densityThreshold = t))
+      val hitKeys = rnd.shuffle((1L to top.toLong).toList)
+        .take(1 + rnd.nextInt(top / 3))
+      val updates = (hitKeys ++ (1 to rnd.nextInt(4)).map(top.toLong + _))
+        .map(i => (i, s"m$i", if (rnd.nextBoolean()) None else Some(-1)))
+        .toDF("id", "v", "n")
+      shapes ++= samePolicies(base,
+          s"seed $seed: merge ${hitKeys.size} keys at $t")(
+        VersionedTable.merge(updates, _, Seq("id")),
+        VersionedTable.mergeWithDv(updates, _, Seq("id"),
+          densityThreshold = t))
+    }
+    assert(shapes === Set("dv", "removed"),
+      "the seeds must drive both DV'd and rewritten or dropped files")
+  }
+
+  test("DML on a pre-schema-tracking manifest answers like a schema-" +
+      "tracked twin, and its commit records the schema") {
+    // the same files committed with and without a schema line
+    def table(tracked: Boolean): String = {
+      val dir = tmp()
+      val v1 = VersionedTable.create((1L to 20L).map(i => (i, s"v$i"))
+        .toDF("id", "v").coalesce(1), dir)
+      VersionedTable.commit(spark, dir, 2L, "legacy", v1.files,
+        schemaJson = if (tracked) v1.schemaJson else None)
+      assert(VersionedTable.latest(spark, dir).get.schemaJson.isEmpty ===
+        !tracked)
+      dir
+    }
+    val upd = Seq((2L, "m2"), (99L, "new")).toDF("id", "v")
+    val dmls: Seq[(String, String => VersionedTable.Snapshot)] = Seq(
+      "delete" -> (VersionedTable.delete(spark, _, col("id") % 3L === 0L)),
+      "update" -> (VersionedTable.update(spark, _, col("id") <= 5L,
+        Map("v" -> lit("u")))),
+      "merge" -> (VersionedTable.merge(upd, _, Seq("id"))),
+      // the deletion-vector verbs read the footer schema like the others
+      "deleteWithDv" -> (VersionedTable.deleteWithDv(spark, _,
+        col("id") === 4L)),
+      "updateWithDv" -> (VersionedTable.updateWithDv(spark, _,
+        col("id") === 6L, Map("v" -> lit("u")))),
+      "mergeWithDv" -> (VersionedTable.mergeWithDv(upd, _, Seq("id"))))
+    for ((name, run) <- dmls) {
+      val (legacy, twin) = (table(tracked = false), table(tracked = true))
+      val s = run(legacy)
+      run(twin)
+      def fields(sn: VersionedTable.Snapshot) =
+        sn.schema.map(_.fields.map(f => (f.name, f.dataType)).toSeq)
+      assert(fields(s) === fields(VersionedTable.latest(spark, twin).get),
+        s"$name must record the footer schema")
+      if (name.endsWith("WithDv"))
+        assert(s.dvn.values.sum === 1L, s"$name must soft-delete one row")
+      assert(rowsOf(VersionedTable.read(spark, legacy)) ===
+        rowsOf(VersionedTable.read(spark, twin)), name)
+    }
+  }
+
+  test("job shape: copy-on-write DML launches no vt:dml-price job; each " +
+      "deletion-vector verb launches one") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descs.add)
+    }
+    def priceJobs(body: => Any): Int = {
+      org.apache.spark.graft.ListenerSync.waitUntilEmpty(sc)
+      descs.clear()
+      body
+      org.apache.spark.graft.ListenerSync.waitUntilEmpty(sc)
+      descs.asScala.count(_ == "vt:dml-price")
+    }
+    sc.addSparkListener(listener)
+    try {
+      val dir = tmp()
+      dvTable(dir, files = 2, per = 100L)
+      assert(priceJobs(VersionedTable.delete(spark, dir, col("id") === 5L))
+        === 0)
+      assert(priceJobs(VersionedTable.update(spark, dir, col("id") === 6L,
+        Map("v" -> lit("u")))) === 0)
+      assert(priceJobs(VersionedTable.merge(Seq((7L, "m")).toDF("id", "v"),
+        dir, Seq("id"))) === 0)
+      assert(priceJobs(VersionedTable.deleteWithDv(spark, dir,
+        col("id") === 150L)) >= 1)
+      assert(priceJobs(VersionedTable.updateWithDv(spark, dir,
+        col("id") === 151L, Map("v" -> lit("u")))) >= 1)
+      assert(priceJobs(VersionedTable.mergeWithDv(
+        Seq((152L, "m")).toDF("id", "v"), dir, Seq("id"))) >= 1)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("merge aligns the update frame to the table's columns by name on " +
+      "both policies; extra source columns are ignored") {
+    for (dv <- Seq(false, true)) {
+      val dir = tmp()
+      // key column last, so the upsert's key-first output differs from
+      // the table order; the update frame lists yet another order
+      VersionedTable.create((1L to 10L).map(i => (s"v$i", i)).toDF("v", "id")
+        .coalesce(1), dir, Seq("id"))
+      VersionedTable.append((11L to 20L).map(i => (s"v$i", i))
+        .toDF("v", "id").coalesce(1), dir, Seq("id"))
+      val upd = Seq((3L, "m3", 0), (30L, "new", 0)).toDF("id", "v", "junk")
+      if (dv) VersionedTable.mergeWithDv(upd, dir, Seq("id"),
+        densityThreshold = 0.9)
+      else VersionedTable.merge(upd, dir, Seq("id"))
+      val out = VersionedTable.read(spark, dir)
+      assert(out.columns.toSeq === Seq("v", "id"), s"dv=$dv")
+      assert(asMap(out) === (1L to 20L).map(i =>
+        i -> (if (i == 3L) "m3" else s"v$i")).toMap + (30L -> "new"),
+        s"dv=$dv")
+    }
+  }
+
+  test("merge never changes column types, even when it rewrites every " +
+      "file") {
+    for (dv <- Seq(false, true)) {
+      val dir = tmp()
+      VersionedTable.create(Seq((1L, 1), (2L, 2)).toDF("id", "n")
+        .coalesce(1), dir)
+      val upd = Seq((1L, 10L)).toDF("id", "n") // n: bigint over int
+      val e = intercept[IllegalArgumentException] {
+        if (dv) VersionedTable.mergeWithDv(upd, dir, Seq("id"))
+        else VersionedTable.merge(upd, dir, Seq("id"))
+      }
+      assert(e.getMessage.contains("cannot change column types"), s"dv=$dv")
+      assert(VersionedTable.latest(spark, dir).get.version === 1L)
+    }
+  }
+
+  test("DELETE survivors pass the CHECK guard on both policies: a rewrite " +
+      "of rows that violate a recorded constraint fails") {
+    for (dv <- Seq(false, true)) {
+      val dir = tmp()
+      val v1 = VersionedTable.create((1L to 10L).map(i =>
+        (i, if (i == 9L) -1.0 else i * 1.0)).toDF("id", "price").coalesce(1),
+        dir)
+      // a hand-committed constraint the live rows violate (the public
+      // addCheckConstraint would refuse it)
+      VersionedTable.commit(spark, dir, 2L, "legacy", v1.files, v1.stats,
+        v1.schemaJson, constraints = Map("pos" -> "price > 0"))
+      intercept[graft.sources.ConstraintViolationException] {
+        if (dv) VersionedTable.deleteWithDv(spark, dir, col("id") <= 3L,
+          densityThreshold = 0.1) // 30% dead: the file rewrites
+        else VersionedTable.delete(spark, dir, col("id") <= 3L)
+      }
+      assert(VersionedTable.latest(spark, dir).get.version === 2L, s"dv=$dv")
+    }
   }
 }
