@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   * wins (reference: README.md:57-58).
   *
   * Scale notes: the existing side is projected to its key columns BEFORE
-  * the join so only the key set shuffles (or broadcasts). At 100 TB with
+  * the join so only the key set shuffles (or broadcasts). It is not
+  * de-duplicated: repeated keys on the right cannot change a left-anti
+  * result, and a distinct would be a full aggregate over all of history
+  * on every call. At 100 TB with
   * billions of existing ids, Catalyst/AQE picks a shuffled hash anti-join;
   * partition pruning on the target (e.g. by ingestion_date / Year) should
   * be applied by the caller to bound the "existing" scan.
@@ -19,7 +22,6 @@ import org.apache.spark.sql.functions._
 object Idempotency {
 
   def newKeysOnly(batch: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame = {
-    val existingKeys = existing.select(keys.map(col): _*).dropDuplicates()
-    batch.join(existingKeys, keys, "left_anti")
+    batch.join(existing.select(keys.map(col): _*), keys, "left_anti")
   }
 }

@@ -247,7 +247,7 @@ object VersionedTable {
   }
 
   /** Manifest-file reads since JVM start — observability for the
-    * metadata-cost specs (e.g. proving an [[appendTagged]] retry reads
+    * metadata-cost specs (e.g. proving a tagged [[write]] retry reads
     * O(new versions), not O(table history)).
     */
   private[graft] val manifestReadCount =
@@ -1164,12 +1164,12 @@ object VersionedTable {
     resolved
   }
 
-  /** Fault-injection seam (test scope only, mirrors [[appendRebase]]'s
-    * `onStaged`): invoked between staging the complete manifest body in
-    * the hidden temp and the atomic hard-link publish — exactly the
-    * window a crashed writer dies in. The commit-race harness points
-    * this at `Runtime.halt` to prove a kill there leaves only invisible
-    * temp debris, never a torn or claimed manifest.
+  /** Fault-injection seam (test scope only, like the `onStaged` of
+    * [[write]] and [[dml]]): invoked between staging the complete
+    * manifest body in the hidden temp and the atomic hard-link publish —
+    * exactly the window a crashed writer dies in. The commit-race
+    * harness points this at `Runtime.halt` to prove a kill there leaves
+    * only invisible temp debris, never a torn or claimed manifest.
     */
   private[graft] var commitCrashPoint: () => Unit = () => ()
 
@@ -1566,39 +1566,19 @@ object VersionedTable {
     }
   }
 
-  /** Create the table (version 1). Fails if commits already exist.
-    * `statsCols` names columns to collect data-skipping stats for
-    * (see [[DataSkipping]]); stats ride the manifest and power
-    * [[readWhere]]'s file pruning.
+  /** Create the table (version 1): the write step ([[write]]) with no
+    * previous snapshot. Fails if commits already exist. `statsCols`
+    * names columns to collect data-skipping stats for (see
+    * [[DataSkipping]]); stats ride the manifest and power [[readWhere]]'s
+    * file pruning. `generatedCols` declares the table's generated
+    * columns (name -> SQL expression over stored columns).
     */
   def create(df: DataFrame, dir: String,
       statsCols: Seq[String] = Seq.empty,
       generatedCols: Map[String, String] = Map.empty): Snapshot = {
     require(latest(df.sparkSession, dir).isEmpty,
       s"table $dir already has commits — use append/overwrite")
-    // generated columns are declared HERE and only here (Delta's
-    // GENERATED ALWAYS AS is a creation-time property): each expression
-    // must reference only real incoming columns — self- or cross-
-    // generated references would make generation order-dependent
-    generatedCols.foreach { case (g, e) =>
-      require(g.nonEmpty && !g.startsWith("__vt_"),
-        s"bad generated column name '$g'")
-      val refs = constraintRefs(df.sparkSession, e)
-      require(refs.nonEmpty, s"generated column $g ($e) references no " +
-        "column — a constant needs no generation rule")
-      refs.foreach { r =>
-        require(df.columns.exists(_.equalsIgnoreCase(r)),
-          s"generated column $g references unknown column $r")
-        require(!generatedCols.keys.exists(_.equalsIgnoreCase(r)),
-          s"generated column $g references generated column $r; " +
-            "generation rules must depend on stored columns only")
-      }
-    }
-    val gen = applyGenerated(df, generatedCols)
-    val (files, st) = rethrowConstraintViolation(
-      stageWithStats(gen, dir, 1L, statsCols))
-    commit(df.sparkSession, dir, 1L, "create", files, st,
-      Some(gen.schema.json), generatedCols = generatedCols)
+    write(df, dir, "create", None, statsCols, generatedCols = generatedCols)
   }
 
   /** Union of two schemas for an evolving append: same-name fields
@@ -1654,231 +1634,54 @@ object VersionedTable {
         })
   }
 
-  /** Append `df` as a new version: previous files carry over (with
-    * their stats), new files join them. Old versions remain readable.
-    * With the default `mergeSchema = false` the incoming schema must
-    * match the table's recorded schema exactly (by field name + type);
-    * with `mergeSchema = true` new columns evolve the table schema and
-    * pre-existing files read as null for them ([[mergeSchemas]]).
+  /** Append `df` as a new version: the write step ([[write]]) against
+    * the latest snapshot, one commit attempt. Previous files carry over
+    * (with their stats), new files join them; old versions remain
+    * readable. With the default `mergeSchema = false` the incoming
+    * schema must match the table's recorded schema exactly (by field
+    * name + type); with `mergeSchema = true` new columns evolve the
+    * table schema and pre-existing files read as null for them
+    * ([[mergeSchemas]]).
     */
   def append(df: DataFrame, dir: String,
       statsCols: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false): Snapshot =
-    appendRebase(df, dir, statsCols, mergeSchema, maxAttempts = 1)
+    write(df, dir, "append", existing(df.sparkSession, dir), statsCols,
+      mergeSchema = mergeSchema)
 
-  /** [[append]] with automatic conflict REBASE — the optimistic-
-    * concurrency completion: appends commute, so when another writer
-    * claims the version first, the loser's already-staged files are
-    * simply re-committed against the NEW latest (re-running the schema
-    * check and stats merge against it) instead of failing the caller.
-    * Data is staged exactly once; each retry costs one manifest read +
-    * one commit attempt. Non-append conflicts rebase too — "my rows
-    * joined the table after your operation" is exactly append
-    * semantics. Gives up after `maxAttempts` claims, rethrowing the
+  /** [[append]] with automatic conflict REBASE: the write step with up
+    * to `maxAttempts` version claims. Appends commute, so when another
+    * writer claims the version first, the already-staged files are
+    * re-committed against the NEW latest (schema and rule sets
+    * re-checked against it) instead of failing the caller. Data is
+    * staged exactly once; each retry costs one manifest read + one
+    * commit attempt. Gives up after `maxAttempts` claims, rethrowing the
     * conflict.
     */
   def appendWithRetry(df: DataFrame, dir: String,
       statsCols: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false,
       maxAttempts: Int = 5): Snapshot =
-    appendRebase(df, dir, statsCols, mergeSchema, maxAttempts)
-
-  /** Core append loop; `onStaged` is a test seam that runs after the
-    * data files are staged and before the first commit attempt — the
-    * race window a concurrent writer exploits.
-    */
-  private[graft] def appendRebase(df: DataFrame, dir: String,
-      statsCols: Seq[String], mergeSchema: Boolean, maxAttempts: Int,
-      onStaged: () => Unit = () => ()): Snapshot = {
-    require(maxAttempts >= 1, "maxAttempts must be at least 1")
-    val spark = df.sparkSession
-    var prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits — use create"))
-    // generated columns first (an omitting batch computes them, a
-    // supplying batch validates them), so the schema check below sees
-    // the completed frame
-    val dfg = applyGenerated(df, prev.generatedCols)
-    def evolve(p: Snapshot): Option[org.apache.spark.sql.types.StructType] =
-      p.schema match {
-        case None => None // legacy table: start recording below
-        case Some(ps) if mergeSchema =>
-          Some(mergeSchemas(ps, dfg.schema, p.droppedCols))
-        case Some(ps) =>
-          val same = ps.fields.map(f => (f.name, f.dataType)).toSeq ==
-            dfg.schema.fields.map(f => (f.name, f.dataType)).toSeq
-          require(same,
-            s"append schema ${dfg.schema.simpleString} does not match table " +
-              s"schema ${ps.simpleString}; pass mergeSchema = true to evolve")
-          Some(ps)
-      }
-    // schema checks run BEFORE staging (fail fast), and the staged
-    // files spell columns physically when the table carries a mapping
-    val ev0 = evolve(prev)
-    // CHECK constraints are enforced inside the staging job itself
-    // (constraintGuard: zero extra passes); the rule sets they were
-    // applied with are re-checked on every rebase below — staged data
-    // must not slip past a rule a competitor added mid-race
-    val appliedRules = (prev.constraints, prev.generatedCols)
-    val (files, st) = rethrowConstraintViolation(stageWithStats(
-      constraintGuard(dfg, prev.constraints), dir, prev.version + 1,
-      statsCols, ev0))
-    onStaged()
-    var attempt = 1
-    while (true) {
-      val evolved = evolve(prev).map(_.json).orElse(Some(dfg.schema.json))
-      if ((prev.constraints, prev.generatedCols) != appliedRules)
-        throw new ConflictingCommitException(
-          s"append on $dir lost the commit race and cannot rebase: a " +
-            "concurrent commit changed the table's CHECK constraints " +
-            "or generation rules after this batch was validated; " +
-            "re-run the append")
-      try return commitDelta(spark, dir, prev, "append", files, Nil, st,
-        evolved)
-      catch {
-        // ONLY the version-claim race is rebaseable; a genuine I/O
-        // failure mid-commit must surface as itself, not be retried
-        // into a misleading "concurrent writer" report
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = latest(spark, dir).getOrElse(
-            sys.error(s"table $dir lost all commits mid-append"))
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
-    }
-    sys.error("unreachable")
-  }
+    write(df, dir, "append", existing(df.sparkSession, dir), statsCols,
+      mergeSchema = mergeSchema, maxAttempts = maxAttempts)
 
   /** [[append]] with a caller-supplied operation tag, creating the table
-    * on first use. The tag is the streaming exactly-once device: a
+    * on first use: the write step as a tagged append with up to five
+    * version claims. The tag is the streaming exactly-once device: a
     * foreachBatch sink commits each micro-batch as `append#<batchId>`
     * and a replay that finds its tag already committed skips — and
-    * because the manifest rename is the commit, the append is ATOMIC
-    * (no partial batch can ever be visible), which the
-    * partition-directory ledger can only approximate.
+    * because the manifest claim is the commit, the append is ATOMIC (no
+    * partial batch can ever be visible), which the partition-directory
+    * ledger can only approximate. A tag already committed at ANY version
+    * no-ops and returns the tagged snapshot instead of committing the
+    * batch twice (a full-chain check: this entry point has no
+    * caller-side ledger).
     */
   def appendTagged(df: DataFrame, dir: String, tag: String,
       statsCols: Seq[String] = Seq.empty): Snapshot = {
-    // FULL-chain replay check: the private overload's retry
-    // short-circuit only scans versions newer than the resolved latest
-    // (its documented precondition — the caller covered everything at
-    // or below it). This public entry point has no caller-side ledger,
-    // so it performs that coverage itself: a tag already committed at
-    // ANY version no-ops and returns the tagged snapshot instead of
-    // committing the batch twice.
     val snaps = snapshots(df.sparkSession, dir)
-    snaps.find(_.operation == tag).getOrElse(
-      appendTagged(df, dir, tag, snaps.lastOption, statsCols,
-        maxAttempts = 5))
-  }
-
-  /** [[appendTagged]] against an already-resolved latest snapshot, so a
-    * caller that has just listed the manifests (the streaming sink does,
-    * for its replay check) does not list them a second time.
-    *
-    * Retries the version claim up to `maxAttempts` times (data staged
-    * ONCE, appendRebase-style): a streaming sink must not die because a
-    * routine [[compactTable]]/[[cluster]] in another process claimed
-    * the version first — appends commute with everything, so the
-    * staged batch simply re-commits against the new latest. The tag is
-    * re-checked against each new snapshot chain (a replayed batch
-    * whose earlier attempt actually won must no-op, not double-commit),
-    * and the schema contract is re-run in case the competitor evolved
-    * the table mid-retry.
-    *
-    * PRECONDITION: the caller has already verified `tag` is absent from
-    * every version at or below `prevOpt0` (the streaming sinks' ledger
-    * cursor does; the public overload runs a full-chain check). The
-    * retry short-circuit relies on it — it scans only versions
-    * committed AFTER `prevOpt0`, so a pre-existing tag below it would
-    * go undetected here and commit twice.
-    */
-  private[graft] def appendTagged(df0: DataFrame, dir: String, tag: String,
-      prevOpt0: Option[Snapshot],
-      statsCols: Seq[String], maxAttempts: Int): Snapshot = {
-    val spark = df0.sparkSession
-    val df = applyGenerated(df0,
-      prevOpt0.map(_.generatedCols).getOrElse(Map.empty))
-    def checkSchema(p: Option[Snapshot]): Unit =
-      // same fail-fast contract as append(): a drifted batch must not
-      // silently lose (or null-fill) columns under the recorded schema —
-      // streaming evolution is an explicit upstream decision, not a
-      // side effect
-      p.flatMap(_.schema).foreach { ps =>
-        val same = ps.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq ==
-          df.schema.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq
-        require(same,
-          s"streamed batch schema ${df.schema.simpleString} does not match " +
-            s"table schema ${ps.simpleString}")
-      }
-    checkSchema(prevOpt0)
-    val v0 = prevOpt0.map(_.version + 1).getOrElse(1L)
-    val appliedRules = (
-      prevOpt0.map(_.constraints).getOrElse(Map.empty[String, String]),
-      prevOpt0.map(_.generatedCols).getOrElse(Map.empty[String, String]))
-    val (files, st) = rethrowConstraintViolation(stageWithStats(
-      constraintGuard(df, appliedRules._1), dir, v0, statsCols,
-      prevOpt0.flatMap(_.schema)))
-    var prevOpt = prevOpt0
-    var attempt = 1
-    while (true) {
-      if ((prevOpt.map(_.constraints).getOrElse(
-            Map.empty[String, String]),
-          prevOpt.map(_.generatedCols).getOrElse(
-            Map.empty[String, String])) != appliedRules)
-        throw new ConflictingCommitException(
-          s"append#$tag on $dir lost the commit race and cannot rebase: " +
-            "a concurrent commit changed the table's CHECK constraints " +
-            "or generation rules after this batch was validated; " +
-            "re-run the batch")
-      try {
-        return prevOpt match {
-          case Some(prev) =>
-            commitDelta(spark, dir, prev, tag, files, Nil, st,
-              prev.schemaJson.orElse(Some(df.schema.json)))
-          case None =>
-            commit(spark, dir, 1L, tag, files, st, Some(df.schema.json))
-        }
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          // Tag re-check SHORT-CIRCUIT: only versions committed AFTER
-          // the initially-resolved latest can carry this tag (the
-          // caller's replay check covered everything at or below it),
-          // and the zero-padded manifest NAME encodes the version, so
-          // filtering the listing costs no opens. A retry therefore
-          // reads O(versions committed since this call began) manifests
-          // plus latest()'s checkpoint-bounded chain — NOT the whole
-          // table history: a streaming sink retrying against a
-          // thousand-version table no longer re-lists its entire past.
-          // A torn manifest in the window parses to None and is simply
-          // re-examined next retry (it may still complete).
-          val (fs, _) = fsFor(spark, dir)
-          val base0 = prevOpt0.map(_.version).getOrElse(0L)
-          val newRecs = manifestFiles(fs, dir)
-            .filter(s =>
-              versionOfName(s.getPath.getName).exists(_ > base0))
-            .sortBy(_.getPath.getName)
-            .flatMap(s => readManifestIfPresent(fs, s.getPath))
-          val tagged = newRecs.exists {
-            case FullRec(s) => s.operation == tag
-            case d: DeltaRec => d.operation == tag
-          }
-          if (tagged)
-            // an earlier attempt actually WON (or a concurrent replay
-            // landed): resolve the tagged version through the normal
-            // chain — rare, so the full cost stays off the hot path
-            return snapshots(spark, dir).find(_.operation == tag).get
-          val np = latest(spark, dir)
-          checkSchema(np)
-          pace(prevOpt.map(_.version).getOrElse(0L),
-            np.map(_.version).getOrElse(0L), attempt)
-          prevOpt = np
-      }
-    }
-    sys.error("unreachable")
+    snaps.find(_.operation == tag).getOrElse(write(df, dir, tag,
+      snaps.lastOption, statsCols, tagged = true, maxAttempts = 5))
   }
 
   /** True iff some committed version carries `tag` as its operation. */
@@ -1922,59 +1725,202 @@ object VersionedTable {
     (recs.map(_._2), latest(spark, dir), through)
   }
 
-  /** Replace the table's contents as a new version. Old versions remain
-    * readable until [[vacuum]].
+  /** Replace the table's contents as a new version: the write step
+    * ([[write]]) as an overwrite of the latest snapshot, which never
+    * rebases. Constraints and generation rules survive; old versions
+    * remain readable until [[vacuum]].
     */
   def overwrite(df: DataFrame, dir: String,
-      statsCols: Seq[String] = Seq.empty): Snapshot = {
-    val prev = latest(df.sparkSession, dir).getOrElse(
-      sys.error(s"table $dir has no commits — use create"))
-    val v = prev.version + 1
-    // constraints and generation rules survive a data overwrite (Delta
-    // semantics) — but only those whose referenced columns the NEW
-    // schema still carries can keep working; any other would poison
-    // every later append with an unresolvable expression, so the
-    // overwrite fails fast instead
-    prev.constraints.foreach { case (cn, ce) =>
-      constraintRefs(df.sparkSession, ce).foreach(r => require(
-        df.columns.exists(_.equalsIgnoreCase(r)),
-        s"overwrite drops column $r referenced by CHECK constraint " +
-          s"$cn ($ce); drop the constraint first"))
+      statsCols: Seq[String] = Seq.empty): Snapshot =
+    write(df, dir, "overwrite", existing(df.sparkSession, dir), statsCols,
+      overwrite = true)
+
+  /** The latest snapshot of a table a write requires to exist. */
+  private def existing(spark: SparkSession, dir: String): Option[Snapshot] =
+    Some(latest(spark, dir).getOrElse(
+      sys.error(s"table $dir has no commits — use create")))
+
+  /** The CHECK constraints and generation rules of `p` (none for None). */
+  private def rulesOf(p: Option[Snapshot]):
+      (Map[String, String], Map[String, String]) =
+    p.fold((Map.empty[String, String], Map.empty[String, String]))(s =>
+      (s.constraints, s.generatedCols))
+
+  /** The one write step behind [[create]], [[append]],
+    * [[appendWithRetry]], [[appendTagged]], [[overwrite]] and the
+    * streaming sinks. Each step runs once:
+    *  1. resolve: the write goes against `prev`; `None` creates version
+    *     1, declaring `generatedCols` — each must reference only real
+    *     incoming columns (Delta's GENERATED ALWAYS AS is a creation-time
+    *     property, and generated-on-generated references would make
+    *     generation order-dependent);
+    *  2. check: an overwrite must keep every column a CHECK constraint or
+    *     a generated column references (any other rule would poison
+    *     every later append with an unresolvable expression); an append
+    *     must match the recorded schema exactly, by name and type, or
+    *     evolve it under `mergeSchema` ([[mergeSchemas]]). An overwrite,
+    *     a create and an append to a table from before schema tracking
+    *     record the batch's schema;
+    *  3. stage: once, through [[stage]], with stats on `statsCols` — or,
+    *     when the caller names none, on every column the table already
+    *     tracks that the batch carries;
+    *  4. commit: through [[commitLoop]] — a delta manifest for an append,
+    *     a full one for a create or an overwrite (which keeps the table
+    *     id and rule sets). When another writer claims the version first,
+    *     an append re-commits the staged files against the new latest
+    *     after re-checking its schema (at the commit) and the rule sets
+    *     the batch was guarded with ([[ConflictingCommitException]] if a
+    *     competitor changed them); a `tagged` append first looks for
+    *     `op` among the versions committed after `prev` and returns that
+    *     snapshot when an earlier attempt or a replay already won. An
+    *     overwrite never rebases: a lost claim surfaces to the caller.
+    *
+    * `op` is the operation the commit records. A tagged caller must
+    * have checked that `op` is absent from every version at or below
+    * `prev`: the retry scans only newer ones. `onStaged` is the
+    * race-window test seam: it runs after staging, before the first
+    * commit attempt.
+    */
+  private[graft] def write(df: DataFrame, dir: String, op: String,
+      prev: Option[Snapshot], statsCols: Seq[String] = Seq.empty,
+      overwrite: Boolean = false, mergeSchema: Boolean = false,
+      generatedCols: Map[String, String] = Map.empty,
+      tagged: Boolean = false, maxAttempts: Int = 1,
+      onStaged: () => Unit = () => ()): Snapshot = {
+    require(maxAttempts >= 1, "maxAttempts must be at least 1")
+    val spark = df.sparkSession
+    generatedCols.foreach { case (g, e) =>
+      require(g.nonEmpty && !g.startsWith("__vt_"),
+        s"bad generated column name '$g'")
+      val refs = constraintRefs(spark, e)
+      require(refs.nonEmpty, s"generated column $g ($e) references no " +
+        "column — a constant needs no generation rule")
+      refs.foreach { r =>
+        require(df.columns.exists(_.equalsIgnoreCase(r)),
+          s"generated column $g references unknown column $r")
+        require(!generatedCols.keys.exists(_.equalsIgnoreCase(r)),
+          s"generated column $g references generated column $r; " +
+            "generation rules must depend on stored columns only")
+      }
     }
-    prev.generatedCols.foreach { case (g, ge) =>
-      constraintRefs(df.sparkSession, ge).foreach(r => require(
-        df.columns.exists(_.equalsIgnoreCase(r)),
-        s"overwrite drops column $r that generated column $g ($ge) " +
-          "is computed from; drop the generated column first"))
+    val rules = rulesOf(prev)
+    val (constraints, generated) = (rules._1, rules._2 ++ generatedCols)
+    if (overwrite) {
+      constraints.foreach { case (cn, ce) =>
+        constraintRefs(spark, ce).foreach(r => require(
+          df.columns.exists(_.equalsIgnoreCase(r)),
+          s"overwrite drops column $r referenced by CHECK constraint " +
+            s"$cn ($ce); drop the constraint first"))
+      }
+      generated.foreach { case (g, ge) =>
+        constraintRefs(spark, ge).foreach(r => require(
+          df.columns.exists(_.equalsIgnoreCase(r)),
+          s"overwrite drops column $r that generated column $g ($ge) " +
+            "is computed from; drop the generated column first"))
+      }
     }
-    val dfg = applyGenerated(df, prev.generatedCols)
-    val (files, st) = rethrowConstraintViolation(stageWithStats(
-      constraintGuard(dfg, prev.constraints), dir, v, statsCols))
-    commit(df.sparkSession, dir, v, "overwrite", files, st,
-      Some(dfg.schema.json), prev.tableId,
-      constraints = prev.constraints,
-      generatedCols = prev.generatedCols)
+    // the completed batch's schema (omitted generated columns appended),
+    // so an omitting batch still matches; [[stage]] completes the rows
+    val full = applyGenerated(df, generated).schema
+    def schemaOn(p: Option[Snapshot]): org.apache.spark.sql.types.StructType =
+      p.filter(_ => !overwrite).flatMap(s => s.schema.map(s -> _)) match {
+        case None => full
+        case Some((s, ps)) if mergeSchema =>
+          mergeSchemas(ps, full, s.droppedCols)
+        case Some((_, ps)) =>
+          require(ps.fields.map(f => (f.name, f.dataType)).toSeq ==
+            full.fields.map(f => (f.name, f.dataType)).toSeq,
+            s"$op schema ${full.simpleString} does not match table schema " +
+              s"${ps.simpleString}; pass mergeSchema = true to evolve")
+          ps
+      }
+    // naming no stats columns keeps every tracked one the batch carries
+    val stats = if (statsCols.nonEmpty) statsCols else prev.toSeq
+      .flatMap(_.stats.values.flatMap(_.cols.keys)).distinct.sorted
+      .filter(c => full.fieldNames.exists(_.equalsIgnoreCase(c)))
+    // staged files spell columns physically when the table maps them
+    val (files, st) = stage(df, dir, prev.fold(1L)(_.version + 1),
+      constraints, generated, stats, Some(schemaOn(prev)))
+    onStaged()
+    val base = prev.fold(0L)(_.version)
+    commitLoop(prev, if (overwrite) 1 else maxAttempts) { p =>
+      val schema = Some(schemaOn(p).json)
+      p.filter(_ => !overwrite) match {
+        case Some(s) =>
+          commitDelta(spark, dir, s, op, files, Nil, st, schema)
+        case None => commit(spark, dir, base + 1, op, files, st, schema,
+          p.flatMap(_.tableId), constraints = constraints,
+          generatedCols = generated)
+      }
+    } { p =>
+      // a tagged retry scans only the versions committed after `prev`
+      // (the zero-padded names filter without opens): O(versions since
+      // this call began) plus latest()'s checkpoint-bounded chain
+      val (ops, np) =
+        if (!tagged) (Nil, latest(spark, dir))
+        else opsAndLatestAfter(spark, dir, base) match {
+          case (o, l, _) => (o, l)
+        }
+      if (ops.contains(op))
+        Left(snapshots(spark, dir).find(_.operation == op).get)
+      else {
+        if (np.isEmpty && p.nonEmpty)
+          sys.error(s"table $dir lost all commits mid-$op")
+        // staged data must not slip past a rule a competitor added
+        if (rulesOf(np) != rules) throw new ConflictingCommitException(
+          s"$op on $dir lost the commit race and cannot rebase: a " +
+            "concurrent commit changed the table's CHECK constraints or " +
+            "generation rules after this batch was validated; re-run it")
+        Right(np)
+      }
+    }
   }
 
-  /** [[overwrite]] under a caller-chosen operation tag, against an
-    * already-resolved latest (None → this commit creates v1) — the
-    * exactly-once streaming sink primitive, mirroring [[appendTagged]]:
-    * the tag is the replay marker a redelivered micro-batch finds and
-    * skips on, and the single manifest listing the caller already did
-    * serves both that check and version resolution.
+  /** The one staging step of every write and DML: generated columns
+    * completed ([[applyGenerated]]; `recompute` for DML rewrites), CHECK
+    * constraints enforced inside the staging job ([[constraintGuard]]),
+    * then [[stageWithStats]]; a tripped guard surfaces as a
+    * [[ConstraintViolationException]].
     */
-  private[graft] def overwriteTagged(df: DataFrame, dir: String,
-      tag: String, prevOpt: Option[Snapshot],
-      statsCols: Seq[String] = Seq.empty): Snapshot = {
-    val v = prevOpt.map(_.version + 1).getOrElse(1L)
-    val cons = prevOpt.map(_.constraints).getOrElse(Map.empty[String, String])
-    val gens =
-      prevOpt.map(_.generatedCols).getOrElse(Map.empty[String, String])
-    val dfg = applyGenerated(df, gens)
-    val (files, st) = rethrowConstraintViolation(stageWithStats(
-      constraintGuard(dfg, cons), dir, v, statsCols))
-    commit(df.sparkSession, dir, v, tag, files, st, Some(dfg.schema.json),
-      prevOpt.flatMap(_.tableId), constraints = cons, generatedCols = gens)
+  private def stage(rows: DataFrame, dir: String, v: Long,
+      constraints: Map[String, String], generated: Map[String, String],
+      statsCols: Seq[String],
+      tblSchema: Option[org.apache.spark.sql.types.StructType],
+      recompute: Boolean = false):
+      (Seq[String], Map[String, DataSkipping.FileStats]) =
+    rethrowConstraintViolation(stageWithStats(
+      constraintGuard(applyGenerated(rows, generated, recompute),
+        constraints), dir, v, statsCols, tblSchema))
+
+  /** The one commit loop of every write and DML: commit against `prev`;
+    * when another writer claimed the version first, rethrow after
+    * `maxAttempts` claims, else ask `rebase` for the snapshot to commit
+    * against next — or (`Left`) for a snapshot that already holds this
+    * commit — [[pace]] and retry. ONLY the version-claim race retries: a
+    * genuine I/O failure mid-commit surfaces as itself, not as a
+    * misleading "concurrent writer" report.
+    */
+  private def commitLoop(prev0: Option[Snapshot], maxAttempts: Int)(
+      commitOn: Option[Snapshot] => Snapshot)(
+      rebase: Option[Snapshot] => Either[Snapshot, Option[Snapshot]]):
+      Snapshot = {
+    var prev = prev0
+    var attempt = 1
+    while (true) {
+      try return commitOn(prev)
+      catch {
+        case e: ConcurrentCommitException =>
+          if (attempt >= maxAttempts) throw e
+          attempt += 1
+          rebase(prev) match {
+            case Left(won) => return won
+            case Right(np) =>
+              pace(prev.fold(0L)(_.version), np.fold(0L)(_.version), attempt)
+              prev = np
+          }
+      }
+    }
+    sys.error("unreachable")
   }
 
   /** The DML verbs as the planner ([[dml]]) receives them. */
@@ -2041,8 +1987,8 @@ object VersionedTable {
     * ([[applyUpdateSet]]) to the rewrite lane plus the DV-matched rows;
     * MERGE upserts its source into the rewrite lane — one full-outer
     * join whose unmatched source rows are the DV-matched post-images and
-    * the inserts. `onStaged` is the race-window test seam, mirroring
-    * [[appendRebase]].
+    * the inserts. `onStaged` is the race-window test seam, as in the
+    * write step ([[write]]).
     */
   private[graft] def dml(spark: SparkSession, dir: String, verb: Dml.Verb,
       dvThreshold: Option[Double], maxAttempts: Int,
@@ -2052,7 +1998,7 @@ object VersionedTable {
     require(maxAttempts >= 1, "maxAttempts must be at least 1")
     dvThreshold.foreach(t => require(t > 0.0 && t <= 1.0,
       s"densityThreshold must be in (0, 1]; got $t"))
-    var prev = latest(spark, dir).getOrElse(
+    val prev = latest(spark, dir).getOrElse(
       sys.error(s"table $dir has no commits"))
     // a table from before schema tracking: read the footer schema once;
     // `snap` scans and commits with it, `prev` stays as recorded
@@ -2175,28 +2121,20 @@ object VersionedTable {
         (Seq.empty[String], Map.empty[String, DataSkipping.FileStats])
       // staged files keep every tracked stats column prunable: a DML
       // must never silently turn off skipping on a column it served
-      case Some(rows) => rethrowConstraintViolation(stageWithStats(
-        constraintGuard(applyGenerated(rows, prev.generatedCols,
-          recompute = true), prev.constraints),
-        dir, v, (verb.statsCols ++ prev.stats.values.flatMap(_.cols.keys))
-          .distinct, snap.schema))
+      case Some(rows) => stage(rows, dir, v, prev.constraints,
+        prev.generatedCols, (verb.statsCols ++
+          prev.stats.values.flatMap(_.cols.keys)).distinct, snap.schema,
+        recompute = true)
     }
+    val dvn = dvnB.result()
     onStaged()
-    var attempt = 1
-    while (true) {
-      try return commitDelta(spark, dir, prev, verb.op, adds, rwSet ++ dead,
-        addStats, snap.schemaJson, dvAdds, dvnB.result())
-      catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxAttempts) throw e
-          attempt += 1
-          val np = rebaseOrConflict(spark, dir, prev, plan.pred, touched,
-            verb.name)
-          pace(prev.version, np.version, attempt)
-          prev = np
-      }
+    commitLoop(Some(prev), maxAttempts) { p =>
+      commitDelta(spark, dir, p.get, verb.op, adds, rwSet ++ dead, addStats,
+        snap.schemaJson, dvAdds, dvn)
+    } { p =>
+      Right(Some(rebaseOrConflict(spark, dir, p.get, plan.pred, touched,
+        verb.name)))
     }
-    sys.error("unreachable")
     } finally cached.foreach(_.unpersist())
   }
 
@@ -2493,7 +2431,7 @@ object VersionedTable {
     * mirror [[merge]] / [[deleteWithDv]]. `opTag` overrides the
     * recorded operation name (default `merge`) — the streaming upsert
     * sink commits `merge#<batchId>` so the tag ledger can replay-skip,
-    * the same contract as [[appendTagged]].
+    * the same contract as a tagged [[write]].
     */
   def mergeWithDv(updates: DataFrame, dir: String, keys: Seq[String],
       statsCols: Seq[String] = Seq.empty,

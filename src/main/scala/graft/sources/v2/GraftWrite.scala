@@ -22,20 +22,21 @@ import graft.sources.VersionedTable
   * job, generated-column compute/validate, per-file min/max stats,
   * column-mapping physical spelling, and the optimistic-concurrency
   * REBASE loop (stage once, re-commit against the new latest when a
-  * concurrent writer claims the version) — already lives behind
-  * `VersionedTable.appendWithRetry`/`overwrite`, which take a
-  * DataFrame. A native `BatchWrite` would have to re-implement all of
-  * it per-task or silently skip it; handing the plan back as a
-  * DataFrame keeps SQL-text writes byte-identical in behavior to
-  * Scala-API writes (Delta shipped its DSv2 writes through the same
-  * fallback for years for the same reason). The data path stays fully
+  * concurrent writer claims the version) — already lives in
+  * `VersionedTable`'s one write step, which `appendWithRetry` and
+  * `overwrite` wrap and which takes a DataFrame. A native `BatchWrite`
+  * would have to re-implement all of it per-task or silently skip it;
+  * handing the plan back as a DataFrame keeps SQL-text writes
+  * byte-identical in behavior to Scala-API writes (Delta shipped its
+  * DSv2 writes through the same fallback for years for the same
+  * reason). The data path stays fully
   * distributed — the DataFrame is the query's plan, not collected
   * rows; only the commit (a manifest rename) is driver-side.
   *
   * Stats columns carry forward automatically: a SQL INSERT cannot name
-  * them, so the new files collect min/max for exactly the columns the
-  * table's existing stats cover — skipping keeps working across
-  * SQL-text appends without re-ANALYZE.
+  * them, and a write that names none collects min/max for every column
+  * the table already tracks that the batch carries — skipping keeps
+  * working across SQL-text appends without re-ANALYZE.
   */
 private[v2] class GraftWriteBuilder(dir: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
@@ -52,19 +53,8 @@ private[v2] class GraftWriteBuilder(dir: String, info: LogicalWriteInfo)
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
         override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-          val prev = VersionedTable.latest(data.sparkSession, dir)
-            .getOrElse(sys.error(s"no graft versioned table at $dir"))
-          // the columns the table already tracks stats for (stats keys
-          // are logical names — stageWithStats maps physical spellings
-          // back), intersected with the incoming schema so an evolved
-          // table never asks for a column this write doesn't carry
-          val statsCols = prev.stats.values
-            .flatMap(_.cols.keySet).toSeq.distinct.sorted
-            .filter(c => data.columns.exists(_.equalsIgnoreCase(c)))
-          if (overwriteAll || overwrite)
-            VersionedTable.overwrite(data, dir, statsCols)
-          else
-            VersionedTable.appendWithRetry(data, dir, statsCols)
+          if (overwriteAll || overwrite) VersionedTable.overwrite(data, dir)
+          else VersionedTable.appendWithRetry(data, dir)
           ()
         }
       }

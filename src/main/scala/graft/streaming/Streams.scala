@@ -685,8 +685,8 @@ object Streams {
     val (cursor, latestOpt) = scanLedger(spark, tableDir)
     if (cursor.synchronized(cursor.seen.contains(tag))) return
     if (batch.isEmpty) return
-    val s = VersionedTable.appendTagged(batch, tableDir, tag, latestOpt,
-      statsCols, maxAttempts = 5)
+    val s = VersionedTable.write(batch, tableDir, tag, latestOpt, statsCols,
+      tagged = true, maxAttempts = 5)
     cursor.synchronized(cursor.seen.add(s.operation))
   }
 
@@ -732,8 +732,8 @@ object Streams {
     if (batch.isEmpty) return
     val s = latestOpt match {
       case None => // merge into nothing is an insert: create v1 tagged
-        VersionedTable.appendTagged(batch, tableDir, tag, None,
-          statsCols, maxAttempts = 5)
+        VersionedTable.write(batch, tableDir, tag, None, statsCols,
+          tagged = true, maxAttempts = 5)
       case Some(_) =>
         VersionedTable.mergeWithDv(batch, tableDir, keys,
           statsCols = statsCols, densityThreshold = densityThreshold,
@@ -883,7 +883,7 @@ object Streams {
         VersionedTable.read(spark, viewDir),
         batch.withColumn("__weight", lit(1L)), groupCols, sumCols)
     }
-    VersionedTable.overwriteTagged(updated, viewDir, tag, latestOpt)
+    VersionedTable.write(updated, viewDir, tag, latestOpt, overwrite = true)
     cursor.synchronized(cursor.seen.add(tag))
   }
 }

@@ -272,9 +272,9 @@ class ConstraintSpec extends AnyFunSuite {
     // but-uncommitted window; the appended row VIOLATES it, so a silent
     // rebase would commit a bad row past the new constraint
     val e = intercept[ConflictingCommitException] {
-      VersionedTable.appendRebase(
-        Seq((2L, -2.0)).toDF("id", "price"), dir,
-        statsCols = Nil, mergeSchema = false, maxAttempts = 5,
+      VersionedTable.write(
+        Seq((2L, -2.0)).toDF("id", "price"), dir, "append",
+        VersionedTable.latest(spark, dir), maxAttempts = 5,
         onStaged = () => VersionedTable.addCheckConstraint(spark, dir,
           "pos", "price > 0"))
     }

@@ -293,8 +293,9 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = tmp()
     VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
     // a competitor claims v2 inside the loser's race window
-    val snap = VersionedTable.appendRebase(
-      Seq((3L, "c")).toDF("id", "v"), dir, Seq.empty, false, maxAttempts = 3,
+    val snap = VersionedTable.write(
+      Seq((3L, "c")).toDF("id", "v"), dir, "append",
+      VersionedTable.latest(spark, dir), maxAttempts = 3,
       onStaged = () => {
         VersionedTable.append(Seq((2L, "b")).toDF("id", "v"), dir)
         ()
@@ -306,8 +307,9 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq("create", "append", "append"))
     // with retries exhausted the conflict surfaces
     val e = intercept[java.io.IOException] {
-      VersionedTable.appendRebase(
-        Seq((9L, "z")).toDF("id", "v"), dir, Seq.empty, false, maxAttempts = 1,
+      VersionedTable.write(
+        Seq((9L, "z")).toDF("id", "v"), dir, "append",
+        VersionedTable.latest(spark, dir), maxAttempts = 1,
         onStaged = () => {
           VersionedTable.append(Seq((4L, "d")).toDF("id", "v"), dir)
           ()
@@ -462,6 +464,12 @@ class VersionedTableSpec extends AnyFunSuite {
         Seq((2L, "b", 99L)).toDF("id", "v", "extra"), dir, "append#7")
     }
     assert(e.getMessage.contains("does not match"))
+    // a case variant drifts too: names match exactly, as for append
+    intercept[IllegalArgumentException] {
+      VersionedTable.appendTagged(Seq((2L, "b")).toDF("ID", "v"), dir,
+        "append#8")
+    }
+    assert(VersionedTable.latest(spark, dir).get.version === 1L)
   }
 
   test("schema evolution: type conflicts fail fast, naming the column") {
@@ -517,12 +525,13 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(ids(VersionedTable.read(spark, dir)) ===
       ((10L until 100L) ++ (200L until 210L)).toSet,
       "delete must apply AND the competitor's rows must survive")
-    // a competitor append WITHOUT stats may hold matching rows —
-    // rebase must refuse rather than silently skip those rows
+    // a competitor append WITHOUT id stats (it names only `v`) may hold
+    // matching rows — rebase must refuse rather than silently skip them
     val e = intercept[graft.sources.ConflictingCommitException] {
       cowDelete(dir, col("id") < 10L,
         onStaged = () => {
-          VersionedTable.append(Seq((300L, "z")).toDF("id", "v"), dir)
+          VersionedTable.append(Seq((300L, "z")).toDF("id", "v"), dir,
+            Seq("v"))
           ()
         })
     }
@@ -655,8 +664,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // (replay check), then a maintenance process commits first
     val stale = VersionedTable.latest(spark, dir)
     VersionedTable.compactTable(spark, dir, targetFiles = 1)
-    val s = VersionedTable.appendTagged(
-      Seq((2L, "b")).toDF("id", "v"), dir, "append#7", stale, Seq.empty,
+    val s = VersionedTable.write(
+      Seq((2L, "b")).toDF("id", "v"), dir, "append#7", stale, tagged = true,
       maxAttempts = 5)
     assert(s.version === 3L, "the batch must rebase onto the compact")
     assert(ids(VersionedTable.read(spark, dir)) === Set(1L, 2L))
@@ -666,8 +675,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // no-op instead of double-committing the batch
     val stale2 = stale
     VersionedTable.append(Seq((3L, "c")).toDF("id", "v"), dir)
-    val replay = VersionedTable.appendTagged(
-      Seq((2L, "b")).toDF("id", "v"), dir, "append#7", stale2, Seq.empty,
+    val replay = VersionedTable.write(
+      Seq((2L, "b")).toDF("id", "v"), dir, "append#7", stale2, tagged = true,
       maxAttempts = 5)
     assert(replay.operation === "append#7")
     assert(VersionedTable.snapshots(spark, dir)
@@ -857,8 +866,8 @@ class VersionedTableSpec extends AnyFunSuite {
     VersionedTable.append(Seq((200L, "x")).toDF("id", "v"), dir)
     VersionedTable.compactTable(spark, dir, targetFiles = 1)
     val before = VersionedTable.manifestReadCount.get()
-    val s = VersionedTable.appendTagged(
-      Seq((300L, "b")).toDF("id", "v"), dir, "append#9", stale, Seq.empty,
+    val s = VersionedTable.write(
+      Seq((300L, "b")).toDF("id", "v"), dir, "append#9", stale, tagged = true,
       maxAttempts = 5)
     val reads = VersionedTable.manifestReadCount.get() - before
     assert(s.operation === "append#9" && s.version === 34L)
@@ -1833,5 +1842,167 @@ class VersionedTableSpec extends AnyFunSuite {
       }
       assert(VersionedTable.latest(spark, dir).get.version === 2L, s"dv=$dv")
     }
+  }
+
+  // ------------------------------------------------------ write step
+
+  /** What a write leaves, comparable across twins: rows, the multiset of
+    * per-file stats (staged file names differ between twins), the
+    * recorded schema, the rule sets and the table id.
+    */
+  private def writeState(dir: String) = {
+    val s = VersionedTable.latest(spark, dir).get
+    (rowsOf(VersionedTable.read(spark, dir)),
+      s.files.map(f => s.stats.get(f).map(st =>
+        (st.rowCount, st.cols.toSeq.sortBy(_._1))).toString).sorted,
+      s.schema, s.constraints, s.generatedCols, s.tableId)
+  }
+
+  /** Run each writer on its own twin copy of `base`; all must agree. */
+  private def sameWrites(base: String, what: String)(
+      writers: (String, String => Any)*): Unit = {
+    val states = writers.map { case (name, w) =>
+      val d = copyTable(base)
+      w(d)
+      name -> writeState(d)
+    }
+    states.tail.foreach { case (name, st) =>
+      assert(st === states.head._2, s"$what: $name vs ${states.head._1}")
+    }
+  }
+
+  test("write sweep: append, appendWithRetry, appendTagged and the " +
+      "streaming sink, and overwrite tagged or not, leave the same table") {
+    import graft.streaming.Streams
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val files = 2 + rnd.nextInt(3)
+      val top = files * (20 + rnd.nextInt(20))
+      val base = tmp()
+      VersionedTable.create((1 to top).map(i => (i.toLong, s"v$i", i % 7))
+        .toDF("id", "v", "n").repartitionByRange(files, col("id")), base,
+        Seq("id", "n"), generatedCols = Map("bucket" -> "id % 5"))
+      VersionedTable.addCheckConstraint(spark, base, "nonneg", "n >= 0")
+      // the last seed writes over a manifest without a schema line, as a
+      // table from before schema tracking has
+      if (seed == 3) {
+        val p = VersionedTable.latest(spark, base).get
+        VersionedTable.commit(spark, base, p.version + 1, "legacy", p.files,
+          p.stats, schemaJson = None, tableId = p.tableId,
+          constraints = p.constraints, generatedCols = p.generatedCols)
+      }
+      val batch = (1 to 1 + rnd.nextInt(30))
+        .map(i => ((top + i).toLong, s"b$i", rnd.nextInt(7)))
+        .toDF("id", "v", "n").repartition(1 + rnd.nextInt(3))
+      // odd seeds name the stats columns, even ones name none
+      val stats = if (seed % 2 == 1) Seq("id") else Nil
+      sameWrites(base, s"seed $seed append")(
+        "append" -> (VersionedTable.append(batch, _, stats)),
+        "appendWithRetry" -> (VersionedTable.appendWithRetry(batch, _, stats)),
+        "appendTagged" -> (VersionedTable.appendTagged(batch, _,
+          s"append#$seed", stats)),
+        "processVersionedBatch" -> (Streams.processVersionedBatch(batch,
+          seed.toLong, _, stats)))
+      val repl = batch.withColumn("v", concat(col("v"), lit("!")))
+      sameWrites(base, s"seed $seed overwrite")(
+        "overwrite" -> (VersionedTable.overwrite(repl, _, stats)),
+        "tagged overwrite" -> (d => VersionedTable.write(repl, d,
+          s"view#$seed", VersionedTable.latest(spark, d), stats,
+          overwrite = true)))
+    }
+  }
+
+  test("a tagged overwrite refuses to drop a column a CHECK constraint " +
+      "references, like overwrite, and the table keeps its version") {
+    val dir = tmp()
+    VersionedTable.create(Seq(("a", 1L, 2L, "x"))
+      .toDF("g", "n_rows", "sum_x", "note"), dir)
+    // NULL passes a CHECK, so without the guard the view refresh (which
+    // drops `note`) would commit and every later append would fail
+    VersionedTable.addCheckConstraint(spark, dir, "sane", "note <> 'bad'")
+    val before = VersionedTable.latest(spark, dir).get.version
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.Streams.processViewBatch(Seq(("a", 5L)).toDF("g", "x"),
+        0L, dir, Seq("g"), Seq("x"))
+    }
+    assert(e.getMessage.contains(
+      "overwrite drops column note referenced by CHECK constraint sane"))
+    assert(VersionedTable.latest(spark, dir).get.version === before)
+  }
+
+  test("a tagged overwrite refuses to drop a generated column's source " +
+      "column, like overwrite, and the table keeps its version") {
+    val dir = tmp()
+    VersionedTable.create(Seq(("a", 1L, 2L, "x"))
+      .toDF("g", "n_rows", "sum_x", "note"), dir,
+      generatedCols = Map("note_len" -> "length(note)"))
+    val before = VersionedTable.latest(spark, dir).get.version
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.Streams.processViewBatch(Seq(("a", 5L)).toDF("g", "x"),
+        0L, dir, Seq("g"), Seq("x"))
+    }
+    assert(e.getMessage.contains("overwrite drops column note that " +
+      "generated column note_len"))
+    assert(VersionedTable.latest(spark, dir).get.version === before)
+  }
+
+  test("a write that names no stats columns stages stats on every column " +
+      "the table tracks, through every entry point") {
+    val base = tmp()
+    VersionedTable.create((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
+      .coalesce(1), base, Seq("id"))
+    val batch = Seq((21L, "b")).toDF("id", "v")
+    val writers: Seq[(String, String => Any)] = Seq(
+      "append" -> (VersionedTable.append(batch, _)),
+      "appendWithRetry" -> (VersionedTable.appendWithRetry(batch, _)),
+      "appendTagged" -> (VersionedTable.appendTagged(batch, _, "append#1")),
+      "processVersionedBatch" -> (graft.streaming.Streams
+        .processVersionedBatch(batch, 1L, _)),
+      "overwrite" -> (VersionedTable.overwrite(batch, _)),
+      "tagged overwrite" -> (d => VersionedTable.write(batch, d, "view#1",
+        VersionedTable.latest(spark, d), overwrite = true)))
+    for ((name, w) <- writers) {
+      val d = copyTable(base)
+      val before = VersionedTable.latest(spark, d).get.files.toSet
+      w(d)
+      val s = VersionedTable.latest(spark, d).get
+      val added = s.files.filterNot(before)
+      assert(added.nonEmpty && added.forall(f =>
+        s.stats.get(f).exists(_.cols.keySet == Set("id"))), name)
+    }
+  }
+
+  test("a competitor append that names no stats columns carries the " +
+      "tracked ones, so a DML rebases over it") {
+    val dir = tmp()
+    VersionedTable.create((0L until 100L).toDF("id").withColumn("v", lit("x"))
+      .repartitionByRange(2, col("id")), dir, Seq("id"))
+    val snap = cowDelete(dir, col("id") < 10L,
+      onStaged = () => {
+        VersionedTable.append(Seq((300L, "z")).toDF("id", "v"), dir)
+        ()
+      })
+    assert(snap.version === 3L && snap.operation === "delete")
+    assert(ids(VersionedTable.read(spark, dir)) ===
+      ((10L until 100L) :+ 300L).toSet)
+  }
+
+  test("a tagged append whose table lost every commit mid-retry fails " +
+      "instead of recreating the table") {
+    val dir = tmp()
+    VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
+    val e = intercept[RuntimeException] {
+      VersionedTable.write(Seq((2L, "b")).toDF("id", "v"), dir, "append#1",
+        VersionedTable.latest(spark, dir), tagged = true, maxAttempts = 3,
+        onStaged = () => {
+          // v1 gone and a fresh torn claim on v2: no snapshot resolves
+          java.nio.file.Files.delete(manifestPath(dir, 1L))
+          java.nio.file.Files.write(manifestPath(dir, 2L),
+            "version=2\ntimestamp=1\noperation=append\n".getBytes("UTF-8"))
+          ()
+        })
+    }
+    assert(e.getMessage.contains("lost all commits"))
+    assert(VersionedTable.latest(spark, dir).isEmpty)
   }
 }

@@ -423,8 +423,8 @@ object RaceWriter {
           case "stall" =>
             // park in the staged-but-unclaimed window; the orchestrator
             // SIGKILLs us here
-            VersionedTable.appendRebase(appendDf(i), dir, Seq("id"),
-              mergeSchema = false, maxAttempts = 1,
+            VersionedTable.write(appendDf(i), dir, "append",
+              VersionedTable.latest(spark, dir), Seq("id"),
               onStaged = () => {
                 ev("event" -> "staged", "writer" -> wid)
                 Thread.sleep(120000)
