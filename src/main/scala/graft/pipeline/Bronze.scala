@@ -14,10 +14,10 @@ import Model._
   * anti-join against existing bronze ids (key projection only); the write
   * partitions by (Year, ANIMAL_TYPE) so downstream partition pruning is
   * free. Everything else is a narrow codegen'd map over the CSV scan.
-  * Actions per run: the date probe, the ledger probe (once the ledger
-  * exists), then `GuardedAppend`'s guard aggregate and count, the append
-  * and the ledger write. A ledger hit stops after the two probes; an empty
-  * batch writes nothing.
+  * Actions per run: the date probe, then `GuardedAppend`'s guard
+  * aggregate and count, the append and the ledger write. The date probe
+  * runs on the driver and the ledger probe is a directory listing, so a
+  * ledger hit launches no Spark job; an empty batch writes nothing.
   */
 object Bronze {
 
@@ -59,7 +59,7 @@ object Bronze {
     // 7-10. hard guards, anti-join vs current bronze snapshot, empty-batch
     // short-circuit, partitioned append (bronze.py:98-115) — abort the
     // run, never load bad data
-    val n = GuardedAppend(spark, std, cfg.bronzeDir,
+    val n = GuardedAppend(spark, std, cfg.bronzeDir, bronzeSchema,
       "guard: null _id in batch", "guard: duplicate _id within batch",
       s"guard: ANIMAL_TYPE outside ${AnimalTypes.mkString("{", ",", "}")}")
     if (n == 0) return SkippedEmptyBatch

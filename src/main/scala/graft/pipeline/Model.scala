@@ -6,6 +6,10 @@ import org.apache.spark.sql.types._
 
 /** Data model of the license-record pipeline (reference SURVEY.md §1):
   * fixed declared schemas, never inferred (reference: notebooks/bronze.py:13-19).
+  * Every pipeline read of bronze, silver and the ledger passes its schema
+  * below, so no read runs a schema-inference job. Table schemas list the
+  * partition columns last, the order Spark reads a partitioned directory
+  * back in; `PipelineSpec` pins each one to what Spark infers from a load.
   */
 object Model {
 
@@ -16,6 +20,41 @@ object Model {
     StructField("FSA", StringType),
     StructField("ANIMAL_TYPE", StringType),
     StructField("PRIMARY_BREED", StringType)))
+
+  /** Bronze as read back (reference: notebooks/bronze.py:132-141). */
+  val bronzeSchema: StructType = StructType(Seq(
+    StructField("_id", IntegerType),
+    StructField("FSA", StringType),
+    StructField("PRIMARY_BREED", StringType),
+    StructField("FSA_VALID", BooleanType),
+    StructField("ingestion_ts", TimestampType),
+    StructField("ingestion_date", DateType),
+    StructField("Year", IntegerType),
+    StructField("ANIMAL_TYPE", StringType)))
+
+  /** Silver as read back (reference: notebooks/silver.py:143-156). */
+  val silverSchema: StructType = StructType(Seq(
+    StructField("_id", IntegerType),
+    StructField("FSA", StringType),
+    StructField("FSA_VALID", BooleanType),
+    StructField("PRIMARY_BREED", StringType),
+    StructField("breed_raw", StringType),
+    StructField("breed_variant_key", StringType),
+    StructField("breed_standard", StringType),
+    StructField("breed_mapped", BooleanType),
+    StructField("ingestion_date", DateType),
+    StructField("ingestion_ts", TimestampType),
+    StructField("processed_ts", TimestampType),
+    StructField("Year", IntegerType),
+    StructField("ANIMAL_TYPE", StringType)))
+
+  /** The run ledger as read back (reference: notebooks/bronze.py:41-47),
+    * partitioned by (dataset, ingestion_date).
+    */
+  val ledgerSchema: StructType = StructType(Seq(
+    StructField("loaded_ts", TimestampType),
+    StructField("dataset", StringType),
+    StructField("ingestion_date", DateType)))
 
   /** FSA shape (reference: notebooks/bronze.py:83). */
   val FsaPattern = "^[A-Z][0-9][A-Z]$"

@@ -97,6 +97,9 @@ object Orchestrator {
     if (silverOk.isEmpty || !Sources.dirNonEmpty(spark, cfg.silverDir))
       return skipped(bronzeRes, silverRes)
 
+    // the one pipeline read that still infers its schema (one job):
+    // perfbench's traced copy of this method reads silver the same way and
+    // checks that both launch as many jobs, so the two change together
     val (goldRes, _) = runStage("silver_to_gold", GoldRetry, sleep) {
       Gold.registerAll(spark.read.parquet(cfg.silverDir))
     }

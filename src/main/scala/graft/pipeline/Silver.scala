@@ -18,10 +18,16 @@ import Model._
   * so the enrichment join is broadcast — no shuffle; the other shuffles are
   * the dedup window on _id, the guard aggregate's distinct ids and the
   * anti-join, all on the narrow key. Actions per run: `GuardedAppend`'s
-  * guard aggregate and count, then the append; a re-run of a loaded day
-  * counts zero new rows and writes nothing.
+  * guard aggregate and count, the append and the ledger write. A day with
+  * a silver ledger row is skipped before any read, so its re-run launches
+  * no Spark job. A day without one (an empty batch, or a run that failed
+  * after its append) goes through the guards again, and the anti-join
+  * keeps that re-run from landing any row twice.
   */
 object Silver {
+
+  /** Silver's dataset in the run ledger, next to bronze's. */
+  val Dataset = "licensed_pets_silver"
 
   sealed trait Result
   case object SkippedEmptyBatch extends Result
@@ -35,14 +41,21 @@ object Silver {
 
   /** One silver run over a single ingestion_date batch. */
   def run(spark: SparkSession, cfg: PipelineConfig, mapping: DataFrame): Result = {
-    val bronze = spark.read.parquet(cfg.bronzeDir)
+    // ledger probe: a day that already landed rows is a no-op
+    if (LoadControl.alreadyLoaded(spark, cfg.controlDir, Dataset, cfg.ingestionDate))
+      return SkippedEmptyBatch
+
+    val bronze = spark.read.schema(bronzeSchema).parquet(cfg.bronzeDir)
       .filter(col("ingestion_date") === to_date(lit(cfg.ingestionDate)))
 
     // guards + anti-join vs current silver snapshot (silver.py:113-125)
     val n = GuardedAppend(spark, transform(bronze, mapping, cfg), cfg.silverDir,
-      "guard: null _id", "guard: duplicate _id post-dedup",
+      silverSchema, "guard: null _id", "guard: duplicate _id post-dedup",
       "guard: ANIMAL_TYPE outside whitelist")
-    if (n == 0) SkippedEmptyBatch else Loaded(n)
+    if (n == 0) return SkippedEmptyBatch
+
+    LoadControl.record(spark, cfg.controlDir, Dataset, cfg.ingestionDate, cfg.now)
+    Loaded(n)
   }
 
   /** The pure batch transform (testable without IO) — reference:

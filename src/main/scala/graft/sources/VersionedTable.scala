@@ -149,6 +149,8 @@ object VersionedTable {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private val ManifestDir = "_manifests"
 
   /** Resolve a manifest file reference against the table directory.
@@ -3026,6 +3028,13 @@ object VersionedTable {
           // and is reclaimed by the next one.
           case _: java.io.FileNotFoundException => fresh = true
           case _: RuntimeException => fresh = true
+          // the local FS can also deny a task's `_temporary` attempt dir
+          // while the writer creates it: the same race. A denial that
+          // persists would keep the subdir forever, so it is logged.
+          case e: java.nio.file.AccessDeniedException =>
+            log.warn(s"vacuumOrphans: access denied walking ${sub.getPath} " +
+              s"(${e.getMessage}); keeping it this sweep")
+            fresh = true
         }
         if (!fresh && fs.delete(sub.getPath, true)) deleted += parquet
       }

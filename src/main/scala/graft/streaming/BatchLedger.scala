@@ -42,10 +42,13 @@ object BatchLedger {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def hasDataFile(fs: org.apache.hadoop.fs.FileSystem,
+  /** A file Spark reads as data: not hidden, not a `_` marker. */
+  private[graft] def isDataFile(f: org.apache.hadoop.fs.FileStatus): Boolean =
+    f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")
+
+  private[graft] def hasDataFile(fs: org.apache.hadoop.fs.FileSystem,
       p: Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(f => f.isFile &&
-      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    fs.exists(p) && fs.listStatus(p).exists(isDataFile)
 
   /** True iff `batch_id=<batchId>` under `dir` is a published partition
     * (exists and holds at least one data file).

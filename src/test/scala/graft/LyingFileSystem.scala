@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, LocatedFileStatus, Path, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -35,4 +35,26 @@ class LyingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   */
 class HonestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: URI = URI.create("honest:///")
+}
+
+/** The local filesystem under the `denying` scheme, whose `listFiles` of
+  * a directory named [[DenyingFileSystem.Denied]] throws
+  * `AccessDeniedException`: what the local filesystem can raise on a
+  * task's `_temporary` attempt dir while a writer is creating it. Other
+  * `listFiles` calls go to the `file` scheme, since the raw local
+  * filesystem cannot locate blocks under another scheme.
+  */
+class DenyingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: URI = URI.create("denying:///")
+
+  override def listFiles(f: Path,
+      recursive: Boolean): RemoteIterator[LocatedFileStatus] =
+    if (f.getName == DenyingFileSystem.Denied)
+      throw new java.nio.file.AccessDeniedException(f.toString)
+    else org.apache.hadoop.fs.FileSystem.getLocal(getConf)
+      .listFiles(new Path(f.toUri.getPath), recursive)
+}
+
+object DenyingFileSystem {
+  val Denied = "v9_denied"
 }

@@ -289,6 +289,32 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(ids(VersionedTable.read(spark, dir)) === Set(1L))
   }
 
+  test("vacuumOrphans keeps a staging dir whose walk is denied, with a " +
+      "warning naming it, and reclaims the rest") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.denying.impl", classOf[DenyingFileSystem].getName)
+    val base = java.nio.file.Files.createTempDirectory("graft-vacuum-denied")
+    val dir = s"denying://$base/table"
+    VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    // two old debris subdirs; walking the first is denied
+    val Seq(denied, dead) = Seq(DenyingFileSystem.Denied, "v8_dead").map { name =>
+      val sub = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
+      val f = new org.apache.hadoop.fs.Path(sub, "part-junk.parquet")
+      val o = fs.create(f); o.write(1); o.close()
+      fs.setTimes(f, 1000L, -1)
+      fs.setTimes(sub, 1000L, -1)
+      sub
+    }
+    val warnings = LogCapture.warnings(VersionedTable.getClass) {
+      assert(VersionedTable.vacuumOrphans(spark, dir, graceMs = 0) === 1)
+    }
+    assert(fs.exists(denied), "a subdir whose walk is denied counts as fresh")
+    assert(!fs.exists(dead))
+    assert(warnings.exists(_.contains(s"data/${DenyingFileSystem.Denied}")), warnings)
+    assert(ids(VersionedTable.read(spark, dir)) === Set(1L))
+  }
+
   test("appendWithRetry rebases onto a concurrent commit instead of failing") {
     val dir = tmp()
     VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
