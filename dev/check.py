@@ -42,6 +42,11 @@ if len(sys.argv) > 3:
         # where '^name' entries match no oracle key
         sys.exit(f"error: name list mixes '^'-exclusions ({excl}) with "
                  f"plain inclusions — use one mode per invocation")
+    # a typo'd name would otherwise drop out silently and report a
+    # passing (possibly empty) subset
+    unmatched = [n for n in names if n.lstrip("^") not in oracles]
+    if unmatched:
+        sys.exit(f"error: {unmatched} match no oracle key")
     if excl:
         drop = {n[1:] for n in names}
         oracles = {k: v for k, v in oracles.items() if k not in drop}

@@ -115,9 +115,8 @@ object Bench {
       e.select(col("vec_id"),
         graft.functions.VectorFunctions.cosine(col("embedding"), col("embedding")).as("c"))
         .write.format("noop").mode("overwrite").save()
-      // events: nanos-as-long read (the shared SparkEntry.events helper)
-      // + window machinery
-      SparkEntry.events(spark, sfDir)
+      // events: nanos-as-long read (Tables.events) + window machinery
+      Tables.events(spark, sfDir)
         .groupBy(window(col("ts"), "6 hours")).agg(count(lit(1)))
         .write.format("noop").mode("overwrite").save()
     } catch { case e: Throwable =>

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   *     stage's actual shuffle volume is small. 16 GB (sf100) / 64 MB =
   *     256, exactly the value the hand-tuned ladder converged on.
   *   - `nanosAsLong`: events.parquet may be TIMESTAMP(NANOS); this is
-  *     session-level, never set inside a query (see SparkEntry.events).
+  *     session-level, never set inside a query (see Tables.events).
   *   - `TIMESTAMP_MICROS`: INT96 (the legacy default) carries no usable
   *     footer statistics; MICROS makes staged timestamp columns
   *     footer-stats-servable (DataSkipping.footerStats). Verify and

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.operators._
-import graft.expressions.HashExpressions
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.queries._
 
 /** Driver contract — every operator from SURVEY.md §2 exposed as a named
-  * query over the driver testdata, with a DuckDB-oracle SQL twin.
+  * query over the driver testdata, with a DuckDB-oracle SQL twin. Each
+  * query is one [[graft.queries.Query]] declared beside its oracle in
+  * its family's file under `graft/queries`; this object only joins the
+  * families.
   *
   * Determinism ground rules (so Spark and DuckDB hash-match):
   *   - money sums go through DECIMAL(18,2) then cast to DOUBLE (exact,
@@ -19,5302 +18,36 @@ import graft.functions.{TextFunctions, VectorFunctions}
   *     they disagree near ties. Plain IEEE `* / + -` is bit-identical.
   *   - every window order fully pins ties with a unique trailing key.
   *   - event timestamps are normalized to session-zoned (UTC)
-  *     microseconds regardless of the parquet encoding — see [[events]]
-  *     for the per-encoding paths; DuckDB reads the same file natively
-  *     (with implicit TIMESTAMP_NS → TIMESTAMP truncation when nanos).
+  *     microseconds regardless of the parquet encoding — see
+  *     [[Tables.events]] for the per-encoding paths; DuckDB reads the same
+  *     file natively (with implicit TIMESTAMP_NS → TIMESTAMP truncation
+  *     when nanos).
   */
 object SparkEntry {
 
-  /** events.parquet's physical `ts` encoding has varied across testdata
-    * drops — INT64 TIMESTAMP(NANOS) (readable only as long via
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, still set in the
-    * Bench/Verify/SparkTestSession builders), TIMESTAMP(MICROS, NTZ),
-    * and plain TIMESTAMP(MICROS). A real engine reads what the lake
-    * contains, so branch on the arrived type and normalize every path to
-    * session-zoned TimestampType at microsecond precision:
-    *
-    *   - LongType (nanos-as-long): integral `DIV 1000` then
-    *     `timestamp_micros` — division as double would lose precision on
-    *     epoch nanos (1.7e18 exceeds double's 53-bit mantissa), and the
-    *     truncation matches DuckDB's implicit ns→us narrowing. A per-row
-    *     magnitude guard (`raise_error` under 10¹⁶) fails fast with a
-    *     descriptive message if a future drop encodes ts as plain epoch
-    *     MICROS in an INT64 column: micros for any date through 2100 stay
-    *     below 4.2e15, nanos for any date after 1970-04-26 exceed 10¹⁶,
-    *     so the bound cleanly separates the encodings instead of letting
-    *     a silent 1000× scale error surface as an oracle mismatch.
-    *   - TimestampNTZType: cast to TimestampType. The session is pinned
-    *     to UTC (builders + build.sbt), so the naive wall-clock value maps
-    *     to the identical microsecond instant DuckDB reads natively.
-    *   - TimestampType: already what we want.
-    *
-    * A registered query never mutates shared session config (a concurrent
-    * user of the same session reading nanos parquet would silently get
-    * longs), which is why the legacy flag lives in the builders.
+  /** Every registered query, family by family. */
+  private[graft] val registry: Seq[Query] = unique(
+    RelationalQueries.all ++ TemporalQueries.all ++ TextQueries.all ++
+      DedupQueries.all ++ VectorQueries.all ++ MediaQueries.all ++
+      LakehouseQueries.all ++ GraphQueries.all)
+
+  /** `qs`, failing on a name registered twice, which a map keyed by name
+    * would otherwise resolve silently to one of the two.
     */
-  private[graft] def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.events(spark, dir)
-    raw.schema("ts").dataType match {
-      case LongType        =>
-        // assert_true sits INSIDE the ts expression (a detached guard
-        // column would be pruned away by Catalyst and never evaluate)
-        raw.withColumn("ts", timestamp_micros(expr(
-          "IF(assert_true(ts IS NULL OR ts >= 10000000000000000, " +
-            "concat('events.ts INT64 value ', ts, " +
-            "' is below the epoch-nanos range - likely plain epoch " +
-            "micros; events() assumes nanos-as-long provenance')) IS NULL, " +
-            "ts DIV 1000, NULL)")))
-      case TimestampNTZType =>
-        require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
-          "events with TIMESTAMP_NTZ ts require spark.sql.session.timeZone=UTC " +
-            "so the naive→zoned cast is identity and the DuckDB oracle hash-matches")
-        raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType   => raw
-      case other => throw new IllegalStateException(
-        s"unsupported events.ts encoding: $other (expected INT64 nanos-as-long, " +
-          "TIMESTAMP_NTZ, or TIMESTAMP)")
-    }
+  private[graft] def unique(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
   }
-
-  private def decSum(c: String): org.apache.spark.sql.Column =
-    sum(col(c).cast(DecimalType(18, 2))).cast(DoubleType)
-
-  /** ANN gate queries under the q33 contract form. An approximate index's
-    * neighbor lists depend on its internals (hyperplane draws, k-means
-    * iterations), so they can never hash-match a SQL engine — what CAN be
-    * oracled exactly is the brute-force side (the q22 oracle already
-    * hash-matches DuckDB's identical fold arithmetic) plus the recall
-    * contract the index promises. Per probe: the exact rank-1 neighbor
-    * (recomputed by DuckDB), the ANN result count (must equal k), and a
-    * required-TRUE validity bit (distinct ids, no self-match, all ids
-    * from the corpus); plus a required-TRUE recall floor measured in
-    * AGGREGATE across all probes (hits over all probes / exact rows over
-    * all probes — with 5 probes a per-query floor is a 10-sample coin
-    * flip, the aggregate is 50). `minRecall` is each index's measured
-    * operating floor across the sf sweep minus margin — far above the
-    * ~k/N chance line (~0.005 here), honest about what nprobe/ksub
-    * actually buy; the controlled-fixture recall gates stay in KnnSpec.
-    * This moves those gates INTO the driver's oracle gate; the index
-    * operators themselves are unchanged. The brute pass is 5 probes ×
-    * corpus — linear, probe-bounded.
-    */
-  private def annRecallContract(e: DataFrame, probes: DataFrame,
-      ann: DataFrame, k: Int, minRecall: Double): DataFrame = {
-    // materialize-once discipline (q42's exactDedup pattern): `exact`
-    // feeds three consumers and `stats` two — without the checkpoints
-    // the O(probes × corpus) scored join recomputes per consumer
-    val exact = graft.similarity.Knn.bruteForce(e, probes, "vec_id", "embedding", k)
-      .localCheckpoint()
-    val corpusIds = e.select(col("vec_id").as("neighbor_id"),
-      lit(true).as("__in_corpus"))
-    val stats = ann
-      .join(exact.select(col("query_id"), col("neighbor_id"),
-        lit(true).as("__in_exact")), Seq("query_id", "neighbor_id"), "left")
-      .join(broadcast(corpusIds), Seq("neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_ann_results"),
-        countDistinct(col("neighbor_id")).as("__ndist"),
-        sum(when(col("__in_exact"), 1L).otherwise(0L)).as("__hits"),
-        max(when(col("neighbor_id") === col("query_id"), 1L).otherwise(0L))
-          .as("__self"),
-        min(when(col("__in_corpus"), 1L).otherwise(0L)).as("__all_corpus"))
-      .localCheckpoint()
-    val aggRecall = stats.agg(sum(col("__hits")).as("__th"))
-      .crossJoin(broadcast(exact.agg(count(lit(1)).as("__te"))))
-    exact.filter(col("rnk") === 1)
-      .select(col("query_id"), col("neighbor_id").as("exact_top1"))
-      .join(stats, Seq("query_id"))
-      .crossJoin(broadcast(aggRecall))
-      .select(col("query_id"), col("exact_top1"), col("n_ann_results"),
-        (col("__th").cast(DoubleType) >= col("__te") * minRecall).as("recall_ok"),
-        (col("__ndist") === col("n_ann_results") && col("__self") === 0L &&
-          col("__all_corpus") === 1L).as("ann_results_valid"))
-  }
-
-  private lazy val jvmId: String = java.util.UUID.randomUUID().toString.take(8)
-
-  /** Per-JVM scratch location for the queries that demonstrate table
-    * maintenance / DML by writing real files (q36/q59/q81/q84/q88/q89/
-    * q90/q91/q99/q100). The per-JVM suffix keeps concurrent processes
-    * apart and repeated in-process runs overwriting; the shutdown hook
-    * deletes everything this JVM created — at the sf100 ladder point
-    * one bench run's scratch is ~15 GB, which silently accumulated
-    * across runs (and eventually filled the disk) before this hook.
-    */
-  private val scratchCreated =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val scratchHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      scratchCreated.forEach(dir => rm(new java.io.File(dir)))
-    }))
-  /** Scale-derived file count for the versioned-table DML queries:
-    * a fixed 8-file table caps DML parallelism at 8 tasks no matter the
-    * data size (at sf100 that is 19M rows per task), while the r16 fix
-    * (max(8, defaultParallelism)) over-corrected the other way — at
-    * sf0.1 it spread a 2.6 MB orders table over 32 files of ~80 KB,
-    * and every DML commit paid 32-file listing jobs, 32 footer reads
-    * and 32-task scans of pure overhead (guide §6: small files hurt
-    * twice). Derive from the SOURCE table's bytes instead: ~8 MiB per
-    * file until the session's parallelism is saturated, then grow as
-    * bytes/64 MiB so per-file work stays bounded as data grows —
-    * exactly how a real table would carry more files at more data
-    * (sf0.1 orders → 4 files; sf10 → 32; sf100 → ~41 files of 64 MiB).
-    * Uniform %-mod predicates keep per-file match densities unchanged,
-    * so the DV-vs-CoW shape choices and every oracle are invariant
-    * (answers are aggregates / history live_rows — file-count-free).
-    */
-  private def vtParts(s: SparkSession, dir: String, srcFile: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$srcFile")
-    val bytes =
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case e: Throwable =>
-        // a mis-pointed srcFile at scale would otherwise silently
-        // collapse DML parallelism to the 4-file floor (the regression
-        // class the r16 fix addressed) — make the fallback loud
-        System.err.println(
-          s"[vtParts] could not size $p (${e.getMessage}); " +
-            "falling back to the 4-file floor")
-        0L
-      }
-    val mib = (bytes >> 20).toInt
-    math.max(4, math.max(
-      math.min(mib / 8, s.sparkContext.defaultParallelism), mib / 64))
-  }
-
-  /** Per-sfDir name tag for JVM-global fixtures (scratch dirs, catalog
-    * tables): the first 64 bits of the SHA-256 of the full path, not the
-    * 32-bit `hashCode`, which two dirs can share ("/x/Aa", "/x/BB") and
-    * so silently share one fixture.
-    */
-  private[graft] def fixtureTag(dir: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-
-  private def scratchPath(tag: String): String = {
-    scratchHookInstalled
-    val p = System.getProperty("java.io.tmpdir") + s"/graft_${tag}_$jvmId"
-    scratchCreated.add(p)
-    p
-  }
-
-  /** Planted-twin id offset: the smallest multiple of 1,000,000 past the
-    * table's max id. A FIXED 1M offset collided with real ids once the
-    * corpus passed 1M rows — at sf100 every planted twin id named an
-    * existing doc too, and id-keyed anchor joins went ambiguous (the q25
-    * sf100 gate caught it). Oracles replay the same derivation as a
-    * scalar subquery: `(max(id) // 1000000 + 1) * 1000000`.
-    */
-  private def plantOffset(df: DataFrame, idCol: String): Long = {
-    // max() of an empty table is null — fail with the real diagnosis
-    // (mis-pointed sfDir) instead of an opaque NullPointerException.
-    // cast("long") first: a physically-narrowed id column (the pyarrow
-    // int32 drift class Tables.normalize handles) must not turn the
-    // derivation into a ClassCastException
-    val mx = df.agg(max(col(idCol).cast("long"))).head.getAs[java.lang.Long](0)
-    require(mx != null,
-      s"plantOffset: table is empty (max($idCol) is null) — check sfDir")
-    (mx / 1000000L + 1L) * 1000000L
-  }
-
-  /** Per-JVM memoized lakehouse fixtures (round 17, VERDICT r16 item 4):
-    * each DML gate query needs a freshly-mutable versioned table of the
-    * same base content, and building a full table per query per run was
-    * ~20% of the sf0.1 bench total — pure table-build, not operator.
-    * Each base is built ONCE per (sfDir, kind) per JVM; every gate
-    * invocation SHALLOW-CLONES it (one manifest write, zero data bytes;
-    * CloneSpec proves DML-on-clone end to end) and mutates the clone.
-    * Answers stay byte-identical: a clone's v1 IS the base content,
-    * stats carry, and the base itself is never mutated. This is also
-    * the registry rule going forward: new table-building gates must
-    * amortize fixtures this way.
-    */
-  private val vtBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** q36's bucketed tables, built once per (JVM, sfDir) — same
-    * amortization rule as [[vtBase]] for a catalog-registered fixture.
-    */
-  private val q36BucketedBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  private def vtBase(s: SparkSession, dir: String, kind: String)(
-      build: String => Unit): String =
-    vtBaseCache.computeIfAbsent((dir, kind), _ => {
-      val tmp = scratchPath(
-        s"vtbase_${kind}_${fixtureTag(dir)}")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      build(tmp)
-      tmp
-    })
-
-  /** Versioned orders base: (o_orderkey, o_orderstatus, o_price
-    * DECIMAL(18,2)), range-partitioned to [[vtParts]] files, o_orderkey
-    * stats — the shape q118/q121/q126 share.
-    */
-  private def ordersVtBase(s: SparkSession, dir: String): String =
-    vtBase(s, dir, "orders") { tmp =>
-      graft.sources.VersionedTable.create(
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-          .repartitionByRange(vtParts(s, dir, "orders.parquet"),
-            col("o_orderkey")),
-        tmp, statsCols = Seq("o_orderkey"))
-    }
-
-  /** Versioned part base for q122: (p_partkey, p_brand, p_retailprice),
-    * range-partitioned, p_partkey stats.
-    */
-  private def partVtBase(s: SparkSession, dir: String): String =
-    vtBase(s, dir, "part") { tmp =>
-      graft.sources.VersionedTable.create(
-        Tables.part(s, dir)
-          .select("p_partkey", "p_brand", "p_retailprice")
-          .repartitionByRange(vtParts(s, dir, "part.parquet"),
-            col("p_partkey")),
-        tmp, statsCols = Seq("p_partkey"))
-    }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q02_top_parts_per_flag")(spark, "/root/testdata/sf0.001")
-
-  // ---------------------------------------------------------------- queries
+    RelationalQueries.q02.build(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    coreQueries ++ extensionQueries
+    registry.map(q => q.name -> q.build).toMap
 
-  def oracleSql: Map[String, String] = {
-    val base = coreOracleSql ++ extensionOracleSql
-    // q89 recomputes q71's delta via versioned-table time travel — same
-    // transformation, same expected rows, same oracle (the q59/q53
-    // same-oracle convention: layout/versioning changes the plan, never
-    // the answer). The ANN recall contract (q28) is index-agnostic by
-    // construction — exact-top1 anchor + required-TRUE recall/validity —
-    // so the IVF and PQ gates share its oracle verbatim.
-    base +
-      ("q89_version_cdc" -> base("q71_snapshot_cdc")) +
-      ("q30_knn_ivf" -> base("q28_knn_lsh")) +
-      ("q65_knn_pq" -> base("q28_knn_lsh"))
-  }
-
-  /** Reference-inventory operators (SURVEY.md §2). */
-  def coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A1-A5: grouped agg with conditional count, distinct count, max
-    // (reference: gold.py:33-48, bronze.py:153-158)
-    "q01_pricing_summary" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          decSum("l_extendedprice").as("sum_base_price"),
-          count(lit(1)).as("cnt"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          Aggregates.conditionalCount(col("l_discount") > 0.05).as("high_disc"),
-          max(col("l_shipdate")).as("max_ship"))
-    }),
-
-    // W2+O3+J3+A10 flagship: top-10 per group with share of total
-    // (reference: gold.py:32-73)
-    "q02_top_parts_per_flag" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val counts = Aggregates.groupCounts(Seq("l_returnflag", "l_linestatus", "l_partkey"))(li)
-      val ranked = Rankings.topNPerGroup(
-        Seq("l_returnflag", "l_linestatus"),
-        Seq(col("cnt").desc, col("l_partkey").asc), 10)(counts)
-      val totals = li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("total_cnt"))
-      ranked.join(totals, Seq("l_returnflag", "l_linestatus"))
-        .withColumn("share_pct", lit(100.0) * col("cnt") / col("total_cnt"))
-        .select("l_returnflag", "l_linestatus", "l_partkey", "cnt", "rnk", "share_pct")
-    }),
-
-    // W3+W4: RANK + windowed-sum share (reference: gold.py:88-136)
-    "q03_rank_share" -> ((s, dir) => {
-      val counts = Aggregates.groupCounts(Seq("o_orderpriority", "o_orderstatus"))(
-        Tables.orders(s, dir))
-      Rankings.rankAndShare(
-        Seq("o_orderpriority"), "cnt",
-        Seq(col("cnt").desc, col("o_orderstatus").asc))(counts)
-        .select("o_orderpriority", "o_orderstatus", "cnt", "rnk", "share_pct")
-    }),
-
-    // W5: LAG year-over-year deltas (reference: gold.py:117-135)
-    "q04_yoy_orders" -> ((s, dir) => {
-      val byYear = Tables.orders(s, dir)
-        .withColumn("order_year", year(col("o_orderdate")))
-        .groupBy(col("o_orderpriority"), col("order_year"))
-        .agg(count(lit(1)).as("cnt"))
-      Rankings.lagDelta(Seq("o_orderpriority"), "order_year", "cnt",
-        "prev_cnt", "yoy_diff")(byYear)
-    }),
-
-    // A8: manual pivot of top-3 ranks to columns (reference: gold.py:196-201)
-    "q05_pivot_top3_events" -> ((s, dir) => {
-      val ev = events(s, dir).withColumn("bucket", col("user_id") % 10)
-      val counts = Aggregates.groupCounts(Seq("bucket", "event_type"))(ev)
-      val ranked = Rankings.topNPerGroup(Seq("bucket"),
-        Seq(col("cnt").desc, col("event_type").asc), 3)(counts)
-      Rankings.pivotTopK(Seq("bucket"), "rnk", "event_type", 3)(ranked)
-    }),
-
-    // W1: dedup keep-newest-per-key (reference: silver.py:81-85).
-    // Aggregate form: max_by hash-agg with map-side combine instead of a
-    // sort-window — the shuffle moves one candidate row per (partition,
-    // user) rather than every event.
-    "q06_latest_event_per_user" -> ((s, dir) => {
-      Dedup.latestPerKeyAgg(Seq("user_id"), Seq(col("ts"), col("event_id")))(events(s, dir))
-        .select("user_id", "event_id", "event_type", "value", "ts")
-    }),
-
-    // J1: insert-only anti-join idempotency core (reference: bronze.py:111-112)
-    "q07_incremental_antijoin" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val cutoff = to_timestamp(lit("2000-01-01"))
-      val batch = li.filter(col("l_shipdate") >= cutoff)
-      val existing = li.filter(col("l_shipdate") < cutoff)
-      Idempotency.newKeysOnly(batch, existing, Seq("l_orderkey"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"), countDistinct(col("l_orderkey")).as("n_orders"))
-    }),
-
-    // J2: broadcast dim enrichment with mapped-flag + fallback
-    // (reference: silver.py:53-68)
-    "q08_enrich_parts" -> ((s, dir) => {
-      val facts = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_returnflag"))
-        .withColumn("fallback_name", lit("UNKNOWN"))
-      val dim = Tables.part(s, dir).filter(col("p_size") <= 25)
-        .select(col("p_partkey").as("l_partkey"), col("p_name"))
-      Enrich.fromDim(facts, dim, "l_partkey", "p_name",
-        "resolved_name", "fallback_name", "name_mapped")
-        .drop("fallback_name")
-    }),
-
-    // P1-P9 + §2.8 scalars: standardize / validate / null-out
-    // (reference: bronze.py:84-95, silver.py:38-49)
-    "q09_standardize_text" -> ((s, dir) => {
-      Tables.customer(s, dir).select(
-        col("c_custkey"),
-        upper(trim(col("c_mktsegment"))).as("segment_std"),
-        Standardize.normalizedKey(col("c_name")).as("name_key"),
-        (col("c_name").isNotNull && col("c_name").rlike("^Customer#[0-9]{9}$")).as("name_valid"),
-        when(col("c_acctbal") >= 0, col("c_acctbal")).as("acctbal_nonneg"),
-        substring(col("c_name"), 10, 4).as("name_suffix"),
-        length(col("c_name")).cast(IntegerType).as("name_len"))
-    }),
-
-    // S11: MERGE upsert emulation (reference: breed_mapping.py:596-603).
-    // Insert keys use the scale-derived plantOffset so the insert lane
-    // exercises TRUE inserts at every rung (a fixed +1M partly collided
-    // with real part keys at sf100, turning "inserts" into updates)
-    "q10_merge_upsert" -> ((s, dir) => {
-      val target = Tables.part(s, dir)
-      val off = plantOffset(target, "p_partkey")
-      val changed = target.filter(col("p_partkey") % 7 === 0)
-        .withColumn("p_name", concat(col("p_name"), lit(" v2")))
-        .withColumn("p_retailprice", col("p_retailprice") + 50.0)
-      val inserts = changed.withColumn("p_partkey", col("p_partkey") + off)
-      Merge.upsert(target, changed.unionByName(inserts), Seq("p_partkey"))
-    }),
-
-    // A3+A10: grouped quality metrics with null-guarded ratio
-    // (reference: gold.py:289-309)
-    "q11_quality_grouped" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).as("rows_cnt"),
-          Aggregates.conditionalCount(col("l_discount") > 0.05).as("high_disc"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          max(col("l_shipdate")).as("max_ship"))
-        .withColumn("pct_high_disc",
-          when(col("rows_cnt") === 0, lit(null).cast(DoubleType))
-            .otherwise(lit(100.0) * col("high_disc") / col("rows_cnt")))
-    }),
-
-    // A2: global health aggregate (reference: bronze.py:153-158)
-    "q12_global_health" -> ((s, dir) => {
-      Tables.orders(s, dir).agg(
-        count(lit(1)).as("total_rows"),
-        countDistinct(col("o_custkey")).as("n_customers"),
-        min(col("o_orderdate")).as("first_order"),
-        max(col("o_orderdate")).as("last_order"),
-        Aggregates.conditionalCount(col("o_orderstatus") === "F").as("finished_cnt"))
-        .withColumn("pct_finished", lit(100.0) * col("finished_cnt") / col("total_rows"))
-    }),
-
-    // §2.8 date/string scalars: date_format, substring, length guard
-    // (reference: gold.py:224-227,325; bronze.py:33-38)
-    "q13_date_scalars" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .filter(length(col("o_orderpriority")) >= 5)
-        .withColumn("order_month", date_format(col("o_orderdate"), "yyyy-MM"))
-        .withColumn("prio_class", substring(col("o_orderpriority"), 1, 1))
-        .groupBy(col("order_month"), col("prio_class"))
-        .agg(count(lit(1)).as("cnt"), decSum("o_totalprice").as("sum_price"))
-    }),
-
-    // J4: 1x1 cross-join scalar combine (reference: breed_mapping.py:636-648)
-    "q14_coverage_crossjoin" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val dimKeys = Tables.part(s, dir).filter(col("p_size") <= 25)
-        .select(col("p_partkey").as("l_partkey"))
-      val total = li.agg(count(lit(1)).as("total_rows"))
-      val unmatched = li.join(dimKeys, Seq("l_partkey"), "left_anti")
-        .agg(count(lit(1)).as("unmatched_rows"))
-      total.crossJoin(unmatched)
-        .withColumn("pct_unmatched", lit(100.0) * col("unmatched_rows") / col("total_rows"))
-    }),
-
-    // The complete v_breed_stats gold view (reference: gold.py:88-136 —
-    // share + rank + LAG yoy deltas + round/div-0 pins), exercised through
-    // Gold.breedStats itself on re-keyed testdata: Year=year(o_orderdate),
-    // type=o_orderstatus, breed=o_orderpriority.
-    // Deliberate exception to the "never round() a computed double" rule
-    // above: the reference pins ROUND(x,4) semantics (gold.py:115,132-135)
-    // so this query exercises them; engines could disagree on an exact
-    // 5th-decimal tie, but none occurs in the fixed sf0.01 gate data
-    // (hash-matched) and the ratios' denominators make ties measure-zero.
-    "q35_breed_stats_full" -> ((s, dir) => {
-      val rekeyed = Tables.orders(s, dir).select(
-        year(col("o_orderdate")).as("Year"),
-        col("o_orderstatus").as("ANIMAL_TYPE"),
-        col("o_orderpriority").as("breed_standard"))
-      graft.pipeline.Gold.breedStats(rekeyed)
-    }),
-
-    // Bucketed co-located join: both sides written bucketBy(custkey) once,
-    // then the equi-join + its sorts run exchange-free (BucketingSpec
-    // asserts the plan) — the write-time-shuffle amortization story for a
-    // recurring 100 TB fact join. Results identical to the plain join.
-    "q36_bucketed_join" -> ((s, dir) => {
-      // per-JVM location + Overwrite: repeated runs in one process replace
-      // (no accumulation), concurrent processes never clobber each other.
-      // The bucketed layout is the IMMUTABLE input fixture — built once
-      // per (JVM, dir) under the amortization rule; the gate prices the
-      // exchange-free join over it, which re-runs every trial.
-      // catalog names carry the dir tag: the memo is per sfDir, so the
-      // JVM-global table names must be too — otherwise a second dir's
-      // build would overwrite the first dir's tables under the same name
-      val dirTag = fixtureTag(dir)
-      q36BucketedBuilt.computeIfAbsent(dir, _ => {
-        val tmp = scratchPath(s"q36_$dirTag")
-        Bucketing.writeBucketed(Tables.orders(s, dir),
-          s"q36_orders_$dirTag", 8,
-          Seq("o_custkey"), Seq("o_custkey"), Some(s"$tmp/orders"))
-        Bucketing.writeBucketed(
-          Tables.customer(s, dir).withColumnRenamed("c_custkey", "o_custkey"),
-          s"q36_customer_$dirTag", 8, Seq("o_custkey"), Seq("o_custkey"),
-          Some(s"$tmp/customer"))
-        java.lang.Boolean.TRUE
-      })
-      Bucketing.table(s, s"q36_orders_$dirTag")
-        .join(Bucketing.table(s, s"q36_customer_$dirTag"), Seq("o_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("cnt"), decSum("o_totalprice").as("sum_price"))
-    }),
-
-    // As-of join: every event picks up the value of the user's latest
-    // prior (<=) purchase — the temporal feature-lookup join. Expressed
-    // as one union + sorted-window carry-forward (single shuffle on the
-    // key, no range join, no pair explosion); DuckDB's native ASOF JOIN
-    // is the oracle.
-    "q39_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      // hash-agg dedup form: single-column max ordering needs no sort-window
-      val purchases = Dedup.latestPerKeyAgg(
-        Seq("user_id", "ts"), Seq(col("event_id")))(
-        ev.filter(col("event_type") === "purchase"))
-      AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"),
-        purchases.select(col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "ts", Seq("value"))
-    }),
-
-    // Range join: events landing inside the hour after any purchase by
-    // the same user. Bin-bucketed equi-join + exact containment filter —
-    // the scale path for a condition Spark would otherwise plan as a
-    // broadcast-nested-loop join (RangeJoinSpec asserts the plan).
-    "q40_range_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val intervals = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("start_ts"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("end_ts"),
-          col("event_id").as("interval_id"))
-      RangeJoin.pointsInIntervals(
-        ev.select("event_id", "user_id", "ts"), intervals,
-        Seq("user_id"), "ts", "start_ts", "end_ts", Seq("interval_id"))
-    }),
-
-    // Interval-overlap join: purchase hour-windows × signup two-hour
-    // windows for the same user — the third temporal-join family member
-    // (as-of q39, point-in-interval q40, interval-overlap here). Both
-    // sides bin-bucket; each true pair emits once via the first-shared-
-    // bin rule (RangeJoinSpec asserts no nested-loop plan).
-    "q41_interval_overlap" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val a = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("a_start"),
-          (col("ts") + expr("INTERVAL 1 HOUR")).as("a_end"),
-          col("event_id").as("a_id"))
-      val b = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("b_start"),
-          (col("ts") + expr("INTERVAL 2 HOUR")).as("b_end"),
-          col("event_id").as("b_id"))
-      RangeJoin.intervalsOverlap(a, b, Seq("user_id"),
-        "a_start", "a_end", "b_start", "b_end", Seq("b_id"))
-    }),
-
-    // As-of join, forward direction with max-staleness tolerance: every
-    // event picks up the value of the user's NEXT purchase, but only if
-    // it lands within the following hour — the "did a conversion follow"
-    // feature join. Same one-shuffle union+window formulation as q39
-    // with the ordering reversed; DuckDB's ASOF (l.ts <= p.rts) + a
-    // tolerance CASE is the oracle.
-    "q43_asof_forward" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val purchases = Dedup.latestPerKeyAgg(
-        Seq("user_id", "ts"), Seq(col("event_id")))(
-        ev.filter(col("event_type") === "purchase"))
-      AsOf.asOfJoin(
-        ev.select("event_id", "user_id", "ts"),
-        purchases.select(col("user_id"), col("ts"), col("value")),
-        Seq("user_id"), "ts", "ts", Seq("value"),
-        direction = "forward", tolerance = Some(3600.0))
-    }),
-
-    // §2.7: set operations (union / intersect / except)
-    "q15_set_ops" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
-      val op = o.filter(col("o_orderstatus") === "O").select(col("o_custkey"))
-      val fOnly = f.except(op).withColumn("category", lit("F_ONLY"))
-      val oOnly = op.except(f).withColumn("category", lit("O_ONLY"))
-      val both = f.intersect(op).withColumn("category", lit("BOTH"))
-      fOnly.union(oOnly).union(both)
-        .groupBy(col("category")).agg(count(lit(1)).as("cnt"))
-    })
-  )
-
-  /** LLM-data-pipeline extensions: dedup family, similarity search, text
-    * analysis, multimodal plumbing (BASELINE.json surface).
-    */
-  def extensionQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Exact dedup on a derived key (first-5-token prefix — the testdata
-    // plants real clusters there)
-    "q16_dedup_exact" -> ((s, dir) => {
-      graft.dedup.Dedup.exactByKey(
-        Tables.documents(s, dir), "doc_id",
-        array_join(slice(split(trim(col("text")), " "), 1, 5), " "))
-    }),
-
-    // Token counting + vocabulary stats (whitespace tokenization)
-    "q17_token_stats" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        size(toks).as("n_tokens"),
-        size(array_distinct(toks)).as("n_distinct"),
-        length(col("text")).cast(IntegerType).as("n_chars_actual"),
-        ((length(col("text")).cast(DoubleType) - (size(toks) - 1).cast(DoubleType)) /
-          size(toks).cast(DoubleType)).as("mean_token_len"))
-    }),
-
-    // Heuristic quality scoring (stopword density / diversity / length);
-    // score computed once, bucket derived from the column
-    "q18_quality_score" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .withColumn("quality", TextFunctions.qualityScore(col("text")))
-        .select(col("doc_id"), col("quality"),
-          floor(col("quality") * 10).cast(IntegerType).as("quality_bucket"))
-    }),
-
-    // Stopword-hit language ID vs the labeled lang column (confusion counts)
-    "q19_lang_id" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      Tables.documents(s, dir)
-        .select(col("lang"), TextFunctions.langId(toks).as("predicted"))
-        .groupBy(col("lang"), col("predicted"))
-        .agg(count(lit(1)).as("cnt"))
-    }),
-
-    // MinHash+LSH near-dup pairs. Oracled exhaustively: output pairs
-    // carry EXACT shingle Jaccard (the verify join), and at j >= 0.8 the
-    // 16x4 banding recovers every pair on the gate data (bit-identical
-    // to brute force at all three sfs — the q53 argument), so DuckDB's
-    // full O(n²) Jaccard is a valid oracle. DedupSpec keeps the
-    // controlled-fixture recall/precision proofs.
-    "q20_minhash_neardup" -> ((s, dir) => {
-      graft.dedup.MinHashDedup.nearDuplicates(
-        Tables.documents(s, dir), "doc_id", "text", threshold = 0.8)
-    }),
-
-    // n-gram Jaccard of every doc against probe doc 0
-    "q21_jaccard_probe" -> ((s, dir) => {
-      graft.dedup.Dedup.jaccardToProbe(
-        Tables.documents(s, dir), "doc_id", "text", probeId = 0L)
-        .filter(col("jaccard") >= 0.01)
-    }),
-
-    // Brute-force cosine top-10 for probe vectors (exact ANN baseline)
-    "q22_knn_brute" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      graft.similarity.Knn.bruteForce(
-        e, e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-    }),
-
-    // Embedding-cosine near-dup pairs over a subset (brute verify shape).
-    // `vec_id < 500` pins the input to the sf0.01 oracle subset at EVERY
-    // sf — identical result at the correctness gate, and the deliberate
-    // O(n²) verify stays a fixed ~100-vector probe at bench sf instead of
-    // growing quadratically with the corpus (the one cartesian plan in
-    // the registry is the q34 oracle twin, not a scaling path).
-    "q23_embedding_neardup" -> ((s, dir) => {
-      graft.dedup.Dedup.embeddingPairsBrute(
-        Tables.embeddings(s, dir)
-          .filter(col("vec_id") % 5 === 0 && col("vec_id") < 500),
-        "vec_id", "embedding", threshold = 0.35)
-    }),
-
-    // Custom-Expression fingerprints (winnowing min-hash + SimHash) under
-    // the q33 contract form: the hash values aren't SQL-expressible (and
-    // near-dup COLLISION is the min-hash fingerprint's purpose, so
-    // distinctness is no invariant). The query emits exact anchors DuckDB
-    // recomputes (duplicate-text structure, char counts) plus booleans
-    // asserting what the kernels genuinely guarantee — purity (the same
-    // text reassembled from substrings fingerprints identically; catches
-    // any hidden state/seed drift) and window-subset monotonicity (a
-    // contiguous slice's windows are a subset of the full text's, so its
-    // min-hash can only be ≥ — only claimed when the slice still exceeds
-    // the 32-byte window, where the whole-string hash path would apply
-    // instead). DuckDB emits `true` for every boolean.
-    "q24_fingerprints" -> ((s, dir) => {
-      def fp(c: org.apache.spark.sql.Column) = HashExpressions.docFingerprint(c, 32)
-      def sh(c: org.apache.spark.sql.Column) =
-        HashExpressions.simHash64(TextFunctions.tokens(c))
-      val len = length(col("text"))
-      val rebuilt = concat(col("text").substr(lit(1), lit(7)),
-        col("text").substr(lit(8), len))
-      // group/join twins on a 64-bit text hash, not the text itself —
-      // 8-byte shuffle keys at corpus scale (the LineDedup discipline);
-      // the oracle groups by EXACT text, so a hash conflation would
-      // surface as a count mismatch at the gate
-      val d = Tables.documents(s, dir).select(
-        col("doc_id"), xxhash64(col("text")).as("__th"),
-        len.cast("long").as("n_chars"),
-        fp(col("text")).as("__fp"), sh(col("text")).as("__sh"),
-        fp(rebuilt).as("__fp2"), sh(rebuilt).as("__sh2"),
-        fp(col("text").substr(lit(1), len - 1)).as("__fpHead"),
-        fp(col("text").substr(lit(2), len)).as("__fpTail"))
-      val grp = d.groupBy(col("__th"))
-        .agg(count(lit(1)).as("n_text_twins"))
-      d.join(grp, Seq("__th"))
-        .select(col("doc_id"), col("n_text_twins"), col("n_chars"),
-          (col("__fp") === col("__fp2") && col("__sh") === col("__sh2"))
-            .as("fp_pure"),
-          (col("n_chars") < 34 ||
-            (col("__fpHead") >= col("__fp") && col("__fpTail") >= col("__fp")))
-            .as("fp_window_monotone"))
-    }),
-
-    // SimHash near-dup pairs via 4x16-bit block LSH, gated under the
-    // q33 contract form (hamming over xxhash64-derived fingerprints has
-    // no SQL twin; DedupSpec keeps the brute-force recall proof). The
-    // corpus is augmented with planted exact-text twins — every 7th doc
-    // re-enters with IDENTICAL text under doc_id + off, where off is the
-    // smallest megabyte-round value past max(doc_id) — a derivation
-    // DuckDB replays verbatim (a FIXED 1M offset collided with real ids
-    // once the corpus passed 1M docs: at sf100 two docs shared each
-    // planted id, and the pair dedup's arbitrary pick over their two
-    // hamming values flipped 346 anchors — this gate caught it).
-    // Identical text ⇒ identical fingerprint ⇒ hamming 0, and the
-    // hamming-0 rescue lane guarantees the pair surfaces whatever the
-    // block heat (also a gate catch at sf100: 346 planted pairs lost to
-    // all-four-blocks-hot bit bias — see Dedup.simHashPairs' scaladoc;
-    // the anchor's only remaining out is an identical-sig group above
-    // the clique cap, and the planted groups are ≤78 at sf100 vs the
-    // 2000 default). Global invariants over ALL emitted pairs ride
-    // along as required-TRUE booleans: canonical id_a<id_b order,
-    // hamming within [0, maxHamming], and pair-list distinctness.
-    "q25_simhash_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val off = plantOffset(docs, "doc_id")
-      val plantBase = docs.filter(col("doc_id") % 7 === 0)
-      val corpus = docs.unionByName(
-        plantBase.select((col("doc_id") + off).as("doc_id"), col("text")))
-      val pairs = graft.dedup.Dedup.simHashPairs(corpus, "doc_id", "text",
-        maxHamming = 3) // eager internal checkpoint: pairs feed two consumers
-      val inv = pairs.agg(
-        coalesce(bool_and(col("id_a") < col("id_b")), lit(true))
-          .as("pairs_canonical"),
-        coalesce(bool_and(col("hamming") >= 0 && col("hamming") <= 3), lit(true))
-          .as("hamming_within_bound"),
-        (count(lit(1)) === countDistinct(col("id_a"), col("id_b")))
-          .as("pairs_distinct"))
-      val found = pairs.select(col("id_a").as("doc_id"),
-        col("id_b").as("twin_id"), col("hamming"))
-      plantBase.select(col("doc_id"),
-          (col("doc_id") + off).as("twin_id"),
-          length(col("text")).cast("long").as("n_chars"))
-        .join(found, Seq("doc_id", "twin_id"), "left")
-        .crossJoin(broadcast(inv))
-        .select(col("doc_id"), col("twin_id"), col("n_chars"),
-          coalesce(col("hamming") === 0, lit(false)).as("twin_pair_found"),
-          col("pairs_canonical"), col("hamming_within_bound"),
-          col("pairs_distinct"))
-    }),
-
-    // Tumbling-window event aggregation (batch twin of the streaming path)
-    "q26_event_windows" -> ((s, dir) => {
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), decSum("value").as("sum_value"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("cnt"), col("sum_value"))
-    }),
-
-    // Multimodal features with REAL pixel/sample decode: documents
-    // synthesize fully decodable payloads (uncompressed 24bpp BMP for
-    // image/video docs, PCM-16 WAV for audio docs) carrying planted
-    // id-derived pixel/sample values; the native byte-walk kernels
-    // decode the ACTUAL bytes back out (row padding skipped, RIFF chunk
-    // walk to `data`), and the oracle recomputes every statistic
-    // arithmetically — an encode→decode round trip at the pixel tier,
-    // exact to the byte. Integer stats only (count/min/max/sum), so the
-    // hash match is exact. `decodeStub` (true-codec formats) no longer
-    // feeds any registered query.
-    "q27_media_features" -> ((s, dir) => {
-      val media = graft.multimodal.Media
-        .fromDocumentsPixels(Tables.documents(s, dir)).toDF()
-      media.select(col("media_id"), col("kind"),
-          coalesce(graft.multimodal.Media.pixelStats(col("content")),
-            graft.multimodal.Media.sampleStats(col("content"))).as("st"),
-          graft.multimodal.Media.headerDims(col("content")).as("hd"),
-          graft.multimodal.Media.audioMeta(col("content")).as("am"))
-        .select(col("media_id"), col("kind"),
-          coalesce(col("hd.format"), col("am.format")).as("format"),
-          col("hd.width").as("width"), col("hd.height").as("height"),
-          element_at(col("st"), 1).as("n_units"),
-          element_at(col("st"), 2).as("unit_min"),
-          element_at(col("st"), 3).as("unit_max"),
-          element_at(col("st"), 4).as("unit_sum"))
-    }),
-
-    // REAL media-header decode round trip: image/video payloads carry a
-    // valid PNG signature + IHDR, audio payloads a valid WAV/RIFF fmt
-    // chunk, all built from id-derived metadata; headerDims/audioMeta
-    // parse the values BACK out of the bytes with codegen'd byte
-    // arithmetic (substring/hex/conv — no codec, metadata is plain
-    // bytes). The oracle recomputes the expected values arithmetically,
-    // so a parse bug on either side (encode or decode) breaks the hash
-    // match.
-    "q56_media_dims" -> ((s, dir) => {
-      val media = graft.multimodal.Media.fromDocumentsPng(Tables.documents(s, dir))
-      media.toDF().select(col("media_id"), col("kind"),
-          graft.multimodal.Media.headerDims(col("content")).as("h"),
-          graft.multimodal.Media.audioMeta(col("content")).as("a"))
-        .select(col("media_id"), col("kind"),
-          coalesce(col("h.format"), col("a.format")).as("format"),
-          col("h.width").as("width"), col("h.height").as("height"),
-          col("a.sample_rate").as("sample_rate"), col("a.channels").as("channels"))
-    }),
-
-    // LSH-bucketed ANN (the sub-linear scale path; probabilistic recall,
-    // spec-verified against bruteForce overlap)
-    "q28_knn_lsh" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < 5)
-      annRecallContract(e, probes,
-        graft.similarity.Knn.lshBuckets(e, probes, "vec_id", "embedding",
-          k = 10, dim = 64),
-        k = 10, minRecall = 0.8)
-    }),
-
-    // BPE-ish regex tokenization (letter runs / digit runs / single
-    // punctuation) — codegen'd regexp_extract_all, oracle-checked
-    "q29_bpe_tokens" -> ((s, dir) => {
-      val toks = TextFunctions.regexTokens(col("text"))
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        size(toks).as("n_bpe_tokens"),
-        size(array_distinct(toks)).as("n_bpe_distinct"),
-        element_at(toks, 1).as("first_token"))
-    }),
-
-    // IVF-Flat ANN (k-means coarse quantizer + inverted lists; the
-    // partition-pruned scale path; spec-verified recall vs bruteForce)
-    "q30_knn_ivf" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      // probes as an INDEPENDENT read, not a filter of `e`: sharing the
-      // corpus DataFrame's attribute ids across both sides of ivf's
-      // candidate join makes the analyzer's self-join deduplication
-      // rewrite the probe subtree, and on a fresh session it misses a
-      // reference inside ivf's centroid-routing lambda — the query then
-      // dies at execution with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (only
-      // when q30 is the first query the session plans; a warmed session
-      // optimizes the same tree differently). A separate scan gets fresh
-      // ids, so no dedup rewrite ever runs. Same rows, same plan shape.
-      // KnnSpec "q30 executes as the FIRST query of a fresh session"
-      // pins this — do not re-share the corpus DataFrame.
-      val probes = Tables.embeddings(s, dir).filter(col("vec_id") < 5)
-      annRecallContract(e, probes,
-        graft.similarity.Knn.ivf(e, probes, "vec_id", "embedding",
-          k = 10, nlist = 16, nprobe = 8),
-        // nprobe/nlist = 1/2 of the lists scanned — the measured
-        // operating point on these STRUCTURE-FREE synthetic embeddings
-        // (uniform vectors barely cluster, so IVF recall is inherently
-        // nprobe-bound; the round-10 curve: nprobe 4 → 0.42-0.88,
-        // 6 → 0.64-0.94, 8 → 0.74-0.96, 12 → 0.92+ across
-        // sf0.001/0.01/0.1/1). Floor = the measured nprobe-8 minimum
-        // (0.74) minus margin; latency is flat in nprobe here because
-        // the probe side is 5 broadcast rows
-        k = 10, minRecall = 0.6)
-    }),
-
-    // Product-quantization ANN: corpus compresses to 8 codebook codes
-    // per vector (the 100 TB exhaustive-scan path — ~32x less scan I/O),
-    // queries score exact-against-decoded (ADC). Codebook training is
-    // iterative so neighbor lists have no SQL twin — gated via the ANN
-    // recall contract; KnnSpec keeps degenerate exactness + recall floor
-    "q65_knn_pq" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < 5)
-      annRecallContract(e, probes,
-        graft.similarity.Knn.pq(e, probes, "vec_id", "embedding",
-          k = 10, blocks = 8, ksub = 16),
-        // 32x scan compression: measured aggregate recall 0.48-0.86
-        // across the sf sweep; floor 0.4
-        k = 10, minRecall = 0.4)
-    }),
-
-    // Native pivot with pinned values (one-shuffle wide aggregation —
-    // the declarative twin of q05's max(when) manual pivot)
-    "q31_pivot_native" -> ((s, dir) => {
-      events(s, dir).withColumn("bucket", col("user_id") % 10)
-        .groupBy(col("bucket"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L) // absent (bucket, type) combos: 0, like the SQL CASE sum
-    }),
-
-    // Rollup: hierarchical subtotals in one pass (beyond the reference's
-    // flat groupings; one shuffle, grouping-set expansion map-side)
-    "q32_rollup" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"), decSum("l_extendedprice").as("sum_price"))
-    }),
-
-    // Batch sessionization (gaps-and-islands): per-user sessions closed
-    // by 30 min of inactivity — LAG + running-sum session ids + one
-    // aggregate, one shuffle total; the batch twin of the streaming
-    // sessionize (StreamingSpec proves agreement on the same rows)
-    "q50_sessionize" -> ((s, dir) => {
-      Sessionize.sessions(
-        events(s, dir).select("user_id", "ts", "value"),
-        Seq("user_id"), "ts", gapSeconds = 1800L,
-        extraAggs = Seq(decSum("value").as("sum_value")))
-    }),
-
-    // Cube: all grouping-set combinations in one pass (completes the
-    // grouping-sets family next to q32's rollup; same single-shuffle
-    // expand-side aggregation)
-    "q49_cube" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"), decSum("l_extendedprice").as("sum_price"))
-    }),
-
-    // Embedding near-dup via multi-table hyperplane LSH — the 100 TB
-    // scale path (q23 keeps the bounded brute-force oracle twin of the
-    // same subset + threshold). Exact-cosine verify keeps precision 1.0.
-    // Recall is regime-dependent, stated honestly: in the production
-    // near-dup band (cosine ≥ 0.9) DedupSpec bounds recall ≥ 0.9; at
-    // this low 0.35 threshold (the testdata holds no pair above 0.52)
-    // LSH recovers only the closest pairs (5/13 at sf0.01, deterministic
-    // seeds) — no LSH family is sublinear AND high-recall that far below
-    // the similarity knee, which is why q23's exhaustive form remains
-    // the oracle for this regime.
-    "q34_embedding_neardup_lsh" -> ((s, dir) => {
-      // same `vec_id < 500` pin as q23 so the twin relationship (same
-      // subset, same threshold) holds at every sf. Gated under the
-      // q28-style contract: the exhaustive pairs ARE the exact anchors
-      // (q23's oracle already hash-matches DuckDB's identical cosine
-      // fold), and two required-TRUE aggregates state what the LSH path
-      // genuinely promises — precision 1.0 (exact-cosine verify means
-      // every LSH pair is an exhaustive pair) and a measured recall
-      // floor (0.385-0.5 across the sf sweep at this deliberately
-      // sub-knee threshold; floor 0.3 with margin — see the q23 comment
-      // for why low-threshold recall is regime-bound).
-      val e = Tables.embeddings(s, dir)
-        .filter(col("vec_id") % 5 === 0 && col("vec_id") < 500)
-      val lsh = graft.dedup.Dedup.embeddingPairsLsh(
-        e, "vec_id", "embedding", threshold = 0.35, dim = 64)
-      val exact = graft.dedup.Dedup.embeddingPairsBrute(
-        e, "vec_id", "embedding", threshold = 0.35).localCheckpoint()
-      val counts = lsh
-        .join(exact.withColumn("__e", lit(true)), Seq("id_a", "id_b"), "left")
-        .agg(count(lit(1)).as("__nl"),
-          sum(when(col("__e"), 1L).otherwise(0L)).as("__hit"))
-      val flags = counts
-        .crossJoin(broadcast(exact.agg(count(lit(1)).as("__ne"))))
-        .select(
-          (coalesce(col("__hit"), lit(0L)) === col("__nl"))
-            .as("lsh_subset_of_exact"),
-          (coalesce(col("__hit"), lit(0L)).cast(DoubleType) >=
-            col("__ne") * 0.3).as("recall_floor_ok"))
-      exact.crossJoin(broadcast(flags))
-    }),
-
-    // End-to-end corpus curation through the SQL-expressible stages:
-    // annotate (lang ID, token stats, quality) → language+quality gate →
-    // exact dedup keep-smallest-id. The full chain incl. MinHash near-dedup
-    // is CorpusPipelineSpec's job; this registers the composed pipeline
-    // under the DuckDB oracle.
-    "q37_corpus_curation" -> ((s, dir) => {
-      val cfg = graft.pipeline.CorpusPipeline.Config(
-        langs = Seq("en"), minQuality = 0.5, minTokens = 10)
-      val annotated = graft.pipeline.CorpusPipeline.annotate(Tables.documents(s, dir))
-      // eager barrier after the gate: without it the filter predicate and
-      // BOTH sides of exactDedup's semi-join re-expand the full
-      // tokenize+langId+quality expression chain (~4 corpus passes,
-      // measured 4.6 -> ~1.5 s at sf0.1). The standard 100 TB shape:
-      // annotate+gate once, materialize the (much smaller) survivor set,
-      // dedup over that.
-      val filtered = graft.pipeline.CorpusPipeline.qualityFilter(annotated, cfg)
-        .localCheckpoint()
-      graft.pipeline.CorpusPipeline.exactDedup(filtered)
-        .select(col("doc_id"), col("pred_lang"), col("n_tokens"), col("quality"))
-    }),
-
-    // The corpus-curation chain END-TO-END: annotate → gate → exact dedup
-    // → MinHash-LSH near-dedup with TRANSITIVE clustering (a~b, b~c ⇒ one
-    // survivor for {a,b,c}). Oracled: the LSH candidates are
-    // recall-complete at j >= 0.8 on the gate data (q20) and cluster
-    // survivors are canonical (min doc_id), so DuckDB replays the whole
-    // chain — filter → dedup → exhaustive pairs → recursive-CTE closure.
-    // CorpusPipelineSpec keeps the brute-force union-find equality proof.
-    "q42_corpus_curation_full" -> ((s, dir) => {
-      val cfg = graft.pipeline.CorpusPipeline.Config(
-        langs = Seq("en"), minQuality = 0.5, minTokens = 10,
-        nearDupThreshold = 0.8)
-      val annotated = graft.pipeline.CorpusPipeline.annotate(Tables.documents(s, dir))
-      // first barrier: run annotate+gate ONCE (the filter predicate and
-      // both semi-join branches would otherwise re-expand the expression
-      // chain — see q37)
-      val filtered = graft.pipeline.CorpusPipeline.qualityFilter(annotated, cfg)
-        .localCheckpoint()
-      // second barrier: the gated/deduped (small) survivor set feeds
-      // THREE consumers downstream — minhash signatures, the pair-verify
-      // join, and the final cluster anti-join. Without it each consumer
-      // re-runs the dedup lineage (measured 9.7 s → 4.4 s at sf0.1). At
-      // 100 TB this is the standard "checkpoint-after-the-big-filter"
-      // step.
-      val exact = graft.pipeline.CorpusPipeline.exactDedup(filtered).localCheckpoint()
-      graft.pipeline.CorpusPipeline
-        .nearDedup(exact, cfg.nearDupThreshold, transitive = true)
-        .select(col("doc_id"), col("pred_lang"), col("n_tokens"), col("quality"))
-    }),
-
-    // Transitive duplicate clusters: SimHash near-dup pairs → connected
-    // components (min-label propagation) → (id, cluster_id), gated under
-    // the q33 contract form (the component structure of hash-derived
-    // pairs has no SQL twin; ComponentsSpec keeps the union-find
-    // equality proof). Planted anchors: every 11th doc re-enters TWICE
-    // with identical text (doc_id + off and + 2·off, off scale-derived
-    // past max(doc_id) — see plantOffset), a clique DuckDB replays —
-    // all three members must co-cluster (hamming-0 pairs are
-    // rescue-lane-guaranteed under the clique cap — q25's argument,
-    // post-sf100-fix — and components only need
-    // connectivity). Global invariants ride along: every id appears
-    // exactly once, and each cluster's label IS its minimum member id
-    // (the min-label-propagation postcondition).
-    "q38_dup_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val off = plantOffset(docs, "doc_id")
-      val base = docs.filter(col("doc_id") % 11 === 0)
-      def shifted(o: Long) =
-        base.select((col("doc_id") + o).as("doc_id"), col("text"))
-      val corpus = docs.unionByName(shifted(off)).unionByName(shifted(2 * off))
-      val pairs = graft.dedup.Dedup.simHashPairs(corpus, "doc_id", "text",
-        maxHamming = 3)
-      val comps = graft.dedup.Components.connectedComponents(pairs)
-        .localCheckpoint() // four consumers below
-      val inv = comps.agg(
-          (count(lit(1)) === countDistinct(col("id"))).as("membership_unique"))
-        .crossJoin(broadcast(
-          comps.groupBy(col("cluster_id")).agg(min(col("id")).as("__mn"))
-            .agg(coalesce(bool_and(col("__mn") === col("cluster_id")), lit(true))
-              .as("cluster_label_is_min_member"))))
-      def memberLabel(off: Long, as: String) =
-        comps.select((col("id") - off).as("doc_id"), col("cluster_id").as(as))
-      base.select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        .join(memberLabel(0L, "__c0"), Seq("doc_id"), "left")
-        .join(memberLabel(off, "__c1"), Seq("doc_id"), "left")
-        .join(memberLabel(2 * off, "__c2"), Seq("doc_id"), "left")
-        .crossJoin(broadcast(inv))
-        .select(col("doc_id"), col("n_chars"),
-          (col("__c0").isNotNull && col("__c0") === col("__c1") &&
-            col("__c0") === col("__c2")).as("clique_co_clustered"),
-          coalesce(col("__c0") <= col("doc_id"), lit(false))
-            .as("cluster_label_bounded"),
-          col("membership_unique"), col("cluster_label_is_min_member"))
-    }),
-
-    // Token-budget capping: per language keep the longest docs while the
-    // running token total stays within budget — the data-mixing step of
-    // a corpus build (one window cumsum = one shuffle on the group key)
-    "q44_token_budget" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      val annotated = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), size(toks).as("n_tokens"))
-      graft.pipeline.CorpusPipeline.tokenBudget(
-        annotated, "lang", "n_tokens", budget = 5000L,
-        Seq(col("n_tokens").desc, col("doc_id").asc))
-    }),
-
-    // Deterministic train/val/test split: md5-of-id vs fixed hex
-    // thresholds — engine-independent, RNG-free, re-run-stable (the
-    // no-test-leakage property); DuckDB computes the identical split
-    "q45_dataset_split" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.datasetSplit(
-        Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-        "doc_id", valFrac = 0.1, testFrac = 0.1)
-    }),
-
-    // Deterministic stratified downsampling — per-language mixing rates
-    // applied via the same md5-threshold trick as q45: RNG-free,
-    // engine-identical row selection, nested across rates
-    "q48_stratified_sample" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.stratifiedSample(
-        Tables.documents(s, dir).select(col("doc_id"), col("lang")),
-        "lang", "doc_id", Map("en" -> 0.5, "fr" -> 1.0, "de" -> 0.25))
-    }),
-
-    // Two-phase salted aggregation (the manual skew fallback) registered
-    // under the oracle: identical results to the plain GROUP BY, by
-    // construction (SkewHealthSpec proves the join twin)
-    "q46_salted_agg" -> ((s, dir) => {
-      Skew.saltedCount(Tables.lineitem(s, dir),
-        Seq("l_returnflag", "l_linestatus"), salt = 8)
-    }),
-
-    // Skew diagnostic registered under the oracle: top-20 heaviest part
-    // keys with row share, tie-pinned on the key so the cutoff set is
-    // deterministic across engines
-    "q47_key_histogram" -> ((s, dir) => {
-      Skew.keyHistogram(Tables.lineitem(s, dir), Seq("l_partkey"), topN = 20)
-    }),
-
-    // Eval-set decontamination: per training doc, how many distinct
-    // 8-grams it shares with ANY benchmark doc (benchmark = every 10th
-    // doc, the q07-style derived split). Corpus side never shuffles —
-    // the distinct benchmark gram-hash set is broadcast; grams travel as
-    // 64-bit hashes, never text.
-    "q51_decontaminate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.dedup.Decontaminate.overlapStats(
-        docs.filter(col("doc_id") % 10 =!= 7),
-        docs.filter(col("doc_id") % 10 === 7),
-        "doc_id", "text", "text", n = 8)
-    }),
-
-    // Incremental cross-snapshot near-dedup: the new batch (doc_id >=
-    // 250) band-probes the PERSISTED signature store of the prior
-    // snapshot (doc_id < 250) — candidates are new×store + new×new
-    // bucket collisions only, the store never self-joins or reshuffles.
-    // The daily-100 TB posture: per-batch work scales with batch size,
-    // not corpus size. Oracle: brute-force 3-gram Jaccard restricted to
-    // pairs touching the batch (IncrementalDedupSpec proves incremental
-    // ≡ full-corpus LSH; at j >= 0.8 the 16x4 banding recovers every
-    // pair on the gate data, so the exhaustive SQL is a valid oracle).
-    "q53_incremental_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val store = graft.dedup.IncrementalDedup.signatureStore(
-        docs.filter(col("doc_id") < 250), "doc_id", "text")
-      graft.dedup.IncrementalDedup.incrementalPairs(
-        store, docs.filter(col("doc_id") >= 250), "doc_id", "text",
-        threshold = 0.8)
-    }),
-
-    // Cross-snapshot cluster MAINTENANCE: the old snapshot's persisted
-    // (id, cluster_id) labeling extends with the new batch's incremental
-    // pairs — label merges collapse to a batch-bounded driver union-find
-    // and apply back as a broadcast remap; unbridged clusters never
-    // change. Oracled: labels are canonical (component min id) and the
-    // pair graph is recall-complete at j >= 0.8 (q20), so DuckDB replays
-    // the FULL-graph answer the incremental path must equal;
-    // ComponentsSpec keeps the incremental ≡ full recompute proof
-    "q67_incremental_clusters" -> ((s, dir) => {
-      import graft.dedup.{Components, IncrementalDedup, MinHashDedup}
-      val docs = Tables.documents(s, dir)
-      val old = docs.filter(col("doc_id") < 250)
-      val batch = docs.filter(col("doc_id") >= 250)
-      // ONE shingle+minhash pass over the old snapshot: the store is
-      // the single signature source for the full-graph labeling AND the
-      // incremental probe (it used to run three times — nearDuplicates'
-      // own pass plus the store's two lazy consumers)
-      val store = IncrementalDedup.signatureStore(old, "doc_id", "text")
-        .localCheckpoint()
-      val oldPairs = MinHashDedup.nearDuplicatesFromSignatures(
-        store, "doc_id", 0.8)
-      val cc = Components.connectedComponents(oldPairs)
-      // the persisted labeling covers every old id, paired or not
-      val labels = old.select(col("doc_id").as("id"))
-        .join(cc, Seq("id"), "left")
-        .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-      val newPairs = IncrementalDedup.incrementalPairs(
-        store, batch, "doc_id", "text", threshold = 0.8)
-      Components.extendComponents(
-        labels, batch.select("doc_id"), "doc_id", newPairs)
-    }),
-
-    // q53's production LAYOUT: the store's banded rows live in a parquet
-    // table BUCKETED by band_key, so the batch probe sort-merge-joins
-    // against it with zero store-side exchange — the banding shuffle was
-    // paid once at store-write time and is amortized over every batch.
-    // Same pairs as q53 (same oracle); the timed body includes the store
-    // build, which is the amortized cost being demonstrated.
-    "q59_incremental_bucketed" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val tmp = scratchPath("q59")
-      // signatures feed both the banded-store write and the verify's
-      // shingle lookup — checkpoint so the minhash pass runs once
-      val store = graft.dedup.IncrementalDedup.signatureStore(
-        docs.filter(col("doc_id") < 250), "doc_id", "text").localCheckpoint()
-      graft.dedup.IncrementalDedup.writeBandedStore(
-        store, "q59_band_store", "doc_id", nBuckets = 8,
-        path = Some(s"$tmp/bands"))
-      graft.dedup.IncrementalDedup.incrementalPairsBucketed(
-        s, "q59_band_store", store, docs.filter(col("doc_id") >= 250),
-        "doc_id", "text", threshold = 0.8)
-    }),
-
-    // BM25 relevance of every doc against a fixed query-term bag: the
-    // query-term filter runs BEFORE the postings shuffle, so only |Q|
-    // terms' posting lists ever shuffle; df and corpus stats broadcast
-    // back as single rows. logIdf=false (rational idf core) because the
-    // gate compares doubles bit-exactly and JVM Math.log != glibc log in
-    // the last ulp — the log variant is RelevanceSpec-verified instead.
-    "q60_bm25" -> ((s, dir) => {
-      graft.functions.Relevance.bm25(Tables.documents(s, dir),
-        "doc_id", "text", Seq("join", "hash", "scan"), logIdf = false)
-    }),
-
-    // Incremental cardinality via a mergeable HLL sketch store: two
-    // snapshot halves sketch independently (what each ingest batch
-    // persists), the union-merge estimates corpus-wide distincts without
-    // rescanning history. Sketch bytes aren't SQL-expressible, so the
-    // query emits the q33 contract form instead: the EXACT distincts
-    // plus a boolean asserting the merged estimate landed inside 5% of
-    // them (lgK=12 → rsd ≈1.6%, generous head-room) — DuckDB recomputes
-    // the exacts and emits `true`, so a red row means the sketch store
-    // broke its contract. AggregatesSpec separately proves merged ==
-    // single-pass exactly. Exact pass and sketch pass stay SEPARATE
-    // aggregations joined on the 3-row group key (the q33 lesson:
-    // countDistinct's Expand must not share an aggregation with
-    // object-typed sketch buffers).
-    "q69_sketch_store" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val a = Aggregates.sketchBatch(
-        docs.filter(col("doc_id") < 250), Seq("source"), "text")
-      val b = Aggregates.sketchBatch(
-        docs.filter(col("doc_id") >= 250), Seq("source"), "text")
-      val est = Aggregates.mergeSketchEstimate(
-        a.unionByName(b), Seq("source"))
-      docs.groupBy(col("source"))
-        .agg(countDistinct(col("text")).as("exact_distinct"))
-        .join(broadcast(est), Seq("source"))
-        .select(col("source"), col("exact_distinct"),
-          (abs(col("approx_distinct") - col("exact_distinct")) <=
-            col("exact_distinct") * 0.05).as("sketch_ok"))
-    }),
-
-    // SCD Type 2 dimension maintenance: the versioned form of q10's
-    // upsert. The dim is `part` seeded as all-current at 2020-01-01; the
-    // update batch (derived deterministically from the key) changes
-    // p_retailprice for keys ≡0 (mod 7), re-delivers identical rows for
-    // keys ≡1 (no-op proof in the result), and brings new keys at the
-    // scale-derived plantOffset for keys ≡2. One full-outer shuffle;
-    // history never moves.
-    "q70_scd2" -> ((s, dir) => {
-      val part = Tables.part(s, dir)
-      val dim = part.select(
-        col("p_partkey"), col("p_brand"), col("p_retailprice"),
-        lit("2020-01-01").cast("timestamp").as("valid_from"),
-        lit(null).cast("timestamp").as("valid_to"),
-        lit(true).as("is_current"))
-      // scale-derived insert offset (q25 convention): the fixed +10M
-      // collided with real part keys at sf100 (part holds 20M keys),
-      // and SCD2 is JOIN-asymmetric - a colliding "insert" closes the
-      // real key's current version, which the closed-form oracle can't
-      // price. Found by the r12 sf100 answer sweep. Round 13 migrated
-      // the rest of the planted-offset class (q10/q71/q80/q88/q89 and
-      // the q99/q100 history) to the same derivation, so every insert
-      // lane exercises true inserts at every rung.
-      val off = plantOffset(part, "p_partkey")
-      val updates =
-        part.filter(col("p_partkey") % 7 === 0)
-          .select(col("p_partkey"), col("p_brand"),
-            (col("p_retailprice") + 10.0).as("p_retailprice"))
-        .unionByName(part.filter(col("p_partkey") % 7 === 1)
-          .select("p_partkey", "p_brand", "p_retailprice"))
-        .unionByName(part.filter(col("p_partkey") % 7 === 2)
-          .select((col("p_partkey") + off).as("p_partkey"),
-            col("p_brand"), (col("p_retailprice") * 2.0).as("p_retailprice")))
-      Scd.applyType2(dim, updates, Seq("p_partkey"),
-          Seq("p_brand", "p_retailprice"),
-          lit("2021-06-01").cast("timestamp"))
-        .select("p_partkey", "p_brand", "p_retailprice",
-          "valid_from", "valid_to", "is_current")
-    }),
-
-    // Snapshot CDC diff: classify the delta between two deterministic
-    // snapshots of `orders` (new drops keys ≡0 mod 13, adds keys at the
-    // scale-derived plantOffset for ≡0 mod 17, bumps o_totalprice for
-    // ≡0 mod 7 and clears o_orderpriority for ≡0 mod 5). One full-outer
-    // shuffle; output is the delta only. The added keys formerly used a
-    // fixed +10M, which collided with real order keys at sf100 — the
-    // oracle mirrored the collision so answers stayed green, but the
-    // "insert" lane was partly classifying updates; plantOffset makes
-    // every added key a true insert at every rung.
-    "q71_snapshot_cdc" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-      val off = plantOffset(o, "o_orderkey")
-      val newSnap = o.filter(col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 7 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 5 === 0, lit(null).cast("string"))
-            .otherwise(col("o_orderpriority")))
-        .unionByName(o.filter(col("o_orderkey") % 17 === 0)
-          .select((col("o_orderkey") + off).as("o_orderkey"),
-            col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority")))
-      Merge.snapshotDiff(o, newSnap, Seq("o_orderkey"))
-    }),
-
-    // Context-window chunking: 32-token windows every 24 tokens (8-token
-    // overlap) — the read-side twin of q54's sequence packing. Map-only
-    // plan (spec-proven), so it scales embarrassingly.
-    "q72_chunking" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.chunk(
-        Tables.documents(s, dir), "doc_id", "text",
-        chunkTokens = 32, stride = 24)
-    }),
-
-    // Bloom-pruned semi join: the dim's keys aggregate into one bloom
-    // (bounded driver collect, ~24 KB here) probed at the fact SCAN
-    // before the join shuffle; the exact semi join removes false
-    // positives so the answer never depends on the bloom (spec proves
-    // probe-below-join and exactness under a deliberately undersized
-    // bloom).
-    "q73_bloom_join" -> ((s, dir) => {
-      val dim = Tables.part(s, dir).filter(col("p_size") < 10)
-        .select(col("p_partkey").as("dk"))
-      BloomJoin.semiJoinPruned(Tables.lineitem(s, dir), dim,
-          "l_partkey", "dk", expectedItems = 20000)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          decSum("l_extendedprice").as("sum_price"))
-    }),
-
-    // Hybrid search: reciprocal-rank fusion of a BM25 top-50 (rational
-    // idf — the bit-exact form, q60) and an embedding-cosine top-50
-    // against query vector 0 over the doc-aligned slice (vec_id < 500,
-    // the q23 convention). Only the integer RANKS enter the fused
-    // score (1/(60+r), order-pinned two-term sum), so the oracle is
-    // bit-exact as long as both input orderings agree — which q60/q22
-    // already prove they do.
-    "q74_hybrid_search" -> ((s, dir) => {
-      val lex = graft.functions.Relevance.bm25(Tables.documents(s, dir),
-        "doc_id", "text", Seq("join", "hash", "scan"), logIdf = false)
-      // topKRanked plans as TakeOrderedAndProject (distributed partial
-      // top-k) — the whole-corpus scoring never crosses a
-      // single-partition window exchange; only the 50 survivors do
-      val lexTop = graft.functions.Relevance.topKRanked(lex, "score", "doc_id", 50)
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 500)
-      val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("__q"))
-      val cos = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(qv))
-        .select(col("vec_id").as("doc_id"),
-          VectorFunctions.cosine(col("embedding"), col("__q")).as("cosine"))
-      val vecTop = graft.functions.Relevance.topKRanked(cos, "cosine", "doc_id", 50)
-      graft.functions.Relevance.rrf(Seq(lexTop, vecTop), "doc_id", "rnk", k = 60)
-    }),
-
-    // Distributed BPE merge induction, fully oracled: DuckDB replays
-    // all 16 learning rounds exactly (bpeLearnOracleSql — per-round
-    // Sennrich pair counting, binary-collation tie-break, greedy
-    // rewrite), and BpeSpec proves agreement with the single-node
-    // reference incl. tie-breaks and the O(affected-words) incremental
-    // pair store. The corpus is scanned once for the word-frequency
-    // dictionary; 16 merge rounds then run over the dictionary alone.
-    "q75_bpe_merges" -> ((s, dir) => {
-      graft.functions.Bpe.learnMerges(Tables.documents(s, dir), "text", 16)
-    }),
-
-    // BPE compression stats under a fixed merge table: pieces are
-    // computed once per DISTINCT word (chained codegen'd pairMerge
-    // kernels) and broadcast back; corpus side is explode + rollup.
-    // Rows-only (greedy merge replay is not SQL-expressible);
-    // spec-verified against the reference tokenizer.
-    "q76_bpe_compression" -> ((s, dir) => {
-      graft.functions.Bpe.compressionStats(
-        Tables.documents(s, dir), "doc_id", "text",
-        Seq(("t", "h"), ("th", "e"), ("i", "n"), ("e", "r"), ("a", "n"),
-          ("an", "d"), ("o", "r"), ("e", "s"), ("s", "t"), ("o", "n")))
-    }),
-
-    // Mergeable count-min frequency store: two snapshot halves sketch
-    // independently (what each ingest batch persists), the cell-wise-
-    // addition merge estimates corpus-wide token frequencies without
-    // rescanning history — the heavy-hitter companion to q69's HLL
-    // store. Sketch bytes aren't SQL-expressible, so the query emits
-    // the q33 contract form: the EXACT per-(source, probe) counts plus
-    // booleans asserting the CMS guarantees held — estimates never
-    // undercount (deterministic for count-min), and overcount stays
-    // within eps·N (eps=1e-4, N = that source's token total; the merge
-    // is cell-wise addition so the merged sketch keeps both bounds).
-    // DuckDB recomputes the exacts and emits `true`; AggregatesSpec
-    // separately proves merged == single-pass bit-for-bit.
-    "q77_cms_store" -> ((s, dir) => {
-      val probes = Seq("join", "hash", "scan", "filter", "merge")
-      // four consumers (two CMS batch aggs, the per-source grid, the
-      // exact probe counts) each re-ran the tokenize+explode pass;
-      // materialize it once (guide §5: reuse beats recompute when the
-      // recompute is the expensive part — tokenization dominates here)
-      val toks = Tables.documents(s, dir)
-        .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("token"))
-        .localCheckpoint()
-      val a = Aggregates.cmsBatch(toks.filter(crc32(col("token")) % 2 === 0),
-        "source", "token")
-      val b = Aggregates.cmsBatch(toks.filter(crc32(col("token")) % 2 === 1),
-        "source", "token")
-      val est = Aggregates.cmsMergeEstimate(a.unionByName(b), "source", probes)
-      import s.implicits._
-      // zero-filled (source, probe) grid: a probe absent from a source
-      // still has a contract to check (estimate may only be collisions)
-      val grid = toks.groupBy(col("source"))
-        .agg(count(lit(1)).as("__n"))
-        .crossJoin(broadcast(probes.toDF("token")))
-      grid
-        .join(toks.filter(col("token").isin(probes: _*))
-          .groupBy(col("source"), col("token"))
-          .agg(count(lit(1)).as("__c")), Seq("source", "token"), "left")
-        .join(broadcast(est), Seq("source", "token"))
-        .select(col("source"), col("token"),
-          coalesce(col("__c"), lit(0L)).as("exact_count"),
-          (col("est_count") >= coalesce(col("__c"), lit(0L)))
-            .as("never_under_ok"),
-          (col("est_count") <= coalesce(col("__c"), lit(0L)) +
-            col("__n") * 0.0001).as("bound_ok"))
-    }),
-
-    // SemDeDup: k-means neighborhoods, within-cluster cosine pruning —
-    // the embedding-space dedup of the curation stack. Input pinned to
-    // the fixed vec_id<2000 slice (q23 convention: constant work at
-    // every sf). Iterative k-means has no SQL twin, so the gate runs
-    // the q33 contract form over a twin-planted corpus (KnnSpec keeps
-    // the nlist=1 ≡ brute proof and never-invents-drops): every 9th
-    // vector re-enters COINCIDENT under vec_id+1,000,000 — identical
-    // vectors always share a cluster (deterministic assignment) at
-    // cosine 1 ≥ threshold, and SemDeDup only ever drops the larger id
-    // of a pair, so each planted twin MUST be dropped (required TRUE)
-    // while the corpus-minimum id can never be (nothing smaller exists
-    // to beat it). Survivor-set distinctness rides along.
-    "q78_semantic_dedup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).filter(col("vec_id") < 2000)
-        .select("vec_id", "embedding")
-      // fresh scan for the planted side: a union whose children share
-      // attribute ids (both projected off one scan) trips Catalyst's
-      // union constraint rewrite ("key not found" in rewriteConstraints)
-      val planted = Tables.embeddings(s, dir)
-        .filter(col("vec_id") < 2000 && col("vec_id") % 9 === 0)
-        .select("vec_id", "embedding")
-      // scale-derived twin offset (q25 convention): a FIXED +1M would
-      // collide with real vec_ids once the table passes 1M rows
-      val off = plantOffset(Tables.embeddings(s, dir), "vec_id")
-      // checkpointed for the same two reasons as q79's corpus
-      val corpus = e.unionByName(planted
-        .select((col("vec_id") + off).as("vec_id"), col("embedding")))
-        .localCheckpoint()
-      val surv = graft.similarity.Knn.semanticDedup(corpus, "vec_id",
-          "embedding", threshold = 0.5, nlist = 16)
-        .select("vec_id").localCheckpoint() // three consumers below
-      val inv = surv.agg(
-          (count(lit(1)) === countDistinct(col("vec_id"))).as("survivors_unique"),
-          min(col("vec_id")).as("__mns"))
-        .crossJoin(broadcast(corpus.agg(min(col("vec_id")).as("__mnc"))))
-        .select(col("survivors_unique"),
-          (col("__mns") === col("__mnc")).as("global_min_survives"))
-      planted.select(col("vec_id"), (col("vec_id") + off).as("twin_id"))
-        .join(surv.select(col("vec_id").as("twin_id"), lit(true).as("__s")),
-          Seq("twin_id"), "left")
-        .crossJoin(broadcast(inv))
-        .select(col("vec_id"), col("twin_id"),
-          col("__s").isNull.as("twin_dropped"),
-          col("survivors_unique"), col("global_min_survives"))
-    }),
-
-    // Embedding outlier gate: cosine-to-own-centroid below threshold.
-    // Same pinned slice; narrow scoring pass after bounded quantizer
-    // training. KnnSpec plants an off-manifold vector in a CLUSTERED
-    // fixture and proves the flag is exactly the predicate — a planted
-    // outlier cannot be carried into the driver gate because the
-    // testdata embeddings are near-uniform on the unit sphere (label-
-    // mean norms ~0.14), so no fixed direction is guaranteed far from
-    // every data-derived centroid. The gate therefore runs the q33
-    // contract on what IS guaranteed: planted coincident twins (every
-    // 13th vector re-enters under +1,000,000) must receive bit-identical
-    // (cluster_id, centroid_cosine, is_outlier) — same expression over
-    // the same input and centroid literals; flag ≡ score<τ consistency,
-    // cluster-range and cosine-range bounds hold corpus-wide; the
-    // scored-row count is an exact anchor DuckDB recomputes; and the
-    // outlier fraction sits in the measured band (2.6-7.1% across the
-    // sf sweep; sane bounds ≥1 row, ≤12%).
-    "q79_embedding_outliers" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).filter(col("vec_id") < 2000)
-        .select("vec_id", "embedding")
-      // fresh scan for the planted side — same union-constraint
-      // rationale as q78
-      val planted = Tables.embeddings(s, dir)
-        .filter(col("vec_id") < 2000 && col("vec_id") % 13 === 0)
-        .select("vec_id", "embedding")
-      // scale-derived twin offset (q25 convention, as in q78)
-      val off = plantOffset(Tables.embeddings(s, dir), "vec_id")
-      // checkpointed: (a) the quantizer + scoring pass read the corpus
-      // several times, (b) leaving the union in the plan trips
-      // Catalyst's union constraint rewrite under the later projections
-      val corpus = e.unionByName(planted
-        .select((col("vec_id") + off).as("vec_id"), col("embedding")))
-        .localCheckpoint()
-      val out = graft.similarity.Knn.embeddingOutliers(corpus, "vec_id",
-          "embedding", minCentroidCosine = 0.16, nlist = 16)
-        .select("vec_id", "cluster_id", "centroid_cosine", "is_outlier")
-        .localCheckpoint() // three consumers below
-      val inv = out.agg(
-        count(lit(1)).as("n_scored"),
-        (count(lit(1)) === countDistinct(col("vec_id"))).as("scored_once"),
-        bool_and(col("is_outlier") === (col("centroid_cosine") < 0.16))
-          .as("flag_matches_score"),
-        bool_and(col("cluster_id") >= 0 && col("cluster_id") < 16)
-          .as("cluster_in_range"),
-        bool_and(abs(col("centroid_cosine")) <= 1.0001).as("cosine_bounded"),
-        ((sum(when(col("is_outlier"), 1L).otherwise(0L)) >= 1L) &&
-          (sum(when(col("is_outlier"), 1L).otherwise(0L)).cast(DoubleType)
-            <= count(lit(1)) * 0.12)).as("outlier_fraction_sane"))
-      def scored(idExpr: org.apache.spark.sql.Column, pre: String) =
-        out.select(idExpr.as("vec_id"), col("cluster_id").as(s"__${pre}c"),
-          col("centroid_cosine").as(s"__${pre}s"), col("is_outlier").as(s"__${pre}o"))
-      planted.select(col("vec_id"), (col("vec_id") + off).as("twin_id"))
-        .join(scored(col("vec_id"), "a"), Seq("vec_id"))
-        .join(scored(col("vec_id"), "b")
-          .withColumnRenamed("vec_id", "twin_id"), Seq("twin_id"))
-        .crossJoin(broadcast(inv))
-        .select(col("vec_id"), col("twin_id"),
-          (col("__ac") === col("__bc") && col("__as") === col("__bs") &&
-            col("__ao") === col("__bo")).as("twin_consistent"),
-          col("n_scored"), col("scored_once"), col("flag_matches_score"),
-          col("cluster_in_range"), col("cosine_bounded"),
-          col("outlier_fraction_sane"))
-    }),
-
-    // SCD2 × as-of composition: facts resolve the dim version in effect
-    // at their ship date. Version intervals are contiguous (valid_to =
-    // successor's valid_from), so "the version at t" IS the backward
-    // as-of match on valid_from — the join-free union+window AsOf
-    // operator, no interval explosion on the open-ended current rows.
-    // Version timestamps sit INSIDE the fact date range (base 1995-01-01,
-    // superseding update 1998-06-01; l_shipdate spans 1995-2001), so
-    // facts genuinely straddle versions — early ships resolve the base
-    // price, late ships the +10 update (OperatorsSpec proves both
-    // versions are exercised; an out-of-range dim would degenerate to an
-    // unmatched left join that the oracle could never catch).
-    "q80_scd2_asof" -> ((s, dir) => {
-      val part = Tables.part(s, dir)
-      // scale-derived insert offset (the q70 convention): SCD2 is
-      // join-asymmetric, so a colliding "insert" would close a real
-      // key's current version and shift which dim version facts resolve
-      val off = plantOffset(part, "p_partkey")
-      val base = part.select(
-        col("p_partkey"), col("p_brand"), col("p_retailprice"),
-        lit("1995-01-01").cast("timestamp").as("valid_from"),
-        lit(null).cast("timestamp").as("valid_to"),
-        lit(true).as("is_current"))
-      val updates =
-        part.filter(col("p_partkey") % 7 === 0)
-          .select(col("p_partkey"), col("p_brand"),
-            (col("p_retailprice") + 10.0).as("p_retailprice"))
-        .unionByName(part.filter(col("p_partkey") % 7 === 1)
-          .select("p_partkey", "p_brand", "p_retailprice"))
-        .unionByName(part.filter(col("p_partkey") % 7 === 2)
-          .select((col("p_partkey") + off).as("p_partkey"),
-            col("p_brand"), (col("p_retailprice") * 2.0).as("p_retailprice")))
-      val dim = Scd.applyType2(base, updates, Seq("p_partkey"),
-          Seq("p_brand", "p_retailprice"),
-          lit("1998-06-01").cast("timestamp"))
-        .select("p_partkey", "p_retailprice", "valid_from")
-      val facts = Tables.lineitem(s, dir)
-        .filter(col("l_partkey") % 7 === 0)
-        .select(col("l_partkey").as("p_partkey"),
-          col("l_shipdate"), col("l_returnflag"))
-      AsOf.asOfJoin(facts, dim, Seq("p_partkey"),
-          "l_shipdate", "valid_from", Seq("p_retailprice"))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          count(col("asof_p_retailprice")).as("n_matched"),
-          decSum("asof_p_retailprice").as("sum_price"))
-    }),
-
-    // Z-order write round-trip under the oracle gate: lineitem clusters
-    // on (l_partkey, l_extendedprice), reads back through a 2-D box
-    // predicate, and must aggregate exactly like the original table —
-    // layout NEVER changes answers (SourcesSpec separately proves the
-    // layout actually bounds both dimensions per file). Same per-JVM
-    // tmp + overwrite convention as q36.
-    "q81_zorder_roundtrip" -> ((s, dir) => {
-      val tmp = scratchPath("q81")
-      graft.sources.Sources.zorderWrite(
-        Tables.lineitem(s, dir)
-          .select("l_partkey", "l_extendedprice", "l_returnflag", "l_quantity"),
-        tmp, ("l_partkey", "l_extendedprice"), targetFiles = 8)
-      s.read.parquet(tmp)
-        .filter(col("l_partkey") < 5000 && col("l_extendedprice") < 30000.0)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("l_quantity")).as("sum_qty"),
-          decSum("l_extendedprice").as("sum_price"))
-    }),
-
-    // Bigram LM training (the CCNet quality-scoring model): two grouped
-    // counts + a distinct-count, one corpus pass; add-k probabilities
-    // are one IEEE division of exact integer terms — bit-reproducible,
-    // so the TRAINED TABLE is oracle-gated.
-    "q82_lm_train" -> ((s, dir) => {
-      graft.functions.LanguageModel.trainBigrams(
-        Tables.documents(s, dir), "text", k = 0.5)
-    }),
-
-    // Per-doc LM fluency under the self-trained model (avg negative
-    // log-prob; natural-log sums are JVM floating point → rows-only;
-    // LanguageModelSpec pins the backoff arithmetic exactly).
-    "q83_lm_score" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val model = graft.functions.LanguageModel.trainBigrams(docs, "text", k = 0.5)
-      val scored = graft.functions.LanguageModel.scoreDocs(docs, "doc_id", "text", model)
-      // q33 contract form: per-doc log-prob sums are order-dependent IEEE,
-      // so emit the exact bigram/unseen counts plus booleans asserting the
-      // smoothing invariants — scoring the training corpus itself means
-      // every bigram is in-model (n_unseen = 0, an exact check of the
-      // scoring joins), every probability lies in (0,1) so the average
-      // negative log is positive, and add-k smoothing floors each
-      // probability at k/(max c1 + kV), bounding the average by
-      // log((max c1 + kV)/k). DuckDB recomputes the counts and emits true.
-      val bounds = model.agg(
-        max(col("c1")).as("__maxc1"), first(col("v")).as("__v"))
-      scored.crossJoin(broadcast(bounds))
-        .select(col("doc_id"), col("n_bigrams"), col("n_unseen"),
-          (col("avg_neg_logp") > 0.0).as("logp_positive_ok"),
-          (col("avg_neg_logp") <=
-            log((col("__maxc1") + lit(0.5) * col("__v")) / lit(0.5)))
-            .as("logp_bounded_ok"))
-    }),
-
-    // Versioned-table round-trip under the oracle gate: create (orders
-    // %3=0) → append (%3=1) → compact, then read version 1 via time
-    // travel and the post-compact latest. Both must aggregate exactly
-    // like the raw table slices — commits are atomic manifest renames,
-    // compaction is answer-preserving, and old versions stay readable
-    // (VersionedTableSpec proves isolation/conflict/vacuum separately).
-    // Fresh table per invocation so version numbers are pinned.
-    "q84_versioned_table" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q84")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      VersionedTable.create(o.filter(col("o_orderkey") % 3 === 0), tmp)
-      VersionedTable.append(o.filter(col("o_orderkey") % 3 === 1), tmp)
-      VersionedTable.compactTable(s, tmp, targetFiles = 4)
-      def summarize(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.groupBy(col("o_orderstatus"))
-          .agg(count(lit(1)).as("cnt"), decSum("o_totalprice").as("sum_price"))
-          .withColumn("version", lit(tag))
-      summarize(VersionedTable.snapshotAt(s, tmp, 1L), "v1")
-        .unionByName(summarize(VersionedTable.read(s, tmp), "v3"))
-    }),
-
-    // JPEG header decode under the oracle gate: every doc wraps in a
-    // JPEG whose SOF sits at a VARIABLE offset (EXIF APP1 always first,
-    // a COM segment for %3=0 ids, SOF2 vs SOF0 by id parity), dims are
-    // id-derived — the native marker walk must recover exactly what the
-    // oracle recomputes arithmetically. MediaSpec adds handcrafted
-    // fixtures (fill bytes, SOS-before-SOF, truncation, DHT skipping).
-    "q85_jpeg_dims" -> ((s, dir) => {
-      import graft.multimodal.Media
-      val payload = Media.jpegPayload(
-        lit(64L) + col("doc_id") % 1024L,
-        lit(32L) + (col("doc_id") % 9L) * 32L,
-        col("doc_id") % 2 === 0,
-        col("doc_id") % 3 === 0,
-        col("text"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Media.headerDims(payload).as("hd"))
-        .select(col("doc_id"), col("hd.format").as("format"),
-          col("hd.width").as("width"), col("hd.height").as("height"))
-    }),
-
-    // Top-3 TF-IDF keywords per doc (rational idf — bit-exact across
-    // engines, see tfidfKeywords scaladoc); per-doc rank compiles to
-    // WindowGroupLimit, ties pinned by term
-    "q86_tfidf_keywords" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.tfidfKeywords(
-        Tables.documents(s, dir), "doc_id", "text", k = 3)
-    }),
-
-    // Deterministic 20-per-source sample (md5-ranked — the exact-size,
-    // engine-reproducible reservoir equivalent)
-    "q87_hash_sample" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.hashSamplePerGroup(
-        Tables.documents(s, dir).select("source", "doc_id", "n_chars"),
-        "source", "doc_id", k = 20)
-    }),
-
-    // MERGE INTO a versioned table under the oracle gate: create part,
-    // merge price bumps (%4=0) + inserts (%9=0, scale-derived offset
-    // keys), read the post-merge latest — SQL MERGE semantics composed
-    // with the atomic commit layer (pre-merge version stays
-    // time-travelable, VersionedTableSpec proves it). Fresh table per
-    // invocation. MERGE is join-asymmetric like SCD2, so the insert
-    // lane uses plantOffset: a colliding fixed-offset "insert" would be
-    // silently matched and applied as an update instead.
-    "q88_versioned_merge" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q88")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val p0 = Tables.part(s, dir).select("p_partkey", "p_brand", "p_retailprice")
-      val off = plantOffset(p0, "p_partkey")
-      VersionedTable.create(p0, tmp)
-      val updates = p0.filter(col("p_partkey") % 4 === 0)
-        .select(col("p_partkey"), col("p_brand"),
-          (col("p_retailprice") + 25.0).as("p_retailprice"))
-        .unionByName(p0.filter(col("p_partkey") % 9 === 0)
-          .select((col("p_partkey") + off).as("p_partkey"),
-            col("p_brand"), col("p_retailprice")))
-      VersionedTable.merge(updates, tmp, Seq("p_partkey"))
-      VersionedTable.read(s, tmp).groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("cnt"), decSum("p_retailprice").as("sum_price"))
-    }),
-
-    // CDC across table VERSIONS: the q71 delta computed by time travel —
-    // write v1, overwrite with the changed snapshot as v2, then diff
-    // snapshotAt(1) against the latest. The output (and oracle) is
-    // exactly q71's; what this gates is that the versioned commit layer
-    // preserves both endpoints of the diff bit-for-bit, so CDC composes
-    // with time travel instead of requiring the caller to have kept the
-    // old snapshot around. Fresh table per invocation.
-    "q89_version_cdc" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q89")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-      // same scale-derived offset as q71 (shared oracle): both sides
-      // must add the SAME keys for the time-travel diff to equal q71's
-      val off = plantOffset(o, "o_orderkey")
-      VersionedTable.create(o, tmp)
-      val newSnap = o.filter(col("o_orderkey") % 13 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 7 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
-        .withColumn("o_orderpriority",
-          when(col("o_orderkey") % 5 === 0, lit(null).cast("string"))
-            .otherwise(col("o_orderpriority")))
-        .unionByName(o.filter(col("o_orderkey") % 17 === 0)
-          .select((col("o_orderkey") + off).as("o_orderkey"),
-            col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority")))
-      VersionedTable.overwrite(newSnap, tmp)
-      Merge.snapshotDiff(
-        VersionedTable.snapshotAt(s, tmp, 1L),
-        VersionedTable.read(s, tmp), Seq("o_orderkey"))
-    }),
-
-    // Data skipping under the oracle gate: lineitem lands in a
-    // versioned table, a z-order `cluster` commit rewrites it with
-    // per-file min/max manifest stats, and the scan goes through
-    // readWhere — files whose stats refute the predicate are pruned
-    // BEFORE the scan plans (DataSkippingSpec proves pruning fires and
-    // is sound; the oracle here proves the pruned scan's answer is the
-    // plain filtered aggregate). The predicate is a 2-D box on the
-    // clustered pair plus a timestamp bound on a third stats column.
-    "q90_skipping_scan" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      // immutable once built (create + cluster, then read-only): a
-      // per-JVM memoized fixture — the gate is the skipping-pruned
-      // readWhere, which re-runs every trial
-      val tmp = vtBase(s, dir, "q90") { t =>
-        val li = Tables.lineitem(s, dir).select("l_orderkey", "l_quantity",
-          "l_extendedprice", "l_shipdate", "l_returnflag")
-        VersionedTable.create(li, s"$t/lineitem_t")
-        VersionedTable.cluster(s, s"$t/lineitem_t",
-          ("l_quantity", "l_extendedprice"), targetFiles = 16,
-          statsCols = Seq("l_quantity", "l_extendedprice", "l_shipdate"))
-      } + "/lineitem_t"
-      VersionedTable.readWhere(s, tmp,
-        col("l_quantity") <= 5.0 && col("l_extendedprice") < 20000.0 &&
-          col("l_shipdate") >=
-            lit(java.sql.Timestamp.valueOf("1994-01-01 00:00:00")))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"), decSum("l_quantity").as("sum_qty"),
-          decSum("l_extendedprice").as("sum_price"))
-    }),
-
-    // Copy-on-write DML under the oracle gate: DELETE then UPDATE on a
-    // versioned table, each committed as one atomic version rewriting
-    // ONLY the files whose skipping stats say they may hold matching
-    // rows (range predicates on the range-partitioned key, so most
-    // files carry over by reference — VersionedTableSpec proves the
-    // carry-over; the oracle here proves the DML semantics). The final
-    // aggregate reads the post-DML latest version.
-    "q91_dml_cow" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q91")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .repartitionByRange(vtParts(s, dir, "orders.parquet"),
-          col("o_orderkey"))
-      VersionedTable.create(o, tmp, statsCols = Seq("o_orderkey"))
-      VersionedTable.delete(s, tmp, col("o_orderkey") < 1000L)
-      VersionedTable.update(s, tmp,
-        col("o_orderkey") >= 5000L && col("o_orderkey") < 6000L,
-        Map("o_totalprice" -> (col("o_totalprice") + 100.0)))
-      VersionedTable.read(s, tmp)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), decSum("o_totalprice").as("sum_price"))
-    }),
-
-    // ISO-BMFF (MP4) box walk under the oracle gate: every doc wraps in
-    // a synthetic MP4 whose moov sits at a VARIABLE offset (id-sized
-    // free box), dims live in 16.16 fixed-point inside moov▸trak▸tkhd,
-    // and duration = mvhd units/timescale with an id-chosen timescale —
-    // the nested-container sibling of q85's flat JPEG marker walk.
-    // MediaSpec adds largesize/v1/audio-first/size-0/truncation fixtures.
-    "q92_mp4_meta" -> ((s, dir) => {
-      import graft.multimodal.Media
-      val ts = when(col("doc_id") % 3 === 0, 1000L)
-        .when(col("doc_id") % 3 === 1, 500L).otherwise(250L)
-      val payload = Media.mp4Payload(
-        lit(16L) + col("doc_id") % 600L,
-        lit(16L) + (col("doc_id") % 7L) * 48L,
-        col("doc_id") % 86400L, ts, col("doc_id") % 48L, col("text"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Media.videoMeta(payload).as("vm"))
-        .select(col("doc_id"), col("vm.format").as("format"),
-          col("vm.width").as("width"), col("vm.height").as("height"),
-          col("vm.duration_ms").as("duration_ms"))
-    }),
-
-    // PageRank over a deterministic synthetic link graph (two
-    // arithmetic out-links per doc): the link-graph quality prior for
-    // corpus curation. PageRankSpec pins the operator against an exact
-    // driver-side power iteration (dangling redistribution, multigraph
-    // weighting, damping) at 1e-9; the gate query uses the q33 contract
-    // form — float-iterative ranks have no SQL twin, so emit the EXACT
-    // link structure (per-node in-degree, recomputed by DuckDB from the
-    // same edge arithmetic; doc_ids are 0..n-1 so the node universe is
-    // the doc set) plus required-TRUE distribution invariants: every
-    // rank strictly positive, ranks sum to 1 within 1e-6 (dangling
-    // redistribution keeps a distribution), and every rank at or above
-    // the damping floor (1-d)/n.
-    "q93_pagerank" -> ((s, dir) => {
-      import graft.operators.PageRank
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val n = docs.count() // bounded driver scalar (graph modulus)
-      // quadratic map (non-bijective → collision hubs) + division map
-      // (multiples of 7 collect in-links) → a skewed in-degree
-      // distribution, so ranks genuinely vary
-      val edges = docs.select(col("doc_id").as("src"),
-          ((col("doc_id") * col("doc_id") + 1L) % n).as("dst"))
-        .union(docs.select(col("doc_id").as("src"),
-          ((col("doc_id") - col("doc_id") % 7L) % n).as("dst")))
-      val pr = PageRank.pageRank(edges, "src", "dst", iterations = 6)
-      val inDeg = edges.groupBy(col("dst").as("id"))
-        .agg(count(lit(1)).as("in_links"))
-      val glob = pr.agg(sum(col("rank")).as("__s"), count(lit(1)).as("__n"))
-      pr.join(inDeg, Seq("id"), "left")
-        .crossJoin(broadcast(glob))
-        .select(col("id"),
-          coalesce(col("in_links"), lit(0L)).as("in_links"),
-          (col("rank") > 0.0).as("rank_positive_ok"),
-          (abs(col("__s") - lit(1.0)) <= lit(1e-6)).as("rank_sum_ok"),
-          (col("rank") >= lit(0.15) / col("__n") - lit(1e-12)).as("rank_floor_ok"))
-    }),
-
-    // Exact discrete percentiles per group — the exact twin of q33's
-    // sketches: percentile_disc returns an ACTUAL data element (lowest
-    // value with cumulative distribution >= p, the ANSI definition both
-    // engines share), so unlike interpolated percentiles it is
-    // bit-comparable across engines
-    "q68_percentiles" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(
-          // Spark returns DOUBLE; the value is an actual element of the
-          // long column, so the cast back is lossless and matches the
-          // oracle's column type
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)")
-            .cast("long").as("p50"),
-          expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY n_chars)")
-            .cast("long").as("p95"),
-          count(lit(1)).as("n_docs"))
-    }),
-
-    // Top-100 corpus vocabulary with cumulative coverage: distributed
-    // TakeOrdered for the winners, narrow pass for the token total,
-    // single-partition window only over the 100 survivors
-    "q63_vocabulary" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.vocabulary(
-        Tables.documents(s, dir), "text", topK = 100)
-    }),
-
-    // Per-doc OOV rate vs the top-20 corpus vocab (tokenizer-fit
-    // metric): vocab broadcasts, one per-doc rollup shuffle, exact
-    // long/long fraction
-    "q66_oov_rate" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.oovStats(
-        Tables.documents(s, dir), "doc_id", "text", topK = 20)
-    }),
-
-    // Temperature-reweighted source mixing at alpha=0.5: rates are
-    // targetFrac * sqrt(n_max/n_s) (sqrt is IEEE-correctly-rounded in
-    // every engine, and the relative-to-largest form needs no
-    // order-sensitive cross-source float sum), sampling is the md5
-    // hex-threshold rule — DuckDB reproduces the exact surviving rows
-    "q64_temperature_mix" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.temperatureSample(
-          Tables.documents(s, dir), "source", "doc_id",
-          targetFrac = 0.5, alpha = 0.5)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // Exact substring-dedup signals: per doc, how many 8-token windows
-    // recur verbatim in ANOTHER doc (cross-doc boilerplate — the
-    // suffix-array dedup statistic as fixed windows). Windows shuffle as
-    // 64-bit hashes, one row per distinct (gram, doc); the oracle uses
-    // gram STRINGS (identical counts up to a ~2^-64 collision, the
-    // q20/q52 precedent)
-    "q62_substring_dup" -> ((s, dir) => {
-      graft.dedup.Substring.windowStats(Tables.documents(s, dir),
-        "doc_id", "text", n = 8)
-    }),
-
-    // PII detect + redact: narrow codegen'd regex chain, zero shuffles.
-    // The synthetic corpus is PII-free word salad, so the query PLANTS
-    // deterministic id-derived PII first (the q56 pattern) and the
-    // oracle replays the same arithmetic; patterns live in the
-    // Java-regex ∩ RE2 subset so both engines match identically
-    "q61_pii_redact" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).withColumn("pii_text",
-        concat(col("text"),
-          when(col("doc_id") % 5 === 0,
-            concat(lit(" contact user"), col("doc_id").cast("string"),
-              lit("@example.com now"))).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(" from 10.0."), (col("doc_id") % 256).cast("string"),
-              lit(".25 logged"))).otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            concat(lit(" call 555-867-"),
-              lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-              lit(" today"))).otherwise(lit(""))))
-      graft.functions.Pii.redact(
-          graft.functions.Pii.annotate(planted, "pii_text"),
-          "pii_text", "redacted")
-        .select(col("doc_id"), col("n_email"), col("n_ipv4"),
-          col("n_phone"), col("redacted"))
-    }),
-
-    // The benchmark-side contamination report (the reverse of q51): per
-    // eval item, how many distinct training docs share an 8-gram with it
-    // and the largest overlap — what an eval owner reads to retire
-    // compromised items
-    "q57_benchmark_report" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.dedup.Decontaminate.benchmarkReport(
-        docs.filter(col("doc_id") % 10 =!= 7),
-        docs.filter(col("doc_id") % 10 === 7),
-        "doc_id", "text", "doc_id", "text", n = 8)
-    }),
-
-    // Gopher-style repetition/boilerplate signals: duplicate-2-gram
-    // fraction, top-2-gram fraction, top-token fraction — all narrow
-    // codegen'd array folds (sort + run-length scan), no explode/groupBy
-    // shuffle per doc
-    "q52_repetition_stats" -> ((s, dir) => {
-      graft.pipeline.CorpusPipeline.annotateRepetition(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          size(TextFunctions.tokens(col("text"))).as("n_tokens"),
-          col("dup_2gram_frac"), col("top_2gram_frac"), col("top_token_frac"))
-    }),
-
-    // Sequence packing: concatenate-and-chunk into 2048-token training
-    // sequences per language — each doc tagged with the sequence it
-    // starts in and its offset (one window cumsum = one shuffle; pure
-    // integer arithmetic, so the packing is engine-reproducible like the
-    // q45 split)
-    "q54_sequence_pack" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      val annotated = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), size(toks).as("n_tokens"))
-      graft.pipeline.CorpusPipeline.packSequences(
-        annotated, "lang", "n_tokens", seqLen = 2048L, Seq(col("doc_id").asc))
-    }),
-
-    // Corpus-frequency familiarity (CCNet-style quality signal without a
-    // pretrained LM): mean corpus frequency of each doc's tokens —
-    // formulated as one exact long sum + one double division so it
-    // hash-matches across engines (a mean of ln() probs would differ in
-    // the last ulp)
-    "q55_familiarity" -> ((s, dir) => {
-      // topK = 0 (no vocabulary cap): the oracle computes full-vocab
-      // frequencies, so the registered path must too — a finite cap
-      // would silently diverge once the corpus vocabulary outgrows it
-      graft.pipeline.CorpusPipeline.familiarityScore(
-        Tables.documents(s, dir), "doc_id", "text", topK = 0)
-    }),
-
-    // ANALYZE-style table profiling: per-column rows/nulls/distincts/
-    // min/max in ONE aggregation job (stacked to a long report) — the
-    // data-quality health report a pipeline publishes next to every
-    // table it writes
-    "q58_profile" -> ((s, dir) => {
-      Profiling.profile(Tables.documents(s, dir),
-        Seq("doc_id", "lang", "source", "n_chars"))
-    }),
-
-    // Sketch aggregates — the 100 TB scale path where exact distinct /
-    // exact percentiles would shuffle every value: HLL++ and a quantile
-    // sketch keep constant state per group. Sketch VALUES are
-    // algorithm-specific and can never hash-match an oracle, so the
-    // query emits what IS engine-reproducible: the exact statistics
-    // plus booleans asserting each sketch landed inside its error
-    // bound (rsd 0.02 → 5% head-room on the distinct count; quantile
-    // accuracy 1000 → rank-error ≤ n/1000, checked by counting the
-    // EXACT rank of each estimate and requiring it inside a generous
-    // [0.40, 0.60] / [0.98, 1] bracket). DuckDB recomputes the exacts
-    // and emits `true` for each bound — a red row means the sketch
-    // itself broke its contract. AggregatesSpec additionally bounds the
-    // raw estimates vs exact on fixtures.
-    //
-    // Shaped as THREE separate scans on purpose: countDistinct forces
-    // an Expand, and mixing that with the object-typed quantile/HLL
-    // buffers in one aggregation degrades the whole pass to a sort
-    // aggregate over 2× rows (measured 66× at sf1). Sketch pass,
-    // exact-distinct pass, and a broadcast-join rank pass each stay in
-    // their fast aggregate form; the rank check replaces the exact
-    // `percentile` whose per-group value map is itself a scale hazard.
-    "q33_approx_stats" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val sk = li.groupBy(col("l_returnflag")).agg(
-        approx_count_distinct(col("l_partkey"), 0.02).as("__ap"),
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
-          .as("__amed"),
-        percentile_approx(col("l_extendedprice"), lit(0.99), lit(1000))
-          .as("__a99"))
-      val ex = li.groupBy(col("l_returnflag")).agg(
-        countDistinct(col("l_partkey")).as("exact_parts"))
-      // exact rank of each estimate: one broadcast of the 3-row sketch
-      // result, then codegen'd conditional counts; __ap rides along so
-      // the sketch pass is computed exactly once
-      val rk = li.join(broadcast(sk), Seq("l_returnflag"))
-        .groupBy(col("l_returnflag"))
-        .agg(max(col("__ap")).as("__ap"),
-          count(lit(1)).as("__n"),
-          count(when(col("l_extendedprice") <= col("__amed"), 1))
-            .as("__le_med"),
-          count(when(col("l_extendedprice") <= col("__a99"), 1))
-            .as("__le_p99"))
-      ex.join(rk, Seq("l_returnflag"))
-        .select(col("l_returnflag"), col("exact_parts"),
-          (abs(col("__ap") - col("exact_parts")) <=
-            col("exact_parts") * 0.05).as("approx_parts_ok"),
-          (col("__le_med") >= col("__n") * 0.40 &&
-            col("__le_med") <= col("__n") * 0.60).as("approx_median_ok"),
-          (col("__le_p99") >= col("__n") * 0.98).as("approx_p99_ok"))
-    }),
-
-    // Variable-length duplicated spans (Lee et al. 2022 exact-substring
-    // dedup): q62's fixed windows upgraded to maximal runs — the
-    // longest-span statistic IS the removal decision input. SubstringSpec
-    // pins the operator against brute longest-common-span on fixtures.
-    "q94_substring_spans" -> ((s, dir) => {
-      graft.dedup.Substring.dupSpans(Tables.documents(s, dir),
-        "doc_id", "text", n = 8)
-    }),
-
-    // HTML boilerplate extraction — the crawl front door. The corpus is
-    // plain text, so the query PLANTS a deterministic id-derived HTML
-    // wrapper (title, style/script containers, a comment, an id-gated
-    // nav with two anchors — the q56/q61 planting pattern) and strips
-    // it back; the oracle recomputes the expected visible text and
-    // link stats arithmetically from the same plant inputs. WebSpec
-    // covers the messy-HTML corners (entities, uppercase tags, nested
-    // anchors) on handcrafted fixtures.
-    "q95_html_extract" -> ((s, dir) => {
-      import graft.functions.Web
-      val html = concat(
-        lit("<html><head><title>Doc "), col("doc_id").cast("string"),
-        lit("</title><style>p{color:red}</style></head><body>"),
-        when(col("doc_id") % 4 === 0,
-          lit("<nav><a href=\"/h\">Home</a> <a href=\"/a\">About us</a></nav>"))
-          .otherwise(lit("")),
-        lit("<p>"), col("text"),
-        lit("</p><!-- hidden --><script>var x=1;</script></body></html>"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), html.as("__html"))
-        .select(col("doc_id"),
-          Web.htmlText(col("__html")).as("clean_text"),
-          Web.linkCount(col("__html")).as("n_links"),
-          Web.linkDensity(col("__html")).as("link_density"))
-    }),
-
-    // URL canonicalization + exact URL dedup — id-derived messy URLs
-    // (uppercase scheme/host, default port, trailing slash, tracking
-    // params, unsorted query, fragment) must collapse to the canonical
-    // key the oracle constructs directly; the per-key count is the
-    // crawl-frontier dedup signal
-    "q96_url_canonical" -> ((s, dir) => {
-      import graft.functions.Web
-      val url = concat(
-        lit("HTTP://WWW.Example"), (col("doc_id") % 7).cast("string"),
-        lit(".COM"),
-        when(col("doc_id") % 2 === 0, lit(":80")).otherwise(lit("")),
-        lit("/Products/"), (col("doc_id") % 50).cast("string"),
-        when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
-        lit("?utm_source=news&id="), (col("doc_id") % 25).cast("string"),
-        lit("&b=2"),
-        when(col("doc_id") % 5 === 0, lit("&fbclid=XYZ")).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0, lit("#frag")).otherwise(lit("")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("canonical_url"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Web.canonicalizeUrl(url).as("canonical_url"))
-        .withColumn("n_same_canonical", count(lit(1)).over(w))
-    }),
-
-    // Declarative data-quality expectations with a dead-letter side
-    // (the ingest constraint gate): four rules compile into ONE
-    // codegen'd projection, violating rows route to quarantine with the
-    // sorted names of every failed rule. NULL predicate = violation
-    // (retain-on-true, the pipeline posture — NOT SQL CHECK's
-    // accept-on-unknown). Map-only; ExpectationsSpec covers the
-    // valid-side split, the report aggregate, and null routing.
-    "q97_expectations" -> ((s, dir) => {
-      import graft.pipeline.{Expectation, Expectations}
-      val rules = Seq(
-        Expectation("price_cap", col("o_totalprice") <= 400000.0),
-        Expectation("status_finalized", col("o_orderstatus") =!= "P"),
-        Expectation("priority_known", col("o_orderpriority").rlike("^[1-5]-")),
-        Expectation("custkey_present", col("o_custkey").isNotNull))
-      val (_, quarantine) = Expectations.split(
-        Tables.orders(s, dir).select("o_orderkey", "o_custkey",
-          "o_orderstatus", "o_totalprice", "o_orderpriority"), rules)
-      quarantine.select(col("o_orderkey"),
-        array_join(col("violations"), ",").as("violations"))
-    }),
-
-    // Leakage-safe train/test split: the split key is the URL HOST, not
-    // the document id, so every page of one site lands on the same side
-    // — near-duplicate pages from one host can never straddle train and
-    // eval (the q94/q20 dedup operators catch within-corpus dups; this
-    // closes the split-boundary leak). Same md5-threshold rule as q45 —
-    // deterministic, engine-reproducible, zero shuffle (map-only).
-    "q98_group_split" -> ((s, dir) => {
-      import graft.functions.Web
-      val url = concat(lit("http://www.example"),
-        (col("doc_id") % 7).cast("string"), lit(".com/p/"),
-        col("doc_id").cast("string"))
-      graft.pipeline.CorpusPipeline.datasetSplit(
-        Tables.documents(s, dir)
-          .select(col("doc_id"), Web.urlHost(url).as("host")),
-        "host", valFrac = 0.2, testFrac = 0.2)
-    }),
-
-    // Incrementally-maintained aggregate view over a versioned table:
-    // create orders (v1), DELETE %13 (v2), UPDATE price +1 for %7 (v3),
-    // APPEND offset %17 keys (v4); the per-status count/sum view starts
-    // from v1 and then folds ONLY the changed-files feed of each commit
-    // — rows of added files at +1, rows of removed files at -1; carried
-    // rows cancel group-wise — never rescanning a full snapshot after
-    // v1. The oracle replays the final state declaratively; decimal
-    // sums make incremental == full recompute EXACT, so the gate
-    // catches any drift in the maintenance algebra. IncrementalViewSpec
-    // proves per-version equality, group birth/death, and that the feed
-    // plan reads only changed files.
-    "q99_incremental_view" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      import graft.operators.IncrementalView
-      val tmp = ordersHistoryTable(s, dir, "q99")
-      val groups = Seq("o_orderstatus")
-      var view = IncrementalView.full(
-        VersionedTable.snapshotAt(s, tmp, 1L), groups, Seq("o_price"))
-      for (v <- 2L to 4L)
-        view = IncrementalView.applyDelta(view,
-          IncrementalView.changedFilesFeed(s, tmp, v - 1, v),
-          groups, Seq("o_price"))
-      view.select(col("o_orderstatus"), col("n_rows"),
-        col("sum_o_price").cast("double").as("sum_price"))
-    }),
-
-    // Change-data-feed READER over the same four-commit history: every
-    // row-level change between v1 and v4, classified insert / delete /
-    // update_preimage / update_postimage and attributed to its commit —
-    // recovered purely from each commit's file delta (O(changed files),
-    // never O(table); copy-on-write carries appear on both sides with
-    // equal values and emit nothing). The oracle replays the history's
-    // expected change set declaratively; ChangeFeedSpec proves
-    // classification, attribution, and carried-row silence on fixtures.
-    "q100_change_feed" -> ((s, dir) => {
-      import graft.sources.ChangeFeed
-      val tmp = ordersHistoryTable(s, dir, "q100")
-      ChangeFeed.readChanges(s, tmp, 1L, 4L, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_price").cast("double").as("price"),
-          col("_change_type"), col("_commit_version"))
-    }),
-
-    // CCNet-style line-level boilerplate REMOVAL (q94 detects spans;
-    // this rewrites): planted 4-line docs — a ~per-5 NAV line and the
-    // all-docs footer always cross the doc-frequency threshold, the
-    // per-60 RARE line sits ON the boundary (8 vs 9 docs per residue at
-    // sf0.01), the doc's own text is unique — so the oracle must
-    // independently recompute the threshold decision per residue class,
-    // not just replay a constant. Frequent-line set rides a broadcast
-    // anti join; two shuffles total (line doc-frequency, reassembly).
-    "q101_line_dedup" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat(
-          lit("NAV "), (col("doc_id") % 5).cast("string"), lit("\n"),
-          lit("RARE "), (col("doc_id") % 60).cast("string"), lit("\n"),
-          // the body line carries a per-doc unique prefix: the corpus
-          // contains EXACT-duplicate texts at scale (sf100: 1.2M of 5M
-          // docs share their text with >=8 others after ScaleData's
-          // no-jitter copy-0 chain), so a bare text line can
-          // legitimately cross minDocFreq and be dropped as
-          // boilerplate - correct operator behavior the fixed-form
-          // oracle can't price. Uniqueness pins body df to 1 at every
-          // scale (found by the r12 sf100 answer sweep, q25's cause-2
-          // class)
-          lit("BODY "), col("doc_id").cast("string"), lit(" "),
-          col("text"), lit("\n"),
-          lit("(c) example corp")).as("text"))
-      graft.dedup.LineDedup.dropFrequentLines(planted, "doc_id", "text",
-        minDocFreq = 9L)
-    }),
-
-    // Incremental line-level boilerplate removal — q101's cross-batch
-    // twin (the q53-to-q20 relationship): per-batch (line_hash, doc_freq)
-    // stores merge additively over disjoint-doc batches and the NEW
-    // batch rewrites against the merged store, never rescanning history.
-    // Same planted corpus as q101 with the per-60 RARE line ON the
-    // threshold boundary, so the oracle's per-residue decision exercises
-    // the store MERGE arithmetic — an over- or under-count in the merge
-    // flips the boundary classes and hash-fails the gate.
-    "q103_incremental_line_dedup" -> ((s, dir) => {
-      import graft.dedup.LineDedup
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat(
-          lit("NAV "), (col("doc_id") % 5).cast("string"), lit("\n"),
-          lit("RARE "), (col("doc_id") % 60).cast("string"), lit("\n"),
-          // the body line carries a per-doc unique prefix: the corpus
-          // contains EXACT-duplicate texts at scale (sf100: 1.2M of 5M
-          // docs share their text with >=8 others after ScaleData's
-          // no-jitter copy-0 chain), so a bare text line can
-          // legitimately cross minDocFreq and be dropped as
-          // boilerplate - correct operator behavior the fixed-form
-          // oracle can't price. Uniqueness pins body df to 1 at every
-          // scale (found by the r12 sf100 answer sweep, q25's cause-2
-          // class)
-          lit("BODY "), col("doc_id").cast("string"), lit(" "),
-          col("text"), lit("\n"),
-          lit("(c) example corp")).as("text"))
-      val old = planted.filter(col("doc_id") < 250)
-      val batch = planted.filter(col("doc_id") >= 250)
-      val store = LineDedup.mergeLineStores(Seq(
-        LineDedup.lineFrequencyStore(old, "doc_id", "text"),
-        LineDedup.lineFrequencyStore(batch, "doc_id", "text")))
-      LineDedup.dropFrequentLinesWithStore(batch, store, "doc_id", "text",
-        minDocFreq = 9L)
-    }),
-
-    // Duplicate-cluster keeper selection — the dedup DECISION policy
-    // (detection alone doesn't shrink a corpus): planted exact copies
-    // (%3, +100k ids) and truncated copies (%5, +200k ids) cluster with
-    // their originals on an 80-char-prefix hash; longest-version-wins
-    // with lowest-id tiebreak keeps the original over the truncation BY
-    // QUALITY and over the identical copy BY TIEBREAK — the oracle
-    // replays both decisions per cluster. One max_by hash aggregate +
-    // one join back; never a window over raw docs.
-    "q102_dedup_keepers" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val corpus = base
-        .unionByName(base.filter(col("doc_id") % 3 === 0).select(
-          (col("doc_id") + 100000L).as("doc_id"), col("text")))
-        .unionByName(base.filter(col("doc_id") % 5 === 0).select(
-          (col("doc_id") + 200000L).as("doc_id"),
-          substring(col("text"), 1, 120).as("text")))
-      val keyed = corpus.withColumn("cluster",
-        md5(substring(col("text"), 1, 80)))
-      graft.dedup.Dedup.selectKeepers(keyed, "doc_id", "cluster",
-          struct(length(col("text")), -col("doc_id")))
-        .select(col("doc_id"), col("cluster"), col("keeper_id"),
-          col("is_kept"))
-    }),
-
-    // C4 page/line cleaning (Raffel et al. 2020 §2.2) on a planted
-    // page shape: three prose lines that pass every rule, a too-short
-    // line, the corpus text (no terminal punctuation), a javascript
-    // notice, plus page-killing lorem-ipsum (%13) and code-brace (%17)
-    // lines — so line rules, page rules, and their interaction are all
-    // exercised and the oracle replays every decision. One codegen
-    // projection, zero shuffles.
-    "q104_c4_line_clean" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"), concat(
-        lit("Alpha section covers doc number "),
-        (col("doc_id") % 11).cast("string"), lit(" today.\n"),
-        lit("Beta sentence keeps exactly seven words here.\n"),
-        lit("Gamma line closes with a question mark?\n"),
-        lit("tiny line.\n"),
-        col("text"), lit("\n"),
-        lit("Please enable javascript to view this page."),
-        when(col("doc_id") % 13 === 0,
-          lit("\nlorem ipsum dolor sit amet.")).otherwise(lit("")),
-        when(col("doc_id") % 17 === 0,
-          lit("\nif (x) { return y; }")).otherwise(lit(""))).as("text"))
-      graft.functions.CorpusFilters.c4LineClean(planted, "doc_id", "text")
-    }),
-
-    // Gopher/MassiveText document-quality rules (Rae et al. 2021 table
-    // A1) on planted pages: the corpus text supplies natural word-count
-    // and word-length variance, residue-classed lines plant stopword
-    // boosts (%3), bullet lines (%4), ellipsis lines (%6) and
-    // hash-symbol spam (%9) — every signal fires on a known subset and
-    // the keep decision varies realistically. One codegen projection.
-    "q105_gopher_rules" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat_ws("\n",
-          col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit("the data goes to all of them and that would have been " +
-              "fine with everyone")).otherwise(lit("closing words here")),
-          when(col("doc_id") % 4 === 0, lit("- bullet item one"))
-            .otherwise(lit("plain line one")),
-          when(col("doc_id") % 6 === 0, lit("trailing thought..."))
-            .otherwise(lit("trailing thought")),
-          when(col("doc_id") % 9 === 0,
-            lit("#tag #promo #spam #viral #follow #like #share #win " +
-              "#free #now #deal #hot")).otherwise(lit("regular closing line")))
-          .as("text"))
-      graft.functions.CorpusFilters.gopherQuality(planted, "doc_id", "text")
-    }),
-
-    // Within-document paragraph dedup (first occurrence wins, order
-    // preserved): planted pages repeat their intro, duplicate a footer
-    // back-to-back, and re-paste the body on even ids — the oracle
-    // replays first-occurrence selection positionally. Map-only; the
-    // corpus-WIDE frequency pass is q101's job.
-    "q106_paragraph_dedup" -> ((s, dir) => {
-      val planted = Tables.documents(s, dir).select(col("doc_id"),
-        concat_ws("\n\n",
-          concat(lit("INTRO "), (col("doc_id") % 7).cast("string")),
-          col("text"),
-          concat(lit("INTRO "), (col("doc_id") % 7).cast("string")),
-          lit("FOOTER common"),
-          lit("FOOTER common"),
-          when(col("doc_id") % 2 === 0, col("text"))
-            .otherwise(concat(lit("UNIQUE "), col("doc_id").cast("string"))))
-          .as("text"))
-      graft.functions.CorpusFilters.dedupParagraphs(planted, "doc_id", "text")
-    }),
-
-    // Int8 scalar quantization of the embedding column — the
-    // memory-bound ANN scale path (float32 → uint8 codes, ~3.2×
-    // scan-bandwidth cut, composes with brute/LSH/IVF as compressed
-    // storage). Every output is exact replayable arithmetic: the code
-    // construction uses explicit floor(+0.5) rounding (never engine
-    // round() — half-even vs half-up differs across engines), the
-    // approximate dot against the min-id probe is the affine
-    // decomposition over integer code sums, and the reconstruction
-    // error bound (half quantization step) is a required-TRUE
-    // invariant. One projection + a 1-row broadcast; no shuffle.
-    "q107_embedding_quantize" -> ((s, dir) => {
-      import graft.similarity.ScalarQuant
-      val e = Tables.embeddings(s, dir)
-      val v = col("embedding")
-      val q = e.select(col("vec_id"), v,
-          array_min(v).cast("double").as("q_min"),
-          ScalarQuant.qscale(v).as("q_scale"))
-        .select(col("vec_id"), v,
-          ScalarQuant.codes(v, col("q_min"), col("q_scale")).as("codes"),
-          col("q_min"), col("q_scale"))
-      val probe = q.orderBy(col("vec_id")).limit(1)
-        .select(col("codes").as("pcodes"), col("q_min").as("p_min"),
-          col("q_scale").as("p_scale"))
-      q.crossJoin(broadcast(probe))
-        .select(col("vec_id"),
-          size(col("codes")).cast("long").as("n_dims"),
-          col("q_min"), col("q_scale"),
-          aggregate(col("codes"), lit(0L), (a, c) => a + c.cast("long"))
-            .as("code_sum"),
-          array_min(col("codes")).cast("long").as("code_min"),
-          array_max(col("codes")).cast("long").as("code_max"),
-          (ScalarQuant.reconError(v, col("codes"), col("q_min"),
-            col("q_scale")) <= col("q_scale") / 2 + 1e-9).as("recon_ok"),
-          ScalarQuant.approxDot(col("codes"), col("q_min"), col("q_scale"),
-            col("pcodes"), col("p_min"), col("p_scale"))
-            .as("approx_dot_probe"))
-    }),
-
-    // REAL compressed-pixel decode (round 14): documents synthesize
-    // spec-valid PNGs — 8-bit RGB scanlines carrying the SAME planted
-    // formula as the BMP tier, DEFLATE-compressed with
-    // java.util.zip.Deflater (even ids: STORED blocks; odd ids: real
-    // Huffman streams) — and Media.decodePngPixels inflates and
-    // de-filters the actual bitstream in a bounded mapPartitions (one
-    // Inflater per partition, the codec-pool shape). The oracle
-    // replays every statistic arithmetically, so a bug on EITHER side
-    // of the compress→decompress round trip breaks the hash. This
-    // retires the last fully-stubbed tier for PNG; JPEG/GIF/MP4 pixel
-    // decode remains behind the declared Media.decodeStub.
-    "q108_png_pixels" -> ((s, dir) => {
-      graft.multimodal.Media.decodePngPixels(
-        graft.multimodal.Media.fromDocumentsPngPixels(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL GIF-LZW pixel decode (round 15): documents become complete
-    // spec-valid GIF89a payloads — grayscale palettes of 16 (ids %3==0,
-    // minCodeSize 4) or 256 colors (minCodeSize 8), planted indexes
-    // (id + r*31 + j*7) % palette, LZW-compressed with real dictionary
-    // growth through 9-12 bit codes (odd ids) or reset-heavy CLEAR
-    // cycles (even ids) — and Media.decodeGifPixels recovers the
-    // indexes from the actual variable-width code stream with a
-    // hand-rolled LZW kernel in a bounded mapPartitions (MediaSpec
-    // cross-checks both directions against the JDK's independent
-    // javax.imageio GIF codec). The oracle replays every statistic
-    // arithmetically; see q110 for the JPEG entropy tier.
-    "q109_gif_pixels" -> ((s, dir) => {
-      graft.multimodal.Media.decodeGifPixels(
-        graft.multimodal.Media.fromDocumentsGifPixels(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL JPEG ENTROPY decode (round 15): documents become complete
-    // spec-valid baseline JPEGs (SOI/DQT/SOF0/DHT/SOS, Annex-K Huffman
-    // tables, byte stuffing, differential DC, run/size AC with
-    // ZRL/EOB) whose QUANTIZED COEFFICIENTS follow a planted formula,
-    // and Jpeg.decodeJpegCoefficients recovers the dequantized
-    // coefficients from the actual Huffman bitstream. Coefficients,
-    // not pixels, deliberately: entropy decode is exact (so the DuckDB
-    // oracle replays it arithmetically), while pixels would drag the
-    // lossy DCT into the oracle. JpegSpec closes the pixel loop
-    // against the JDK's independent javax.imageio codec in both
-    // directions. See q111 for the MP4/video tier built on this
-    // kernel.
-    "q110_jpeg_coefficients" -> ((s, dir) => {
-      graft.multimodal.Jpeg.decodeJpegCoefficients(
-        graft.multimodal.Jpeg.fromDocumentsJpegCoefs(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL MP4 video-frame decode (round 15) — retires the LAST
-    // Media.decodeStub tier. Documents become complete unfragmented
-    // ISO-BMFF files (full ftyp/free/moov/mdat trees with
-    // mvhd/tkhd/mdhd/hdlr/vmhd/dinf and a real sample table) whose
-    // video track is Motion-JPEG: nf = 2 + id%4 frames, each a
-    // baseline JPEG planting the q110 formula at frame-salted ids.
-    // Mp4.decodeMp4Frames walks the box tree generically, joins
-    // stsd/stts/stsc/stsz/stco|co64 into per-sample byte ranges, and
-    // entropy-decodes every frame through the proven Jpeg kernel. The
-    // container SHAPE varies per id (co64 vs stco, moov-first vs
-    // mdat-first, decoy non-video track, variable free padding) while
-    // the planted statistics stay a pure function of doc_id — so the
-    // oracle replays them arithmetically and any sample-table mistake
-    // lands a frame boundary in mid-bitstream garbage.
-    "q111_mp4_frames" -> ((s, dir) => {
-      graft.multimodal.Mp4.decodeMp4Frames(
-        graft.multimodal.Mp4.fromDocumentsMp4Frames(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL WARC (ISO 28500) extraction (round 15) — the container
-    // format web corpora actually arrive in (Common Crawl ships
-    // .warc.gz). Documents become complete WARC archives — warcinfo +
-    // request/response pairs, per-record gzip members for even ids,
-    // lowercase header names for ids %11==0, and for ids %3==0 a DECOY
-    // metadata record whose body embeds a fake WARC/1.0 header with an
-    // absurd Content-Length: any parser that scans for the next
-    // version line instead of honoring Content-Length framing derails
-    // there and breaks the hash. Warc.warcResponses parses both
-    // framing layers (WARC record framing + the HTTP/1.1 envelope
-    // inside response blocks) and emits one row per HTTP response —
-    // the extraction a training pipeline runs over Common Crawl. A
-    // flatMap in bounded mapPartitions: no shuffle, parallel by file
-    // exactly like a production WARC reader over object storage.
-    "q112_warc_responses" -> ((s, dir) => {
-      graft.sources.Warc.warcResponses(
-        graft.sources.Warc.fromDocumentsWarc(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL ZIP extraction (round 15) — the other container corpora
-    // ship in. Documents become complete ZIP archives (STORED and raw
-    // DEFLATE members, real CRC-32s, optional EOCD comment) and
-    // Zip.zipEntries extracts members the AUTHORITATIVE way: EOCD
-    // backward scan → central directory → per-entry local-header seek
-    // → decompress → verify size AND CRC-32 before emitting. Ids %4==0
-    // carry a decoy member whose data is a byte-exact fake local file
-    // header: forward signature-scanners extract the fake "inner"
-    // member; the central-directory walk reports the decoy as the
-    // opaque blob it is — the oracle encodes the latter.
-    "q113_zip_entries" -> ((s, dir) => {
-      graft.sources.Zip.zipEntries(
-        graft.sources.Zip.fromDocumentsZip(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL TFRecord decode (round 15) — the length-framed shard format
-    // training examples ship in. Documents become spec-framed shards
-    // (uint64 LE length + masked CRC32C of the length bytes + data +
-    // masked CRC32C of the data; even ids whole-file gzip) and
-    // Tfrecord.tfrecordRecords walks the framing verifying BOTH CRCs
-    // per record with the Castagnoli polynomial (java.util.zip.CRC32C
-    // — ZIP's CRC-32 fails every record). The two CRCs are the
-    // format's whole integrity story: a reader that skips them ships
-    // torn examples into a training run. Oracle replays the planted
-    // record bytes arithmetically.
-    "q114_tfrecord" -> ((s, dir) => {
-      graft.sources.Tfrecord.tfrecordRecords(
-        graft.sources.Tfrecord.fromDocumentsTfrecord(
-          Tables.documents(s, dir)))
-    }),
-
-    // REAL tar (ustar+pax) extraction (round 15) — completes the
-    // container family (.tar.gz shards). Tar has no index: the octal
-    // size fields ARE the framing, the header checksum is the only
-    // integrity bit, and long paths arrive as pax `x` records that
-    // OVERRIDE the next member's name. Documents become archives with
-    // interleaved directory entries, members spanning 1-2 data blocks,
-    // pax path overrides (150-char paths the 100-byte header field
-    // cannot hold) for ids %5==0, whole-file gzip for even ids.
-    // Tar.tarEntries verifies every header checksum, parses octal
-    // fields as they arrive in the wild, applies pax overrides, and
-    // rejects symlinks/GNU-longname/base-256 loudly.
-    "q115_tar_entries" -> ((s, dir) => {
-      graft.sources.Tar.tarEntries(
-        graft.sources.Tar.fromDocumentsTar(
-          Tables.documents(s, dir)))
-    }),
-
-    // TFRecord EXPORT round trip (round 15) — the pipeline's LAST
-    // mile: a curated corpus leaves the engine as the shards a trainer
-    // consumes. Documents are serialized (8-byte LE doc_id prefix +
-    // UTF-8 text) and written as one .tfrecord file per partition
-    // through the Hadoop FS API executor-side (spec framing, both
-    // masked CRC32Cs), then read back through the binaryFile source
-    // and the verifying reader. The oracle replays per-record sizes
-    // from octet_length(text); any framing, CRC, or prefix mistake on
-    // EITHER side of the real file round trip breaks the hash.
-    "q116_tfrecord_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      val scratch = scratchPath("q116")
-      val p = new org.apache.hadoop.fs.Path(scratch)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val payloads = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .mapPartitions(_.map { case (id, text) =>
-          (id, text.getBytes("UTF-8"))
-        })
-      graft.sources.Tfrecord.writeShards(payloads, scratch) // eager
-      graft.sources.Tfrecord.readShards(s, scratch)
-    }),
-
-    // REAL tf.Example protobuf decode (round 15) — what TFRecord
-    // payloads actually ARE: the wire format (varints, packed and
-    // unpacked repeated scalars, LE float32, length-delimited message
-    // trees) hand-rolled for the Example/Features/Feature tree, with
-    // protobuf's robustness rule honored — UNKNOWN fields (planted at
-    // every message level for even ids) are skipped by wire type,
-    // never an error — while structural violations reject loudly. One
-    // row per (example, feature): kind, count, exact value sum (the
-    // planted floats are small integers, exact in float32).
-    "q117_tfexample" -> ((s, dir) => {
-      graft.sources.TfExample.tfExampleFeatures(
-        graft.sources.TfExample.fromDocumentsTfExample(
-          Tables.documents(s, dir)))
-    }),
-
-    // DELETION-VECTOR DML (round 16) — merge-on-read DELETE, the
-    // write-amplification fix for scattered point deletes: two %-mod
-    // predicates hit EVERY file of the range-partitioned table (the
-    // copy-on-write worst case — q91's path would rewrite the whole
-    // table twice), but each commit records only DV sidecar positions;
-    // the file list never changes and readers apply the DVs as a
-    // positional anti-filter. Same answer as CoW delete — the oracle
-    // replays both deletes declaratively — different plan, proven
-    // rewrite-free (plus threshold fallback, CDC, vacuum, restore) in
-    // VersionedTableSpec.
-    "q118_dv_delete" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q118")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      // shallow-clone the shared orders base (zero-copy; r17 fixture
-      // amortization) — content, partitioning, and stats identical to
-      // building the table here, so the oracle is untouched
-      VersionedTable.cloneTable(s, ordersVtBase(s, dir), tmp)
-      // ~7.7% then ~9.1% of each file — cumulative ~16% stays under
-      // the 0.25 threshold, so BOTH commits take the pure-DV shape
-      // (accumulation across commits under the gate)
-      VersionedTable.deleteWithDv(s, tmp, col("o_orderkey") % 13L === 0L,
-        densityThreshold = 0.25)
-      VersionedTable.deleteWithDv(s, tmp, col("o_orderkey") % 11L === 0L,
-        densityThreshold = 0.25)
-      VersionedTable.read(s, tmp)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("o_price")).cast(DoubleType).as("sum_price"))
-    }),
-
-    // PER-FILE BLOOM SKIPPING (round 16) — the point-lookup gap min/max
-    // stats cannot close: on an unordered high-cardinality key (md5 of
-    // doc_id) every file's [min, max] spans the whole hex space, so a
-    // needle query would scan all 16 files; analyzeBloom writes one
-    // size-capped bloom sidecar per (file, column) metadata-only, and
-    // readWhere's equality/IN analyzer keeps only files whose bloom
-    // might hold a needle (~1 of 16 per needle; false positives cost
-    // scans, never answers — DataSkippingSpec + fuzz pin soundness,
-    // dev/sweeps/r16_bloom_sf1.txt records measured pruning at scale).
-    "q119_bloom_lookup" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q119")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("h"),
-          col("text"))
-        .repartitionByRange(16, col("doc_id"))
-      VersionedTable.create(docs, tmp, statsCols = Seq("doc_id"))
-      VersionedTable.analyzeBloom(s, tmp, Seq("h"))
-      val needles = Seq(42L, 137L, 444L).map(i =>
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(i.toString.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString)
-      VersionedTable.readWhere(s, tmp, col("h").isin(needles: _*))
-        .select(col("doc_id"), col("h"),
-          length(col("text")).cast("int").as("text_len"))
-    }),
-
-    // REAL IMA-ADPCM audio decode (round 16) — the compressed-audio
-    // tier leaves Media.decodeStub: every doc wraps in a real WAV
-    // (fmt tag 0x0011, mono 4-bit, 52-byte blocks) whose nibble stream
-    // repeats [4,8,8] — index deltas cancel per period, so the decoded
-    // signal is exactly affine-per-period and the oracle replays the
-    // per-block sample sums in closed form (97·p0b + 1520·D +
-    // 32·(2d1+d2)). The DECODER is the full general state machine
-    // (both clamps, index table, low-nibble packing); AdpcmSpec drives
-    // the clamp/saturation branches the in-corpus signal provably
-    // cannot reach, plus the rejection lanes.
-    "q120_adpcm_audio" -> ((s, dir) => {
-      graft.multimodal.Adpcm.adpcmSamples(
-        graft.multimodal.Adpcm.fromDocumentsAdpcm(
-          Tables.documents(s, dir)))
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("sample_sum"))
-    }),
-
-    // MERGE-ON-READ UPDATE (round 16) — the second half of the DV
-    // write-amplification fix: two %-mod updates hit every file of the
-    // range-partitioned table (q91's CoW path would rewrite the whole
-    // table twice), but each commit writes only a positional DV sidecar
-    // plus the post-image rows; every pre-update data file survives
-    // both commits. CDC pairs the halves as update_preimage/postimage
-    // (ChangeFeedSpec); threshold fallback, stats on post-images,
-    // conflicts, and column-mapping compose in VersionedTableSpec.
-    "q121_dv_update" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q121")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      // zero-copy clone of the shared orders base (r17) — same content
-      VersionedTable.cloneTable(s, ordersVtBase(s, dir), tmp)
-      // ~7.7% then ~9.1% per file — cumulative ~16% stays under the
-      // 0.25 threshold, so BOTH commits take the DV + post-image shape
-      VersionedTable.updateWithDv(s, tmp, col("o_orderkey") % 13L === 0L,
-        Map("o_price" -> (col("o_price") + lit(1).cast("decimal(18,2)"))),
-        densityThreshold = 0.25)
-      VersionedTable.updateWithDv(s, tmp, col("o_orderkey") % 11L === 0L,
-        Map("o_orderstatus" -> lit("X")),
-        densityThreshold = 0.25)
-      VersionedTable.read(s, tmp)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("o_price")).cast(DoubleType).as("sum_price"))
-    }),
-
-    // MERGE-ON-READ MERGE (round 16) — the medallion hot path: a small
-    // upsert batch (%5 price bumps + %7 inserts at scale-derived offset
-    // keys) against the whole part table. q88's merge rewrites every
-    // may-match file; this commit writes one DV sidecar (matched
-    // positions) plus exactly the batch rows — every pre-merge data
-    // file survives (VersionedTableSpec proves the file-preservation
-    // and exactly-once-landing invariants; CDC pairs matches as
-    // update_preimage/postimage and the rest as inserts).
-    "q122_dv_merge" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q122")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val p0 = Tables.part(s, dir)
-        .select("p_partkey", "p_brand", "p_retailprice")
-      val off = plantOffset(p0, "p_partkey")
-      // zero-copy clone of the shared part base (r17) — same content
-      VersionedTable.cloneTable(s, partVtBase(s, dir), tmp)
-      val updates = p0.filter(col("p_partkey") % 5 === 0)
-        .select(col("p_partkey"), col("p_brand"),
-          (col("p_retailprice") + 25.0).as("p_retailprice"))
-        .unionByName(p0.filter(col("p_partkey") % 7 === 0)
-          .select((col("p_partkey") + off).as("p_partkey"),
-            col("p_brand"), col("p_retailprice")))
-      VersionedTable.mergeWithDv(updates, tmp, Seq("p_partkey"),
-        densityThreshold = 0.25)
-      VersionedTable.read(s, tmp).groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("cnt"), decSum("p_retailprice").as("sum_price"))
-    }),
-
-    // CHECK CONSTRAINTS (round 16) — Delta's ALTER TABLE ADD CONSTRAINT:
-    // two invariants land as metadata-only commits, a valid append
-    // passes, a price-negated batch is rejected ATOMICALLY (enforcement
-    // is fused into the write job itself — zero extra passes; the
-    // failed attempt commits nothing), and dropping the constraint lets
-    // the same batch land. The oracle replays the final state plus the
-    // rejection bit: if enforcement silently failed, the bad batch
-    // would land TWICE (and rejected_batches read 0) — both visible in
-    // the hash. ConstraintSpec drives the full matrix (all six DML
-    // write paths, three-valued semantics, rename/drop interplay,
-    // restore carry, mid-race conflict).
-    "q123_check_constraints" -> ((s, dir) => {
-      import graft.sources.{ConstraintViolationException, VersionedTable}
-      val tmp = scratchPath("q123")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_orderstatus"),
-        col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-      VersionedTable.create(o.filter(col("o_orderkey") % 3 === 0), tmp,
-        statsCols = Seq("o_orderkey"))
-      VersionedTable.addCheckConstraint(s, tmp,
-        "positive_price", "o_price > 0")
-      VersionedTable.addCheckConstraint(s, tmp,
-        "status_not_null", "o_orderstatus IS NOT NULL")
-      VersionedTable.append(o.filter(col("o_orderkey") % 3 === 1), tmp,
-        statsCols = Seq("o_orderkey"))
-      val negated = o.filter(col("o_orderkey") % 3 === 2)
-        .withColumn("o_price", (-col("o_price")).cast("decimal(18,2)"))
-      val rejected =
-        try { VersionedTable.append(negated, tmp, Seq("o_orderkey")); 0L }
-        catch { case _: ConstraintViolationException => 1L }
-      VersionedTable.dropCheckConstraint(s, tmp, "positive_price")
-      VersionedTable.append(negated, tmp, statsCols = Seq("o_orderkey"))
-      VersionedTable.read(s, tmp)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("o_price")).cast(DoubleType).as("sum_price"),
-          max(lit(rejected)).as("rejected_batches"))
-    }),
-
-    // REAL FLAC fixed-predictor decode (round 16) — the lossless-audio
-    // tier leaves Media.decodeStub: every doc wraps in a real FLAC
-    // stream (STREAMINFO + CRC-8/CRC-16-verified frames, order-2 fixed
-    // subframes, rice-coded residuals) carrying the affine signal
-    // s(t) = a + d·t, whose residuals are exactly zero under the
-    // order-2 predictor — so the oracle replays N·a + d·N(N-1)/2 in
-    // closed form while the corpus still varies rice parameters,
-    // partition orders, rates, and frame counts. The DECODER covers
-    // both predictor families (FIXED orders 0-4 and LPC orders 1-32
-    // with quantized coefficients + shift, r17), CONSTANT/VERBATIM,
-    // both rice methods + escapes, wasted bits, multi-byte UTF-8
-    // numbers; corpus frames at odd (id+frame) parity spell the same
-    // signal through quantized LPC ((8,-4)>>2 / (4,-2)>>1), so streams
-    // MIX fixed and LPC subframes under the unchanged closed-form
-    // oracle. FlacSpec pins fixed orders with polynomial signals and
-    // LPC with arbitrary-coefficient round-trips.
-    "q124_flac_audio" -> ((s, dir) => {
-      graft.multimodal.Flac.flacSamples(
-        graft.multimodal.Flac.fromDocumentsFlac(
-          Tables.documents(s, dir)))
-        .select(col("media_id"), col("sample_rate"), col("n_samples"),
-          col("sample_sum"))
-    }),
-
-    // GENERATED COLUMNS (round 16) — Delta's GENERATED ALWAYS AS:
-    // o_kgroup = o_orderkey DIV 10000 is declared at create and never
-    // shipped by any writer — the omitting create computes it, a
-    // supplying append is VALIDATED against the rule (a contradicting
-    // value cannot commit — GeneratedColumnsSpec), and a key-shifting
-    // DV update RECOMPUTES it (rows visibly change groups, which the
-    // oracle replays). Because the column is derived from the range-
-    // partition key, its per-file min/max stats prune derived-predicate
-    // scans raw stats cannot serve — the cheap-partition-column pattern
-    // at 100 TB (spec proves the pruning; here the oracle pins the
-    // computation end to end).
-    "q125_generated_columns" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val tmp = scratchPath("q125")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_orderstatus"),
-        col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-      VersionedTable.create(
-        o.filter(col("o_orderkey") % 2 === 0)
-          .repartitionByRange(vtParts(s, dir, "orders.parquet"),
-            col("o_orderkey")),
-        tmp, statsCols = Seq("o_orderkey", "o_kgroup"),
-        generatedCols = Map("o_kgroup" -> "o_orderkey DIV 10000"))
-      // supplying append: the correct value passes the validation lane
-      VersionedTable.append(
-        o.filter(col("o_orderkey") % 2 === 1)
-          .withColumn("o_kgroup", expr("o_orderkey DIV 10000")),
-        tmp, statsCols = Seq("o_orderkey", "o_kgroup"))
-      // key-shifting merge-on-read update: o_kgroup must RECOMPUTE
-      VersionedTable.updateWithDv(s, tmp, col("o_orderkey") % 5000 === 0,
-        Map("o_orderkey" -> (col("o_orderkey") + lit(50000L))),
-        densityThreshold = 0.9)
-      VersionedTable.read(s, tmp)
-        .groupBy(col("o_kgroup"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("o_price")).cast(DoubleType).as("sum_price"))
-    }),
-
-    // SHALLOW CLONE (round 16) — Delta's CREATE TABLE ... CLONE, zero
-    // copy: the clone's v1 manifest borrows the source's files (and its
-    // DV sidecar — the carried soft deletes must keep applying through
-    // the basename-keyed anti-join) without moving a byte; the clone
-    // then runs its OWN CoW delete (folding touched borrowed files
-    // local) while the source diverges with an append the clone must
-    // never see. The oracle replays exactly the clone's lineage:
-    // source rows minus the pre-clone DV delete minus the clone's own
-    // delete — a wrong share of either table's history breaks the hash.
-    // CloneSpec drives the rest (fold-to-local, vacuum immunity both
-    // directions, deep clone, metadata carry).
-    "q126_shallow_clone" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val src = scratchPath("q126src")
-      val dst = scratchPath("q126dst")
-      Seq(src, dst).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_orderstatus"),
-        col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-      // src itself is a zero-copy clone of the shared base (r17) — the
-      // gate then exercises clone-of-a-clone, which CloneSpec pins
-      VersionedTable.cloneTable(s, ordersVtBase(s, dir), src)
-      VersionedTable.deleteWithDv(s, src, col("o_orderkey") % 13L === 0L,
-        densityThreshold = 0.25)
-      VersionedTable.cloneTable(s, src, dst)
-      VersionedTable.delete(s, dst, col("o_orderkey") % 7L === 0L)
-      // divergence the clone must never see
-      VersionedTable.append(o.filter(col("o_orderkey") % 13L === 0L),
-        src, statsCols = Seq("o_orderkey"))
-      VersionedTable.read(s, dst)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"), decSum("o_price").as("sum_price"))
-    }),
-
-    // SQL TEXT reaches the versioned-table format (round 17): the
-    // reference's primary consumption mode is SQL over catalog tables
-    // (notebooks/gold.py:12, docs/runbook.md:41-46); here the q84
-    // create/append/compact lineage is queried ENTIRELY as spark.sql
-    // text through the DSv2 GraftCatalog — `VERSION AS OF 1` versus the
-    // latest — and must hash-match the same oracle q84's Scala-API
-    // reads match. DsV2Spec drives the connector's full contract
-    // (skipping pushdown, DV rows, column mapping, timestamps).
-    "q127_sql_time_travel" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val wh = scratchPath("q127wh")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.conf.set("spark.sql.catalog.gvt127", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt127.warehouse", wh)
-      val o = Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val t = s"$wh/orders_t"
-      VersionedTable.create(o.filter(col("o_orderkey") % 3 === 0), t)
-      VersionedTable.append(o.filter(col("o_orderkey") % 3 === 1), t)
-      VersionedTable.compactTable(s, t, targetFiles = 4)
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS cnt,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS sum_price, 'v1' AS version
-          |FROM gvt127.orders_t VERSION AS OF 1 GROUP BY o_orderstatus
-          |UNION ALL
-          |SELECT o_orderstatus, COUNT(*) AS cnt,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS sum_price, 'v3' AS version
-          |FROM gvt127.orders_t GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    // Data skipping + deletion vectors THROUGH SQL text (round 17): the
-    // q90 z-order/stats lineage plus a 10%-per-file DV delete, read as
-    // plain spark.sql WHERE text over the DSv2 catalog table. The
-    // pushed predicate must prune files via manifest stats BEFORE
-    // planning (DsV2Spec proves kept/total), each surviving file's DV
-    // positions must drop soft-deleted rows inside the scan, and the
-    // answer must equal the oracle's declarative replay (filter + the
-    // %10 delete) — connector-path correctness, not just API-path.
-    "q128_sql_skipping_dv" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      // the clustered+DV'd table is a per-JVM memoized fixture (the
-      // judge-directed amortization rule): its state is immutable once
-      // built, so bench trials re-pay only the gated SELECT, never the
-      // two full lineitem writes
-      val wh = vtBase(s, dir, "q128wh") { tmp =>
-        val li = Tables.lineitem(s, dir).select("l_orderkey", "l_quantity",
-          "l_extendedprice", "l_shipdate", "l_returnflag")
-        val t = s"$tmp/lineitem_t"
-        VersionedTable.create(li, t)
-        // scale-derived file count (the q118 vtParts lesson): a fixed 16
-        // files at sf100 would mean 37M-row files — per-file DV payload
-        // and DML parallelism must grow with data. Uniform %10 deletes
-        // keep every per-file density (and the oracle) invariant.
-        VersionedTable.cluster(s, t, ("l_quantity", "l_extendedprice"),
-          targetFiles = math.max(16, vtParts(s, dir, "lineitem.parquet")),
-          statsCols = Seq("l_quantity", "l_extendedprice", "l_shipdate"))
-        VersionedTable.deleteWithDv(s, t, col("l_orderkey") % 10L === 3L,
-          densityThreshold = 0.9)
-      }
-      s.conf.set("spark.sql.catalog.gvt128", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt128.warehouse", wh)
-      s.sql(
-        """SELECT l_returnflag, COUNT(*) AS cnt,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS sum_qty,
-          |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-          |    AS sum_price
-          |FROM gvt128.lineitem_t
-          |WHERE l_quantity <= 5.0 AND l_extendedprice < 20000.0
-          |  AND l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
-          |GROUP BY l_returnflag""".stripMargin)
-    }),
-
-    // SQL DML lifecycle through the DSv2 catalog (round 17): CTAS,
-    // INSERT INTO, and DELETE FROM as PLAIN SQL TEXT — the write half
-    // of the connector. CTAS creates the table and populates it through
-    // the V1Write fallback (full commit protocol: stats, constraints,
-    // rebase), INSERT INTO appends the other half, and DELETE FROM
-    // lands as deletion-vector DML (SupportsDelete → deleteWithDv
-    // prices DV-vs-CoW per file). The final SELECT must agree with the
-    // oracle's declarative replay of insert-all-then-delete.
-    "q129_sql_dml" -> ((s, dir) => {
-      val wh = scratchPath("q129wh")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.conf.set("spark.sql.catalog.gvt129", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt129.warehouse", wh)
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-        .createOrReplaceTempView("q129_src")
-      s.sql("""CREATE TABLE gvt129.orders_t AS
-              |SELECT * FROM q129_src WHERE o_orderkey % 2 = 0""".stripMargin)
-      s.sql("""INSERT INTO gvt129.orders_t
-              |SELECT * FROM q129_src WHERE o_orderkey % 2 = 1""".stripMargin)
-      s.sql("""DELETE FROM gvt129.orders_t
-              |WHERE o_orderstatus = 'F' AND o_price < 50000.00""".stripMargin)
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS cnt,
-          |  CAST(SUM(o_price) AS DOUBLE) AS sum_price
-          |FROM gvt129.orders_t GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    // The versioned table AS a Structured Streaming source (round 17):
-    // spark.readStream.format("graft") tails the commit log — offsets
-    // are versions, each micro-batch plans the commits' ADDED files
-    // straight from the immutable manifests (O(new data) per batch),
-    // and maxVersionsPerTrigger=1 forces the two appends to arrive as
-    // separate bounded batches (admission control). The rows the sink
-    // accumulates must equal the two appended slices exactly — no
-    // initial-snapshot leak, no duplication, no loss.
-    "q130_stream_source" -> ((s, dir) => {
-      // the 3-commit table is strictly READ-ONLY here (the stream
-      // tails its commits) — per-JVM memoized fixture under the
-      // judge-directed amortization rule, like q99/q100's history
-      // table: the gate prices the streaming source machinery and the
-      // version replay, not the three commits
-      val t = vtBase(s, dir, "stream3") { tmp =>
-        import graft.sources.VersionedTable
-        val o = Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-        VersionedTable.create(o.filter(col("o_orderkey") % 4 === 0), tmp)
-        VersionedTable.append(o.filter(col("o_orderkey") % 4 === 1), tmp)
-        VersionedTable.append(o.filter(col("o_orderkey") % 4 === 2), tmp)
-      }
-      try s.catalog.dropTempView("q130_sink") catch { case _: Exception => }
-      val q = s.readStream.format("graft")
-        .option("startingVersion", "1")
-        .option("maxVersionsPerTrigger", "1")
-        .load(t)
-        .writeStream.format("memory").queryName("q130_sink").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("q130_sink")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("cnt"),
-          sum("o_price").cast("double").as("sum_price"))
-    }),
-
-    // SQL-text UPDATE and MERGE INTO over a versioned catalog table
-    // (round 17): GraftSqlExtension swaps the analyzed UpdateTable /
-    // MergeIntoTable plans for the format's own merge-on-read DML —
-    // the SAME updateWithDv/mergeWithDv path q121/q122 gate through
-    // the Scala API, now reachable as ANSI text. The statement mix is
-    // deliberately order-sensitive (the MERGE overwrites half the
-    // UPDATE's rows) so a wrong execution order cannot hash-match.
-    "q131_sql_update_merge" -> ((s, dir) => {
-      val wh = scratchPath("q131wh")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.conf.set("spark.sql.catalog.gvt131", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt131.warehouse", wh)
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-        .createOrReplaceTempView("q131_src")
-      s.sql("""CREATE TABLE gvt131.orders_t AS
-              |SELECT * FROM q131_src WHERE o_orderkey % 3 != 0""".stripMargin)
-      s.sql("""UPDATE gvt131.orders_t
-              |SET o_price = CAST(o_price + 10.00 AS DECIMAL(18,2))
-              |WHERE o_orderstatus = 'O'""".stripMargin)
-      s.sql("""MERGE INTO gvt131.orders_t USING (
-              |  SELECT o_orderkey, o_orderstatus,
-              |    CAST(o_price * 2 AS DECIMAL(18,2)) AS o_price
-              |  FROM q131_src WHERE o_orderkey % 6 = 1
-              |  UNION ALL
-              |  SELECT * FROM q131_src WHERE o_orderkey % 3 = 0
-              |) src ON orders_t.o_orderkey = src.o_orderkey
-              |WHEN MATCHED THEN UPDATE SET *
-              |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS cnt,
-          |  CAST(SUM(o_price) AS DOUBLE) AS sum_price
-          |FROM gvt131.orders_t GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    // SQL DDL schema evolution over a versioned catalog table (round
-    // 17): ALTER TABLE ADD COLUMNS / RENAME COLUMN land as the
-    // format's metadata-only evolution commits — zero data movement —
-    // and the queryable state must still hash-match: pre-evolution
-    // rows read NULL for the added column, a post-ADD INSERT fills it,
-    // and the rename carries every row and stat to the new name.
-    "q132_sql_ddl_evolution" -> ((s, dir) => {
-      val wh = scratchPath("q132wh")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.conf.set("spark.sql.catalog.gvt132", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt132.warehouse", wh)
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-        .createOrReplaceTempView("q132_src")
-      s.sql("""CREATE TABLE gvt132.orders_t AS
-              |SELECT * FROM q132_src WHERE o_orderkey % 3 != 0""".stripMargin)
-      s.sql("ALTER TABLE gvt132.orders_t ADD COLUMNS (bonus DECIMAL(18,2))")
-      s.sql("""INSERT INTO gvt132.orders_t
-              |SELECT o_orderkey, o_orderstatus, o_price,
-              |  CAST(o_orderkey % 100 AS DECIMAL(18,2)) AS bonus
-              |FROM q132_src WHERE o_orderkey % 3 = 0""".stripMargin)
-      s.sql("ALTER TABLE gvt132.orders_t RENAME COLUMN o_price TO base_price")
-      s.sql(
-        """SELECT o_orderstatus, COUNT(*) AS cnt,
-          |  CAST(SUM(base_price) AS DOUBLE) AS sum_base,
-          |  CAST(SUM(bonus) AS DOUBLE) AS sum_bonus,
-          |  COUNT(bonus) AS cnt_bonus
-          |FROM gvt132.orders_t GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    // The commit log as a QUERYABLE SQL relation (round 17):
-    // `t$history` is the DESCRIBE HISTORY twin — one row per commit,
-    // live rows priced from manifest metadata alone (per-file stats
-    // rowCount minus DV cardinality, the same arithmetic the DML
-    // pricing job uses; never a data scan). The oracle recomputes each
-    // version's expected deleted/live counts declaratively, so a DV
-    // that leaks into the wrong commit's accounting cannot hash-match.
-    "q133_sql_history" -> ((s, dir) => {
-      import graft.sources.VersionedTable
-      val wh = scratchPath("q133wh")
-      val p = new org.apache.hadoop.fs.Path(wh)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      s.conf.set("spark.sql.catalog.gvt133", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gvt133.warehouse", wh)
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-      VersionedTable.create(o.repartitionByRange(
-        vtParts(s, dir, "orders.parquet"), col("o_orderkey")),
-        s"$wh/orders_t", Seq("o_orderkey"))
-      s.sql("DELETE FROM gvt133.orders_t WHERE o_orderkey % 10 = 3")
-      s.sql("""UPDATE gvt133.orders_t
-              |SET o_price = CAST(o_price + 1.00 AS DECIMAL(18,2))
-              |WHERE o_orderkey % 7 = 0""".stripMargin)
-      // live_rows is priced from manifest metadata alone and is
-      // invariant to the per-file DV-vs-CoW pricing choice (a DV keeps
-      // the file and subtracts; a rewrite folds the DV and re-counts) —
-      // so the oracle holds at every scale factor. n_deleted_rows is
-      // deliberately NOT projected: it mirrors whichever lane the
-      // pricing chose, which is a cost decision, not an answer.
-      s.sql(
-        """SELECT version, operation, live_rows
-          |FROM gvt133.`orders_t$history`""".stripMargin)
-    })
-  )
-
-  /** Shared four-commit versioned-orders history for q99/q100 (fresh
-    * per query invocation): v1 create, v2 DELETE %13, v3 UPDATE price
-    * +1 for %7, v4 APPEND scale-derived-offset %17 keys at ORIGINAL
-    * prices (plantOffset — a fixed +10M collided with real order keys
-    * at sf100, so the "append of new keys" lane partly re-appended
-    * live keys). Decimal price so downstream sums are cross-engine
-    * exact.
-    */
-  private def ordersHistoryTable(s: SparkSession, dir: String,
-      tag: String): String =
-    // immutable once built (create/delete/update/append, then strictly
-    // read-only in both consumers — q99 replays version feeds, q100
-    // compiles the change feed): a per-JVM memoized fixture under the
-    // judge-directed amortization rule, SHARED by q99 and q100 (the tag
-    // no longer keys separate copies — both gates price their reader,
-    // not the four commits)
-    vtBase(s, dir, "ordershist") { tmp =>
-      import graft.sources.VersionedTable
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        col("o_orderstatus"),
-        col("o_totalprice").cast("decimal(18,2)").as("o_price"))
-      val off = plantOffset(o, "o_orderkey")
-      VersionedTable.create(o, tmp, Seq("o_orderkey"))
-      VersionedTable.delete(s, tmp, col("o_orderkey") % 13 === 0)
-      VersionedTable.update(s, tmp, col("o_orderkey") % 7 === 0,
-        Map("o_price" -> (col("o_price") +
-          lit(1).cast("decimal(18,2)")).cast("decimal(18,2)")))
-      VersionedTable.append(o.filter(col("o_orderkey") % 17 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + off),
-        tmp, Seq("o_orderkey"))
-    }
-
-  // ------------------------------------------------------------- oracle SQL
-
-  def coreOracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | SUM(l_quantity) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | COUNT(*) AS cnt,
-        | COUNT(DISTINCT l_partkey) AS n_parts,
-        | CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS high_disc,
-        | MAX(l_shipdate) AS max_ship
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_top_parts_per_flag" ->
-      """WITH counts AS (
-        |  SELECT l_returnflag, l_linestatus, l_partkey, COUNT(*) AS cnt
-        |  FROM lineitem GROUP BY 1,2,3),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY l_returnflag, l_linestatus
-        |    ORDER BY cnt DESC, l_partkey ASC) AS rnk FROM counts),
-        |totals AS (
-        |  SELECT l_returnflag, l_linestatus, COUNT(*) AS total_cnt
-        |  FROM lineitem GROUP BY 1,2)
-        |SELECT r.l_returnflag, r.l_linestatus, r.l_partkey, r.cnt, r.rnk,
-        |  100.0 * r.cnt / t.total_cnt AS share_pct
-        |FROM ranked r JOIN totals t
-        |  ON r.l_returnflag = t.l_returnflag AND r.l_linestatus = t.l_linestatus
-        |WHERE r.rnk <= 10""".stripMargin,
-
-    "q03_rank_share" ->
-      """WITH counts AS (
-        |  SELECT o_orderpriority, o_orderstatus, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1,2)
-        |SELECT o_orderpriority, o_orderstatus, cnt,
-        |  RANK() OVER (PARTITION BY o_orderpriority ORDER BY cnt DESC, o_orderstatus ASC) AS rnk,
-        |  100.0 * cnt / SUM(cnt) OVER (PARTITION BY o_orderpriority) AS share_pct
-        |FROM counts""".stripMargin,
-
-    "q04_yoy_orders" ->
-      """WITH by_year AS (
-        |  SELECT o_orderpriority, CAST(YEAR(o_orderdate) AS INT) AS order_year, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1,2)
-        |SELECT o_orderpriority, order_year, cnt,
-        |  LAG(cnt, 1) OVER (PARTITION BY o_orderpriority ORDER BY order_year) AS prev_cnt,
-        |  cnt - LAG(cnt, 1) OVER (PARTITION BY o_orderpriority ORDER BY order_year) AS yoy_diff
-        |FROM by_year""".stripMargin,
-
-    "q05_pivot_top3_events" ->
-      """WITH counts AS (
-        |  SELECT user_id % 10 AS bucket, event_type, COUNT(*) AS cnt
-        |  FROM events GROUP BY 1,2),
-        |ranked AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY bucket
-        |    ORDER BY cnt DESC, event_type ASC) AS rnk FROM counts)
-        |SELECT bucket,
-        |  MAX(CASE WHEN rnk = 1 THEN event_type END) AS event_type_1,
-        |  MAX(CASE WHEN rnk = 2 THEN event_type END) AS event_type_2,
-        |  MAX(CASE WHEN rnk = 3 THEN event_type END) AS event_type_3
-        |FROM ranked WHERE rnk <= 3 GROUP BY bucket""".stripMargin,
-
-    "q06_latest_event_per_user" ->
-      """SELECT user_id, event_id, event_type, value, ts FROM (
-        |  SELECT user_id, event_id, event_type, value, CAST(ts AS TIMESTAMP) AS ts,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        |  FROM events) t WHERE rn = 1""".stripMargin,
-
-    "q07_incremental_antijoin" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt, COUNT(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem b
-        |WHERE b.l_shipdate >= TIMESTAMP '2000-01-01' AND NOT EXISTS (
-        |  SELECT 1 FROM lineitem e
-        |  WHERE e.l_shipdate < TIMESTAMP '2000-01-01' AND e.l_orderkey = b.l_orderkey)
-        |GROUP BY l_returnflag""".stripMargin,
-
-    "q08_enrich_parts" ->
-      """SELECT b.l_orderkey, b.l_linenumber, b.l_partkey, b.l_returnflag,
-        |  p.p_name IS NOT NULL AS name_mapped,
-        |  COALESCE(p.p_name, 'UNKNOWN') AS resolved_name
-        |FROM lineitem b LEFT JOIN
-        |  (SELECT p_partkey, p_name FROM part WHERE p_size <= 25) p
-        |  ON b.l_partkey = p.p_partkey""".stripMargin,
-
-    "q09_standardize_text" ->
-      """SELECT c_custkey,
-        |  UPPER(TRIM(c_mktsegment)) AS segment_std,
-        |  REGEXP_REPLACE(UPPER(TRIM(c_name)), '[^A-Z0-9]', '', 'g') AS name_key,
-        |  c_name IS NOT NULL AND REGEXP_MATCHES(c_name, '^Customer#[0-9]{9}$') AS name_valid,
-        |  CASE WHEN c_acctbal >= 0 THEN c_acctbal END AS acctbal_nonneg,
-        |  SUBSTRING(c_name, 10, 4) AS name_suffix,
-        |  CAST(LENGTH(c_name) AS INT) AS name_len
-        |FROM customer""".stripMargin,
-
-    "q10_merge_upsert" ->
-      """WITH u AS (
-        |  SELECT p_partkey, p_name || ' v2' AS p_name, p_brand, p_type, p_size,
-        |    p_retailprice + 50.0 AS p_retailprice
-        |  FROM part WHERE p_partkey % 7 = 0
-        |  UNION ALL
-        |  SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000
-        |                      FROM part),
-        |    p_name || ' v2', p_brand, p_type, p_size,
-        |    p_retailprice + 50.0
-        |  FROM part WHERE p_partkey % 7 = 0)
-        |SELECT COALESCE(u.p_partkey, t.p_partkey) AS p_partkey,
-        |  CASE WHEN u.p_partkey IS NOT NULL THEN u.p_name ELSE t.p_name END AS p_name,
-        |  CASE WHEN u.p_partkey IS NOT NULL THEN u.p_brand ELSE t.p_brand END AS p_brand,
-        |  CASE WHEN u.p_partkey IS NOT NULL THEN u.p_type ELSE t.p_type END AS p_type,
-        |  CASE WHEN u.p_partkey IS NOT NULL THEN u.p_size ELSE t.p_size END AS p_size,
-        |  CASE WHEN u.p_partkey IS NOT NULL THEN u.p_retailprice ELSE t.p_retailprice END AS p_retailprice
-        |FROM part t FULL OUTER JOIN u ON t.p_partkey = u.p_partkey""".stripMargin,
-
-    "q11_quality_grouped" ->
-      """SELECT l_returnflag,
-        |  COUNT(*) AS rows_cnt,
-        |  CAST(SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS high_disc,
-        |  COUNT(DISTINCT l_partkey) AS n_parts,
-        |  MAX(l_shipdate) AS max_ship,
-        |  CASE WHEN COUNT(*) = 0 THEN NULL
-        |    ELSE 100.0 * SUM(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) / COUNT(*) END AS pct_high_disc
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q12_global_health" ->
-      """SELECT COUNT(*) AS total_rows,
-        |  COUNT(DISTINCT o_custkey) AS n_customers,
-        |  MIN(o_orderdate) AS first_order,
-        |  MAX(o_orderdate) AS last_order,
-        |  CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS finished_cnt,
-        |  100.0 * SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) / COUNT(*) AS pct_finished
-        |FROM orders""".stripMargin,
-
-    "q13_date_scalars" ->
-      """SELECT STRFTIME(o_orderdate, '%Y-%m') AS order_month,
-        |  SUBSTRING(o_orderpriority, 1, 1) AS prio_class,
-        |  COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders WHERE LENGTH(o_orderpriority) >= 5
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q14_coverage_crossjoin" ->
-      """WITH total AS (SELECT COUNT(*) AS total_rows FROM lineitem),
-        |unmatched AS (
-        |  SELECT COUNT(*) AS unmatched_rows FROM lineitem b
-        |  WHERE NOT EXISTS (SELECT 1 FROM part p
-        |    WHERE p.p_size <= 25 AND p.p_partkey = b.l_partkey))
-        |SELECT t.total_rows, u.unmatched_rows,
-        |  100.0 * u.unmatched_rows / t.total_rows AS pct_unmatched
-        |FROM total t CROSS JOIN unmatched u""".stripMargin,
-
-    "q39_asof_join" ->
-      """WITH p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS rts, value FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS TIMESTAMP)
-        |      ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') t WHERE rn = 1)
-        |SELECT l.event_id, l.user_id, CAST(l.ts AS TIMESTAMP) AS ts,
-        |  p.value AS asof_value
-        |FROM events l ASOF LEFT JOIN p
-        |  ON l.user_id = p.user_id AND CAST(l.ts AS TIMESTAMP) >= p.rts""".stripMargin,
-
-    "q40_range_join" ->
-      """WITH i AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS s,
-        |    CAST(ts AS TIMESTAMP) + INTERVAL 1 HOUR AS e,
-        |    event_id AS interval_id
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT l.event_id, l.user_id, CAST(l.ts AS TIMESTAMP) AS ts, i.interval_id
-        |FROM events l JOIN i ON l.user_id = i.user_id
-        |  AND CAST(l.ts AS TIMESTAMP) >= i.s AND CAST(l.ts AS TIMESTAMP) < i.e""".stripMargin,
-
-    "q41_interval_overlap" ->
-      """WITH a AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS a_start,
-        |    CAST(ts AS TIMESTAMP) + INTERVAL 1 HOUR AS a_end,
-        |    event_id AS a_id
-        |  FROM events WHERE event_type = 'purchase'),
-        |b AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS b_start,
-        |    CAST(ts AS TIMESTAMP) + INTERVAL 2 HOUR AS b_end,
-        |    event_id AS b_id
-        |  FROM events WHERE event_type = 'signup')
-        |SELECT a.user_id, a.a_start, a.a_end, a.a_id, b.b_id
-        |FROM a JOIN b ON a.user_id = b.user_id
-        |  AND a.a_start < b.b_end AND b.b_start < a.a_end""".stripMargin,
-
-    "q43_asof_forward" ->
-      """WITH p AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS rts, value FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS TIMESTAMP)
-        |      ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE event_type = 'purchase') t WHERE rn = 1)
-        |SELECT l.event_id, l.user_id, CAST(l.ts AS TIMESTAMP) AS ts,
-        |  CASE WHEN p.rts - CAST(l.ts AS TIMESTAMP) <= INTERVAL 1 HOUR
-        |    THEN p.value END AS asof_value
-        |FROM events l ASOF LEFT JOIN p
-        |  ON l.user_id = p.user_id AND CAST(l.ts AS TIMESTAMP) <= p.rts""".stripMargin,
-
-    "q36_bucketed_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY 1""".stripMargin,
-
-    "q35_breed_stats_full" ->
-      """WITH base AS (
-        |  SELECT CAST(YEAR(o_orderdate) AS INT) AS Year, o_orderstatus AS Animal_Type,
-        |    o_orderpriority AS breed, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1, 2, 3),
-        |w AS (
-        |  SELECT *,
-        |    CAST(SUM(cnt) OVER (PARTITION BY Year, Animal_Type) AS BIGINT) AS total,
-        |    RANK() OVER (PARTITION BY Year, Animal_Type
-        |      ORDER BY cnt DESC, breed ASC) AS rank_in_year_type
-        |  FROM base),
-        |sh AS (
-        |  SELECT *, ROUND(CAST(cnt AS DOUBLE) / total, 4) AS share FROM w),
-        |lagged AS (
-        |  SELECT *,
-        |    LAG(cnt, 1) OVER (PARTITION BY Animal_Type, breed ORDER BY Year) AS prev_cnt,
-        |    LAG(share, 1) OVER (PARTITION BY Animal_Type, breed ORDER BY Year) AS prev_share
-        |  FROM sh)
-        |SELECT Year, Animal_Type, breed, cnt, total, share, rank_in_year_type,
-        |  prev_cnt,
-        |  cnt - prev_cnt AS yoy_cnt_diff,
-        |  CASE WHEN prev_cnt > 0
-        |    THEN ROUND(CAST(cnt - prev_cnt AS DOUBLE) / prev_cnt, 4) END AS yoy_cnt_pct_change,
-        |  prev_share,
-        |  ROUND(share - prev_share, 4) AS yoy_share_point_diff,
-        |  CASE WHEN prev_share > 0
-        |    THEN ROUND((share - prev_share) / prev_share, 4) END AS yoy_share_pct_change
-        |FROM lagged""".stripMargin,
-
-    "q15_set_ops" ->
-      """WITH f AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-        |o AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'),
-        |cats AS (
-        |  SELECT o_custkey, 'F_ONLY' AS category FROM (SELECT * FROM f EXCEPT SELECT * FROM o)
-        |  UNION ALL
-        |  SELECT o_custkey, 'O_ONLY' AS category FROM (SELECT * FROM o EXCEPT SELECT * FROM f)
-        |  UNION ALL
-        |  SELECT o_custkey, 'BOTH' AS category FROM (SELECT * FROM f INTERSECT SELECT * FROM o))
-        |SELECT category, COUNT(*) AS cnt FROM cats GROUP BY category""".stripMargin
-  )
-
-  /** Oracles for the extension queries — every registered query now has
-    * one. Queries whose kernels are not directly SQL-expressible (LSH
-    * banding, custom hash expressions, iterative k-means/BPE/PageRank)
-    * use either an exact unrolled replay (q75/q76) or the q33 contract
-    * form: exact anchors DuckDB recomputes plus required-TRUE
-    * invariants, with ScalaTest specs keeping the algorithmic proofs.
-    */
-  /** EXACT replay of distributed BPE merge INDUCTION (q75) — the
-    * learning loop, not just q76's fixed-merge application: `numMerges`
-    * unrolled rounds, each counting every adjacent symbol position of
-    * the previous dictionary state (Sennrich counting, weighted by word
-    * frequency), taking the argmax with the (cnt DESC, l, r) tie-break
-    * (DuckDB's default binary collation = Spark's UTF8 orderBy), and
-    * rewriting via the q76 '|sym ' string encoding, whose replace() is
-    * precisely pairMerge's greedy non-overlapping left-to-right pass.
-    * Counting happens on token LISTS (every position), application on
-    * the rendered string (non-overlapping) — the same asymmetry the
-    * engine implements.
-    */
-  private def bpeLearnOracleSql(numMerges: Int): String = {
-    val sb = new StringBuilder
-    // MATERIALIZED is load-bearing: each d(n) references d(n-1) twice
-    // (pair counting + rewrite), so inlined CTEs would expand the plan
-    // — and the base-table opens — exponentially in numMerges
-    sb ++= """WITH tok AS (SELECT unnest(string_split(trim(text), ' ')) AS w FROM documents),
-      |dict AS (SELECT w, COUNT(*) AS freq FROM tok WHERE len(w) > 0 GROUP BY w),
-      |d0 AS MATERIALIZED (SELECT regexp_replace(w, '(.)', '|\1 ', 'g') AS f, freq FROM dict)""".stripMargin
-    for (n <- 1 to numMerges) {
-      sb ++= s""",
-        |c$n AS (SELECT substr(p.l, 2) AS l, substr(p.r, 2) AS r,
-        |  CAST(SUM(freq) AS BIGINT) AS cnt
-        |  FROM (SELECT freq, unnest(list_transform(range(1, len(tl)), i ->
-        |          struct_pack(l := tl[i], r := tl[i+1]))) AS p
-        |        FROM (SELECT list_filter(string_split(trim(f), ' '),
-        |                x -> len(x) > 0) AS tl, freq
-        |              FROM d${n - 1}))
-        |  GROUP BY 1, 2),
-        |m$n AS MATERIALIZED (SELECT l, r, cnt FROM c$n ORDER BY cnt DESC, l, r LIMIT 1),
-        |d$n AS MATERIALIZED (SELECT replace(f, '|' || m.l || ' |' || m.r || ' ',
-        |    '|' || m.l || m.r || ' ') AS f, freq
-        |  FROM d${n - 1}, m$n m)""".stripMargin
-    }
-    sb ++= "\nSELECT * FROM (\n" + (1 to numMerges).map(n =>
-      s"SELECT CAST($n AS BIGINT) AS rank, l AS merge_left, " +
-        s"r AS merge_right, cnt AS pair_count FROM m$n")
-      .mkString("\nUNION ALL\n") + "\n)"
-    sb.toString
-  }
-
-  def extensionOracleSql: Map[String, String] = Map(
-
-    // full 16-round learning replay — see bpeLearnOracleSql
-    "q75_bpe_merges" -> bpeLearnOracleSql(16),
-    // the sketch estimates themselves are algorithm-specific; what the
-    // oracle can check is the exact statistics plus the contract that
-    // every sketch landed inside its error bound (Spark computes the
-    // booleans from its own sketch vs its own exact percentiles;
-    // DuckDB asserts they must all be true)
-    "q33_approx_stats" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts,
-        |  true AS approx_parts_ok, true AS approx_median_ok,
-        |  true AS approx_p99_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    // gaps-and-islands over duplicated window positions; DuckDB's
-    // parallel unnest zips positions with their grams, and the
-    // i - ROW_NUMBER() key is constant exactly along a consecutive run
-    "q94_substring_spans" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |n AS (SELECT doc_id,
-        |  CASE WHEN len(w) >= 8 THEN len(w) - 7 ELSE 0 END AS n_windows FROM t),
-        |g AS (SELECT doc_id,
-        |    unnest(range(1, len(w) - 6)) AS i,
-        |    unnest(list_transform(range(1, len(w) - 6),
-        |      i -> array_to_string(w[i:i+7], ' '))) AS gram
-        |  FROM t WHERE len(w) >= 8),
-        |nd AS (SELECT gram FROM (
-        |    SELECT gram, doc_id FROM g GROUP BY gram, doc_id) x
-        |  GROUP BY gram HAVING COUNT(*) > 1),
-        |dup AS (SELECT g.doc_id, g.i FROM g JOIN nd USING (gram)),
-        |isl AS (SELECT doc_id, i,
-        |    i - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY i) AS grp
-        |  FROM dup),
-        |runs AS (SELECT doc_id, grp, COUNT(*) AS run_len
-        |  FROM isl GROUP BY doc_id, grp),
-        |agg AS (SELECT doc_id, COUNT(*) AS n_spans, MAX(run_len) AS max_run
-        |  FROM runs GROUP BY doc_id)
-        |SELECT n.doc_id, CAST(n.n_windows AS BIGINT) AS n_windows,
-        |  CAST(COALESCE(agg.n_spans, 0) AS BIGINT) AS n_dup_spans,
-        |  CAST(COALESCE(agg.max_run + 7, 0) AS BIGINT) AS longest_span_tokens
-        |FROM n LEFT JOIN agg USING (doc_id)""".stripMargin,
-
-    // the oracle replays the PLANT arithmetically: the expected visible
-    // text is 'Doc <id>' + optional nav text + the document body, and
-    // the link stats follow from the two planted anchors ('Home' = 4
-    // chars, 'About us' = 8 chars)
-    "q95_html_extract" ->
-      """WITH e AS (SELECT doc_id,
-        |  'Doc ' || CAST(doc_id AS VARCHAR)
-        |    || CASE WHEN doc_id % 4 = 0 THEN ' Home About us' ELSE '' END
-        |    || ' ' || text AS clean_text,
-        |  CASE WHEN doc_id % 4 = 0 THEN 2 ELSE 0 END AS n_links,
-        |  CASE WHEN doc_id % 4 = 0 THEN 12 ELSE 0 END AS link_chars
-        |  FROM documents)
-        |SELECT doc_id, clean_text, CAST(n_links AS BIGINT) AS n_links,
-        |  CASE WHEN len(clean_text) > 0
-        |    THEN CAST(link_chars AS DOUBLE) / CAST(len(clean_text) AS DOUBLE)
-        |    ELSE 0.0 END AS link_density
-        |FROM e""".stripMargin,
-
-    // canonical key constructed directly from the plant inputs: scheme/
-    // host lowercased, :80 dropped, trailing slash stripped, tracking
-    // params dropped, survivors sorted ('b=2' < 'id=…'), fragment gone
-    "q96_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |  'http://www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com/Products/'
-        |    || CAST(doc_id % 50 AS VARCHAR) || '?b=2&id='
-        |    || CAST(doc_id % 25 AS VARCHAR) AS canonical_url
-        |  FROM documents)
-        |SELECT doc_id, canonical_url,
-        |  COUNT(*) OVER (PARTITION BY canonical_url) AS n_same_canonical
-        |FROM u""".stripMargin,
-
-    // replays every rule with the same retain-on-true null semantics;
-    // rule names concatenate in the operator's sorted order
-    "q97_expectations" ->
-      """WITH a AS (SELECT o_orderkey,
-        |  array_to_string(list_filter([
-        |    CASE WHEN o_custkey IS NULL THEN 'custkey_present' END,
-        |    CASE WHEN NOT COALESCE(o_totalprice <= 400000.0, FALSE)
-        |      THEN 'price_cap' END,
-        |    CASE WHEN NOT COALESCE(regexp_matches(o_orderpriority,
-        |      '^[1-5]-'), FALSE) THEN 'priority_known' END,
-        |    CASE WHEN NOT COALESCE(o_orderstatus <> 'P', FALSE)
-        |      THEN 'status_finalized' END
-        |  ], x -> x IS NOT NULL), ',') AS violations
-        |  FROM orders)
-        |SELECT o_orderkey, violations FROM a
-        |WHERE violations <> ''""".stripMargin,
-
-    // the q45 md5-threshold rule keyed on the HOST: the oracle proves
-    // every doc of one host takes the same side
-    "q98_group_split" ->
-      s"""WITH h AS (SELECT doc_id,
-         |  'www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' AS host
-         |  FROM documents)
-         |SELECT doc_id, host,
-         |  CASE WHEN md5(host) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.2)}' THEN 'val'
-         |       WHEN md5(host) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.4)}' THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM h""".stripMargin,
-
-    // replays the four-commit history declaratively: survivors of the
-    // %13 delete with the %7 price bump, plus the offset %17 append at
-    // ORIGINAL prices (appended after the update ran)
-    "q99_incremental_view" ->
-      """WITH fin AS (
-        |  SELECT o_orderstatus,
-        |    CASE WHEN o_orderkey % 7 = 0
-        |      THEN CAST(o_totalprice AS DECIMAL(18,2)) + CAST(1 AS DECIMAL(18,2))
-        |      ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS p
-        |  FROM orders WHERE o_orderkey % 13 <> 0
-        |  UNION ALL
-        |  SELECT o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) AS p
-        |  FROM orders WHERE o_orderkey % 17 = 0)
-        |SELECT o_orderstatus, COUNT(*) AS n_rows,
-        |  CAST(SUM(p) AS DOUBLE) AS sum_price
-        |FROM fin GROUP BY o_orderstatus""".stripMargin,
-
-    // the expected change set of the same history: deletes at v2,
-    // update pre/post pairs at v3 (only keys surviving the delete),
-    // offset inserts at v4
-    "q100_change_feed" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus,
-        |  CAST(o_totalprice AS DECIMAL(18,2)) AS p FROM orders)
-        |SELECT o_orderkey, o_orderstatus, CAST(p AS DOUBLE) AS price,
-        |  'delete' AS _change_type, CAST(2 AS BIGINT) AS _commit_version
-        |FROM o WHERE o_orderkey % 13 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus, CAST(p AS DOUBLE),
-        |  'update_preimage', CAST(3 AS BIGINT)
-        |FROM o WHERE o_orderkey % 13 <> 0 AND o_orderkey % 7 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_orderstatus,
-        |  CAST(p + CAST(1 AS DECIMAL(18,2)) AS DOUBLE),
-        |  'update_postimage', CAST(3 AS BIGINT)
-        |FROM o WHERE o_orderkey % 13 <> 0 AND o_orderkey % 7 = 0
-        |UNION ALL
-        |SELECT o_orderkey + (SELECT (max(o_orderkey) // 1000000 + 1) * 1000000
-        |                     FROM orders),
-        |  o_orderstatus, CAST(p AS DOUBLE),
-        |  'insert', CAST(4 AS BIGINT)
-        |FROM o WHERE o_orderkey % 17 = 0""".stripMargin,
-
-    // recomputes the per-residue doc frequency and the threshold
-    // decision: NAV (~n/5 docs) and the footer (all docs) always drop,
-    // RARE keeps iff its %60 class holds fewer than 9 docs, the
-    // id-prefixed body line is unique by construction (df=1 at every
-    // scale - a bare text body line crosses the threshold at sf100
-    // where 1.2M docs share exact texts) and always survives
-    "q101_line_dedup" ->
-      """WITH f AS (SELECT doc_id % 60 AS r, COUNT(*) AS df
-        |           FROM documents GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CASE WHEN f.df >= 9
-        |       THEN 'BODY ' || CAST(d.doc_id AS VARCHAR) || ' ' || d.text
-        |       ELSE 'RARE ' || CAST(d.doc_id % 60 AS VARCHAR) || chr(10)
-        |         || 'BODY ' || CAST(d.doc_id AS VARCHAR) || ' ' || d.text
-        |       END AS clean_text,
-        |  CAST(CASE WHEN f.df >= 9 THEN 1 ELSE 2 END AS BIGINT)
-        |    AS n_lines_kept,
-        |  CAST(CASE WHEN f.df >= 9 THEN 3 ELSE 2 END AS BIGINT)
-        |    AS n_lines_dropped
-        |FROM documents d JOIN f ON d.doc_id % 60 = f.r""".stripMargin,
-
-    // the merged old+batch store equals full-corpus doc frequency
-    // (disjoint doc ids), so the decision table is q101's — restricted
-    // to the rewritten batch
-    "q103_incremental_line_dedup" ->
-      """WITH f AS (SELECT doc_id % 60 AS r, COUNT(*) AS df
-        |           FROM documents GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CASE WHEN f.df >= 9
-        |       THEN 'BODY ' || CAST(d.doc_id AS VARCHAR) || ' ' || d.text
-        |       ELSE 'RARE ' || CAST(d.doc_id % 60 AS VARCHAR) || chr(10)
-        |         || 'BODY ' || CAST(d.doc_id AS VARCHAR) || ' ' || d.text
-        |       END AS clean_text,
-        |  CAST(CASE WHEN f.df >= 9 THEN 1 ELSE 2 END AS BIGINT)
-        |    AS n_lines_kept,
-        |  CAST(CASE WHEN f.df >= 9 THEN 3 ELSE 2 END AS BIGINT)
-        |    AS n_lines_dropped
-        |FROM documents d JOIN f ON d.doc_id % 60 = f.r
-        |WHERE d.doc_id >= 250""".stripMargin,
-
-    // replays keeper selection with a window: longest text wins, lowest
-    // id breaks ties (so originals beat their exact +100k copies)
-    "q102_dedup_keepers" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 100000, text FROM documents
-        |    WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id + 200000, substr(text, 1, 120)
-        |    FROM documents WHERE doc_id % 5 = 0),
-        |k AS (SELECT doc_id, md5(substr(text, 1, 80)) AS cluster,
-        |      length(text) AS len FROM corpus)
-        |SELECT doc_id, cluster,
-        |  first_value(doc_id) OVER (PARTITION BY cluster
-        |    ORDER BY len DESC, doc_id ASC) AS keeper_id,
-        |  doc_id = first_value(doc_id) OVER (PARTITION BY cluster
-        |    ORDER BY len DESC, doc_id ASC) AS is_kept
-        |FROM k""".stripMargin,
-
-    // full declarative replay of the C4 rule set over the same planted
-    // page: line keep = terminal punctuation + >=5 words + no
-    // javascript; page keep = no brace, no lorem ipsum, >=3 kept lines
-    "q104_c4_line_clean" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    'Alpha section covers doc number ' || CAST(doc_id % 11 AS VARCHAR)
-        |      || ' today.' || chr(10) ||
-        |    'Beta sentence keeps exactly seven words here.' || chr(10) ||
-        |    'Gamma line closes with a question mark?' || chr(10) ||
-        |    'tiny line.' || chr(10) ||
-        |    text || chr(10) ||
-        |    'Please enable javascript to view this page.' ||
-        |    CASE WHEN doc_id % 13 = 0
-        |      THEN chr(10) || 'lorem ipsum dolor sit amet.' ELSE '' END ||
-        |    CASE WHEN doc_id % 17 = 0
-        |      THEN chr(10) || 'if (x) { return y; }' ELSE '' END AS text
-        |  FROM documents),
-        |l AS (SELECT doc_id, text, string_split(text, chr(10)) AS ls
-        |      FROM planted),
-        |k AS (SELECT doc_id, text, ls,
-        |        list_filter(ls, x -> right(x, 1) IN ('.', '!', '?', '"')
-        |          AND len(string_split(trim(x), ' ')) >= 5
-        |          AND NOT contains(lower(x), 'javascript')) AS kept
-        |      FROM l),
-        |p AS (SELECT doc_id, ls, kept,
-        |        contains(text, '{') AS has_code,
-        |        contains(lower(text), 'lorem ipsum') AS has_lorem,
-        |        (NOT contains(text, '{'))
-        |          AND (NOT contains(lower(text), 'lorem ipsum'))
-        |          AND len(kept) >= 3 AS page_kept
-        |      FROM k)
-        |SELECT doc_id, page_kept, has_code, has_lorem,
-        |  CAST(len(ls) AS BIGINT) AS n_lines,
-        |  CAST(CASE WHEN page_kept THEN len(kept) ELSE 0 END AS BIGINT)
-        |    AS n_lines_kept,
-        |  CASE WHEN page_kept THEN array_to_string(kept, chr(10))
-        |       ELSE '' END AS clean_text
-        |FROM p""".stripMargin,
-
-    // full declarative replay of the Gopher table-A1 rules over the
-    // same planted page; ratios are exact-int / exact-int in doubles on
-    // both engines, so threshold comparisons hash-match bit-exactly
-    "q105_gopher_rules" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    text || chr(10) ||
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN 'the data goes to all of them and that would have been fine with everyone'
-        |      ELSE 'closing words here' END || chr(10) ||
-        |    CASE WHEN doc_id % 4 = 0 THEN '- bullet item one'
-        |      ELSE 'plain line one' END || chr(10) ||
-        |    CASE WHEN doc_id % 6 = 0 THEN 'trailing thought...'
-        |      ELSE 'trailing thought' END || chr(10) ||
-        |    CASE WHEN doc_id % 9 = 0
-        |      THEN '#tag #promo #spam #viral #follow #like #share #win #free #now #deal #hot'
-        |      ELSE 'regular closing line' END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id, string_split(text, chr(10)) AS ls,
-        |        list_filter(flatten(list_transform(
-        |          string_split(text, chr(10)),
-        |          l -> string_split(trim(l), ' '))), w -> len(w) > 0) AS toks
-        |      FROM planted),
-        |s AS (SELECT doc_id, ls, toks,
-        |        CAST(len(toks) AS BIGINT) AS n_words,
-        |        CASE WHEN len(toks) > 0 THEN
-        |          CAST(list_sum(list_transform(toks, w -> len(w))) AS DOUBLE)
-        |            / CAST(len(toks) AS DOUBLE) ELSE 0.0 END AS mean_word_len,
-        |        CASE WHEN len(toks) > 0 THEN
-        |          CAST(len(list_filter(toks, w -> contains(w, '#')
-        |            OR contains(w, '...'))) AS DOUBLE)
-        |            / CAST(len(toks) AS DOUBLE) ELSE 0.0 END AS symbol_ratio,
-        |        CASE WHEN len(toks) > 0 THEN
-        |          CAST(len(list_filter(toks,
-        |            w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE)
-        |            / CAST(len(toks) AS DOUBLE) ELSE 0.0 END AS alpha_word_frac,
-        |        CASE WHEN len(ls) > 0 THEN
-        |          CAST(len(list_filter(ls, l -> starts_with(l, '- ')
-        |            OR starts_with(l, '• '))) AS DOUBLE)
-        |            / CAST(len(ls) AS DOUBLE) ELSE 0.0 END AS bullet_line_frac,
-        |        CASE WHEN len(ls) > 0 THEN
-        |          CAST(len(list_filter(ls, l -> ends_with(l, '...'))) AS DOUBLE)
-        |            / CAST(len(ls) AS DOUBLE) ELSE 0.0 END AS ellipsis_line_frac,
-        |        CAST((CASE WHEN list_contains(toks, 'the') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'be') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'to') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'of') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'and') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'that') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'have') THEN 1 ELSE 0 END)
-        |          + (CASE WHEN list_contains(toks, 'with') THEN 1 ELSE 0 END)
-        |          AS BIGINT) AS stopword_hits
-        |      FROM t)
-        |SELECT doc_id, n_words, mean_word_len, symbol_ratio,
-        |  alpha_word_frac, bullet_line_frac, ellipsis_line_frac,
-        |  stopword_hits,
-        |  n_words >= 50 AND n_words <= 100000
-        |    AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-        |    AND symbol_ratio <= 0.1 AND bullet_line_frac <= 0.9
-        |    AND ellipsis_line_frac <= 0.3 AND alpha_word_frac >= 0.8
-        |    AND stopword_hits >= 2 AS keep
-        |FROM s""".stripMargin,
-
-    // positional first-occurrence replay (DuckDB's 1-based lambda index
-    // mirrors list_position exactly)
-    "q106_paragraph_dedup" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    'INTRO ' || CAST(doc_id % 7 AS VARCHAR) || chr(10) || chr(10) ||
-        |    text || chr(10) || chr(10) ||
-        |    'INTRO ' || CAST(doc_id % 7 AS VARCHAR) || chr(10) || chr(10) ||
-        |    'FOOTER common' || chr(10) || chr(10) ||
-        |    'FOOTER common' || chr(10) || chr(10) ||
-        |    CASE WHEN doc_id % 2 = 0 THEN text
-        |      ELSE 'UNIQUE ' || CAST(doc_id AS VARCHAR) END AS text
-        |  FROM documents),
-        |p AS (SELECT doc_id,
-        |        string_split(text, chr(10) || chr(10)) AS paras
-        |      FROM planted),
-        |k AS (SELECT doc_id, paras,
-        |        list_filter(paras,
-        |          (x, i) -> list_position(paras, x) = i) AS kept
-        |      FROM p)
-        |SELECT doc_id,
-        |  array_to_string(kept, chr(10) || chr(10)) AS clean_text,
-        |  CAST(len(paras) AS BIGINT) AS n_paras,
-        |  CAST(len(paras) - len(kept) AS BIGINT) AS n_paras_dropped
-        |FROM k""".stripMargin,
-
-    // exact replay of the affine int8 quantization (floor(+0.5)
-    // rounding, clamp, scale-0 guard) and the integer-decomposed
-    // approximate dot against the min-id probe; the recon bound is the
-    // required-TRUE invariant (half quantization step, proven in
-    // ScalarQuantSpec)
-    "q107_embedding_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id, embedding,
-        |    CAST(list_min(embedding) AS DOUBLE) AS qmin,
-        |    (CAST(list_max(embedding) AS DOUBLE)
-        |      - CAST(list_min(embedding) AS DOUBLE)) / 255.0 AS qs
-        |  FROM embeddings),
-        |c AS (
-        |  SELECT vec_id, qmin, qs,
-        |    CASE WHEN qs = 0 THEN list_transform(embedding, x -> 0)
-        |      ELSE list_transform(embedding, x ->
-        |        CAST(least(greatest(
-        |          floor((CAST(x AS DOUBLE) - qmin) / qs + 0.5), 0.0), 255.0)
-        |          AS INT)) END AS codes
-        |  FROM q),
-        |p AS (
-        |  SELECT qmin AS pmin, qs AS ps, codes AS pcodes FROM c
-        |  WHERE vec_id = (SELECT min(vec_id) FROM embeddings))
-        |SELECT c.vec_id,
-        |  CAST(len(codes) AS BIGINT) AS n_dims,
-        |  qmin AS q_min, qs AS q_scale,
-        |  CAST(list_sum(codes) AS BIGINT) AS code_sum,
-        |  CAST(list_min(codes) AS BIGINT) AS code_min,
-        |  CAST(list_max(codes) AS BIGINT) AS code_max,
-        |  TRUE AS recon_ok,
-        |  qs * ps * CAST(list_sum(list_transform(list_zip(codes, pcodes),
-        |      z -> CAST(z[1] AS BIGINT) * CAST(z[2] AS BIGINT))) AS DOUBLE)
-        |    + qs * pmin * CAST(list_sum(codes) AS DOUBLE)
-        |    + ps * qmin * CAST(list_sum(pcodes) AS DOUBLE)
-        |    + CAST(len(codes) AS DOUBLE) * qmin * pmin AS approx_dot_probe
-        |FROM c, p""".stripMargin,
-
-    // arithmetic replay of the PNG pixel ground truth: the DEFLATE
-    // round trip (Deflater on the Spark write side, Inflater + filter
-    // reconstruction on the decode side) must hand back exactly the
-    // planted scanline bytes
-    "q108_png_pixels" ->
-      """WITH base AS (
-        |  SELECT doc_id, 4 + doc_id % 5 AS w, 2 + doc_id % 3 AS h
-        |  FROM documents),
-        |px AS (SELECT doc_id, flatten(list_transform(range(h), r ->
-        |         list_transform(range(w*3), j -> (doc_id + r*31 + j*7) % 256))) AS pl
-        |       FROM base)
-        |SELECT b.doc_id AS media_id,
-        |  CAST(b.w AS BIGINT) AS width, CAST(b.h AS BIGINT) AS height,
-        |  CAST(b.w*3*b.h AS BIGINT) AS n_units,
-        |  CAST(list_min(p.pl) AS BIGINT) AS unit_min,
-        |  CAST(list_max(p.pl) AS BIGINT) AS unit_max,
-        |  CAST(list_sum(p.pl) AS BIGINT) AS unit_sum
-        |FROM base b JOIN px p USING (doc_id)""".stripMargin,
-
-    // arithmetic replay of the GIF index ground truth: the LZW round
-    // trip (dictionary encoder on the Spark write side, hand-rolled
-    // variable-width decoder on the read side) must hand back exactly
-    // the planted palette indexes
-    "q109_gif_pixels" ->
-      """WITH base AS (
-        |  SELECT doc_id, 40 + doc_id % 17 AS w, 12 + doc_id % 7 AS h,
-        |    CASE WHEN doc_id % 3 = 0 THEN 16 ELSE 256 END AS pal
-        |  FROM documents),
-        |px AS (SELECT doc_id, flatten(list_transform(range(h), r ->
-        |         list_transform(range(w), j -> (doc_id + r*31 + j*7) % pal))) AS pl
-        |       FROM base)
-        |SELECT b.doc_id AS media_id,
-        |  CAST(b.w AS BIGINT) AS width, CAST(b.h AS BIGINT) AS height,
-        |  CAST(b.w*b.h AS BIGINT) AS n_units,
-        |  CAST(list_min(p.pl) AS BIGINT) AS unit_min,
-        |  CAST(list_max(p.pl) AS BIGINT) AS unit_max,
-        |  CAST(list_sum(p.pl) AS BIGINT) AS unit_sum
-        |FROM base b JOIN px p USING (doc_id)""".stripMargin,
-
-    // arithmetic replay of the JPEG entropy ground truth: the Huffman
-    // round trip (bit-level encoder on the Spark write side, canonical
-    // mincode/maxcode decoder on the read side) must hand back exactly
-    // the planted dequantized coefficients
-    "q110_jpeg_coefficients" ->
-      """WITH base AS (
-        |  SELECT doc_id, 2 + doc_id % 5 AS wb, 1 + doc_id % 3 AS hb
-        |  FROM documents),
-        |cf AS (SELECT doc_id, flatten(list_transform(range(wb*hb), b ->
-        |         list_transform(range(64), k ->
-        |           (((doc_id + b*7 + k*3) % 9) - 4) * (1 + k % 4)))) AS cl
-        |       FROM base)
-        |SELECT b.doc_id AS media_id,
-        |  CAST(b.wb*8 AS BIGINT) AS width, CAST(b.hb*8 AS BIGINT) AS height,
-        |  CAST(b.wb*b.hb*64 AS BIGINT) AS n_units,
-        |  CAST(list_min(c.cl) AS BIGINT) AS unit_min,
-        |  CAST(list_max(c.cl) AS BIGINT) AS unit_max,
-        |  CAST(list_sum(c.cl) AS BIGINT) AS unit_sum
-        |FROM base b JOIN cf c USING (doc_id)""".stripMargin,
-
-    // arithmetic replay of the MP4 Motion-JPEG ground truth: the
-    // sample-table round trip (stsc/stsz/stco assembly on the Spark
-    // write side, generic box-tree walk + per-frame Huffman decode on
-    // the read side) must hand back exactly the planted per-frame
-    // coefficients; the container-shape variants (co64/moov-first/
-    // decoy-trak/padding) cancel out of the statistics by design
-    "q111_mp4_frames" ->
-      """WITH base AS (
-        |  SELECT doc_id, 2 + doc_id % 4 AS nf,
-        |    1 + doc_id % 3 AS wb, 1 + doc_id % 2 AS hb
-        |  FROM documents),
-        |cf AS (SELECT doc_id, flatten(flatten(list_transform(range(nf), f ->
-        |         list_transform(range(wb*hb), b ->
-        |           list_transform(range(64), k ->
-        |             (((doc_id + f*101 + b*7 + k*3) % 9) - 4) * (1 + k % 4)))))) AS cl
-        |       FROM base)
-        |SELECT b.doc_id AS media_id, CAST(b.nf AS BIGINT) AS n_frames,
-        |  CAST(b.wb*8 AS BIGINT) AS width, CAST(b.hb*8 AS BIGINT) AS height,
-        |  CAST(b.nf*b.wb*b.hb*64 AS BIGINT) AS n_units,
-        |  CAST(list_min(c.cl) AS BIGINT) AS unit_min,
-        |  CAST(list_max(c.cl) AS BIGINT) AS unit_max,
-        |  CAST(list_sum(c.cl) AS BIGINT) AS unit_sum
-        |FROM base b JOIN cf c USING (doc_id)""".stripMargin,
-
-    // arithmetic replay of the WARC ground truth: the two framing
-    // layers (Content-Length record framing through gzip members and
-    // decoy records, HTTP envelope split inside response blocks) must
-    // hand back exactly the planted per-response bodies — the decoy
-    // metadata records and the request/warcinfo records cancel out of
-    // the emitted rows by design
-    "q112_warc_responses" ->
-      """WITH base AS (SELECT doc_id, 2 + doc_id % 4 AS nrec FROM documents),
-        |r AS (SELECT doc_id, UNNEST(range(nrec)) AS r FROM base),
-        |x AS (SELECT doc_id, r,
-        |        20 + (doc_id + r) % 40 AS body_len FROM r)
-        |SELECT x.doc_id AS media_id, CAST(x.r AS INT) AS rec_idx,
-        |  'https://example.com/' || CAST(x.doc_id AS VARCHAR) || '/' ||
-        |    CAST(x.r AS VARCHAR) AS target_uri,
-        |  CAST(200 + 100*((x.doc_id + x.r) % 3) AS INT) AS http_status,
-        |  CAST(x.body_len AS BIGINT) AS body_len,
-        |  CAST(list_sum(list_transform(range(x.body_len), j ->
-        |    97 + (x.doc_id + x.r*31 + j*7) % 26)) AS BIGINT) AS body_sum
-        |FROM x""".stripMargin,
-
-    // arithmetic replay of the ZIP ground truth: the central-directory
-    // walk + STORED/raw-DEFLATE decompression + CRC verification must
-    // hand back exactly the planted member bytes; the decoy member's
-    // constant stats are embedded from the same Scala constant that
-    // synthesized it (single source of truth)
-    "q113_zip_entries" ->
-      s"""WITH base AS (SELECT doc_id, 2 + doc_id % 3 AS nent FROM documents),
-        |e AS (SELECT doc_id, nent, UNNEST(range(nent)) AS e FROM base),
-        |x AS (SELECT doc_id, e,
-        |        30 + (doc_id + e) % 50 AS n_bytes FROM e)
-        |SELECT x.doc_id AS media_id, CAST(x.e AS INT) AS entry_idx,
-        |  'doc_' || CAST(x.doc_id AS VARCHAR) || '/part_' ||
-        |    CAST(x.e AS VARCHAR) || '.txt' AS name,
-        |  CAST(CASE WHEN (x.doc_id + x.e) % 2 = 1 THEN 8 ELSE 0 END
-        |    AS INT) AS method,
-        |  CAST(x.n_bytes AS BIGINT) AS n_bytes,
-        |  CAST(list_sum(list_transform(range(x.n_bytes), j ->
-        |    97 + (x.doc_id + x.e*17 + j*5) % 26)) AS BIGINT) AS byte_sum
-        |FROM x
-        |UNION ALL
-        |SELECT doc_id AS media_id, CAST(nent AS INT) AS entry_idx,
-        |  'doc_' || CAST(doc_id AS VARCHAR) || '/decoy.bin' AS name,
-        |  CAST(0 AS INT) AS method,
-        |  CAST(${graft.sources.Zip.decoyLen} AS BIGINT) AS n_bytes,
-        |  CAST(${graft.sources.Zip.decoySum} AS BIGINT) AS byte_sum
-        |FROM base WHERE doc_id % 4 = 0""".stripMargin,
-
-    // arithmetic replay of the TFRecord ground truth: the double-CRC
-    // framing walk (through whole-file gzip on even ids) must hand
-    // back exactly the planted record bytes
-    "q114_tfrecord" ->
-      """WITH base AS (SELECT doc_id, 3 + doc_id % 5 AS nrec FROM documents),
-        |r AS (SELECT doc_id, UNNEST(range(nrec)) AS r FROM base),
-        |x AS (SELECT doc_id, r, 16 + (doc_id + r) % 64 AS n_bytes FROM r)
-        |SELECT x.doc_id AS media_id, CAST(x.r AS INT) AS rec_idx,
-        |  CAST(x.n_bytes AS BIGINT) AS n_bytes,
-        |  CAST(list_sum(list_transform(range(x.n_bytes), j ->
-        |    (x.doc_id + x.r*13 + j*3) % 256)) AS BIGINT) AS byte_sum
-        |FROM x""".stripMargin,
-
-    // arithmetic replay of the tar ground truth: the checksum-verified
-    // octal-framing walk (through gzip, directories, and pax path
-    // overrides) must hand back exactly the planted member bytes and
-    // the pax-overridden long names
-    "q115_tar_entries" ->
-      """WITH base AS (SELECT doc_id, 2 + doc_id % 3 AS nent FROM documents),
-        |e AS (SELECT doc_id, UNNEST(range(nent)) AS e FROM base),
-        |x AS (SELECT doc_id, e, 300 + (doc_id + e) % 600 AS n_bytes FROM e)
-        |SELECT x.doc_id AS media_id, CAST(x.e AS INT) AS entry_idx,
-        |  CASE WHEN x.e = 0 AND x.doc_id % 5 = 0
-        |    THEN 'doc_' || CAST(x.doc_id AS VARCHAR) || '/' ||
-        |      repeat('x', 150) || '/part_0.txt'
-        |    ELSE 'doc_' || CAST(x.doc_id AS VARCHAR) || '/part_' ||
-        |      CAST(x.e AS VARCHAR) || '.txt' END AS name,
-        |  CAST(x.n_bytes AS BIGINT) AS n_bytes,
-        |  CAST(list_sum(list_transform(range(x.n_bytes), j ->
-        |    (x.doc_id + x.e*19 + j*11) % 256)) AS BIGINT) AS byte_sum
-        |FROM x""".stripMargin,
-
-    // replay of the TFRecord export round trip: every document must
-    // come back from the written shards exactly once, keyed by its
-    // id prefix, with the UTF-8 byte length of its text
-    "q116_tfrecord_roundtrip" ->
-      """SELECT doc_id AS media_id,
-        |  CAST(strlen(text) AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
-
-    // arithmetic replay of the tf.Example ground truth: the wire-format
-    // walk (varints through packed/unpacked lists, unknown-field skips)
-    // must hand back exactly the planted feature values; float sums
-    // are exact because the planted floats are small integers
-    "q117_tfexample" ->
-      """WITH base AS (SELECT doc_id,
-        |    8 + doc_id % 24 AS ntok, 2 + doc_id % 6 AS nsc,
-        |    10 + doc_id % 30 AS tl1, 5 + doc_id % 7 AS tl2
-        |  FROM documents)
-        |SELECT doc_id AS media_id, 'tokens' AS key, 'int64' AS kind,
-        |  CAST(ntok AS BIGINT) AS n_values,
-        |  CAST(list_sum(list_transform(range(ntok), j ->
-        |    (doc_id + j*7) % 1000)) AS DOUBLE) AS value_sum
-        |FROM base
-        |UNION ALL
-        |SELECT doc_id, 'score', 'float', CAST(nsc AS BIGINT),
-        |  CAST(list_sum(list_transform(range(nsc), j ->
-        |    (doc_id + j*3) % 512)) AS DOUBLE)
-        |FROM base
-        |UNION ALL
-        |SELECT doc_id, 'text', 'bytes', CAST(tl1 + tl2 AS BIGINT),
-        |  CAST(list_sum(list_transform(range(tl1), j ->
-        |      97 + (doc_id + j*5) % 26))
-        |    + list_sum(list_transform(range(tl2), j ->
-        |      97 + (doc_id + 1 + j*5) % 26)) AS DOUBLE)
-        |FROM base""".stripMargin,
-
-    // replays the two merge-on-read deletes declaratively: the engine's
-    // DV anti-filter must produce exactly the surviving multiset
-    "q118_dv_delete" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE o_orderkey % 13 <> 0 AND o_orderkey % 11 <> 0
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // the needles replayed by key: the bloom path must return exactly
-    // the looked-up documents (md5 hex agrees between engines)
-    "q119_bloom_lookup" ->
-      """SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-        |  CAST(LENGTH(text) AS INT) AS text_len
-        |FROM documents WHERE doc_id IN (42, 137, 444)""".stripMargin,
-
-    // closed-form replay of the planted ADPCM signal: per block,
-    // 97 samples summing to 97·p0b + 1520·D + 32·(2d1+d2) where the
-    // step deltas come from the IMA table at the planted index — the
-    // engine's general decoder must reproduce it bit-exactly
-    "q120_adpcm_audio" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    CAST(doc_id % 8 AS INT) AS i0,
-        |    (doc_id % 1024) - 512 AS p0,
-        |    1 + doc_id % 3 AS nb,
-        |    8000 + (doc_id % 4) * 8000 AS sr
-        |  FROM documents),
-        |d AS (
-        |  SELECT doc_id, sr, nb, p0,
-        |    T[i0+1] + T[i0+1]//8 AS d1,
-        |    -(T[i0+3]//8) AS d2,
-        |    -(T[i0+2]//8) AS d3
-        |  FROM (SELECT *, list_value(7,8,9,10,11,12,13,14,16,17) AS T
-        |        FROM base))
-        |SELECT doc_id AS media_id,
-        |  CAST(sr AS INT) AS sample_rate,
-        |  CAST(97*nb AS BIGINT) AS n_samples,
-        |  CAST(97*nb*p0 + 97*17*(nb*(nb-1)//2)
-        |    + nb*(1520*(d1+d2+d3) + 32*(2*d1+d2)) AS BIGINT) AS sample_sum
-        |FROM d""".stripMargin,
-
-    // replays the two merge-on-read updates declaratively: the engine's
-    // DV anti-filter + post-image appends must produce exactly the
-    // updated multiset
-    "q121_dv_update" ->
-      """SELECT CASE WHEN o_orderkey % 11 = 0 THEN 'X'
-        |            ELSE o_orderstatus END AS o_orderstatus,
-        |  COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)) +
-        |    CASE WHEN o_orderkey % 13 = 0 THEN CAST(1 AS DECIMAL(18,2))
-        |         ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS sum_price
-        |FROM orders
-        |GROUP BY 1""".stripMargin,
-
-    // the merged state replayed declaratively (q88's shape at different
-    // residues): the DV + append plan must produce the same multiset a
-    // full upsert rewrite would
-    "q122_dv_merge" ->
-      """WITH p AS (SELECT p_partkey, p_brand, p_retailprice FROM part),
-        |m AS (
-        |  SELECT p_partkey, p_brand,
-        |    CASE WHEN p_partkey % 5 = 0 THEN p_retailprice + 25.0
-        |         ELSE p_retailprice END AS p_retailprice
-        |  FROM p
-        |  UNION ALL
-        |  SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000
-        |                      FROM part),
-        |    p_brand, p_retailprice
-        |  FROM p WHERE p_partkey % 7 = 0)
-        |SELECT p_brand, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM m GROUP BY p_brand""".stripMargin,
-
-    // replays the constraint lifecycle declaratively: %3∈{0,1} at
-    // original prices (accepted while the CHECK held), %3=2 negated
-    // (accepted only after the drop — and exactly ONCE: had enforcement
-    // silently failed, that batch would land twice and rejected read 0)
-    "q123_check_constraints" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CASE WHEN o_orderkey % 3 = 2
-        |    THEN -CAST(o_totalprice AS DECIMAL(18,2))
-        |    ELSE CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE)
-        |    AS sum_price,
-        |  CAST(1 AS BIGINT) AS rejected_batches
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    // closed-form replay of the planted affine FLAC signal: N = 192·nb
-    // samples of a + d·t sum to N·a + d·N(N-1)/2 — the engine's general
-    // bitstream decoder must reproduce it exactly, CRCs verified
-    "q124_flac_audio" ->
-      """WITH base AS (
-        |  SELECT doc_id,
-        |    (doc_id % 1024) - 512 AS a,
-        |    (doc_id % 7) - 3 AS d,
-        |    192 * (1 + doc_id % 3) AS n,
-        |    CASE CAST(doc_id % 4 AS INT)
-        |      WHEN 0 THEN 8000 WHEN 1 THEN 16000
-        |      WHEN 2 THEN 22050 ELSE 24000 END AS sr
-        |  FROM documents)
-        |SELECT doc_id AS media_id,
-        |  CAST(sr AS INT) AS sample_rate,
-        |  CAST(n AS BIGINT) AS n_samples,
-        |  CAST(n*a + d*n*(n-1)//2 AS BIGINT) AS sample_sum
-        |FROM base""".stripMargin,
-
-    // replays the generated-column lifecycle: every row's o_kgroup is
-    // the rule's value over its FINAL o_orderkey — including the rows
-    // the DV update shifted across group boundaries (recomputation),
-    // and the supplied-and-validated append batch
-    "q125_generated_columns" ->
-      """WITH o AS (
-        |  SELECT CASE WHEN o_orderkey % 5000 = 0
-        |              THEN o_orderkey + 50000 ELSE o_orderkey END AS k,
-        |         CAST(o_totalprice AS DECIMAL(18,2)) AS p
-        |  FROM orders)
-        |SELECT k // 10000 AS o_kgroup, COUNT(*) AS cnt,
-        |  CAST(SUM(p) AS DOUBLE) AS sum_price
-        |FROM o GROUP BY 1""".stripMargin,
-
-    // the clone's lineage replayed declaratively: source rows minus the
-    // pre-clone DV delete (%13) minus the clone's own delete (%7); the
-    // source's post-clone re-append of the %13 rows must be invisible
-    "q126_shallow_clone" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE o_orderkey % 13 <> 0 AND o_orderkey % 7 <> 0
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // the q84 lineage consumed as SQL text (VERSION AS OF through the
-    // DSv2 catalog) — same declarative replay as q84's oracle
-    "q127_sql_time_travel" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  'v1' AS version
-        |FROM orders WHERE o_orderkey % 3 = 0 GROUP BY o_orderstatus
-        |UNION ALL
-        |SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  'v3' AS version
-        |FROM orders WHERE o_orderkey % 3 IN (0, 1)
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // q90's filtered aggregate plus the %10=3 soft delete, replayed
-    // declaratively — layout, skipping, DVs, and the SQL-text path
-    // change the plan, never the answer
-    "q128_sql_skipping_dv" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem
-        |WHERE l_orderkey % 10 <> 3
-        |  AND l_quantity <= 5.0 AND l_extendedprice < 20000.0
-        |  AND l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // CTAS of evens + INSERT of odds = all rows, then the SQL DELETE
-    // replayed as a declarative anti-filter
-    "q129_sql_dml" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE NOT (o_orderstatus = 'F'
-        |           AND CAST(o_totalprice AS DECIMAL(18,2)) < 50000.00)
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // the stream (startingVersion=1) receives exactly the two appended
-    // slices: %4 = 1 and %4 = 2
-    "q130_stream_source" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM orders
-        |WHERE o_orderkey % 4 IN (1, 2)
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // replay of q131's statement sequence: start = keys %3 != 0;
-    // UPDATE bumps 'O' rows +10; MERGE then replaces %6 = 1 keys with
-    // doubled ORIGINAL price (source reads the base view, overwriting
-    // the +10) and inserts the %3 = 0 keys at original price
-    "q131_sql_update_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS p
-        |  FROM orders
-        |), fin AS (
-        |  SELECT o_orderstatus,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN p
-        |         WHEN o_orderkey % 6 = 1 THEN CAST(p * 2 AS DECIMAL(18,2))
-        |         WHEN o_orderstatus = 'O' THEN CAST(p + 10.00 AS DECIMAL(18,2))
-        |         ELSE p END AS price
-        |  FROM base
-        |)
-        |SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(price) AS DOUBLE) AS sum_price
-        |FROM fin GROUP BY o_orderstatus""".stripMargin,
-
-    // replay of q132's DDL lifecycle: all rows carry base_price (the
-    // renamed o_price); only the %3 = 0 rows (inserted AFTER the ADD
-    // COLUMNS) carry bonus = key % 100 — pre-evolution rows read NULL
-    "q132_sql_ddl_evolution" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS p
-        |  FROM orders
-        |)
-        |SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(p) AS DOUBLE) AS sum_base,
-        |  CAST(SUM(CASE WHEN o_orderkey % 3 = 0
-        |    THEN CAST(o_orderkey % 100 AS DECIMAL(18,2)) END) AS DOUBLE)
-        |    AS sum_bonus,
-        |  COUNT(CASE WHEN o_orderkey % 3 = 0 THEN 1 END) AS cnt_bonus
-        |FROM base GROUP BY o_orderstatus""".stripMargin,
-
-    // declarative replay of q133's per-commit accounting: v1 create
-    // (all rows live), v2 deletes the %10=3 keys, v3 updates the %7=0
-    // keys still live (cardinality unchanged) — live_rows is invariant
-    // to the engine's per-file DV-vs-CoW choice, so this replay holds
-    // at every scale factor
-    "q133_sql_history" ->
-      """WITH m AS (SELECT COUNT(*) AS c,
-        |  SUM(CASE WHEN o_orderkey % 10 = 3 THEN 1 ELSE 0 END) AS d
-        |  FROM orders)
-        |SELECT CAST(1 AS BIGINT) AS version, 'create' AS operation,
-        |  CAST(c AS BIGINT) AS live_rows FROM m
-        |UNION ALL SELECT 2, 'delete', CAST(c - d AS BIGINT) FROM m
-        |UNION ALL SELECT 3, 'update', CAST(c - d AS BIGINT) FROM m""".stripMargin,
-
-    "q16_dedup_exact" ->
-      """SELECT array_to_string((string_split(trim(text), ' '))[1:5], ' ') AS dedup_key,
-        |  MIN(doc_id) AS keeper_id, COUNT(*) AS cluster_size
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q17_token_stats" ->
-      """WITH t AS (SELECT doc_id, text, string_split(trim(text), ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  CAST(len(list_distinct(toks)) AS INT) AS n_distinct,
-        |  CAST(LENGTH(text) AS INT) AS n_chars_actual,
-        |  (CAST(LENGTH(text) AS DOUBLE) - CAST(len(toks) - 1 AS DOUBLE))
-        |    / CAST(len(toks) AS DOUBLE) AS mean_token_len
-        |FROM t""".stripMargin,
-
-    "q18_quality_score" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id,
-        |  (CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'and') AS INT)
-        |   + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT)
-        |   + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'in') AS INT)
-        |   + CAST(list_contains(toks,'is') AS INT)) AS hits,
-        |  CAST(len(toks) AS DOUBLE) AS n,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE) AS nd
-        |  FROM t),
-        |q AS (SELECT doc_id,
-        |  0.3 * LEAST((CAST(hits AS DOUBLE) / 7.0) * 2.0, 1.0)
-        |  + 0.4 * (nd / n) + 0.3 * LEAST(n / 100.0, 1.0) AS quality FROM s)
-        |SELECT doc_id, quality, CAST(FLOOR(quality * 10) AS INT) AS quality_bucket FROM q""".stripMargin,
-
-    "q19_lang_id" ->
-      """WITH t AS (SELECT lang, string_split(trim(text), ' ') AS toks FROM documents),
-        |s AS (SELECT lang,
-        |  (CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'and') AS INT)
-        |   + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT)
-        |   + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'in') AS INT)
-        |   + CAST(list_contains(toks,'is') AS INT)) AS s_en,
-        |  (CAST(list_contains(toks,'el') AS INT) + CAST(list_contains(toks,'la') AS INT)
-        |   + CAST(list_contains(toks,'de') AS INT) + CAST(list_contains(toks,'que') AS INT)
-        |   + CAST(list_contains(toks,'y') AS INT) + CAST(list_contains(toks,'en') AS INT)) AS s_es,
-        |  (CAST(list_contains(toks,'le') AS INT) + CAST(list_contains(toks,'les') AS INT)
-        |   + CAST(list_contains(toks,'des') AS INT) + CAST(list_contains(toks,'et') AS INT)
-        |   + CAST(list_contains(toks,'une') AS INT) + CAST(list_contains(toks,'dans') AS INT)) AS s_fr,
-        |  (CAST(list_contains(toks,'der') AS INT) + CAST(list_contains(toks,'die') AS INT)
-        |   + CAST(list_contains(toks,'und') AS INT) + CAST(list_contains(toks,'das') AS INT)
-        |   + CAST(list_contains(toks,'ist') AS INT) + CAST(list_contains(toks,'nicht') AS INT)) AS s_de,
-        |  (CAST(list_contains(toks,'的') AS INT) + CAST(list_contains(toks,'了') AS INT)
-        |   + CAST(list_contains(toks,'是') AS INT)) AS s_zh
-        |  FROM t),
-        |p AS (SELECT lang,
-        |  CASE WHEN s_en = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-        |       WHEN s_es = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-        |       WHEN s_fr = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-        |       WHEN s_de = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'de'
-        |       ELSE 'zh' END AS predicted FROM s)
-        |SELECT lang, predicted, COUNT(*) AS cnt FROM p GROUP BY lang, predicted""".stripMargin,
-
-    "q21_jaccard_probe" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 3
-        |    THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-        |    ELSE [] END) AS s FROM t),
-        |probe AS (SELECT s AS ps FROM sh WHERE doc_id = 0)
-        |SELECT doc_id,
-        |  CAST(len(list_intersect(s, ps)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(s, ps))) AS DOUBLE) AS jaccard
-        |FROM sh, probe WHERE doc_id <> 0
-        |  AND CAST(len(list_intersect(s, ps)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(s, ps))) AS DOUBLE) >= 0.01""".stripMargin,
-
-    "q22_knn_brute" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, embedding AS q FROM e WHERE vec_id < 5),
-        |scored AS (SELECT p.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(p.q, e.embedding),
-        |    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(p.q, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-        |  FROM e, p WHERE e.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, rnk FROM (
-        |  SELECT query_id, neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-        |  FROM scored) t WHERE rnk <= 10""".stripMargin,
-
-    // the ANN recall-contract oracle: the exact rank-1 neighbor is the
-    // same fold arithmetic the q22 oracle hash-matches; count and the
-    // recall/validity booleans are required values (q33 contract form)
-    "q28_knn_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |p AS (SELECT vec_id AS query_id, embedding AS q FROM e WHERE vec_id < 5),
-        |scored AS (SELECT p.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(p.q, e.embedding),
-        |    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(p.q, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-        |  FROM e, p WHERE e.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id AS exact_top1,
-        |  CAST(10 AS BIGINT) AS n_ann_results,
-        |  TRUE AS recall_ok, TRUE AS ann_results_valid
-        |FROM (
-        |  SELECT query_id, neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rnk
-        |  FROM scored) t WHERE rnk = 1""".stripMargin,
-
-    "q23_embedding_neardup" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 5 = 0 AND vec_id < 500)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) > 0.35""".stripMargin,
-
-    "q26_event_windows" ->
-      """SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
-        |  event_type, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q29_bpe_tokens" ->
-      """WITH t AS (SELECT doc_id,
-        |  regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]') AS toks
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(toks) AS INT) AS n_bpe_tokens,
-        |  CAST(len(list_distinct(toks)) AS INT) AS n_bpe_distinct,
-        |  toks[1] AS first_token
-        |FROM t""".stripMargin,
-
-    "q37_corpus_curation" ->
-      """WITH t AS (SELECT doc_id, text, string_split(trim(text), ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, text, toks,
-        |  (CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'and') AS INT)
-        |   + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT)
-        |   + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'in') AS INT)
-        |   + CAST(list_contains(toks,'is') AS INT)) AS s_en,
-        |  (CAST(list_contains(toks,'el') AS INT) + CAST(list_contains(toks,'la') AS INT)
-        |   + CAST(list_contains(toks,'de') AS INT) + CAST(list_contains(toks,'que') AS INT)
-        |   + CAST(list_contains(toks,'y') AS INT) + CAST(list_contains(toks,'en') AS INT)) AS s_es,
-        |  (CAST(list_contains(toks,'le') AS INT) + CAST(list_contains(toks,'les') AS INT)
-        |   + CAST(list_contains(toks,'des') AS INT) + CAST(list_contains(toks,'et') AS INT)
-        |   + CAST(list_contains(toks,'une') AS INT) + CAST(list_contains(toks,'dans') AS INT)) AS s_fr,
-        |  (CAST(list_contains(toks,'der') AS INT) + CAST(list_contains(toks,'die') AS INT)
-        |   + CAST(list_contains(toks,'und') AS INT) + CAST(list_contains(toks,'das') AS INT)
-        |   + CAST(list_contains(toks,'ist') AS INT) + CAST(list_contains(toks,'nicht') AS INT)) AS s_de,
-        |  (CAST(list_contains(toks,'的') AS INT) + CAST(list_contains(toks,'了') AS INT)
-        |   + CAST(list_contains(toks,'是') AS INT)) AS s_zh,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  CAST(len(toks) AS DOUBLE) AS n,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE) AS nd
-        |  FROM t),
-        |p AS (SELECT *,
-        |  CASE WHEN s_en = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-        |       WHEN s_es = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-        |       WHEN s_fr = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-        |       WHEN s_de = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'de'
-        |       ELSE 'zh' END AS pred_lang,
-        |  0.3 * LEAST((CAST(s_en AS DOUBLE) / 7.0) * 2.0, 1.0)
-        |  + 0.4 * (nd / n) + 0.3 * LEAST(n / 100.0, 1.0) AS quality
-        |  FROM s),
-        |f AS (SELECT * FROM p
-        |  WHERE pred_lang = 'en' AND quality >= 0.5 AND n_tokens >= 10),
-        |k AS (SELECT MIN(doc_id) AS doc_id FROM f GROUP BY text)
-        |SELECT f.doc_id, f.pred_lang, f.n_tokens, f.quality
-        |FROM f JOIN k USING (doc_id)""".stripMargin,
-
-    // q37's chain extended to the FULL pipeline: after the exact dedup,
-    // exhaustive 3-gram Jaccard pairs at j >= 0.8 among survivors
-    // (recall-complete on the gate data — see q20) feed a recursive-CTE
-    // transitive closure; each cluster keeps its min doc_id (the
-    // dropDuplicateClusters rule: survivor ⇔ own id = component min)
-    "q42_corpus_curation_full" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, text, string_split(trim(text), ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, text, toks,
-        |  (CAST(list_contains(toks,'the') AS INT) + CAST(list_contains(toks,'and') AS INT)
-        |   + CAST(list_contains(toks,'of') AS INT) + CAST(list_contains(toks,'to') AS INT)
-        |   + CAST(list_contains(toks,'a') AS INT) + CAST(list_contains(toks,'in') AS INT)
-        |   + CAST(list_contains(toks,'is') AS INT)) AS s_en,
-        |  (CAST(list_contains(toks,'el') AS INT) + CAST(list_contains(toks,'la') AS INT)
-        |   + CAST(list_contains(toks,'de') AS INT) + CAST(list_contains(toks,'que') AS INT)
-        |   + CAST(list_contains(toks,'y') AS INT) + CAST(list_contains(toks,'en') AS INT)) AS s_es,
-        |  (CAST(list_contains(toks,'le') AS INT) + CAST(list_contains(toks,'les') AS INT)
-        |   + CAST(list_contains(toks,'des') AS INT) + CAST(list_contains(toks,'et') AS INT)
-        |   + CAST(list_contains(toks,'une') AS INT) + CAST(list_contains(toks,'dans') AS INT)) AS s_fr,
-        |  (CAST(list_contains(toks,'der') AS INT) + CAST(list_contains(toks,'die') AS INT)
-        |   + CAST(list_contains(toks,'und') AS INT) + CAST(list_contains(toks,'das') AS INT)
-        |   + CAST(list_contains(toks,'ist') AS INT) + CAST(list_contains(toks,'nicht') AS INT)) AS s_de,
-        |  (CAST(list_contains(toks,'的') AS INT) + CAST(list_contains(toks,'了') AS INT)
-        |   + CAST(list_contains(toks,'是') AS INT)) AS s_zh,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  CAST(len(toks) AS DOUBLE) AS n,
-        |  CAST(len(list_distinct(toks)) AS DOUBLE) AS nd
-        |  FROM t),
-        |p AS (SELECT *,
-        |  CASE WHEN s_en = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'en'
-        |       WHEN s_es = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'es'
-        |       WHEN s_fr = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'fr'
-        |       WHEN s_de = GREATEST(s_en,s_es,s_fr,s_de,s_zh) THEN 'de'
-        |       ELSE 'zh' END AS pred_lang,
-        |  0.3 * LEAST((CAST(s_en AS DOUBLE) / 7.0) * 2.0, 1.0)
-        |  + 0.4 * (nd / n) + 0.3 * LEAST(n / 100.0, 1.0) AS quality
-        |  FROM s),
-        |f AS (SELECT * FROM p
-        |  WHERE pred_lang = 'en' AND quality >= 0.5 AND n_tokens >= 10),
-        |k AS (SELECT MIN(doc_id) AS doc_id FROM f GROUP BY text),
-        |d AS (SELECT f.* FROM f JOIN k USING (doc_id)),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(toks) >= 3
-        |    THEN list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' '))
-        |    ELSE [] END) AS sset FROM d),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.sset, b.sset))) AS DOUBLE) >= 0.8),
-        |edge AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |         UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (SELECT a, b FROM edge
-        |  UNION SELECT r.a, e.b FROM reach r JOIN edge e ON r.b = e.a),
-        |m AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a)
-        |SELECT d.doc_id, d.pred_lang, d.n_tokens, d.quality
-        |FROM d LEFT JOIN m ON m.id = d.doc_id
-        |WHERE COALESCE(m.mn, d.doc_id) >= d.doc_id""".stripMargin,
-
-    "q31_pivot_native" ->
-      """SELECT user_id % 10 AS bucket,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q32_rollup" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q44_token_budget" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(string_split(trim(text), ' ')) AS INT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT *, SUM(n_tokens) OVER (PARTITION BY lang
-        |    ORDER BY n_tokens DESC, doc_id ASC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t)
-        |SELECT doc_id, lang, n_tokens FROM c WHERE cum <= 5000""".stripMargin,
-
-    "q45_dataset_split" ->
-      s"""SELECT doc_id, lang,
-         |  CASE WHEN md5(CAST(doc_id AS VARCHAR)) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.1)}' THEN 'val'
-         |       WHEN md5(CAST(doc_id AS VARCHAR)) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.2)}' THEN 'test'
-         |       ELSE 'train' END AS split
-         |FROM documents""".stripMargin,
-
-    "q46_salted_agg" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q47_key_histogram" ->
-      """WITH c AS (SELECT l_partkey, COUNT(*) AS cnt FROM lineitem GROUP BY 1),
-        |t AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM lineitem)
-        |SELECT c.l_partkey, c.cnt, 100.0 * c.cnt / t.n AS share_pct
-        |FROM c CROSS JOIN t
-        |ORDER BY c.cnt DESC, c.l_partkey ASC LIMIT 20""".stripMargin,
-
-    "q48_stratified_sample" ->
-      s"""SELECT doc_id, lang FROM documents
-         |WHERE (lang = 'en' AND md5(CAST(doc_id AS VARCHAR)) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.5)}')
-         |   OR (lang = 'fr')
-         |   OR (lang = 'de' AND md5(CAST(doc_id AS VARCHAR)) < '${graft.pipeline.CorpusPipeline.hexThreshold(0.25)}')""".stripMargin,
-
-    "q49_cube" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q51_decontaminate" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 8
-        |    THEN list_transform(range(1, len(w) - 6), i -> array_to_string(w[i:i+7], ' '))
-        |    ELSE [] END) AS gs FROM t),
-        |tg AS (SELECT doc_id, gs FROM sh WHERE doc_id % 10 <> 7),
-        |bg AS (SELECT DISTINCT g FROM (
-        |  SELECT unnest(gs) AS g FROM sh WHERE doc_id % 10 = 7)),
-        |h AS (SELECT doc_id, COUNT(*) AS n_hits FROM (
-        |    SELECT doc_id, unnest(gs) AS g FROM tg) x
-        |  JOIN bg USING (g) GROUP BY doc_id)
-        |SELECT tg.doc_id, CAST(len(gs) AS INT) AS n_grams,
-        |  CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  COALESCE(h.n_hits, 0) >= 1 AS contaminated
-        |FROM tg LEFT JOIN h USING (doc_id)""".stripMargin,
-
-    "q56_media_dims" ->
-      """SELECT doc_id AS media_id,
-        |  CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |    ELSE 'video' END AS kind,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'wav' ELSE 'png' END AS format,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(64 + doc_id % 512 AS BIGINT) END AS width,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(64 + (doc_id % 7) * 64 AS BIGINT) END AS height,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(8000 + (doc_id % 8) * 4000 AS BIGINT) END AS sample_rate,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(1 + doc_id % 2 AS BIGINT) END AS channels
-        |FROM documents""".stripMargin,
-
-    "q54_sequence_pack" ->
-      """WITH t AS (SELECT doc_id, lang,
-        |  CAST(len(string_split(trim(text), ' ')) AS INT) AS n_tokens FROM documents),
-        |c AS (SELECT *, SUM(n_tokens) OVER (PARTITION BY lang
-        |  ORDER BY doc_id ASC
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)
-        |SELECT doc_id, lang, n_tokens,
-        |  CAST(FLOOR((cum - n_tokens) / 2048.0) AS BIGINT) AS seq_id,
-        |  CAST((cum - n_tokens) % 2048 AS BIGINT) AS seq_offset
-        |FROM c""".stripMargin,
-
-    "q55_familiarity" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok
-        |  FROM documents),
-        |f AS (SELECT tok, COUNT(*) AS freq FROM tok GROUP BY tok),
-        |tot AS (SELECT CAST(SUM(freq) AS DOUBLE) AS total FROM f),
-        |d AS (SELECT doc_id, CAST(SUM(f.freq) AS BIGINT) AS sum_freq,
-        |    COUNT(*) AS n FROM tok JOIN f USING (tok) GROUP BY doc_id)
-        |SELECT doc_id, sum_freq, CAST(n AS BIGINT) AS n_tokens,
-        |  CAST(sum_freq AS DOUBLE) / (CAST(n AS DOUBLE) * tot.total) AS familiarity
-        |FROM d CROSS JOIN tot""".stripMargin,
-
-    // q53's exhaustive oracle without the batch restriction: at j >= 0.8
-    // the 16x4 banding recovers EVERY pair on the gate data (verified
-    // bit-identical — ids AND exact-jaccard doubles — at all three sfs),
-    // so the full-corpus brute-force 3-gram Jaccard is a valid oracle
-    // for the LSH path; recall-completeness is a property of THIS
-    // corpus at the near-dup threshold, not an LSH guarantee (q34's
-    // low-threshold regime documents the contrast)
-    "q20_minhash_neardup" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 3
-        |    THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-        |    ELSE [] END) AS s FROM t)
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) x
-        |WHERE jaccard >= 0.8""".stripMargin,
-
-    // the cluster labels are canonical (cluster_id = component min id),
-    // so DuckDB replays them exactly: exhaustive pairs at j >= 0.8
-    // (recall-complete on the gate data, see q20) + transitive closure
-    // via a recursive CTE; unpaired ids label themselves. Incremental ≡
-    // full recompute is ComponentsSpec's proof — the oracle checks the
-    // full-graph answer the incremental path must equal.
-    "q67_incremental_clusters" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 3
-        |    THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-        |    ELSE [] END) AS s FROM t),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.8),
-        |edge AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |         UNION SELECT id_b, id_a FROM pairs),
-        |reach(a, b) AS (SELECT a, b FROM edge
-        |  UNION SELECT r.a, e.b FROM reach r JOIN edge e ON r.b = e.a),
-        |m AS (SELECT a AS id, MIN(b) AS mn FROM reach GROUP BY a)
-        |SELECT t.doc_id AS id,
-        |  CAST(LEAST(t.doc_id, COALESCE(m.mn, t.doc_id)) AS BIGINT) AS cluster_id
-        |FROM t LEFT JOIN m ON m.id = t.doc_id""".stripMargin,
-
-    // id_a < id_b always, so "pair touches the batch (ids >= 250)" is
-    // exactly id_b >= 250
-    "q53_incremental_neardup" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 3
-        |    THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-        |    ELSE [] END) AS s FROM t)
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE b.doc_id >= 250) x
-        |WHERE jaccard >= 0.8""".stripMargin,
-
-    // BM25 with the rational idf core; every constant is cast to DOUBLE
-    // (DuckDB parses bare decimals as DECIMAL) and the parenthesization
-    // mirrors the Spark expression operation-for-operation — IEEE
-    // +,-,*,/ are bit-deterministic given identical operand order
-    "q60_bm25" ->
-      """WITH tok AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |  CAST(SUM(len(w)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl FROM tok),
-        |t AS (SELECT doc_id, len(w) AS dl, unnest(w) AS term FROM tok),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf, MAX(dl) AS dl FROM t
-        |  WHERE term IN ('join', 'hash', 'scan') GROUP BY doc_id, term),
-        |dfs AS (SELECT
-        |    MAX(CASE WHEN term = 'join' THEN df END) AS df0,
-        |    MAX(CASE WHEN term = 'hash' THEN df END) AS df1,
-        |    MAX(CASE WHEN term = 'scan' THEN df END) AS df2
-        |  FROM (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY term)),
-        |p AS (SELECT doc_id, MAX(dl) AS dl,
-        |    MAX(CASE WHEN term = 'join' THEN tf END) AS tf0,
-        |    MAX(CASE WHEN term = 'hash' THEN tf END) AS tf1,
-        |    MAX(CASE WHEN term = 'scan' THEN tf END) AS tf2
-        |  FROM tf GROUP BY doc_id)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN tf0 IS NULL THEN 0 ELSE 1 END
-        |    + CASE WHEN tf1 IS NULL THEN 0 ELSE 1 END
-        |    + CASE WHEN tf2 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS n_matched,
-        |  (CASE WHEN tf0 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf0 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf0 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END
-        |  + CASE WHEN tf1 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf1 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf1 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END
-        |  + CASE WHEN tf2 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf2 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf2 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END) AS score
-        |FROM p CROSS JOIN dfs CROSS JOIN stats""".stripMargin,
-
-    "q63_vocabulary" ->
-      """WITH tok AS (SELECT unnest(string_split(trim(text), ' ')) AS token FROM documents),
-        |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS total FROM tok),
-        |f AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),
-        |top AS (SELECT token, freq FROM f ORDER BY freq DESC, token LIMIT 100)
-        |SELECT token,
-        |  CAST(ROW_NUMBER() OVER (ORDER BY freq DESC, token) AS BIGINT) AS rank,
-        |  freq,
-        |  CAST(SUM(freq) OVER (ORDER BY freq DESC, token
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) / tot.total AS coverage
-        |FROM top CROSS JOIN tot""".stripMargin,
-
-    // replays applyType2's four outcome classes directly: closed old
-    // versions (%7=0), carried rows (everything else), reopened versions
-    // (+10.0), and brand-new offset keys (*2.0) — plain IEEE arithmetic,
-    // bit-identical across engines
-    "q70_scd2" ->
-      """WITH p AS (SELECT p_partkey, p_brand, p_retailprice FROM part)
-        |SELECT p_partkey, p_brand, p_retailprice,
-        |  TIMESTAMP '2020-01-01' AS valid_from,
-        |  TIMESTAMP '2021-06-01' AS valid_to, FALSE AS is_current
-        |FROM p WHERE p_partkey % 7 = 0
-        |UNION ALL
-        |SELECT p_partkey, p_brand, p_retailprice,
-        |  TIMESTAMP '2020-01-01', CAST(NULL AS TIMESTAMP), TRUE
-        |FROM p WHERE p_partkey % 7 <> 0
-        |UNION ALL
-        |SELECT p_partkey, p_brand, p_retailprice + 10.0,
-        |  TIMESTAMP '2021-06-01', CAST(NULL AS TIMESTAMP), TRUE
-        |FROM p WHERE p_partkey % 7 = 0
-        |UNION ALL
-        |SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000
-        |                    FROM part),
-        |  p_brand, p_retailprice * 2.0,
-        |  TIMESTAMP '2021-06-01', CAST(NULL AS TIMESTAMP), TRUE
-        |FROM p WHERE p_partkey % 7 = 2""".stripMargin,
-
-    // full-outer diff classification; concat_ws drops NULL branches so
-    // changed_cols matches Spark's filtered array_join in schema order
-    "q71_snapshot_cdc" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
-        |           FROM orders),
-        |n AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |    CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1.0
-        |         ELSE o_totalprice END AS o_totalprice,
-        |    CASE WHEN o_orderkey % 5 = 0 THEN NULL
-        |         ELSE o_orderpriority END AS o_orderpriority
-        |  FROM o WHERE o_orderkey % 13 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + (SELECT (max(o_orderkey) // 1000000 + 1) * 1000000
-        |                       FROM orders),
-        |    o_orderstatus, o_totalprice, o_orderpriority
-        |  FROM o WHERE o_orderkey % 17 = 0),
-        |j AS (
-        |  SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-        |    o.o_orderkey IS NOT NULL AS in_old, n.o_orderkey IS NOT NULL AS in_new,
-        |    o.o_orderstatus IS DISTINCT FROM n.o_orderstatus AS c_status,
-        |    o.o_totalprice IS DISTINCT FROM n.o_totalprice AS c_price,
-        |    o.o_orderpriority IS DISTINCT FROM n.o_orderpriority AS c_prio
-        |  FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey,
-        |  CASE WHEN NOT in_old THEN 'insert'
-        |       WHEN NOT in_new THEN 'delete' ELSE 'update' END AS change_type,
-        |  CASE WHEN in_old AND in_new THEN
-        |    concat_ws(',', CASE WHEN c_status THEN 'o_orderstatus' END,
-        |                   CASE WHEN c_price THEN 'o_totalprice' END,
-        |                   CASE WHEN c_prio THEN 'o_orderpriority' END)
-        |  ELSE '' END AS changed_cols
-        |FROM j
-        |WHERE NOT (in_old AND in_new) OR c_status OR c_price OR c_prio""".stripMargin,
-
-    // generate_series and Spark's sequence are both stop-INCLUSIVE;
-    // list_slice clamps past the end like Spark's slice
-    "q72_chunking" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS toks
-        |           FROM documents),
-        |s AS (SELECT doc_id, toks, len(toks) AS n,
-        |        unnest(generate_series(0, len(toks) - 1, 24)) AS start
-        |      FROM t)
-        |SELECT doc_id, CAST(start / 24 AS BIGINT) AS chunk_idx,
-        |  CAST(LEAST(32, n - start) AS BIGINT) AS n_chunk_tokens,
-        |  array_to_string(list_slice(toks, start + 1, start + 32), ' ')
-        |    AS chunk_text
-        |FROM s""".stripMargin,
-
-    // the bloom is a pure pruning device — the oracle is the plain
-    // semi-join aggregate
-    "q73_bloom_join" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt,
-        |  COUNT(DISTINCT l_partkey) AS n_parts,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem
-        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size < 10)
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // only integer ranks cross into the fusion, so this needs rank
-    // agreement (q60's bit-exact rational BM25, q22's bit-exact cosine)
-    // plus the order-pinned two-term 1/(60+r) sum mirrored exactly
-    "q74_hybrid_search" ->
-      """WITH tok AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |  CAST(SUM(len(w)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl FROM tok),
-        |t AS (SELECT doc_id, len(w) AS dl, unnest(w) AS term FROM tok),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf, MAX(dl) AS dl FROM t
-        |  WHERE term IN ('join', 'hash', 'scan') GROUP BY doc_id, term),
-        |dfs AS (SELECT
-        |    MAX(CASE WHEN term = 'join' THEN df END) AS df0,
-        |    MAX(CASE WHEN term = 'hash' THEN df END) AS df1,
-        |    MAX(CASE WHEN term = 'scan' THEN df END) AS df2
-        |  FROM (SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY term)),
-        |p AS (SELECT doc_id, MAX(dl) AS dl,
-        |    MAX(CASE WHEN term = 'join' THEN tf END) AS tf0,
-        |    MAX(CASE WHEN term = 'hash' THEN tf END) AS tf1,
-        |    MAX(CASE WHEN term = 'scan' THEN tf END) AS tf2
-        |  FROM tf GROUP BY doc_id),
-        |lexscore AS (SELECT doc_id,
-        |  (CASE WHEN tf0 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf0 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf0 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END
-        |  + CASE WHEN tf1 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf1 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf1 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END
-        |  + CASE WHEN tf2 IS NULL THEN CAST(0.0 AS DOUBLE) ELSE
-        |    ((n_docs - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)))
-        |    * ((CAST(tf2 AS DOUBLE) * CAST(2.2 AS DOUBLE))
-        |      / (CAST(tf2 AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |        * (CAST(0.25 AS DOUBLE) + CAST(0.75 AS DOUBLE)
-        |          * (CAST(dl AS DOUBLE) / avgdl)))) END) AS score
-        |  FROM p, dfs, stats),
-        |lextop AS (SELECT doc_id, rnk FROM (SELECT doc_id,
-        |    ROW_NUMBER() OVER (ORDER BY score DESC, doc_id ASC) AS rnk
-        |  FROM lexscore) WHERE rnk <= 50),
-        |e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 500),
-        |qv AS (SELECT embedding AS q FROM e WHERE vec_id = 0),
-        |cosines AS (SELECT e.vec_id AS doc_id,
-        |  list_sum(list_transform(list_zip(qv.q, e.embedding),
-        |    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(qv.q, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cosine
-        |  FROM e, qv WHERE e.vec_id <> 0),
-        |vectop AS (SELECT doc_id, rnk FROM (SELECT doc_id,
-        |    ROW_NUMBER() OVER (ORDER BY cosine DESC, doc_id ASC) AS rnk
-        |  FROM cosines) WHERE rnk <= 50),
-        |j AS (SELECT COALESCE(l.doc_id, v.doc_id) AS doc_id, l.rnk AS r0, v.rnk AS r1
-        |  FROM lextop l FULL OUTER JOIN vectop v ON l.doc_id = v.doc_id),
-        |f AS (SELECT doc_id,
-        |  (CASE WHEN r0 IS NULL THEN CAST(0.0 AS DOUBLE)
-        |        ELSE CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r0 AS DOUBLE)) END
-        |   + CASE WHEN r1 IS NULL THEN CAST(0.0 AS DOUBLE)
-        |        ELSE CAST(1.0 AS DOUBLE) / (CAST(60.0 AS DOUBLE) + CAST(r1 AS DOUBLE)) END)
-        |    AS rrf_score,
-        |  CAST(CASE WHEN r0 IS NULL THEN 0 ELSE 1 END
-        |     + CASE WHEN r1 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS n_lists
-        | FROM j)
-        |SELECT doc_id, n_lists, rrf_score,
-        |  ROW_NUMBER() OVER (ORDER BY rrf_score DESC, doc_id ASC) AS fused_rank
-        |FROM f""".stripMargin,
-
-    // the dim CTE replays the Type 2 outcome (base versions effective
-    // 1995-01-01, %7=0 updates superseding at 1998-06-01 — INSIDE the
-    // 1995-2001 shipdate range, so facts resolve both versions); DuckDB's
-    // native ASOF LEFT JOIN picks the greatest valid_from <= l_shipdate
-    // per fact — the same version the contiguous-interval semantics define
-    "q80_scd2_asof" ->
-      """WITH p AS (SELECT p_partkey, p_retailprice FROM part),
-        |dim AS (
-        |  SELECT p_partkey, p_retailprice,
-        |    TIMESTAMP '1995-01-01' AS valid_from
-        |  FROM p WHERE p_partkey % 7 = 0
-        |  UNION ALL
-        |  SELECT p_partkey, p_retailprice, TIMESTAMP '1995-01-01'
-        |  FROM p WHERE p_partkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey, p_retailprice + 10.0, TIMESTAMP '1998-06-01'
-        |  FROM p WHERE p_partkey % 7 = 0
-        |  UNION ALL
-        |  SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000
-        |                      FROM part),
-        |    p_retailprice * 2.0, TIMESTAMP '1998-06-01'
-        |  FROM p WHERE p_partkey % 7 = 2),
-        |f AS (SELECT l_partkey AS p_partkey, l_shipdate, l_returnflag
-        |      FROM lineitem WHERE l_partkey % 7 = 0)
-        |SELECT l_returnflag, COUNT(*) AS cnt,
-        |  COUNT(dim.p_retailprice) AS n_matched,
-        |  CAST(SUM(CAST(dim.p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM f ASOF LEFT JOIN dim
-        |  ON f.p_partkey = dim.p_partkey AND f.l_shipdate >= dim.valid_from
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // layout round-trip: the oracle is the SAME filter + aggregate over
-    // the original table — z-order must be answer-preserving
-    "q81_zorder_roundtrip" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt,
-        |  SUM(l_quantity) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem
-        |WHERE l_partkey < 5000 AND l_extendedprice < 30000.0
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // parallel unnest zips the two shifted slices into bigram pairs;
-    // the add-k division mirrors Spark operand-for-operand
-    "q82_lm_train" ->
-      """WITH tok AS (SELECT string_split(trim(text), ' ') AS w FROM documents),
-        |big AS (SELECT unnest(list_slice(w, 1, len(w) - 1)) AS w1,
-        |               unnest(list_slice(w, 2, len(w))) AS w2
-        |        FROM tok WHERE len(w) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM big GROUP BY w1, w2),
-        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM big GROUP BY w1),
-        |v AS (SELECT COUNT(DISTINCT t) AS v
-        |      FROM (SELECT unnest(w) AS t FROM tok))
-        |SELECT w1, w2, c12, c1, v,
-        |  (CAST(c12 AS DOUBLE) + 0.5) /
-        |    (CAST(c1 AS DOUBLE) + 0.5 * CAST(v AS DOUBLE)) AS prob
-        |FROM c12 JOIN c1 USING (w1), v""".stripMargin,
-
-    "q68_percentiles" ->
-      """SELECT source,
-        |  percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars) AS p50,
-        |  percentile_disc(0.95) WITHIN GROUP (ORDER BY n_chars) AS p95,
-        |  COUNT(*) AS n_docs
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // exact duplicate-text structure + char counts; the fingerprint
-    // purity and window-monotonicity invariants are required TRUE — the
-    // q33 contract form for non-SQL hash kernels
-    "q24_fingerprints" ->
-      """WITH g AS (SELECT text, COUNT(*) AS n_text_twins
-        |           FROM documents GROUP BY text)
-        |SELECT d.doc_id, g.n_text_twins, CAST(len(d.text) AS BIGINT) AS n_chars,
-        |  TRUE AS fp_pure, TRUE AS fp_window_monotone
-        |FROM documents d JOIN g USING (text)""".stripMargin,
-
-    // planted exact-text twins must pair at hamming 0; list-wide
-    // invariants required TRUE (q33 contract form — see the query body)
-    "q25_simhash_neardup" ->
-      """SELECT doc_id,
-        |  doc_id + (SELECT (max(doc_id) // 1000000 + 1) * 1000000
-        |            FROM documents) AS twin_id,
-        |  CAST(len(text) AS BIGINT) AS n_chars,
-        |  TRUE AS twin_pair_found, TRUE AS pairs_canonical,
-        |  TRUE AS hamming_within_bound, TRUE AS pairs_distinct
-        |FROM documents WHERE doc_id % 7 = 0""".stripMargin,
-
-    // exhaustive cosine pairs are the exact anchors (q23's arithmetic);
-    // LSH precision/recall-floor booleans required TRUE
-    "q34_embedding_neardup_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 5 = 0 AND vec_id < 500)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  TRUE AS lsh_subset_of_exact, TRUE AS recall_floor_ok
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |    x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) > 0.35""".stripMargin,
-
-    // planted identical-text cliques must co-cluster; membership and
-    // min-label invariants required TRUE
-    "q38_dup_clusters" ->
-      """SELECT doc_id, CAST(len(text) AS BIGINT) AS n_chars,
-        |  TRUE AS clique_co_clustered, TRUE AS cluster_label_bounded,
-        |  TRUE AS membership_unique, TRUE AS cluster_label_is_min_member
-        |FROM documents WHERE doc_id % 11 = 0""".stripMargin,
-
-    // full arithmetic replay of the planted pixel/sample ground truth:
-    // the BMP/WAV-PCM payloads carry formula-derived bytes, the native
-    // kernels decode them back, and DuckDB recomputes every statistic
-    "q27_media_features" ->
-      """WITH base AS (
-        |  SELECT doc_id, doc_id % 3 AS m,
-        |    4 + doc_id % 5 AS w, 2 + doc_id % 3 AS h,
-        |    64 + doc_id % 32 AS ns
-        |  FROM documents),
-        |px AS (SELECT doc_id, flatten(list_transform(range(h), r ->
-        |         list_transform(range(w*3), j -> (doc_id + r*31 + j*7) % 256))) AS pl
-        |       FROM base WHERE m <> 1),
-        |au AS (SELECT doc_id, list_transform(range(ns), k ->
-        |         ((doc_id*13 + k*37) % 4096) - 2048) AS sl
-        |       FROM base WHERE m = 1)
-        |SELECT b.doc_id AS media_id,
-        |  CASE b.m WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-        |  CASE WHEN b.m = 1 THEN 'wav' ELSE 'bmp' END AS format,
-        |  CAST(CASE WHEN b.m = 1 THEN NULL ELSE b.w END AS BIGINT) AS width,
-        |  CAST(CASE WHEN b.m = 1 THEN NULL ELSE b.h END AS BIGINT) AS height,
-        |  CAST(CASE WHEN b.m = 1 THEN b.ns ELSE b.w*3*b.h END AS BIGINT) AS n_units,
-        |  CAST(CASE WHEN b.m = 1 THEN list_min(a.sl) ELSE list_min(p.pl) END AS BIGINT) AS unit_min,
-        |  CAST(CASE WHEN b.m = 1 THEN list_max(a.sl) ELSE list_max(p.pl) END AS BIGINT) AS unit_max,
-        |  CAST(CASE WHEN b.m = 1 THEN list_sum(a.sl) ELSE list_sum(p.pl) END AS BIGINT) AS unit_sum
-        |FROM base b LEFT JOIN px p USING (doc_id) LEFT JOIN au a USING (doc_id)""".stripMargin,
-
-    // planted coincident twins must be SemDeDup'd away; the corpus
-    // minimum can never be (drops always take the larger id)
-    "q78_semantic_dedup" ->
-      """SELECT vec_id,
-        |  vec_id + (SELECT (max(vec_id) // 1000000 + 1) * 1000000
-        |            FROM embeddings) AS twin_id,
-        |  TRUE AS twin_dropped,
-        |  TRUE AS survivors_unique, TRUE AS global_min_survives
-        |FROM embeddings WHERE vec_id < 2000 AND vec_id % 9 = 0""".stripMargin,
-
-    // coincident twins score identically; flag ≡ predicate; exact
-    // scored-count anchor; measured outlier-fraction band
-    "q79_embedding_outliers" ->
-      """WITH e AS (SELECT vec_id FROM embeddings WHERE vec_id < 2000),
-        |n AS (SELECT CAST((SELECT COUNT(*) FROM e) +
-        |  (SELECT COUNT(*) FROM e WHERE vec_id % 13 = 0) AS BIGINT) AS n_scored)
-        |SELECT e.vec_id,
-        |  e.vec_id + (SELECT (max(vec_id) // 1000000 + 1) * 1000000
-        |              FROM embeddings) AS twin_id,
-        |  TRUE AS twin_consistent, n.n_scored, TRUE AS scored_once,
-        |  TRUE AS flag_matches_score, TRUE AS cluster_in_range,
-        |  TRUE AS cosine_bounded, TRUE AS outlier_fraction_sane
-        |FROM e, n WHERE e.vec_id % 13 = 0""".stripMargin,
-
-    // EXACT replay of greedy left-to-right BPE merge application: each
-    // word renders as '|c |c …' (corpus is pipe- and newline-free ASCII,
-    // probed before this oracle landed) and each of the query's ten
-    // literal merges becomes one replace() — '|a |b ' → '|ab ' scans
-    // left-to-right without consuming the next token's '|', which is
-    // precisely pairMerge's non-overlapping greedy semantics. Piece
-    // count = surviving '|' markers.
-    "q76_bpe_compression" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS w
-        |             FROM documents),
-        |t AS (SELECT doc_id, w FROM tok WHERE len(w) > 0),
-        |d AS (SELECT DISTINCT w FROM t),
-        |p AS (SELECT w,
-        |  replace(replace(replace(replace(replace(replace(replace(replace(replace(replace(
-        |    regexp_replace(w, '(.)', '|\1 ', 'g'),
-        |    '|t |h ', '|th '),
-        |    '|th |e ', '|the '),
-        |    '|i |n ', '|in '),
-        |    '|e |r ', '|er '),
-        |    '|a |n ', '|an '),
-        |    '|an |d ', '|and '),
-        |    '|o |r ', '|or '),
-        |    '|e |s ', '|es '),
-        |    '|s |t ', '|st '),
-        |    '|o |n ', '|on ') AS f
-        |  FROM d)
-        |SELECT t.doc_id, COUNT(*) AS n_tokens,
-        |  CAST(SUM(len(f) - len(replace(f, '|', ''))) AS BIGINT) AS n_pieces
-        |FROM t JOIN p USING (w) GROUP BY t.doc_id""".stripMargin,
-
-    // exact per-node in-degree replayed from the same edge arithmetic
-    // (doc_ids are 0..n-1, so the node universe is the doc set); the
-    // PageRank distribution invariants are required TRUE
-    "q93_pagerank" ->
-      """WITH n AS (SELECT COUNT(*) AS n FROM documents),
-        |e AS (
-        |  SELECT doc_id AS src, (doc_id * doc_id + 1) % n.n AS dst
-        |  FROM documents, n
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id - doc_id % 7) % n.n FROM documents, n),
-        |ind AS (SELECT dst AS id, COUNT(*) AS in_links FROM e GROUP BY dst)
-        |SELECT d.doc_id AS id,
-        |  CAST(COALESCE(ind.in_links, 0) AS BIGINT) AS in_links,
-        |  TRUE AS rank_positive_ok, TRUE AS rank_sum_ok, TRUE AS rank_floor_ok
-        |FROM documents d LEFT JOIN ind ON ind.id = d.doc_id""".stripMargin,
-
-    // exact bigram counts; scoring the training corpus itself means no
-    // bigram can be unseen, and the smoothing-floor booleans are
-    // required TRUE (q33 contract form for IEEE log-sums)
-    "q83_lm_score" ->
-      """WITH tok AS (SELECT doc_id, string_split(trim(text), ' ') AS w
-        |             FROM documents)
-        |SELECT doc_id, CAST(len(w) - 1 AS BIGINT) AS n_bigrams,
-        |  CAST(0 AS BIGINT) AS n_unseen,
-        |  TRUE AS logp_positive_ok, TRUE AS logp_bounded_ok
-        |FROM tok WHERE len(w) >= 2""".stripMargin,
-
-    // q33's sketch-contract pattern: DuckDB recomputes the exact
-    // distincts and asserts the HLL-store estimate's 5% bound held
-    "q69_sketch_store" ->
-      """SELECT source, COUNT(DISTINCT text) AS exact_distinct,
-        |  TRUE AS sketch_ok
-        |FROM documents GROUP BY source""".stripMargin,
-
-    // exact (source, probe) token counts zero-filled over the grid; the
-    // CMS one-sided-error and eps*N booleans are required TRUE
-    "q77_cms_store" ->
-      """WITH tok AS (SELECT source,
-        |    unnest(string_split(trim(text), ' ')) AS token FROM documents),
-        |n AS (SELECT source, COUNT(*) AS nn FROM tok GROUP BY source),
-        |probes AS (SELECT unnest(
-        |    ['join', 'hash', 'scan', 'filter', 'merge']) AS token),
-        |c AS (SELECT source, token, COUNT(*) AS c FROM tok
-        |      WHERE token IN ('join', 'hash', 'scan', 'filter', 'merge')
-        |      GROUP BY source, token)
-        |SELECT n.source, p.token, COALESCE(c.c, 0) AS exact_count,
-        |  TRUE AS never_under_ok, TRUE AS bound_ok
-        |FROM n CROSS JOIN probes p
-        |LEFT JOIN c ON c.source = n.source AND c.token = p.token""".stripMargin,
-
-    // version 1 is the create slice; version 3 (post-compact latest) is
-    // create+append — the layout machinery must be answer-invisible
-    "q84_versioned_table" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  'v1' AS version
-        |FROM orders WHERE o_orderkey % 3 = 0 GROUP BY o_orderstatus
-        |UNION ALL
-        |SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  'v3' AS version
-        |FROM orders WHERE o_orderkey % 3 IN (0, 1)
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    // the oracle replays the planted id-derived dims arithmetically —
-    // the Spark side must recover them from bytes via the marker walk
-    "q85_jpeg_dims" ->
-      """SELECT doc_id, 'jpeg' AS format,
-        |  CAST(64 + doc_id % 1024 AS BIGINT) AS width,
-        |  CAST(32 + (doc_id % 9) * 32 AS BIGINT) AS height
-        |FROM documents""".stripMargin,
-
-    // rational-idf score mirrored operand-for-operand (same bit-exact
-    // contract as q60's bm25); ties pinned by term ASC
-    "q86_tfidf_keywords" ->
-      """WITH tok AS (SELECT doc_id,
-        |    unnest(string_split(trim(text), ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-        |df AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents),
-        |s AS (SELECT doc_id, term, tf,
-        |    CAST(tf AS DOUBLE) *
-        |      ((n.n - CAST(df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))
-        |      AS score
-        |  FROM tf JOIN df USING (term), n),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-        |    ORDER BY score DESC, term ASC) AS rnk FROM s)
-        |SELECT doc_id, term, tf, score, rnk FROM r WHERE rnk <= 3""".stripMargin,
-
-    // md5 of the id string ranks identically in both engines — the
-    // sample is a pure function of the data
-    "q87_hash_sample" ->
-      """WITH r AS (SELECT source, doc_id, n_chars,
-        |    ROW_NUMBER() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC, doc_id ASC) AS rnk
-        |  FROM documents)
-        |SELECT source, doc_id, n_chars, rnk FROM r WHERE rnk <= 20""".stripMargin,
-
-    // the merged state replayed declaratively: matched keys take the
-    // bumped price, %9=0 keys insert under scale-derived offset ids
-    "q88_versioned_merge" ->
-      """WITH p AS (SELECT p_partkey, p_brand, p_retailprice FROM part),
-        |m AS (
-        |  SELECT p_partkey, p_brand,
-        |    CASE WHEN p_partkey % 4 = 0 THEN p_retailprice + 25.0
-        |         ELSE p_retailprice END AS p_retailprice
-        |  FROM p
-        |  UNION ALL
-        |  SELECT p_partkey + (SELECT (max(p_partkey) // 1000000 + 1) * 1000000
-        |                      FROM part),
-        |    p_brand, p_retailprice
-        |  FROM p WHERE p_partkey % 9 = 0)
-        |SELECT p_brand, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM m GROUP BY p_brand""".stripMargin,
-
-    // layout + skipping change the plan, never the answer: the oracle
-    // is the plain filtered aggregate over the raw table
-    "q90_skipping_scan" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM lineitem
-        |WHERE l_quantity <= 5.0 AND l_extendedprice < 20000.0
-        |  AND l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // the DELETE drops key<1000 (no NULL keys in orders), the UPDATE
-    // adds 100 to the 5000..5999 band — replayed declaratively
-    "q91_dml_cow" ->
-      """WITH d AS (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |  WHERE NOT (o_orderkey < 1000)),
-        |u AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |    CASE WHEN o_orderkey >= 5000 AND o_orderkey < 6000
-        |         THEN o_totalprice + 100.0 ELSE o_totalprice END
-        |      AS o_totalprice
-        |  FROM d)
-        |SELECT o_orderstatus, COUNT(*) AS cnt,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_price
-        |FROM u GROUP BY o_orderstatus""".stripMargin,
-
-    // the planted MP4 metadata replayed arithmetically: duration_ms =
-    // units * 1000 / timescale, where timescale divides 1000 exactly
-    "q92_mp4_meta" ->
-      """SELECT doc_id, 'mp4' AS format,
-        |  16 + doc_id % 600 AS width,
-        |  16 + (doc_id % 7) * 48 AS height,
-        |  (doc_id % 86400) *
-        |    (CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 4 END)
-        |    AS duration_ms
-        |FROM documents""".stripMargin,
-
-    "q66_oov_rate" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-        |  FROM documents),
-        |f AS (SELECT token, COUNT(*) AS freq FROM tok GROUP BY token),
-        |top AS (SELECT token FROM f ORDER BY freq DESC, token LIMIT 20)
-        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(SUM(CASE WHEN token IN (SELECT token FROM top) THEN 0 ELSE 1 END)
-        |    AS BIGINT) AS n_oov,
-        |  CAST(SUM(CASE WHEN token IN (SELECT token FROM top) THEN 0 ELSE 1 END)
-        |    AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS oov_frac
-        |FROM tok GROUP BY doc_id""".stripMargin,
-
-    // rate = 0.5 * sqrt(nmax/ns) mirrored op-for-op; the 12-hex-digit
-    // threshold replays CorpusPipeline.hexThreshold (trunc before the
-    // BIGINT cast -- CAST alone rounds, Scala toLong truncates)
-    "q64_temperature_mix" ->
-      """WITH n AS (SELECT source, COUNT(*) AS ns FROM documents GROUP BY source),
-        |mx AS (SELECT MAX(ns) AS nmax FROM n),
-        |r AS (SELECT source,
-        |  CAST(0.5 AS DOUBLE) * sqrt(CAST(nmax AS DOUBLE) / CAST(ns AS DOUBLE)) AS rate
-        |  FROM n CROSS JOIN mx)
-        |SELECT d.doc_id, d.source FROM documents d JOIN r ON d.source = r.source
-        |WHERE rate >= 1.0 OR md5(CAST(doc_id AS VARCHAR)) <
-        |  printf('%012x', CAST(trunc(rate * 281474976710656.0) AS BIGINT))
-        |    || '00000000000000000000'""".stripMargin,
-
-    "q62_substring_dup" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |g AS (SELECT doc_id, unnest(CASE WHEN len(w) >= 8
-        |    THEN list_transform(range(1, len(w) - 6), i -> array_to_string(w[i:i+7], ' '))
-        |    ELSE [] END) AS gram FROM t),
-        |gid AS (SELECT doc_id, gram, COUNT(*) AS occ FROM g GROUP BY doc_id, gram),
-        |dupg AS (SELECT gram FROM gid GROUP BY gram HAVING COUNT(*) > 1),
-        |d AS (SELECT doc_id, SUM(occ) AS dup FROM gid
-        |  WHERE gram IN (SELECT gram FROM dupg) GROUP BY doc_id),
-        |n AS (SELECT doc_id,
-        |  CASE WHEN len(w) >= 8 THEN len(w) - 7 ELSE 0 END AS n_windows FROM t)
-        |SELECT n.doc_id, CAST(n_windows AS BIGINT) AS n_windows,
-        |  CAST(COALESCE(dup, 0) AS BIGINT) AS dup_windows,
-        |  CASE WHEN n_windows > 0
-        |    THEN CAST(COALESCE(dup, 0) AS DOUBLE) / CAST(n_windows AS DOUBLE)
-        |    ELSE CAST(0.0 AS DOUBLE) END AS dup_frac
-        |FROM n LEFT JOIN d ON n.doc_id = d.doc_id""".stripMargin,
-
-    // DuckDB regexp_replace needs the 'g' flag to match Spark's
-    // replace-all semantics; patterns are byte-identical to Pii.scala's
-    "q61_pii_redact" ->
-      """WITH aug AS (SELECT doc_id, text
-        |  || CASE WHEN doc_id % 5 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)
-        |       || '@example.com now' ELSE '' END
-        |  || CASE WHEN doc_id % 7 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-        |       || '.25 logged' ELSE '' END
-        |  || CASE WHEN doc_id % 11 = 0 THEN ' call 555-867-'
-        |       || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' today' ELSE '' END AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_email,
-        |  CAST(len(regexp_extract_all(t, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ipv4,
-        |  CAST(len(regexp_extract_all(t, '\b\d{3}-\d{3}-\d{4}\b')) AS BIGINT) AS n_phone,
-        |  regexp_replace(regexp_replace(regexp_replace(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |    '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g') AS redacted
-        |FROM aug""".stripMargin,
-
-    // identical semantics to q53 — the bucketed layout must not change
-    // the answer, only the physical plan
-    "q59_incremental_bucketed" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 3
-        |    THEN list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))
-        |    ELSE [] END) AS s FROM t)
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jaccard
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE b.doc_id >= 250) x
-        |WHERE jaccard >= 0.8""".stripMargin,
-
-    "q58_profile" ->
-      """SELECT 'doc_id' AS col_name, COUNT(*) AS n_rows,
-        |  COUNT(*) - COUNT(doc_id) AS n_nulls,
-        |  COUNT(DISTINCT doc_id) AS n_distinct,
-        |  CAST(MIN(doc_id) AS VARCHAR) AS min_value,
-        |  CAST(MAX(doc_id) AS VARCHAR) AS max_value FROM documents
-        |UNION ALL SELECT 'lang', COUNT(*), COUNT(*) - COUNT(lang),
-        |  COUNT(DISTINCT lang), MIN(lang), MAX(lang) FROM documents
-        |UNION ALL SELECT 'source', COUNT(*), COUNT(*) - COUNT(source),
-        |  COUNT(DISTINCT source), MIN(source), MAX(source) FROM documents
-        |UNION ALL SELECT 'n_chars', COUNT(*), COUNT(*) - COUNT(n_chars),
-        |  COUNT(DISTINCT n_chars), CAST(MIN(n_chars) AS VARCHAR),
-        |  CAST(MAX(n_chars) AS VARCHAR) FROM documents""".stripMargin,
-
-    "q57_benchmark_report" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |sh AS (SELECT doc_id,
-        |  list_distinct(CASE WHEN len(w) >= 8
-        |    THEN list_transform(range(1, len(w) - 6), i -> array_to_string(w[i:i+7], ' '))
-        |    ELSE [] END) AS gs FROM t),
-        |tg AS (SELECT doc_id AS tid, unnest(gs) AS g FROM sh WHERE doc_id % 10 <> 7),
-        |bg AS (SELECT doc_id AS bench_id, unnest(gs) AS g FROM sh WHERE doc_id % 10 = 7),
-        |p AS (SELECT bench_id, tid, COUNT(*) AS shared
-        |  FROM tg JOIN bg USING (g) GROUP BY 1, 2),
-        |r AS (SELECT bench_id, COUNT(*) AS n_contaminating_docs,
-        |    MAX(shared) AS max_shared_grams
-        |  FROM p WHERE shared >= 1 GROUP BY 1)
-        |SELECT b.doc_id AS bench_id,
-        |  CAST(COALESCE(r.n_contaminating_docs, 0) AS BIGINT) AS n_contaminating_docs,
-        |  CAST(COALESCE(r.max_shared_grams, 0) AS BIGINT) AS max_shared_grams
-        |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 7) b
-        |LEFT JOIN r ON b.doc_id = r.bench_id""".stripMargin,
-
-    "q52_repetition_stats" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
-        |g AS (SELECT doc_id, w, CASE WHEN len(w) >= 2
-        |  THEN list_transform(range(1, len(w)), i -> array_to_string(w[i:i+1], ' '))
-        |  ELSE [] END AS g2 FROM t),
-        |tm AS (SELECT doc_id, MAX(c) AS topt FROM (
-        |    SELECT doc_id, tok, COUNT(*) AS c FROM (
-        |      SELECT doc_id, unnest(w) AS tok FROM t) x GROUP BY 1, 2) y
-        |  GROUP BY 1),
-        |gm AS (SELECT doc_id, MAX(c) AS topg FROM (
-        |    SELECT doc_id, gr, COUNT(*) AS c FROM (
-        |      SELECT doc_id, unnest(g2) AS gr FROM g) x GROUP BY 1, 2) y
-        |  GROUP BY 1)
-        |SELECT g.doc_id, CAST(len(w) AS INT) AS n_tokens,
-        |  CASE WHEN len(g2) > 0 THEN CAST(len(g2) - len(list_distinct(g2)) AS DOUBLE)
-        |    / CAST(len(g2) AS DOUBLE) ELSE 0.0 END AS dup_2gram_frac,
-        |  CASE WHEN len(g2) > 0 THEN CAST(COALESCE(gm.topg, 0) AS DOUBLE)
-        |    / CAST(len(g2) AS DOUBLE) ELSE 0.0 END AS top_2gram_frac,
-        |  CASE WHEN len(w) > 0 THEN CAST(COALESCE(tm.topt, 0) AS DOUBLE)
-        |    / CAST(len(w) AS DOUBLE) ELSE 0.0 END AS top_token_frac
-        |FROM g LEFT JOIN gm USING (doc_id) LEFT JOIN tm USING (doc_id)""".stripMargin,
-
-    "q50_sessionize" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |l AS (SELECT *, LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev FROM e),
-        |s AS (SELECT *, CAST(SUM(CASE WHEN prev IS NULL
-        |    OR epoch(ts) - epoch(prev) > 1800 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS session_id
-        |  FROM l)
-        |SELECT user_id, session_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, session_id""".stripMargin
-  )
+  def oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types._
 
 /** Loaders for the driver's synthetic parquet tables (TESTDATA.md).
@@ -54,7 +54,7 @@ object Tables {
             throw new IllegalStateException(
               s"unsupported ${f.name} encoding: ${f.dataType.simpleString}" +
                 " (expected a timestamp flavor; numeric epoch encodings" +
-                " need an explicit decode like SparkEntry.events)")
+                " need an explicit decode like Tables.events)")
           col(f.name).cast(t).as(f.name)
         case _ => col(f.name)
       }
@@ -82,7 +82,7 @@ object Tables {
   // parquet pushdown on the date columns is untouched. A numeric epoch
   // encoding fails loudly instead of silently mis-casting (see
   // [[normalize]]); events is the one table with nanos-as-long
-  // provenance and keeps its dedicated decode in SparkEntry.events.
+  // provenance and keeps its dedicated decode in [[events]].
   private val lineitemCanon: Map[String, DataType] = Map(
     "l_orderkey" -> LongType, "l_partkey" -> LongType,
     "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
@@ -131,7 +131,59 @@ object Tables {
     normalize(load(spark, sfDir, "nation"), nationCanon)
   def region(spark: SparkSession, sfDir: String): DataFrame =
     normalize(load(spark, sfDir, "region"), regionCanon)
-  def events(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "events")
+
+  /** events.parquet's physical `ts` encoding has varied across testdata
+    * drops — INT64 TIMESTAMP(NANOS) (readable only as long via
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in
+    * `graft.Session.conf`), TIMESTAMP(MICROS, NTZ), and plain
+    * TIMESTAMP(MICROS). A real engine reads what the lake
+    * contains, so branch on the arrived type and normalize every path to
+    * session-zoned TimestampType at microsecond precision:
+    *
+    *   - LongType (nanos-as-long): integral `DIV 1000` then
+    *     `timestamp_micros` — division as double would lose precision on
+    *     epoch nanos (1.7e18 exceeds double's 53-bit mantissa), and the
+    *     truncation matches DuckDB's implicit ns→us narrowing. A per-row
+    *     magnitude guard (`raise_error` under 10¹⁶) fails fast with a
+    *     descriptive message if a future drop encodes ts as plain epoch
+    *     MICROS in an INT64 column: micros for any date through 2100 stay
+    *     below 4.2e15, nanos for any date after 1970-04-26 exceed 10¹⁶,
+    *     so the bound cleanly separates the encodings instead of letting
+    *     a silent 1000× scale error surface as an oracle mismatch.
+    *   - TimestampNTZType: cast to TimestampType. The session is pinned
+    *     to UTC (`graft.Session` + build.sbt), so the naive wall-clock
+    *     value maps to the identical microsecond instant DuckDB reads
+    *     natively.
+    *   - TimestampType: already what we want.
+    *
+    * A registered query never mutates shared session config (a concurrent
+    * user of the same session reading nanos parquet would silently get
+    * longs), which is why the legacy flag lives in `graft.Session`.
+    */
+  def events(spark: SparkSession, sfDir: String): DataFrame = {
+    val raw = load(spark, sfDir, "events")
+    raw.schema("ts").dataType match {
+      case LongType        =>
+        // assert_true sits INSIDE the ts expression (a detached guard
+        // column would be pruned away by Catalyst and never evaluate)
+        raw.withColumn("ts", timestamp_micros(expr(
+          "IF(assert_true(ts IS NULL OR ts >= 10000000000000000, " +
+            "concat('events.ts INT64 value ', ts, " +
+            "' is below the epoch-nanos range - likely plain epoch " +
+            "micros; events() assumes nanos-as-long provenance')) IS NULL, " +
+            "ts DIV 1000, NULL)")))
+      case TimestampNTZType =>
+        require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
+          "events with TIMESTAMP_NTZ ts require spark.sql.session.timeZone=UTC " +
+            "so the naive→zoned cast is identity and the DuckDB oracle hash-matches")
+        raw.withColumn("ts", col("ts").cast(TimestampType))
+      case TimestampType   => raw
+      case other => throw new IllegalStateException(
+        s"unsupported events.ts encoding: $other (expected INT64 nanos-as-long, " +
+          "TIMESTAMP_NTZ, or TIMESTAMP)")
+    }
+  }
+
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     normalize(load(spark, sfDir, "documents"), documentsCanon)
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =

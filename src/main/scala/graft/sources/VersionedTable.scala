@@ -3021,19 +3021,17 @@ object VersionedTable {
         } catch {
           // the recursive walk raced an IN-FLIGHT writer mutating its
           // staging subdir: task `_temporary` entries vanish between
-          // the directory list and the per-file stat (which on the
-          // local FS can even shell out and surface a RuntimeException
-          // rather than FNF). Active mutation IS freshness — keep the
-          // subdir this sweep; a genuinely dead subdir stops mutating
-          // and is reclaimed by the next one.
+          // the directory list and the per-file stat. Active mutation IS
+          // freshness — keep the subdir this sweep; a genuinely dead
+          // subdir stops mutating and is reclaimed by the next one.
           case _: java.io.FileNotFoundException => fresh = true
-          case _: RuntimeException => fresh = true
-          // the local FS can also deny a task's `_temporary` attempt dir
-          // while the writer creates it: the same race. A denial that
-          // persists would keep the subdir forever, so it is logged.
-          case e: java.nio.file.AccessDeniedException =>
-            log.warn(s"vacuumOrphans: access denied walking ${sub.getPath} " +
-              s"(${e.getMessage}); keeping it this sweep")
+          // the local FS can also surface that race as a RuntimeException
+          // (a stat that shells out) or deny a task's `_temporary` attempt
+          // dir while the writer creates it. Either one that persists
+          // would keep the subdir forever, so it is logged.
+          case e @ (_: java.nio.file.AccessDeniedException | _: RuntimeException) =>
+            log.warn(s"vacuumOrphans: could not walk ${sub.getPath} ($e); " +
+              "keeping it this sweep")
             fresh = true
         }
         if (!fresh && fs.delete(sub.getPath, true)) deleted += parquet

@@ -11,7 +11,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("q36 fixture tags differ for sf dirs with equal hash codes") {
     assert("/x/Aa".hashCode == "/x/BB".hashCode)
-    assert(SparkEntry.fixtureTag("/x/Aa") != SparkEntry.fixtureTag("/x/BB"))
+    assert(queries.Fixtures.fixtureTag("/x/Aa") != queries.Fixtures.fixtureTag("/x/BB"))
   }
 
   test("bucketed co-located join eliminates the shuffle on both sides") {

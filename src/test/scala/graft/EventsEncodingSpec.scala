@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * long via the legacy flag), TIMESTAMP(MICROS, NTZ), and plain
   * TIMESTAMP(MICROS) at different times, and a silent swap once zeroed
   * out the entire temporal query family for a round. This spec pins
-  * `SparkEntry.events`' encoding adaptivity: the SAME logical events
+  * `Tables.events`' encoding adaptivity: the SAME logical events
   * written in all three encodings must normalize to identical
   * session-zoned micros and produce identical q50/q39 answers.
   */
@@ -57,7 +57,7 @@ class EventsEncodingSpec extends AnyFunSuite {
 
   test("every encoding normalizes to session-zoned TimestampType micros") {
     for ((name, dir) <- allDirs) {
-      val ev = SparkEntry.events(spark, dir)
+      val ev = Tables.events(spark, dir)
       assert(ev.schema("ts").dataType === TimestampType,
         s"$name must normalize to TimestampType")
       val tsSet = ev.select(unix_micros(col("ts"))).as[Long].collect().sorted
@@ -81,7 +81,7 @@ class EventsEncodingSpec extends AnyFunSuite {
 
   test("an unsupported encoding fails loudly, not silently") {
     val dir = writeDir(_.withColumn("ts", col("ts").cast("string")))
-    val e = intercept[IllegalStateException](SparkEntry.events(spark, dir))
+    val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("unsupported events.ts encoding"))
   }
 }

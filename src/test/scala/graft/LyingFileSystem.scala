@@ -40,8 +40,10 @@ class HonestFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 /** The local filesystem under the `denying` scheme, whose `listFiles` of
   * a directory named [[DenyingFileSystem.Denied]] throws
   * `AccessDeniedException`: what the local filesystem can raise on a
-  * task's `_temporary` attempt dir while a writer is creating it. Other
-  * `listFiles` calls go to the `file` scheme, since the raw local
+  * task's `_temporary` attempt dir while a writer is creating it. A
+  * directory named [[DenyingFileSystem.Failing]] throws a
+  * `RuntimeException` instead, as a store whose walk always fails does.
+  * Other `listFiles` calls go to the `file` scheme, since the raw local
   * filesystem cannot locate blocks under another scheme.
   */
 class DenyingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -51,10 +53,13 @@ class DenyingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       recursive: Boolean): RemoteIterator[LocatedFileStatus] =
     if (f.getName == DenyingFileSystem.Denied)
       throw new java.nio.file.AccessDeniedException(f.toString)
+    else if (f.getName == DenyingFileSystem.Failing)
+      throw new IllegalArgumentException(s"cannot walk $f")
     else org.apache.hadoop.fs.FileSystem.getLocal(getConf)
       .listFiles(new Path(f.toUri.getPath), recursive)
 }
 
 object DenyingFileSystem {
   val Denied = "v9_denied"
+  val Failing = "v7_failing"
 }

@@ -178,7 +178,7 @@ class TpchEncodingSpec extends AnyFunSuite {
   test("a numeric timestamp encoding fails loudly, not silently") {
     // a long epoch column would cast as SECONDS and corrupt every date
     // silently; the normalizer must refuse (the events-table nanos
-    // class gets an explicit decode instead — SparkEntry.events)
+    // class gets an explicit decode instead — Tables.events)
     val dir = java.nio.file.Files.createTempDirectory("graft-tpchenc").toString
     lineitemBase.withColumn("l_shipdate",
         unix_micros(col("l_shipdate").cast(TimestampType)))

@@ -297,8 +297,10 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = s"denying://$base/table"
     VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    // two old debris subdirs; walking the first is denied
-    val Seq(denied, dead) = Seq(DenyingFileSystem.Denied, "v8_dead").map { name =>
+    // three old debris subdirs; walking the first is denied and walking
+    // the second throws a RuntimeException
+    val Seq(denied, failing, dead) = Seq(DenyingFileSystem.Denied,
+        DenyingFileSystem.Failing, "v8_dead").map { name =>
       val sub = new org.apache.hadoop.fs.Path(s"$dir/data/$name")
       val f = new org.apache.hadoop.fs.Path(sub, "part-junk.parquet")
       val o = fs.create(f); o.write(1); o.close()
@@ -310,8 +312,10 @@ class VersionedTableSpec extends AnyFunSuite {
       assert(VersionedTable.vacuumOrphans(spark, dir, graceMs = 0) === 1)
     }
     assert(fs.exists(denied), "a subdir whose walk is denied counts as fresh")
+    assert(fs.exists(failing), "a subdir whose walk fails counts as fresh")
     assert(!fs.exists(dead))
-    assert(warnings.exists(_.contains(s"data/${DenyingFileSystem.Denied}")), warnings)
+    for (name <- Seq(DenyingFileSystem.Denied, DenyingFileSystem.Failing))
+      assert(warnings.exists(_.contains(s"data/$name")), warnings)
     assert(ids(VersionedTable.read(spark, dir)) === Set(1L))
   }
 
