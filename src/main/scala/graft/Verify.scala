@@ -3,11 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The names in `subset` that match no registered query, in order. */
+  def unknownQueries(subset: Seq[String]): Seq[String] =
+    subset.filterNot(SparkEntry.queries.contains).distinct
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args: run only the named queries (dev loop);
     // the driver passes exactly two args and gets the full registry
     val only = args.drop(2).toSet
+    val unknown = unknownQueries(args.drop(2).toSeq)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] no registered query named ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = Session.build(sfDir)
     // DuckDB (dev/check.py) reads this output: INT96 is the encoding it
     // renders as a naive timestamp, where MICROS (isAdjustedToUTC) would

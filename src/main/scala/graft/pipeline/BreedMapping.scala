@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{Merge, Standardize}
 
@@ -14,6 +18,11 @@ import graft.operators.{Merge, Standardize}
   * curation is data, not engine — loaded by `referencePairs`.
   * `upsertMapping` emulates MERGE with the library's full-outer-join
   * upsert (no Delta in this environment).
+  *
+  * Scale notes: `normalizedUpdates` normalizes and deduplicates its pairs
+  * on the driver and returns a local relation, so neither building the
+  * 552-pair `referenceDim` nor broadcasting it into silver's enrichment
+  * join launches a Spark job.
   */
 object BreedMapping {
 
@@ -59,17 +68,29 @@ object BreedMapping {
   def referenceDim(spark: SparkSession): DataFrame =
     normalizedUpdates(spark, referencePairs)
 
+  /** The schema of the mapping dim `normalizedUpdates` returns. */
+  val dimSchema: StructType = StructType(Seq(
+    StructField("breed_variant_key", StringType),
+    StructField("breed_standard", StringType)))
+
   /** Build the normalized, deduplicated mapping updates from raw pairs
     * (reference: breed_mapping.py:581-593 — normalize with the SAME
-    * expression silver uses, then max(breed_standard) per key).
+    * expression silver uses, then max(breed_standard) per key). The
+    * projection over the local pairs collects without a Spark job; the max
+    * per key is taken on the driver under Spark's string order, as `max`
+    * does, and the result is a local relation.
     */
   def normalizedUpdates(spark: SparkSession, pairs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    pairs.toDF("breed_raw", "breed_standard")
-      .select(Standardize.normalizedKey(col("breed_raw")).as("breed_variant_key"),
-        upper(trim(col("breed_standard"))).as("breed_standard"))
-      .groupBy("breed_variant_key")
-      .agg(max("breed_standard").as("breed_standard"))
+    val normalized = pairs.toDF("breed_raw", "breed_standard")
+      .select(Standardize.normalizedKey(col("breed_raw")),
+        upper(trim(col("breed_standard"))))
+      .collect()
+    val rows = normalized.groupBy(_.getString(0)).map { case (key, group) =>
+      Row(key, group.flatMap(r => Option(r.getString(1)))
+        .maxByOption(UTF8String.fromString).orNull)
+    }
+    spark.createDataFrame(rows.toSeq.asJava, dimSchema)
   }
 
   /** MERGE-upsert updates into the dim (reference: breed_mapping.py:596-603). */

@@ -11,13 +11,14 @@ import Model._
   * anti-join idempotency, partitioned append.
   *
   * Scale notes: the shuffles are the guard aggregate's distinct ids and the
-  * anti-join against existing bronze ids (key projection only); the write
-  * partitions by (Year, ANIMAL_TYPE) so downstream partition pruning is
-  * free. Everything else is a narrow codegen'd map over the CSV scan.
-  * Actions per run: the date probe, then `GuardedAppend`'s guard
-  * aggregate and count, the append and the ledger write. The date probe
-  * runs on the driver and the ledger probe is a directory listing, so a
-  * ledger hit launches no Spark job; an empty batch writes nothing.
+  * anti-join against existing bronze ids (key projection only), which the
+  * guard aggregate's fresh-row count also probes; the write partitions by
+  * (Year, ANIMAL_TYPE) so downstream partition pruning is free. Everything
+  * else is a narrow codegen'd map over the CSV scan. Actions per run: the
+  * date probe, then `GuardedAppend`'s guard aggregate (which also counts
+  * the fresh rows), the append and the ledger write. The date probe runs
+  * on the driver and the ledger probe is a directory listing, so a ledger
+  * hit launches no Spark job; an empty batch writes nothing.
   */
 object Bronze {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{Dedup => DocDedup, MinHashDedup}
+import graft.dedup.MinHashDedup
 import graft.functions.TextFunctions
 
 /** Composed training-data curation pipeline over a `documents`-shaped

@@ -73,11 +73,16 @@ object Orchestrator {
     * shared date parameter, like the yaml's job parameter). Gold
     * registers the analytic views over the refreshed silver. Returns
     * per-stage outcomes; stages after a failed one are "skipped".
+    *
+    * Actions per re-run of a loaded day: one Spark job, gold's
+    * schema-inferring read of silver. The bronze and silver ledger probes
+    * are directory listings, the breed dim is not built, and gold's views
+    * are already registered over that silver snapshot, so nothing is
+    * re-analysed.
     */
   def runAll(spark: SparkSession, cfg: Model.PipelineConfig,
       mapping: Option[DataFrame] = None,
       sleep: Long => Unit = Thread.sleep): RunReport = {
-    val dim = mapping.getOrElse(BreedMapping.referenceDim(spark))
     def skipped(done: StageResult*) = RunReport(done ++
       Seq("raw_to_bronze", "bronze_to_silver", "silver_to_gold").drop(done.size)
         .map(StageResult(_, 0, "skipped")))
@@ -90,8 +95,9 @@ object Orchestrator {
     if (bronzeOk.isEmpty || !Sources.dirNonEmpty(spark, cfg.bronzeDir))
       return skipped(bronzeRes)
 
-    val (silverRes, silverOk) =
-      runStage("bronze_to_silver", SilverRetry, sleep)(Silver.run(spark, cfg, dim))
+    // the dim is built only when silver's ledger probe misses
+    val (silverRes, silverOk) = runStage("bronze_to_silver", SilverRetry, sleep)(
+      Silver.run(spark, cfg, mapping.getOrElse(BreedMapping.referenceDim(spark))))
     // a day can legitimately produce no silver rows (empty batch) before
     // the table's first load — gold then has nothing to register
     if (silverOk.isEmpty || !Sources.dirNonEmpty(spark, cfg.silverDir))

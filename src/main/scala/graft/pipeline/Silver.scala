@@ -14,12 +14,14 @@ import Model._
   *
   * Scale notes: bronze is partitioned by (Year, ANIMAL_TYPE), so the
   * ingestion_date filter is a pushed data filter, not a partition filter:
-  * every run opens every bronze file's footer; the mapping dim is tiny (~560 rows)
-  * so the enrichment join is broadcast — no shuffle; the other shuffles are
-  * the dedup window on _id, the guard aggregate's distinct ids and the
-  * anti-join, all on the narrow key. Actions per run: `GuardedAppend`'s
-  * guard aggregate and count, the append and the ledger write. A day with
-  * a silver ledger row is skipped before any read, so its re-run launches
+  * every run opens every bronze file's footer; the mapping dim is tiny
+  * (~490 rows) so the enrichment join is broadcast — no shuffle, and the
+  * reference dim is a local relation, so no job builds it; the other
+  * shuffles are the dedup window on _id, the guard aggregate's distinct ids
+  * and the anti-join, all on the narrow key. Actions per run:
+  * `GuardedAppend`'s guard aggregate (which also counts the fresh rows),
+  * the append and the ledger write, so the batch is evaluated twice. A day
+  * with a silver ledger row is skipped before any read, so its re-run launches
   * no Spark job. A day without one (an empty batch, or a run that failed
   * after its append) goes through the guards again, and the anti-join
   * keeps that re-run from landing any row twice.
@@ -39,8 +41,10 @@ object Silver {
     "breed_raw", "breed_variant_key", "breed_standard", "breed_mapped",
     "ingestion_date", "ingestion_ts", "processed_ts")
 
-  /** One silver run over a single ingestion_date batch. */
-  def run(spark: SparkSession, cfg: PipelineConfig, mapping: DataFrame): Result = {
+  /** One silver run over a single ingestion_date batch. `mapping` is
+    * built only when the ledger probe misses.
+    */
+  def run(spark: SparkSession, cfg: PipelineConfig, mapping: => DataFrame): Result = {
     // ledger probe: a day that already landed rows is a no-op
     if (LoadControl.alreadyLoaded(spark, cfg.controlDir, Dataset, cfg.ingestionDate))
       return SkippedEmptyBatch

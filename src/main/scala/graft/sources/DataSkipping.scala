@@ -286,7 +286,6 @@ object DataSkipping {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(files.size, 16)))
     try {
-      import scala.jdk.CollectionConverters._
       val futs = files.map(f => f ->
         pool.submit(new java.util.concurrent.Callable[Option[FileStats]] {
           def call(): Option[FileStats] = oneFile(f)

@@ -2549,7 +2549,7 @@ object VersionedTable {
     if (dvd.isEmpty || snap.dvFiles.isEmpty) return plain(files)
     val schema = snap.schema.getOrElse(sys.error(
       s"table $dir carries deletion vectors but no recorded schema"))
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val lived = scanWithPos(spark, dir, snap, dvd)
       .select(schema.fieldNames.map(col).toSeq: _*)
     val plainFiles = files.filterNot(snap.dvn.contains)

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,6 +37,48 @@ class BreedMappingSpec extends AnyFunSuite {
     // list maps SHIHTZU to both 'SHIHTZU' and 'SHIH TZU', and max picks
     // 'SHIHTZU' there exactly as the reference deployment does
     assert(rows("SHIHTZU") == "SHIHTZU")
+  }
+
+  /** The reference's normalize-then-max dedup as a Spark aggregate. */
+  private def aggregated(pairs: Seq[(String, String)]) =
+    pairs.toDF("breed_raw", "breed_standard")
+      .select(Standardize.normalizedKey(col("breed_raw")).as("breed_variant_key"),
+        upper(trim(col("breed_standard"))).as("breed_standard"))
+      .groupBy("breed_variant_key")
+      .agg(max("breed_standard").as("breed_standard"))
+
+  test("normalizedUpdates equals Spark's normalize-and-max aggregate, as a local relation") {
+    // beyond the curated pairs: null variant and standards, and two
+    // standards whose UTF-16 order differs from Spark's (UTF-8 byte) order
+    val edge: Seq[(String, String)] = Seq((null, "A"), ("n", null), ("n2", null), ("n2", "b"),
+      ("k", "\uFFFF"), ("k", "\uD83D\uDE00"))
+    for (pairs <- Seq(BreedMapping.referencePairs, BreedMapping.referencePairs ++ edge, edge)) {
+      val dim = BreedMapping.normalizedUpdates(spark, pairs)
+      val want = aggregated(pairs)
+      assert(dim.schema == want.schema) // nullability included
+      assert(dim.exceptAll(want).isEmpty, "dim rows the aggregate lacks")
+      assert(want.exceptAll(dim).isEmpty, "aggregate rows the dim lacks")
+      assert(dim.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        dim.queryExecution.optimizedPlan)
+    }
+    val k = BreedMapping.normalizedUpdates(spark, edge)
+      .filter(col("breed_variant_key") === "K").as[(String, String)].collect()
+    assert(k.toSeq == Seq(("K", "\uD83D\uDE00")))
+  }
+
+  test("building and collecting the reference dim launches no Spark job") {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerSync.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(BreedMapping.referenceDim(spark).collect().length == 486)
+      ListenerSync.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(started.get == 0)
   }
 
   test("runbook coverage arithmetic reproduces over a fixture silver") {

@@ -375,7 +375,6 @@ class MediaSpec extends AnyFunSuite {
 
   test("PNG pixel decode: real Deflater->Inflater round trip over stored " +
       "and Huffman blocks recovers the planted scanlines exactly") {
-    import org.apache.spark.sql.functions.col
     val docs = Tables.documents(spark, SparkTestSession.sfTiny)
     val out = Media.decodePngPixels(Media.fromDocumentsPngPixels(docs))
       .as[(Long, Option[Long], Option[Long], Option[Long], Option[Long],

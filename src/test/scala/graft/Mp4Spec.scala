@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.multimodal.{Jpeg, Media, Mp4}
+import graft.multimodal.{Jpeg, Mp4}
 
 /** The MP4 tier's new logic vs [[JpegSpec]] is the SAMPLE TABLE: frame
   * bytes are reachable only by joining stsd/stts/stsc/stsz/stco|co64

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Idempotency
 import graft.pipeline._
 import graft.pipeline.Model.PipelineConfig
 import graft.sources.Sources
@@ -140,12 +141,13 @@ class PipelineSpec extends AnyFunSuite {
     withPipelineDirs { (_, cfg) =>
       writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
       val dim = mapping(spark)
-      // date probe, guard aggregate, count, append, ledger append
+      // date probe, guard aggregate (with the fresh-row count), append,
+      // ledger append
       val bronze = actions(assert(Bronze.run(spark, cfg) == Bronze.Loaded(5)))
-      assert(bronze.size == 5, bronze)
-      // guard aggregate, count, append, ledger append
+      assert(bronze.size == 4, bronze)
+      // guard aggregate (with the fresh-row count), append, ledger append
       val silver = actions(assert(Silver.run(spark, cfg, dim) == Silver.Loaded(5)))
-      assert(silver.size == 4, silver)
+      assert(silver.size == 3, silver)
       // the silver ledger row answers before any read; nothing written
       val rerun = actions(assert(Silver.run(spark, cfg, dim) == Silver.SkippedEmptyBatch))
       assert(rerun.size == 0, rerun)
@@ -180,6 +182,154 @@ class PipelineSpec extends AnyFunSuite {
       val rerun = jobs(assert(Orchestrator.runAll(spark, cfg, sleep = _ => ())
         .stages.map(_.outcome) == Seq("success", "success", "success")))
       assert(rerun == 1, rerun)
+    }
+  }
+
+  test("a batch's fresh-row count equals the anti-join's and the rows that land") {
+    def row(id: String) = s"$id,2024,M5V,DOG,MIX"
+    def drop(cfg: PipelineConfig, date: String) = spark.read.option("header", "true")
+      .schema(Model.rawSchema).csv(s"${cfg.rawDir}/ingestion_date=$date")
+    def bronze(cfg: PipelineConfig) = spark.read.schema(Model.bronzeSchema).parquet(cfg.bronzeDir)
+    // (ids already in bronze, an empty id being null; the day's ids; fresh rows)
+    Seq(
+      (Seq("1", "1", "7", "7"), Seq("1", "2", "7"), 1L), // existing side repeats ids
+      (Seq("", "2"), Seq("1", "2", "3"), 2L),            // existing side holds a null id
+      (Seq("1", "2"), Seq("1", "2", "3", "4", "5"), 3L), // batch partly loaded
+      (Seq("1", "2", "3"), Seq("1", "2", "3"), 0L),      // batch fully loaded
+      (Seq.empty[String], Seq("1", "2", "3"), 3L)        // empty target
+    ).foreach { case (existing, batch, fresh) =>
+      withPipelineDirs { (_, cfg) =>
+        if (existing.nonEmpty) {
+          val earlier = cfg.copy(ingestionDate = "2025-05-31")
+          writeRawCsv(cfg.rawDir, earlier.ingestionDate, existing.map(row))
+          Bronze.standardize(drop(cfg, earlier.ingestionDate), earlier)
+            .write.partitionBy(Model.PartitionCols: _*).parquet(cfg.bronzeDir)
+        }
+        writeRawCsv(cfg.rawDir, cfg.ingestionDate, batch.map(row))
+        val (before, antiJoin) =
+          if (existing.isEmpty) (0L, batch.size.toLong)
+          else (bronze(cfg).count(), Idempotency.newKeysOnly(
+            Bronze.standardize(drop(cfg, cfg.ingestionDate), cfg), bronze(cfg), Seq("_id")).count())
+        val result = Bronze.run(spark, cfg)
+        val landed = bronze(cfg).count() - before
+        val loaded = if (fresh == 0) Bronze.SkippedEmptyBatch else Bronze.Loaded(fresh)
+        assert((result, landed, antiJoin) == ((loaded, fresh, fresh)), s"$existing -> $batch")
+        assert(LoadControl.alreadyLoaded(spark, cfg.controlDir, Bronze.Dataset,
+          cfg.ingestionDate) == (fresh > 0), s"$existing -> $batch ledger row")
+      }
+    }
+  }
+
+  /** The raw temp-view relation behind each gold view, None where absent. */
+  private def rawViews() =
+    Gold.viewNames.map(spark.sessionState.catalog.getRawTempView)
+
+  /** Whether every gold view is registered and none is one of `before`'s. */
+  private def allReplaced(before: Seq[Option[AnyRef]]): Boolean =
+    rawViews().zip(before).forall { case (now, was) =>
+      now.isDefined && !was.exists(_ eq now.get)
+    }
+
+  test("registerAll registers nothing over the silver snapshot its views already read") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Bronze.run(spark, cfg)
+      Silver.run(spark, cfg, mapping(spark))
+      Gold.registerAll(spark.read.parquet(cfg.silverDir))
+      val first = rawViews()
+      val again = spark.read.parquet(cfg.silverDir)
+      assert(jobs(Gold.registerAll(again)) == 0)
+      assert(rawViews().zip(first).forall { case (now, was) => now.get eq was.get })
+
+      // a different plan over the same files registers again
+      Gold.registerAll(again.filter(col("Year") === 2024))
+      assert(allReplaced(first))
+      assert(spark.sql("SELECT COUNT(*) FROM licensed_pets_silver").first().getLong(0) == 3)
+    }
+  }
+
+  test("registerAll over a silver that gained a file answers with the new rows") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Orchestrator.runAll(spark, cfg, Some(mapping(spark)), _ => ())
+      val first = rawViews()
+      val day2 = cfg.copy(ingestionDate = "2025-06-02",
+        now = Timestamp.valueOf("2025-06-02 10:00:41"))
+      writeRawCsv(cfg.rawDir, day2.ingestionDate, Seq("6,2025,M6K,CAT,MIX"))
+      assert(Orchestrator.runAll(spark, day2, Some(mapping(spark)), _ => ()).succeeded)
+      assert(allReplaced(first))
+      assert(spark.sql("SELECT COUNT(*) FROM licensed_pets_silver").first().getLong(0) == 6)
+      assert(spark.sql("SELECT SUM(total) FROM v_daily_totals").first().getLong(0) == 6)
+    }
+  }
+
+  test("registerAll restores all ten views after one is dropped or replaced") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Bronze.run(spark, cfg)
+      Silver.run(spark, cfg, mapping(spark))
+      val silver = spark.read.parquet(cfg.silverDir)
+      Gold.registerAll(silver)
+      val first = rawViews()
+      spark.catalog.dropTempView("v_breed_stats")
+      Gold.registerAll(silver)
+      assert(allReplaced(first))
+
+      val second = rawViews()
+      spark.range(1).createOrReplaceTempView("v_daily_totals")
+      Gold.registerAll(silver)
+      assert(allReplaced(second))
+      assert(spark.sql("SELECT SUM(total) FROM v_daily_totals").first().getLong(0) == 5)
+    }
+  }
+
+  test("registerAll creates exactly the views it keeps, and a new session registers them") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Orchestrator.runAll(spark, cfg, Some(mapping(spark)), _ => ())
+      val fresh = spark.newSession()
+      Gold.registerAll(fresh.read.parquet(cfg.silverDir))
+      assert(fresh.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet ==
+        Gold.viewNames.toSet)
+      assert(fresh.sql("SELECT SUM(total) FROM v_daily_totals").first().getLong(0) == 5)
+    }
+  }
+
+  test("registerAll re-analyses the views after the session time zone changes") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Orchestrator.runAll(spark, cfg, Some(mapping(spark)), _ => ())
+      def days() = spark.sql("SELECT DISTINCT day FROM v_daily_totals")
+        .collect().map(_.getDate(0).toString).toSet
+      val before = days()
+      val first = rawViews()
+      val zone = spark.conf.get("spark.sql.session.timeZone")
+      spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati") // UTC+14
+      try {
+        val silver = spark.read.parquet(cfg.silverDir)
+        Gold.registerAll(silver)
+        assert(allReplaced(first))
+        val want = silver.select(to_date(col("ingestion_ts")).cast("string"))
+          .distinct().collect().map(_.getString(0)).toSet
+        assert(want != before, s"the zone must move a day bucket: $want")
+        assert(days() == want)
+      } finally spark.conf.set("spark.sql.session.timeZone", zone)
+    }
+  }
+
+  test("registerAll over an in-memory silver always registers") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Bronze.run(spark, cfg)
+      Silver.run(spark, cfg, mapping(spark))
+      val rows = spark.read.parquet(cfg.silverDir).collect().toSeq
+      val inMemory = spark.createDataFrame(rows.asJava, Model.silverSchema)
+      assert(inMemory.inputFiles.isEmpty)
+      Gold.registerAll(inMemory)
+      val first = rawViews()
+      Gold.registerAll(inMemory)
+      assert(allReplaced(first))
+      assert(spark.sql("SELECT COUNT(*) FROM v_breed_rank_citywide").first().getLong(0) > 0)
     }
   }
 

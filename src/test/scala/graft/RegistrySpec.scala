@@ -43,4 +43,10 @@ class RegistrySpec extends AnyFunSuite {
       SparkEntry.unique(SparkEntry.registry :+ q.copy(oracle = "SELECT 1")))
     assert(e.getMessage.contains(q.name))
   }
+
+  test("Verify's subset names every argument that matches no registered query") {
+    assert(Verify.unknownQueries(Seq("q02_top_parts_per_flag", "q28_knn_lsh")).isEmpty)
+    assert(Verify.unknownQueries(Seq("none_such", "q02_top_parts_per_flag", "q999_typo",
+      "none_such")) === Seq("none_such", "q999_typo"))
+  }
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.VersionedTable
 
 /** Cross-process race: a STREAMING versioned ingest vs a concurrent

@@ -58,7 +58,6 @@ object StreamScaleCheck {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
