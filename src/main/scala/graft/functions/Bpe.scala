@@ -100,7 +100,7 @@ object Bpe {
     import spark.implicits._
 
     // the one corpus pass: word-frequency dictionary, words as char arrays
-    var dict = docs
+    val dict = docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))

@@ -273,7 +273,7 @@ object Jpeg {
     def bit(): Int = {
       if (n == 0) {
         if (pos >= data.length) throw Reject
-        var b = data(pos) & 0xff; pos += 1
+        val b = data(pos) & 0xff; pos += 1
         if (b == 0xFF) {
           if (pos >= data.length) throw Reject
           if ((data(pos) & 0xff) == 0x00) pos += 1

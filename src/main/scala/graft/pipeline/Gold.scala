@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Aggregates, Rankings}
 
@@ -22,10 +23,13 @@ import graft.operators.{Aggregates, Rankings}
   * move group cardinality, not data volume. A top-N view's rank limit runs
   * above the total's window, so not map-side: its window exchange moves
   * every per-breed count (fewer jobs, more shuffle bytes). Collecting a
-  * view runs 3 Spark jobs (quality 2; breed stats and daily totals 4). The
-  * source view's filters push down into the silver scan (partition
-  * pruning on Year). `registerAll` analyses the ten views once per silver
-  * snapshot: a call over unchanged silver input files registers nothing.
+  * view's builder runs 3 Spark jobs (quality 2; breed stats and daily
+  * totals 4). The source view's filters push down into the silver scan
+  * (partition pruning on Year). `registerAll` analyses the ten views once
+  * per silver snapshot: a call over unchanged silver input files registers
+  * nothing. Its eight aggregate views keep their results: the first read
+  * of a view per snapshot runs the builder's jobs and keeps the result,
+  * and every later read is one job that scans it.
   */
 object Gold {
 
@@ -188,6 +192,21 @@ object Gold {
     * are assumed unchanged between the two calls. A silver that gained a
     * file, an in-memory silver, a new session (a fresh process), or any
     * view dropped or replaced since, registers all ten again.
+    *
+    * The eight aggregate views are registered over lazily persisted
+    * results (`MEMORY_AND_DISK`): registering launches no job, the first
+    * read of a view materializes its result and later reads scan it. Each
+    * result is keyed by Year × type × {breed, FSA, FSA2, day}, so its size
+    * follows key cardinality, not silver rows; the row-level silver and
+    * source views are never cached. Spark's storage pool caps the memory
+    * and spills the rest to local disk. A session holds at most these
+    * eight entries: registering again releases each view's old entry
+    * before caching the new one, and Spark releases the entry of a view
+    * dropped or replaced by name. Caching plans each view when it is
+    * registered (in a cloned session with adaptive execution off), so a
+    * call over a new snapshot costs more than before, and a fresh-process
+    * retry, which reads each view at most once, pays that and gains
+    * nothing.
     */
   def registerAll(silver: DataFrame): Unit = {
     val spark = silver.sparkSession
@@ -207,15 +226,45 @@ object Gold {
     val s = src(silver)
     silver.createOrReplaceTempView("licensed_pets_silver")
     s.createOrReplaceTempView("licensed_pets_gold_src")
-    totalsByYearType(s).createOrReplaceTempView("v_totals_by_year_type")
-    breedStats(s).createOrReplaceTempView("v_breed_stats")
-    fsaTop3Breeds(s).createOrReplaceTempView("v_fsa_top3_breeds")
-    fsa2Top3Breeds(s).createOrReplaceTempView("v_fsa2_top3_breeds")
-    quality(silver).createOrReplaceTempView("licensed_pets_gold_quality")
-    dailyTotals(s).createOrReplaceTempView("v_daily_totals")
-    breedShareCitywide(s).createOrReplaceTempView("v_breed_share_citywide")
-    breedRankCitywide(s).createOrReplaceTempView("v_breed_rank_citywide")
+    cached(totalsByYearType(s), "v_totals_by_year_type")
+    cached(breedStats(s), "v_breed_stats")
+    cached(fsaTop3Breeds(s), "v_fsa_top3_breeds")
+    cached(fsa2Top3Breeds(s), "v_fsa2_top3_breeds")
+    cached(quality(silver), "licensed_pets_gold_quality")
+    cached(dailyTotals(s), "v_daily_totals")
+    cached(breedShareCitywide(s), "v_breed_share_citywide")
+    cached(breedRankCitywide(s), "v_breed_rank_citywide")
     registered.put(spark, Registered(files, timeZone,
       viewNames.map(n => new WeakReference(catalog.getRawTempView(n).get))))
+  }
+
+  /** Release the results `registerAll` keeps in `spark` and forget what
+    * it registered there, so its next call registers again. Silver calls
+    * this once its ledger probe misses: an append to the silver directory
+    * re-plans every cached plan that reads it, and the next registration
+    * would drop those entries anyway. A view dropped or replaced since is
+    * left alone; Spark released its entry then.
+    */
+  private[pipeline] def release(spark: SparkSession): Unit =
+    Option(registered.remove(spark)).foreach { r =>
+      val catalog = spark.sessionState.catalog
+      // the eight aggregates, after silver and the source view
+      viewNames.zip(r.views).drop(2).foreach { case (name, view) =>
+        if (catalog.getRawTempView(name).exists(_ eq view.get)) spark.catalog.uncacheTable(name)
+      }
+    }
+
+  /** Register `view` as `name` over a lazily persisted result: the first
+    * read materializes it, later reads scan it. Replacing a view with a
+    * plan of another result already drops the old entry, as the entry is
+    * cached by view name; one with the same result is dropped here. Over
+    * the same directory such an entry may hold an older snapshot's rows,
+    * as `InMemoryFileIndex` equality compares root paths only.
+    */
+  private def cached(view: DataFrame, name: String): Unit = {
+    val catalog = view.sparkSession.catalog
+    view.createOrReplaceTempView(name)
+    catalog.uncacheTable(name)
+    catalog.cacheTable(name, StorageLevel.MEMORY_AND_DISK)
   }
 }

@@ -78,7 +78,11 @@ object Orchestrator {
     * schema-inferring read of silver. The bronze and silver ledger probes
     * are directory listings, the breed dim is not built, and gold's views
     * are already registered over that silver snapshot, so nothing is
-    * re-analysed.
+    * re-analysed and the results they keep stay. A day whose silver
+    * ledger probe misses releases the eight results gold kept before it
+    * appends; registering the views over the new snapshot then launches
+    * no job and plans the new results, which the first read of each view
+    * materializes.
     */
   def runAll(spark: SparkSession, cfg: Model.PipelineConfig,
       mapping: Option[DataFrame] = None,

@@ -78,22 +78,19 @@ private[graft] object LakehouseQueries {
         tmp, statsCols = Seq("p_partkey"))
     }
 
-  /** Shared four-commit versioned-orders history for q99/q100 (fresh
-    * per query invocation): v1 create, v2 DELETE %13, v3 UPDATE price
-    * +1 for %7, v4 APPEND scale-derived-offset %17 keys at ORIGINAL
-    * prices (plantOffset — a fixed +10M collided with real order keys
-    * at sf100, so the "append of new keys" lane partly re-appended
-    * live keys). Decimal price so downstream sums are cross-engine
-    * exact.
+  /** Shared four-commit versioned-orders history for q99/q100: v1
+    * create, v2 DELETE %13, v3 UPDATE price +1 for %7, v4 APPEND
+    * scale-derived-offset %17 keys at ORIGINAL prices (plantOffset — a
+    * fixed +10M collided with real order keys at sf100, so the "append
+    * of new keys" lane partly re-appended live keys). Decimal price so
+    * downstream sums are cross-engine exact.
     */
-  private def ordersHistoryTable(s: SparkSession, dir: String,
-      tag: String): String =
+  private def ordersHistoryTable(s: SparkSession, dir: String): String =
     // immutable once built (create/delete/update/append, then strictly
     // read-only in both consumers — q99 replays version feeds, q100
     // compiles the change feed): a per-JVM memoized fixture under the
-    // fixture amortization rule, SHARED by q99 and q100 (the tag
-    // no longer keys separate copies — both gates price their reader,
-    // not the four commits)
+    // fixture amortization rule, SHARED by q99 and q100 (both gates
+    // price their reader, not the four commits)
     vtBase(s, dir, "ordershist") { tmp =>
       import graft.sources.VersionedTable
       val o = Tables.orders(s, dir).select(col("o_orderkey"),
@@ -353,7 +350,7 @@ private[graft] object LakehouseQueries {
   val q99 = Query("q99_incremental_view", (s, dir) => {
       import graft.sources.VersionedTable
       import graft.operators.IncrementalView
-      val tmp = ordersHistoryTable(s, dir, "q99")
+      val tmp = ordersHistoryTable(s, dir)
       val groups = Seq("o_orderstatus")
       var view = IncrementalView.full(
         VersionedTable.snapshotAt(s, tmp, 1L), groups, Seq("o_price"))
@@ -390,7 +387,7 @@ private[graft] object LakehouseQueries {
   // classification, attribution, and carried-row silence on fixtures.
   val q100 = Query("q100_change_feed", (s, dir) => {
       import graft.sources.ChangeFeed
-      val tmp = ordersHistoryTable(s, dir, "q100")
+      val tmp = ordersHistoryTable(s, dir)
       ChangeFeed.readChanges(s, tmp, 1L, 4L, Seq("o_orderkey"))
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_price").cast("double").as("price"),

@@ -156,7 +156,7 @@ object BloomStats {
 
   private def bareAttr(e: Expression): Option[(String, DataType)] = e match {
     case a: AttributeReference => Some((a.name, a.dataType))
-    case u: UnresolvedAttribute => None // unresolved: no reliable type
+    case _: UnresolvedAttribute => None // unresolved: no reliable type
     case _ => None
   }
 

@@ -1591,7 +1591,7 @@ object VersionedTable {
     */
   private def mergeSchemas(prev: org.apache.spark.sql.types.StructType,
       next: org.apache.spark.sql.types.StructType,
-      dropped: Map[String, Long] = Map.empty):
+      dropped: Map[String, Long]):
       org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.StructField
     // case-INSENSITIVE matching, like Spark's default resolution — a

@@ -154,7 +154,7 @@ private[v2] class GraftTable(val dir: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(!pinned, s"cannot write to time-travel pinned ${name()}")
-    new GraftWriteBuilder(dir, info)
+    new GraftWriteBuilder(dir)
   }
 
   /** SQL `DELETE FROM` (and `TRUNCATE TABLE` via the AlwaysTrue

@@ -1,7 +1,7 @@
 package graft.sources.v2
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
 
 import graft.sources.VersionedTable
@@ -38,7 +38,7 @@ import graft.sources.VersionedTable
   * the table already tracks that the batch carries — skipping keeps
   * working across SQL-text appends without re-ANALYZE.
   */
-private[v2] class GraftWriteBuilder(dir: String, info: LogicalWriteInfo)
+private[v2] class GraftWriteBuilder(dir: String)
     extends WriteBuilder with SupportsTruncate {
   private var overwriteAll = false
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graft.ListenerSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -67,18 +65,8 @@ class BreedMappingSpec extends AnyFunSuite {
   }
 
   test("building and collecting the reference dim launches no Spark job") {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerSync.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      assert(BreedMapping.referenceDim(spark).collect().length == 486)
-      ListenerSync.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(started.get == 0)
+    assert(SparkTestSession.jobs(
+      assert(BreedMapping.referenceDim(spark).collect().length == 486)) == 0)
   }
 
   test("runbook coverage arithmetic reproduces over a fixture silver") {

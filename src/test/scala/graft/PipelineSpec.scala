@@ -6,9 +6,9 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{CacheManager, CachedData, QueryExecution}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +17,7 @@ import graft.operators.Idempotency
 import graft.pipeline._
 import graft.pipeline.Model.PipelineConfig
 import graft.sources.Sources
+import graft.SparkTestSession.jobs
 
 /** End-to-end pipeline parity spec (reference lifecycle SURVEY.md §3.1):
   * raw CSV → bronze → silver → gold views, plus the idempotency
@@ -152,22 +153,6 @@ class PipelineSpec extends AnyFunSuite {
       val rerun = actions(assert(Silver.run(spark, cfg, dim) == Silver.SkippedEmptyBatch))
       assert(rerun.size == 0, rerun)
     }
-  }
-
-  /** Number of Spark jobs `body` launches. */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerSync.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      ListenerSync.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    started.get
   }
 
   test("a re-run of a loaded day launches one Spark job: the gold stage's read") {
@@ -330,6 +315,144 @@ class PipelineSpec extends AnyFunSuite {
       Gold.registerAll(inMemory)
       assert(allReplaced(first))
       assert(spark.sql("SELECT COUNT(*) FROM v_breed_rank_citywide").first().getLong(0) > 0)
+    }
+  }
+
+  /** Each cached gold view with its builder over a silver DataFrame. */
+  private val cachedViews: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "v_totals_by_year_type" -> (s => Gold.totalsByYearType(Gold.src(s))),
+    "v_breed_stats" -> (s => Gold.breedStats(Gold.src(s))),
+    "v_fsa_top3_breeds" -> (s => Gold.fsaTop3Breeds(Gold.src(s))),
+    "v_fsa2_top3_breeds" -> (s => Gold.fsa2Top3Breeds(Gold.src(s))),
+    "licensed_pets_gold_quality" -> Gold.quality,
+    "v_daily_totals" -> (s => Gold.dailyTotals(Gold.src(s))),
+    "v_breed_share_citywide" -> (s => Gold.breedShareCitywide(Gold.src(s))),
+    "v_breed_rank_citywide" -> (s => Gold.breedRankCitywide(Gold.src(s))))
+
+  /** Run the daily job for `days` consecutive days from `cfg`'s date, one
+    * row each, ids from `firstId` and one FSA per day, so each day gains a
+    * silver file.
+    */
+  private def loadDays(cfg: PipelineConfig, days: Int, firstId: Int = 1): Unit =
+    (0 until days).foreach { i =>
+      val date = java.time.LocalDate.parse(cfg.ingestionDate).plusDays(i).toString
+      val day = cfg.copy(ingestionDate = date, now = Timestamp.valueOf(s"$date 10:00:41"))
+      writeRawCsv(cfg.rawDir, date, Seq(s"${firstId + i},2024,M${i}V,DOG,MIX"))
+      assert(Orchestrator.runAll(spark, day, Some(mapping(spark)), _ => ()).succeeded)
+    }
+
+  /** Copy the parquet files under `from` to the same relative paths under `to`. */
+  private def copyParquet(from: String, to: String): Unit = {
+    val src = java.nio.file.Paths.get(from)
+    Files.walk(src).iterator().asScala.filter(_.toString.endsWith(".parquet")).foreach { f =>
+      val dest = java.nio.file.Paths.get(to).resolve(src.relativize(f))
+      Files.createDirectories(dest.getParent)
+      Files.copy(f, dest)
+    }
+  }
+
+  /** Whether each cached view answers what its builder answers over a
+    * copy of `silverDir` (another root path, so no cache entry matches),
+    * both ways under `exceptAll`, with an equal schema.
+    */
+  private def assertViewsMatchBuilders(silverDir: String, copyDir: String): Unit = {
+    copyParquet(silverDir, copyDir)
+    val copy = spark.read.parquet(copyDir)
+    cachedViews.foreach { case (name, build) =>
+      val got = spark.table(name)
+      val want = build(copy)
+      assert(got.schema == want.schema, name)
+      assert(got.exceptAll(want).isEmpty, s"$name rows the builder lacks")
+      assert(want.exceptAll(got).isEmpty, s"builder rows $name lacks")
+    }
+  }
+
+  /** The view names of the cache entries that read a file under `root`. */
+  private def cachedUnder(root: Path): Seq[String] = {
+    val field = classOf[CacheManager].getDeclaredField("cachedData")
+    field.setAccessible(true)
+    field.get(spark.sharedState.cacheManager).asInstanceOf[Seq[CachedData]]
+      .filter(_.plan.exists {
+        case l: LogicalRelation => l.relation match {
+          case r: HadoopFsRelation =>
+            r.location.rootPaths.exists(_.toString.contains(root.toString))
+          case _ => false
+        }
+        case _ => false
+      })
+      .map(_.cachedRepresentation.cacheBuilder.tableName.getOrElse("<unnamed>"))
+  }
+
+  test("a second read of each cached gold view launches one Spark job") {
+    withPipelineDirs { (_, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      Bronze.run(spark, cfg)
+      Silver.run(spark, cfg, mapping(spark))
+      val silver = spark.read.parquet(cfg.silverDir)
+      assert(jobs(Gold.registerAll(silver)) == 0)
+      cachedViews.foreach { case (name, _) =>
+        spark.table(name).collect()
+        assert(jobs(spark.table(name).collect()) == 1, name)
+      }
+    }
+  }
+
+  test("each cached gold view answers what its builder answers over the same silver") {
+    withPipelineDirs { (root, cfg) =>
+      writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
+      assert(Orchestrator.runAll(spark, cfg, Some(mapping(spark)), _ => ()).succeeded)
+      loadDays(cfg.copy(ingestionDate = "2025-06-02"), 2, firstId = 6)
+      cachedViews.foreach { case (name, _) => spark.table(name).collect() }
+      assertViewsMatchBuilders(cfg.silverDir, s"$root/copy")
+      val days = spark.table("v_daily_totals").collect().map(_.getDate(0).toString).toSeq
+      assert(days.distinct.size == 3 && days == days.sorted, days)
+    }
+  }
+
+  test("gold holds eight cache entries over successive snapshots and silver directories") {
+    withPipelineDirs { (root, cfg) =>
+      val gold = cachedViews.map(_._1).sorted
+      (1 to 3).foreach { day =>
+        loadDays(cfg.copy(ingestionDate = s"2025-06-0$day"), 1, firstId = day)
+        cachedViews.foreach { case (name, _) => spark.table(name).collect() }
+        assert(cachedUnder(root).sorted == gold, s"after day $day")
+      }
+      // a silver run that may append releases them first
+      val day4 = cfg.copy(ingestionDate = "2025-06-04",
+        now = Timestamp.valueOf("2025-06-04 10:00:41"))
+      writeRawCsv(cfg.rawDir, day4.ingestionDate, Seq("4,2024,M4V,DOG,MIX"))
+      assert(Bronze.run(spark, day4) == Bronze.Loaded(1))
+      assert(Silver.run(spark, day4, mapping(spark)) == Silver.Loaded(1))
+      assert(cachedUnder(root).isEmpty)
+      Gold.registerAll(spark.read.parquet(cfg.silverDir))
+      assert(cachedUnder(root).sorted == gold)
+      val silver2 = s"$root/silver2"
+      copyParquet(cfg.silverDir, silver2)
+      Gold.registerAll(spark.read.parquet(silver2))
+      assert(cachedUnder(root).sorted == gold)
+      assert(cachedUnder(Path.of(silver2)).sorted == gold)
+
+      spark.catalog.dropTempView("v_breed_stats")
+      spark.range(1).createOrReplaceTempView("v_daily_totals")
+      assert(cachedUnder(root).sorted == gold.diff(Seq("v_breed_stats", "v_daily_totals")))
+    }
+  }
+
+  test("registerAll over a silver that another process appended to answers the new rows") {
+    withPipelineDirs { (root, cfg) =>
+      loadDays(cfg, 2)
+      cachedViews.foreach { case (name, _) => spark.table(name).collect() }
+      // another writer's silver day, copied in past this session's writers
+      val other = cfg.copy(rawDir = s"$root/raw2", bronzeDir = s"$root/bronze2",
+        silverDir = s"$root/silver2", controlDir = s"$root/control2",
+        ingestionDate = "2025-06-03", now = Timestamp.valueOf("2025-06-03 10:00:41"))
+      writeRawCsv(other.rawDir, other.ingestionDate, Seq("10,2025,M9V,CAT,MIX"))
+      assert(Bronze.run(spark, other) == Bronze.Loaded(1))
+      assert(Silver.run(spark, other, mapping(spark)) == Silver.Loaded(1))
+      copyParquet(other.silverDir, cfg.silverDir)
+      Gold.registerAll(spark.read.parquet(cfg.silverDir))
+      assert(spark.sql("SELECT SUM(total) FROM v_daily_totals").first().getLong(0) == 3)
+      assertViewsMatchBuilders(cfg.silverDir, s"$root/copy")
     }
   }
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (suites run
@@ -30,4 +34,20 @@ object SparkTestSession {
   }
 
   val sfTiny = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs `body` launches on the shared session. */
+  def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerSync.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerSync.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
 }
