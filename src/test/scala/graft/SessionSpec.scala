@@ -53,20 +53,26 @@ class SessionSpec extends AnyFunSuite {
       s"no warning on stderr: $warning")
   }
 
-  test("src/main builds sessions only through graft.Session") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"run from the repository root: ${root.toAbsolutePath}")
-    val factory = root.resolve("graft/Session.scala")
-    val s = java.nio.file.Files.walk(root)
-    val offenders = try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && p != factory)
-        .filter(p => java.nio.file.Files.readString(p)
-          .contains("SparkSession.builder()"))
-        .map(root.relativize(_).toString).toList
-    } finally s.close()
-    assert(offenders.isEmpty, s"build the session via graft.Session: $offenders")
+  test("sessions are built only through graft.Session and the test factory") {
+    import java.nio.file.{Files, Paths}
+    val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))
+    roots.foreach(r => assert(Files.isDirectory(r),
+      s"run from the repository root: ${r.toAbsolutePath}"))
+    val factories = Set(Paths.get("src/main/scala/graft/Session.scala"),
+      Paths.get("src/test/scala/graft/SparkTestSession.scala"))
+    // split so this file does not match its own search
+    val builder = "SparkSession" + ".builder()"
+    val offenders = roots.flatMap { root =>
+      val s = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala
+          .filter(p => p.toString.endsWith(".scala") && !factories(p))
+          .filter(p => Files.readString(p).contains(builder))
+          .map(_.toString).toList
+      } finally s.close()
+    }
+    assert(offenders.isEmpty,
+      s"build the session via graft.Session or SparkTestSession.build: $offenders")
   }
 }

@@ -1099,7 +1099,7 @@ class VersionedTableSpec extends AnyFunSuite {
     * (k*per, (k+1)*per], one data file per commit, stats on `id` — the
     * precise file-boundary fixture the DV shape decisions need.
     */
-  private def dvTable(dir: String, files: Int = 2, per: Long = 100L): Unit = {
+  private def dvTable(dir: String, files: Int, per: Long): Unit = {
     def part(k: Int) = ((k * per + 1) to ((k + 1) * per))
       .map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
     VersionedTable.create(part(0), dir, statsCols = Seq("id"))

@@ -20,7 +20,7 @@ object BloomSweep {
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 16
     val nNeedles = if (args.length > 2) args(2).toInt else 12
-    val spark = CommitRace.session(cpus = 8)
+    val spark = Race.session(cpus = 8)
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bloomsweep").toString + "/t"
 
@@ -73,7 +73,6 @@ object BloomSweep {
     println(f"[bloomsweep] point-lookup wall: pruned=${prunedNs / n / 1e6}%.1f ms " +
       f"full-scan=${fullNs / n / 1e6}%.1f ms " +
       f"speedup=${fullNs.toDouble / prunedNs}%.2fx")
-    println("[bloomsweep] done: ALL CHECKS PASSED")
-    spark.stop()
+    Race.finish("bloomsweep", spark)
   }
 }

@@ -49,7 +49,8 @@ import graft.sources.{ConcurrentCommitException, ConflictingCommitException, Ver
   * it committed a version the table does not have (lost commit); final
   * row count equals the closed form; losers surfaced only as
   * `ConcurrentCommitException`/`ConflictingCommitException` (logged,
-  * never corruption). Run:
+  * never corruption). The checks, spawner, waits and session come from
+  * the harness kit [[Race]]. Run:
   *
   *   CLASSES=main:test dev/run_main.sh graft.tools.CommitRace /tmp/race_out
   *
@@ -57,58 +58,7 @@ import graft.sources.{ConcurrentCommitException, ConflictingCommitException, Ver
   */
 object CommitRace {
 
-  private[tools] def session(cpus: Int = 2): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  private[tools] def spawn(outDir: Path, name: String, mainCls: String,
-      args: Seq[String], extraJvm: Seq[String] = Nil): Process = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val inherited = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val opens = scala.jdk.CollectionConverters
-      .ListHasAsScala(inherited).asScala.filter(_.startsWith("--add-opens"))
-    val cmd = Seq(javaBin) ++ opens ++ Seq("-Xmx3g",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC") ++
-      extraJvm ++ Seq("-cp", sys.props("java.class.path"), mainCls) ++ args
-    val pb = new ProcessBuilder(scala.jdk.CollectionConverters
-      .SeqHasAsJava(cmd).asJava)
-    pb.redirectOutput(outDir.resolve(s"$name.out").toFile)
-    pb.redirectErrorStream(true)
-    pb.start()
-  }
-
-  private[tools] def readLog(p: Path): Seq[Map[String, String]] =
-    if (!Files.exists(p)) Seq.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-      Files.readAllLines(p)).asScala.toSeq.flatMap(parseLine)
-
-  /** Minimal flat-JSON-object parser for the harness's own log lines
-    * (string/number values, no nesting — avoids a JSON dependency).
-    */
-  private def parseLine(l: String): Option[Map[String, String]] = {
-    val t = l.trim
-    if (!t.startsWith("{") || !t.endsWith("}")) None
-    else Some(t.substring(1, t.length - 1).split(",").iterator
-      .map(_.split(":", 2)).collect {
-        case Array(k, v) =>
-          k.trim.stripPrefix("\"").stripSuffix("\"") ->
-            v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap)
-  }
-
-  private var failures = 0
-  private def check(cond: Boolean, what: String): Unit = {
-    if (cond) println(s"  OK   $what")
-    else { failures += 1; println(s"  FAIL $what") }
-  }
+  import Race.{check, readLog, spawn}
 
   /** Audit the table + writer logs after a phase. `allowUnclaimed`
     * bounds committed-but-unclaimed versions (a writer killed after
@@ -151,11 +101,9 @@ object CommitRace {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = Paths.get(if (args.nonEmpty) args(0)
-      else Files.createTempDirectory("graft-race").toString)
-    Files.createDirectories(outDir)
+    val outDir = Race.outDir(args, "graft-race")
     val dir = outDir.resolve("table").toString
-    val spark = session(cpus = 4)
+    val spark = Race.session(cpus = 4)
     import spark.implicits._
 
     val BaseRows = 1000L
@@ -220,9 +168,8 @@ object CommitRace {
     // it is then mid-flight in whatever its 4th+ operation happens to
     // be doing when the SIGKILL lands
     def killMidFlight(idx: Int): Int = {
-      val t0 = System.currentTimeMillis()
-      while (readLog(bLogs(idx)).count(_.get("event").contains("commit")) < 3 &&
-          System.currentTimeMillis() - t0 < 120000) Thread.sleep(25)
+      Race.await(s"writer${idx + 3}'s 3rd commit", pollMs = 25)(
+        Race.events(bLogs(idx), "commit").size >= 3)
       bWriters(idx).destroyForcibly()
       bWriters(idx).waitFor()
     }
@@ -245,10 +192,9 @@ object CommitRace {
     Files.write(stallBarrier, Array.emptyByteArray)
     val stall = spawn(outDir, "stall", "graft.tools.RaceWriter",
       Seq(dir, "7", "stall", "1", stallLog.toString, stallBarrier.toString))
-    val t0 = System.currentTimeMillis()
-    while (!readLog(stallLog).exists(_.get("event").contains("staged")) &&
-        System.currentTimeMillis() - t0 < 120000) Thread.sleep(50)
-    check(readLog(stallLog).exists(_.get("event").contains("staged")),
+    Race.await("the stall writer's staged event")(
+      Race.events(stallLog, "staged").nonEmpty)
+    check(Race.events(stallLog, "staged").nonEmpty,
       "phase2: stall writer reached the staged window")
     stall.destroyForcibly() // SIGKILL
     stall.waitFor()
@@ -328,10 +274,7 @@ object CommitRace {
     audit(spark, dir, BaseRows, RowsPerAppend,
       wLogs ++ bLogs ++ Seq(healLog), allowUnclaimed = 3, "final")
 
-    println(s"[race] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
+    Race.finish("race", spark)
   }
 }
 
@@ -343,10 +286,9 @@ object RaceWriter {
     val Array(dir, widStr, mode, itersStr, logPath, barrierPath) = args.take(6)
     val wid = widStr.toInt
     val iters = itersStr.toInt
-    val spark = CommitRace.session()
+    val spark = Race.session()
     import spark.implicits._
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val log = Race.logWriter(logPath)
     def ev(fields: (String, Any)*): Unit =
       log.println(fields.map { case (k, v) => v match {
         case s: String => s""""$k":"$s""""
@@ -468,9 +410,8 @@ object RaceReader {
     val Array(dir, stopPath, logPath, baseStr, perAppendStr) = args.take(5)
     val baseRows = baseStr.toLong
     val perAppend = perAppendStr.toLong
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     var violations = 0
     while (!Files.exists(Paths.get(stopPath))) {
       try {

@@ -12,16 +12,17 @@ import graft.sources.VersionedTable
   * compose with the whole maintenance perimeter under kills).
   *
   * Independent JVMs sharing nothing but the filesystem:
-  *   - a DV writer ([[DvDeleteWriter]]) looping `deleteWithDv` over
-  *     distinct residue classes of the base key range — every delete
+  *   - a DV writer ([[DvWriter]] mode `delete`) looping `deleteWithDv`
+  *     over distinct residue classes of the base key range — every delete
   *     touches EVERY base file (the CoW worst case DVs exist for),
   *     always on the pure-DV shape (threshold 0.95), rebasing over
   *     concurrent appends and re-running over compaction conflicts;
-  *   - a DV-UPDATE writer ([[DvUpdateWriter]]) looping `updateWithDv`
-  *     over a disjoint residue range — each commit both soft-deletes
-  *     positions AND appends post-image files, so vacuum/compaction
-  *     race against the composite commit shape; the audit reads every
-  *     updated class back by VALUE (post-image marker), not just count;
+  *   - a DV-UPDATE writer ([[DvWriter]] mode `update`) looping
+  *     `updateWithDv` over a disjoint residue range — each commit both
+  *     soft-deletes positions AND appends post-image files, so
+  *     vacuum/compaction race against the composite commit shape; the
+  *     audit reads every updated class back by VALUE (post-image
+  *     marker), not just count;
   *   - an appender ([[RaceWriter]] mode `append`) racing version claims;
   *   - the orchestrator compacting every ~2 s (folds DVs → dead
   *     sidecars for vacuum to reclaim), skipping typed conflicts;
@@ -37,7 +38,8 @@ import graft.sources.VersionedTable
   * and appender keep committing, then proves the chain resolves, a
   * fresh vacuum completes the interrupted sweep, and the final table
   * equals the closed form (base minus every logged residue-class
-  * delete, plus every logged append).
+  * delete, plus every logged append). The checks, spawner, waits and
+  * session come from the harness kit [[Race]].
   *
   * Run:
   *   CLASSES=main:test dev/run_main.sh graft.tools.DvRace /tmp/dvrace_out
@@ -46,22 +48,17 @@ import graft.sources.VersionedTable
   */
 object DvRace {
 
-  private var failures = 0
-  private def check(cond: Boolean, what: String): Unit = {
-    if (cond) println(s"  OK   $what")
-    else { failures += 1; println(s"  FAIL $what") }
-  }
+  import Race.{check, spawn}
 
   private val BaseRows = 10000L
   private val Mod = 200L // each residue class: 50 base ids across all files
 
   private def expectedIds(dvLogs: Seq[Path], wLogs: Seq[Path]): Set[Long] = {
-    val deletedResidues = dvLogs.flatMap(CommitRace.readLog)
-      .filter(e => e.get("event").contains("commit"))
+    val deletedResidues = dvLogs.flatMap(Race.events(_, "commit"))
       .flatMap(_.get("residue")).map(_.toLong).toSet
     val base = (0L until BaseRows)
       .filterNot(i => deletedResidues.contains(i % Mod)).toSet
-    val appended = wLogs.flatMap(CommitRace.readLog)
+    val appended = wLogs.flatMap(Race.readLog)
       .filter(e => e.get("event").contains("commit") &&
         e.get("op").contains("append"))
       .flatMap { e =>
@@ -73,7 +70,7 @@ object DvRace {
 
   private def audit(spark: org.apache.spark.sql.SparkSession, dir: String,
       dvLogs: Seq[Path], wLogs: Seq[Path], phase: String,
-      upLogs: Seq[Path] = Nil): Unit = {
+      upLogs: Seq[Path]): Unit = {
     val snaps = VersionedTable.snapshots(spark, dir)
     val latest = snaps.last
     val got = VersionedTable.read(spark, dir)
@@ -88,37 +85,29 @@ object DvRace {
     // marker (its post-image), every other base id its base value — a
     // lost post-image append, a resurrected pre-image, or a DV applied
     // to the wrong file breaks this instantly
-    if (upLogs.nonEmpty) {
-      val updatedResidues = upLogs.flatMap(CommitRace.readLog)
-        .filter(e => e.get("event").contains("commit"))
-        .flatMap(_.get("residue")).map(_.toLong).toSet
-      val vals = VersionedTable.read(spark, dir)
-        .filter(col("id") < BaseRows)
-        .select("id", "v").collect()
-        .map(r => r.getLong(0) -> r.getString(1))
-      val wrong = vals.filter { case (i, v) =>
-        val expect =
-          if (updatedResidues.contains(i % Mod)) s"u${i % Mod}"
-          else s"base$i"
-        v != expect
-      }
-      check(wrong.isEmpty,
-        s"$phase: updated residues carry their post-images, others " +
-          s"their base values (wrong=${wrong.take(3).mkString(",")})")
+    val updatedResidues = upLogs.flatMap(Race.events(_, "commit"))
+      .flatMap(_.get("residue")).map(_.toLong).toSet
+    val vals = VersionedTable.read(spark, dir)
+      .filter(col("id") < BaseRows)
+      .select("id", "v").collect()
+      .map(r => r.getLong(0) -> r.getString(1))
+    val wrong = vals.filter { case (i, v) =>
+      val expect =
+        if (updatedResidues.contains(i % Mod)) s"u${i % Mod}"
+        else s"base$i"
+      v != expect
     }
+    check(wrong.isEmpty,
+      s"$phase: updated residues carry their post-images, others " +
+        s"their base values (wrong=${wrong.take(3).mkString(",")})")
     val metaLive = latest.files.map(f =>
       latest.stats.get(f).map(_.rowCount).getOrElse(-1000000L) -
         latest.dvn.getOrElse(f, 0L)).sum
     check(metaLive == got.size.toLong,
       s"$phase: manifest metadata prices live rows exactly " +
         s"($metaLive == ${got.size})")
-    val missingDv = snaps.flatMap(s => s.dvFiles.filterNot(f =>
-      Files.exists(Paths.get(dir, f)))).distinct
-    check(missingDv.isEmpty,
-      s"$phase: every DV sidecar referenced by a retained manifest " +
-        s"exists (missing=${missingDv.take(3).mkString(",")})")
-    val errs = (dvLogs ++ wLogs).flatMap(CommitRace.readLog)
-      .filter(_.get("event").contains("error"))
+    Race.checkRetained(dir, phase, "DV sidecar", snaps.flatMap(_.dvFiles))
+    val errs = (dvLogs ++ wLogs).flatMap(Race.events(_, "error"))
     check(errs.isEmpty,
       s"$phase: writers saw only typed conflicts, never errors " +
         s"(${errs.take(2).mkString(";")})")
@@ -145,11 +134,9 @@ object DvRace {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = Paths.get(if (args.nonEmpty) args(0)
-      else Files.createTempDirectory("graft-dvrace").toString)
-    Files.createDirectories(outDir)
+    val outDir = Race.outDir(args, "graft-dvrace")
     val dir = outDir.resolve("table").toString
-    val spark = CommitRace.session(cpus = 4)
+    val spark = Race.session(cpus = 4)
     import spark.implicits._
 
     println(s"[dvrace] table=$dir")
@@ -164,20 +151,18 @@ object DvRace {
     val stop1 = outDir.resolve("stop1")
     val vstop1 = outDir.resolve("vstop1")
     val dvLog1 = outDir.resolve("dv1.jsonl")
-    val dv1 = CommitRace.spawn(outDir, "dv1", "graft.tools.DvDeleteWriter",
-      Seq(dir, "0", "20", dvLog1.toString, barrier.toString))
+    val dv1 = spawn(outDir, "dv1", "graft.tools.DvWriter",
+      Seq(dir, "delete", "0", "20", dvLog1.toString, barrier.toString))
     val upLog1 = outDir.resolve("up1.jsonl")
-    val up1 = CommitRace.spawn(outDir, "up1", "graft.tools.DvUpdateWriter",
-      Seq(dir, "100", "20", upLog1.toString, barrier.toString))
+    val up1 = spawn(outDir, "up1", "graft.tools.DvWriter",
+      Seq(dir, "update", "100", "20", upLog1.toString, barrier.toString))
     val wLog1 = outDir.resolve("w1.jsonl")
-    val w1 = CommitRace.spawn(outDir, "w1", "graft.tools.RaceWriter",
+    val w1 = spawn(outDir, "w1", "graft.tools.RaceWriter",
       Seq(dir, "0", "append", "20", wLog1.toString, barrier.toString))
     val rLog1 = outDir.resolve("reader1.jsonl")
-    val reader1 = CommitRace.spawn(outDir, "reader1", "graft.tools.DvReader",
+    val reader1 = spawn(outDir, "reader1", "graft.tools.DvReader",
       Seq(dir, stop1.toString, rLog1.toString))
-    val vLog1 = outDir.resolve("vacuum1.jsonl")
-    val vac1 = CommitRace.spawn(outDir, "vacuum1", "graft.tools.VacuumLoop",
-      Seq(dir, vstop1.toString, vLog1.toString, "12", "45000", "250"))
+    val (vac1, vLog1) = Race.spawnVacuum(outDir, "vacuum1", dir, vstop1, 250)
     Thread.sleep(500)
     Files.write(barrier, Array.emptyByteArray)
     val folded1 = compactLoop(spark, dir,
@@ -192,13 +177,11 @@ object DvRace {
     check(reader1.waitFor() == 0, "phase1: reader exited 0 (no violation)")
     check(folded1 >= 1, s"phase1: compaction folded DVs $folded1 times " +
       "(dead sidecars created for vacuum)")
-    val rEvents1 = CommitRace.readLog(rLog1)
-    val rChecks1 = rEvents1.count(_.get("event").contains("check"))
-    val rHolds1 = rEvents1.count(_.get("event").contains("held"))
+    val rChecks1 = Race.events(rLog1, "check").size
+    val rHolds1 = Race.events(rLog1, "held").size
     check(rChecks1 >= 10 && rHolds1 >= 3,
       s"phase1: reader audited $rChecks1 snapshots, held-reread $rHolds1")
-    val sweeps1 = CommitRace.readLog(vLog1)
-      .filter(_.get("event").contains("sweep"))
+    val sweeps1 = Race.events(vLog1, "sweep")
     val deleted1 = sweeps1.flatMap(_.get("deleted")).map(_.toLong).sum
     check(sweeps1.size >= 8 && deleted1 >= 1,
       s"phase1: vacuum swept ${sweeps1.size} times, reclaimed $deleted1 " +
@@ -208,26 +191,16 @@ object DvRace {
     // ---- phase 2: SIGKILL the vacuum JVM twice mid-activity ----
     println("[dvrace] phase 2: SIGKILL vacuum mid-sweep, twice, under DV load")
     val dvLog2 = outDir.resolve("dv2.jsonl")
-    val dv2 = CommitRace.spawn(outDir, "dv2", "graft.tools.DvDeleteWriter",
-      Seq(dir, "40", "15", dvLog2.toString, barrier.toString))
+    val dv2 = spawn(outDir, "dv2", "graft.tools.DvWriter",
+      Seq(dir, "delete", "40", "15", dvLog2.toString, barrier.toString))
     val upLog2 = outDir.resolve("up2.jsonl")
-    val up2 = CommitRace.spawn(outDir, "up2", "graft.tools.DvUpdateWriter",
-      Seq(dir, "140", "15", upLog2.toString, barrier.toString))
+    val up2 = spawn(outDir, "up2", "graft.tools.DvWriter",
+      Seq(dir, "update", "140", "15", upLog2.toString, barrier.toString))
     val wLog2 = outDir.resolve("w2.jsonl")
-    val w2 = CommitRace.spawn(outDir, "w2", "graft.tools.RaceWriter",
+    val w2 = spawn(outDir, "w2", "graft.tools.RaceWriter",
       Seq(dir, "1", "append", "12", wLog2.toString, barrier.toString))
     (1 to 2).foreach { k =>
-      val vLog = outDir.resolve(s"vacuum2$k.jsonl")
-      val vac = CommitRace.spawn(outDir, s"vacuum2$k",
-        "graft.tools.VacuumLoop",
-        Seq(dir, outDir.resolve(s"nostop$k").toString, vLog.toString,
-          "12", "45000", "150"))
-      val t0 = System.currentTimeMillis()
-      while (CommitRace.readLog(vLog)
-          .count(_.get("event").contains("sweep")) < 3 &&
-          System.currentTimeMillis() - t0 < 120000) Thread.sleep(20)
-      vac.destroyForcibly()
-      val rc = vac.waitFor()
+      val rc = Race.killVacuum(outDir, s"vacuum2$k", dir)
       check(rc == 137, s"phase2: vacuum JVM $k SIGKILLed mid-activity (got $rc)")
       val snaps = VersionedTable.snapshots(spark, dir)
       check(snaps.nonEmpty && snaps.last.version ==
@@ -237,115 +210,58 @@ object DvRace {
     check(dv2.waitFor() == 0, "phase2: DV writer exited 0")
     check(up2.waitFor() == 0, "phase2: DV-update writer exited 0")
     check(w2.waitFor() == 0, "phase2: appender exited 0")
-    val vLogF = outDir.resolve("vacuumF.jsonl")
-    val vstopF = outDir.resolve("vstopF")
-    val vacF = CommitRace.spawn(outDir, "vacuumF", "graft.tools.VacuumLoop",
-      Seq(dir, vstopF.toString, vLogF.toString, "12", "45000", "200"))
-    val tF = System.currentTimeMillis()
-    while (CommitRace.readLog(vLogF)
-        .count(_.get("event").contains("sweep")) < 2 &&
-        System.currentTimeMillis() - tF < 120000) Thread.sleep(50)
-    Files.write(vstopF, Array.emptyByteArray)
-    check(vacF.waitFor() == 0,
+    check(Race.finalSweep(outDir, dir)._1 == 0,
       "phase2: post-kill vacuum completed the interrupted sweep cleanly")
     audit(spark, dir, Seq(dvLog1, dvLog2), Seq(wLog1, wLog2), "phase2",
       Seq(upLog1, upLog2))
 
-    println(s"[dvrace] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
+    Race.finish("dvrace", spark)
   }
 }
 
-/** DV-delete writer for [[DvRace]]: iteration i soft-deletes the base
-  * ids of residue class `r0 + i` (mod 200) — 50 rows scattered across
-  * every base file, always sub-threshold (pure DV shape). Rebases over
-  * concurrent appends (key-disjoint by stats); a compaction that
-  * rewrote a read file surfaces as [[graft.sources.ConflictingCommitException]]
-  * and the WHOLE operation re-runs against the new state (the documented
+/** DV writer for [[DvRace]]. Iteration i runs, on residue class
+  * `r0 + i` (mod 200) — 50 base ids scattered across every base file,
+  * always sub-threshold (pure DV shape):
+  *   - mode `delete`: `deleteWithDv` soft-deletes them;
+  *   - mode `update`: the merge-on-read `updateWithDv` gives them the
+  *     marker `u<r>` via a DV soft-delete plus a post-image append.
+  * The two writers take disjoint residue ranges, so the audit's closed
+  * form stays exact: ids never change, and a surviving id of an updated
+  * class must read back its marker. Rebases over concurrent appends
+  * (key-disjoint by stats); a compaction that rewrote a read file
+  * surfaces as [[graft.sources.ConflictingCommitException]] and the
+  * WHOLE operation re-runs against the new state (the documented
   * contract), bounded per iteration.
   */
-object DvDeleteWriter {
+object DvWriter {
   def main(args: Array[String]): Unit = {
-    val Array(dir, r0Str, itersStr, logPath, barrierPath) = args.take(5)
+    val Array(dir, mode, r0Str, itersStr, logPath, barrierPath) = args.take(6)
     val r0 = r0Str.toLong
     val iters = itersStr.toInt
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     while (!Files.exists(Paths.get(barrierPath))) Thread.sleep(20)
     var rc = 0
     (0 until iters).foreach { i =>
       val r = r0 + i
+      val hit = col("id") < 10000L && col("id") % 200L === lit(r)
       var done = false
       var reruns = 0
       while (!done && reruns < 50) {
         try {
-          val s = VersionedTable.deleteWithDv(spark, dir,
-            col("id") < 10000L && col("id") % 200L === lit(r),
-            densityThreshold = 0.95, maxAttempts = 500)
-          log.println(s"""{"event":"commit","op":"dv_delete","residue":$r,"version":${s.version}}""")
+          val s =
+            if (mode == "delete") VersionedTable.deleteWithDv(spark, dir,
+              hit, densityThreshold = 0.95, maxAttempts = 500)
+            else VersionedTable.updateWithDv(spark, dir, hit,
+              Map("v" -> lit(s"u$r")), densityThreshold = 0.95,
+              maxAttempts = 500)
+          log.println(s"""{"event":"commit","op":"dv_$mode","residue":$r,"version":${s.version}}""")
           done = true
         } catch {
           case _: graft.sources.ConflictingCommitException =>
             reruns += 1 // compaction rewrote a read file: re-run fresh
           case e: Throwable =>
-            val msg = String.valueOf(e.getMessage).take(160)
-              .replaceAll("[\"\\\\\n]", " ")
-            log.println(s"""{"event":"error","kind":"${e.getClass.getSimpleName}","msg":"$msg"}""")
-            rc = 1
-            done = true
-        }
-      }
-      if (!done) {
-        log.println(s"""{"event":"error","kind":"rerun_budget","residue":$r}""")
-        rc = 1
-      }
-    }
-    log.close()
-    spark.stop()
-    sys.exit(rc)
-  }
-}
-
-/** DV-update writer for [[DvRace]]: iteration i runs the merge-on-read
-  * UPDATE on residue class `r0 + i` (mod 200) — 50 scattered rows take
-  * the marker `u<r>` via a DV soft-delete plus a post-image append,
-  * always sub-threshold (pure DV shape). Residue classes are disjoint
-  * from the delete writer's, so the audit's closed form stays exact:
-  * ids never change, and a surviving id of an updated class must read
-  * back its marker. Conflict handling mirrors [[DvDeleteWriter]].
-  */
-object DvUpdateWriter {
-  def main(args: Array[String]): Unit = {
-    val Array(dir, r0Str, itersStr, logPath, barrierPath) = args.take(5)
-    val r0 = r0Str.toLong
-    val iters = itersStr.toInt
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
-    while (!Files.exists(Paths.get(barrierPath))) Thread.sleep(20)
-    var rc = 0
-    (0 until iters).foreach { i =>
-      val r = r0 + i
-      var done = false
-      var reruns = 0
-      while (!done && reruns < 50) {
-        try {
-          val s = VersionedTable.updateWithDv(spark, dir,
-            col("id") < 10000L && col("id") % 200L === lit(r),
-            Map("v" -> lit(s"u$r")),
-            densityThreshold = 0.95, maxAttempts = 500)
-          log.println(s"""{"event":"commit","op":"dv_update","residue":$r,"version":${s.version}}""")
-          done = true
-        } catch {
-          case _: graft.sources.ConflictingCommitException =>
-            reruns += 1 // compaction rewrote a read file: re-run fresh
-          case e: Throwable =>
-            val msg = String.valueOf(e.getMessage).take(160)
-              .replaceAll("[\"\\\\\n]", " ")
-            log.println(s"""{"event":"error","kind":"${e.getClass.getSimpleName}","msg":"$msg"}""")
+            log.println(Race.errorLine("error", e))
             rc = 1
             done = true
         }
@@ -370,9 +286,8 @@ object DvUpdateWriter {
 object DvReader {
   def main(args: Array[String]): Unit = {
     val Array(dir, stopPath, logPath) = args.take(3)
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     var violations = 0
     var i = 0
     while (!Files.exists(Paths.get(stopPath))) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-level stress for the round-11 hot-gram skew guard
@@ -22,19 +21,11 @@ object HotGramStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val runUnguarded = !args.drop(1).contains("off")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("PARTS", "64"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("PARTS", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("PARTS", "64"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      sys.env.getOrElse("PARTS", "64"))
 
     // a license-header-sized boilerplate block: 64 tokens = 57 hot
     // 8-grams, each landing in 30% of the corpus — at sf100 that is

@@ -29,6 +29,10 @@ import graft.sources.VersionedTable
   *   - a SIGKILLed vacuum's abandoned lock is reclaimed (grace is
   *     lowered to 3 s in the spawned JVMs) and restores keep landing.
   *
+  * Every spawned JVM runs the kit's compressed clock
+  * ([[Race.CompressedClock]]); the checks, spawner, waits and session
+  * come from the harness kit [[Race]].
+  *
   * Run:
   *   CLASSES=main:test dev/run_main.sh graft.tools.RestoreRace /tmp/rrace_out
   *
@@ -36,21 +40,7 @@ import graft.sources.VersionedTable
   */
 object RestoreRace {
 
-  private var failures = 0
-  private def check(cond: Boolean, what: String): Unit = {
-    if (cond) println(s"  OK   $what")
-    else { failures += 1; println(s"  FAIL $what") }
-  }
-
-  // compressed clocks for the spawned JVMs: the maintenance-lock
-  // reclaim grace (production 60 s → 3 s) and the vacuum manifest-age
-  // grace (production 30 s → 2 s — this harness's phases churn
-  // versions in seconds, and the reclaim-during-race assertion needs
-  // manifests to age past the grace INSIDE a phase; the
-  // slot-resurrection defense the grace backs is exercised at full
-  // strength by DvRace, whose longer phases run the production value)
-  private val Grace = Seq("-Dgraft.vt.maintLockGraceMs=3000",
-    "-Dgraft.vt.vacuumManifestGraceMs=2000")
+  import Race.{CompressedClock, check, spawn}
 
   private def audit(spark: org.apache.spark.sql.SparkSession, dir: String,
       phase: String): Unit = {
@@ -58,11 +48,7 @@ object RestoreRace {
     check(snaps.nonEmpty && snaps.last.version ==
       VersionedTable.latest(spark, dir).get.version,
       s"$phase: chain resolves (${snaps.size} retained versions)")
-    val missing = snaps.flatMap(s => s.files.filterNot(f =>
-      Files.exists(Paths.get(dir, f)))).distinct
-    check(missing.isEmpty,
-      s"$phase: every file referenced by a retained manifest exists " +
-        s"(missing=${missing.take(3).mkString(",")})")
+    Race.checkRetained(dir, phase, "file", snaps.flatMap(_.files))
     // visible appended groups stay atomic (50 rows each) even though
     // restores rewind history — a swept live file would break this
     val df = VersionedTable.read(spark, dir)
@@ -75,11 +61,9 @@ object RestoreRace {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = Paths.get(if (args.nonEmpty) args(0)
-      else Files.createTempDirectory("graft-rrace").toString)
-    Files.createDirectories(outDir)
+    val outDir = Race.outDir(args, "graft-rrace")
     val dir = outDir.resolve("table").toString
-    val spark = CommitRace.session(cpus = 4)
+    val spark = Race.session(cpus = 4)
     import spark.implicits._
 
     println(s"[rrace] table=$dir")
@@ -97,15 +81,14 @@ object RestoreRace {
     val stop1 = outDir.resolve("stop1")
     val vstop1 = outDir.resolve("vstop1")
     val wLog = outDir.resolve("w0.jsonl")
-    val writer = CommitRace.spawn(outDir, "w0", "graft.tools.RaceWriter",
-      Seq(dir, "0", "append", "18", wLog.toString, barrier.toString), Grace)
+    val writer = spawn(outDir, "w0", "graft.tools.RaceWriter",
+      Seq(dir, "0", "append", "18", wLog.toString, barrier.toString),
+      CompressedClock)
     val rLog = outDir.resolve("restore.jsonl")
-    val restorer = CommitRace.spawn(outDir, "restore",
-      "graft.tools.RestoreLoop",
-      Seq(dir, stop1.toString, rLog.toString), Grace)
-    val vLog = outDir.resolve("vacuum.jsonl")
-    val vac = CommitRace.spawn(outDir, "vacuum", "graft.tools.VacuumLoop",
-      Seq(dir, vstop1.toString, vLog.toString, "12", "45000", "150"), Grace)
+    val restorer = spawn(outDir, "restore", "graft.tools.RestoreLoop",
+      Seq(dir, stop1.toString, rLog.toString), CompressedClock)
+    val (vac, vLog) = Race.spawnVacuum(outDir, "vacuum", dir, vstop1, 150,
+      CompressedClock)
     Thread.sleep(500)
     Files.write(barrier, Array.emptyByteArray)
     check(writer.waitFor() == 0, "phase1: appender exited 0")
@@ -117,21 +100,18 @@ object RestoreRace {
       "phase1: restore loop exited 0 (zero violations)")
     Files.write(vstop1, Array.emptyByteArray)
     check(vac.waitFor() == 0, "phase1: vacuum loop exited 0")
-    val rEvents = CommitRace.readLog(rLog)
-    val rOk = rEvents.count(_.get("event").contains("restored"))
-    val rTyped = rEvents.count(_.get("event").contains("typed"))
-    val rViol = rEvents.count(_.get("event").contains("violation"))
+    val rOk = Race.events(rLog, "restored").size
+    val rTyped = Race.events(rLog, "typed").size
+    val rViol = Race.events(rLog, "violation").size
     check(rOk >= 8 && rViol == 0,
       s"phase1: $rOk restores landed and re-read exactly across sweep " +
         s"windows, $rViol violations ($rTyped typed race losses)")
-    val sweeps = CommitRace.readLog(vLog)
-      .filter(_.get("event").contains("sweep"))
+    val sweeps = Race.events(vLog, "sweep")
     val deleted = sweeps.flatMap(_.get("deleted")).map(_.toLong).sum
     check(sweeps.size >= 20 && deleted >= 1,
       s"phase1: vacuum swept ${sweeps.size} times, reclaimed $deleted " +
         "dead files DURING the restore race")
-    val vErrs = CommitRace.readLog(vLog)
-      .filter(_.get("event").contains("error"))
+    val vErrs = Race.events(vLog, "error")
     check(vErrs.isEmpty,
       s"phase1: vacuum saw no errors (${vErrs.take(2).mkString(";")})")
     audit(spark, dir, "phase1")
@@ -141,32 +121,21 @@ object RestoreRace {
     println("[rrace] phase 2: SIGKILL vacuum mid-activity; restores continue")
     val stop2 = outDir.resolve("stop2")
     val rLog2 = outDir.resolve("restore2.jsonl")
-    val restorer2 = CommitRace.spawn(outDir, "restore2",
-      "graft.tools.RestoreLoop",
-      Seq(dir, stop2.toString, rLog2.toString), Grace)
+    val restorer2 = spawn(outDir, "restore2", "graft.tools.RestoreLoop",
+      Seq(dir, stop2.toString, rLog2.toString), CompressedClock)
     val wLog2 = outDir.resolve("w1.jsonl")
-    val writer2 = CommitRace.spawn(outDir, "w1", "graft.tools.RaceWriter",
-      Seq(dir, "1", "append", "14", wLog2.toString, barrier.toString), Grace)
-    val vLog2 = outDir.resolve("vacuum2.jsonl")
-    val vac2 = CommitRace.spawn(outDir, "vacuum2", "graft.tools.VacuumLoop",
-      Seq(dir, outDir.resolve("nostop").toString, vLog2.toString,
-        "12", "45000", "150"), Grace)
-    val t0 = System.currentTimeMillis()
-    while (CommitRace.readLog(vLog2)
-        .count(_.get("event").contains("sweep")) < 3 &&
-        System.currentTimeMillis() - t0 < 120000) Thread.sleep(20)
-    vac2.destroyForcibly()
-    check(vac2.waitFor() == 137, "phase2: vacuum JVM SIGKILLed mid-activity")
-    val okAtKill = CommitRace.readLog(rLog2)
-      .count(_.get("event").contains("restored"))
+    val writer2 = spawn(outDir, "w1", "graft.tools.RaceWriter",
+      Seq(dir, "1", "append", "14", wLog2.toString, barrier.toString),
+      CompressedClock)
+    check(Race.killVacuum(outDir, "vacuum2", dir, CompressedClock) == 137,
+      "phase2: vacuum JVM SIGKILLed mid-activity")
+    def restored() = Race.events(rLog2, "restored").size
+    val okAtKill = restored()
     // if the kill landed inside the locked window, the next restores
     // must wait out the 3 s grace, reclaim, and proceed
-    val t1 = System.currentTimeMillis()
-    while (CommitRace.readLog(rLog2)
-        .count(_.get("event").contains("restored")) < okAtKill + 2 &&
-        System.currentTimeMillis() - t1 < 120000) Thread.sleep(100)
-    val okAfter = CommitRace.readLog(rLog2)
-      .count(_.get("event").contains("restored"))
+    Race.await("two restores after the kill", pollMs = 100)(
+      restored() >= okAtKill + 2)
+    val okAfter = restored()
     check(okAfter >= okAtKill + 2,
       s"phase2: restores kept landing after the kill " +
         s"($okAtKill before, $okAfter after — abandoned lock reclaimed)")
@@ -175,27 +144,15 @@ object RestoreRace {
     check(restorer2.waitFor() == 0,
       "phase2: restore loop exited 0 (zero violations across the kill)")
     // a fresh vacuum completes whatever the kill interrupted
-    val vLogF = outDir.resolve("vacuumF.jsonl")
-    val vstopF = outDir.resolve("vstopF")
-    val vacF = CommitRace.spawn(outDir, "vacuumF", "graft.tools.VacuumLoop",
-      Seq(dir, vstopF.toString, vLogF.toString, "12", "45000", "200"), Grace)
-    val tF = System.currentTimeMillis()
-    while (CommitRace.readLog(vLogF)
-        .count(_.get("event").contains("sweep")) < 2 &&
-        System.currentTimeMillis() - tF < 120000) Thread.sleep(50)
-    Files.write(vstopF, Array.emptyByteArray)
-    check(vacF.waitFor() == 0, "phase2: post-kill vacuum swept cleanly")
-    val vErrsF = CommitRace.readLog(vLogF)
-      .filter(_.get("event").contains("error"))
+    val (rcF, vLogF) = Race.finalSweep(outDir, dir, CompressedClock)
+    check(rcF == 0, "phase2: post-kill vacuum swept cleanly")
+    val vErrsF = Race.events(vLogF, "error")
     check(vErrsF.isEmpty,
       s"phase2: post-kill vacuum saw no errors " +
         s"(${vErrsF.take(2).mkString(";")})")
     audit(spark, dir, "phase2")
 
-    println(s"[rrace] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
+    Race.finish("rrace", spark)
   }
 }
 
@@ -210,9 +167,8 @@ object RestoreRace {
 object RestoreLoop {
   def main(args: Array[String]): Unit = {
     val Array(dir, stopPath, logPath) = args.take(3)
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     var violations = 0
     while (!Files.exists(Paths.get(stopPath))) {
       try {
@@ -250,9 +206,7 @@ object RestoreLoop {
       } catch {
         case e: Throwable =>
           violations += 1
-          val msg = String.valueOf(e.getMessage).take(160)
-            .replaceAll("[\"\\\\\n]", " ")
-          log.println(s"""{"event":"violation","kind":"${e.getClass.getSimpleName}","msg":"$msg"}""")
+          log.println(Race.errorLine("violation", e))
       }
       Thread.sleep(250)
     }

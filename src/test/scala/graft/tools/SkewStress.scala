@@ -4,7 +4,6 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Join-skew stress at a real scale rung (round-13, verdict item 5).
@@ -31,28 +30,22 @@ import org.apache.spark.sql.functions._
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/scale_sf10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 128)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 128)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // dim is ~2M rows (~100 MB) at sf10 — keep it on the shuffle path
-      // so the SKEWED join is what we measure, not a broadcast dodge
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // production skew gates scaled to the rung: the defaults (256 MB
-      // partition AND 5x median) are sized for cluster-scale shuffles;
-      // at sf10 the planted hot partition carries ~150-300 MB of
-      // shuffle bytes and the median ~10 MB, so a proportional 32 MB
-      // threshold exercises the same gate logic (factor 5 unchanged)
-      // the way a 100 TB shuffle would hit the 256 MB default
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
+    spark.conf.set("spark.sql.shuffle.partitions", 128)
+    spark.conf.set(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", 128)
+    // dim is ~2M rows (~100 MB) at sf10 — keep it on the shuffle path
+    // so the SKEWED join is what we measure, not a broadcast dodge
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // production skew gates scaled to the rung: the defaults (256 MB
+    // partition AND 5x median) are sized for cluster-scale shuffles;
+    // at sf10 the planted hot partition carries ~150-300 MB of
+    // shuffle bytes and the median ~10 MB, so a proportional 32 MB
+    // threshold exercises the same gate logic (factor 5 unchanged)
+    // the way a 100 TB shuffle would hit the 256 MB default
+    spark.conf.set(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32m")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
 
     // per-stage task durations (ms)
     val stageTasks = TrieMap[Int, ArrayBuffer[Long]]()
@@ -119,10 +112,7 @@ object SkewStress {
     val (rowsOff, secOff, statsOff, _) = runOnce("skewJoin OFF", skewOn = false)
     val (rowsOn, secOn, statsOn, planOn) = runOnce("skewJoin ON", skewOn = true)
 
-    var failures = 0
-    def check(c: Boolean, what: String): Unit = {
-      if (c) println(s"  OK   $what") else { failures += 1; println(s"  FAIL $what") }
-    }
+    import Race.check
     check(rowsOn == rowsOff && rowsOn.nonEmpty,
       s"answers identical with/without skew split (${rowsOn.size} groups)")
     check(planOn.contains("skew=true"),
@@ -144,7 +134,7 @@ object SkewStress {
     // absorbs the skew before the exchange — no AQE needed
     val seen2 = stageTasks.synchronized(stageTasks.keySet.toSet)
     val t0 = System.nanoTime()
-    val aggRows = fact.groupBy(col("l_partkey"))
+    fact.groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("cnt"), sum(col("l_quantity")).as("q"))
       .agg(count(lit(1)), max(col("cnt"))).collect()
     val aggSec = (System.nanoTime() - t0) / 1e9
@@ -156,9 +146,6 @@ object SkewStress {
       "hot-key aggregation balanced by map-side partial agg")
     println(f"[skew] wall-clock: off=${secOff}%.1f s on=${secOn}%.1f s")
 
-    println(s"[skew] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
+    Race.finish("skew", spark)
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.sources.VersionedTable
 
@@ -26,27 +26,26 @@ import graft.sources.VersionedTable
   *     and no-ops — exactly-once survives redelivery after maintenance
   *     interleaving too.
   *
+  * The checks, spawner, waits and session come from the harness kit
+  * [[Race]].
+  *
   * Run:
   *   CLASSES=main:test dev/run_main.sh graft.tools.StreamMaintRace /tmp/smr
   * Artifact: `dev/sweeps/r13_stream_maint_race.txt`.
   */
 object StreamMaintRace {
+
+  import Race.check
+
   def main(args: Array[String]): Unit = {
-    val outDir = Paths.get(if (args.nonEmpty) args(0)
-      else Files.createTempDirectory("graft-smr").toString)
-    Files.createDirectories(outDir)
+    val outDir = Race.outDir(args, "graft-smr")
     val dir = outDir.resolve("table").toString
     val inDir = outDir.resolve("input").toString
-    val spark = CommitRace.session(cpus = 8)
+    val spark = Race.session(cpus = 8)
     import spark.implicits._
 
     val Batches = 12
     val RowsPerBatch = 1000L
-
-    var failures = 0
-    def check(c: Boolean, what: String): Unit = {
-      if (c) println(s"  OK   $what") else { failures += 1; println(s"  FAIL $what") }
-    }
 
     // seed table + input files (one parquet file per future micro-batch)
     VersionedTable.create(
@@ -62,19 +61,13 @@ object StreamMaintRace {
     val compLog = outDir.resolve("compactor.jsonl")
     val barrier = outDir.resolve("go")
     Files.write(barrier, Array.emptyByteArray)
-    val compactor =
-      CommitRaceSpawn.spawn(outDir, "compactor", "graft.tools.RaceWriter",
-        Seq(dir, "42", "compact", "60", compLog.toString, barrier.toString))
+    val compactor = Race.spawn(outDir, "compactor", "graft.tools.RaceWriter",
+      Seq(dir, "42", "compact", "60", compLog.toString, barrier.toString))
     // wait until the compactor loop is demonstrably running (first
     // compaction committed) — otherwise its JVM startup eats the whole
     // race window and the ingest runs unopposed
-    val w0 = System.currentTimeMillis()
-    while (!Files.exists(Paths.get(compLog.toString)) ||
-        !Files.readString(compLog).contains("\"commit\"")) {
-      require(System.currentTimeMillis() - w0 < 120000,
-        "compactor did not start within 120s")
-      Thread.sleep(50)
-    }
+    Race.await("the compactor's first commit")(
+      Race.events(compLog, "commit").nonEmpty)
 
     // streaming ingest in THIS JVM, one file per micro-batch
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -117,31 +110,6 @@ object StreamMaintRace {
     check(VersionedTable.read(spark, dir).count() == expect,
       "row count unchanged after replay")
 
-    println(s"[smr] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
-  }
-}
-
-/** Subprocess spawner shared with [[CommitRace]] (kept separate so the
-  * orchestrators stay independent mains).
-  */
-object CommitRaceSpawn {
-  def spawn(outDir: java.nio.file.Path, name: String, mainCls: String,
-      args: Seq[String]): Process = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val inherited = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments
-    val opens = scala.jdk.CollectionConverters
-      .ListHasAsScala(inherited).asScala.filter(_.startsWith("--add-opens"))
-    val cmd = Seq(javaBin) ++ opens ++ Seq("-Xmx3g",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", sys.props("java.class.path"), mainCls) ++ args
-    val pb = new ProcessBuilder(scala.jdk.CollectionConverters
-      .SeqHasAsJava(cmd).asJava)
-    pb.redirectOutput(outDir.resolve(s"$name.out").toFile)
-    pb.redirectErrorStream(true)
-    pb.start()
+    Race.finish("smr", spark)
   }
 }

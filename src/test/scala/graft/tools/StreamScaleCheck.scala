@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Streams
@@ -46,18 +46,10 @@ object StreamScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val root = java.nio.file.Files.createTempDirectory("graft-streamscale").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
+    spark.conf.set("spark.sql.shuffle.partitions", 64)
+    spark.conf.set(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum", 64)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")

@@ -31,16 +31,9 @@ object StreamSoak {
     val sfDir = args(0)
     val nBatches = if (args.length > 1) args(1).toInt else 24
     val root = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.shuffle.partitions", 32)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")

@@ -37,6 +37,14 @@ import graft.sources.VersionedTable
   * FileNotFound (never a silently wrong answer), a vacuumed version
   * raises "no version", and a fresh read stays correct.
   *
+  * Clocks: phase 3 vacuums in this JVM right after its own commits, so
+  * it zeroes the manifest-age grace here first. The spawned JVMs keep
+  * the production grace: under the kit's compressed clock
+  * ([[Race.CompressedClock]]) the phase-1 vacuum drops a version 2 s
+  * after 12 newer ones land, inside a CoW merge that still reads its
+  * files, and the merge fails with FileNotFound. The checks, spawner,
+  * waits and session come from the harness kit [[Race]].
+  *
   * Run:
   *   CLASSES=main:test dev/run_main.sh graft.tools.VacuumRace /tmp/vrace_out
   *
@@ -44,18 +52,14 @@ import graft.sources.VersionedTable
   */
 object VacuumRace {
 
-  private var failures = 0
-  private def check(cond: Boolean, what: String): Unit = {
-    if (cond) println(s"  OK   $what")
-    else { failures += 1; println(s"  FAIL $what") }
-  }
+  import Race.check
 
   /** Row-count closed form from writer logs: base + 50 per append
     * commit (merge/update/compact are row-preserving by construction).
     */
   private def expectedRows(base: Long, logs: Seq[Path]): Long =
-    base + 50L * logs.flatMap(CommitRace.readLog).count(e =>
-      e.get("event").contains("commit") && e.get("op").contains("append"))
+    base + 50L * logs.flatMap(Race.events(_, "commit"))
+      .count(_.get("op").contains("append"))
 
   /** Audit the table against logs: closed-form count, per-append
     * atomicity from content, at-most-one version gap, every file the
@@ -82,24 +86,17 @@ object VacuumRace {
     check(total == exp,
       s"$phase: row count $total == closed form $exp " +
         s"(base $base + 50 x appends)")
-    val missing = snaps.flatMap(s => s.files.filterNot(f =>
-      Files.exists(Paths.get(dir, f)))).distinct
-    check(missing.isEmpty,
-      s"$phase: every file referenced by a retained manifest exists " +
-        s"(missing=${missing.take(3).mkString(",")})")
-    val errs = logs.flatMap(CommitRace.readLog)
-      .filter(_.get("event").contains("error"))
+    Race.checkRetained(dir, phase, "file", snaps.flatMap(_.files))
+    val errs = logs.flatMap(Race.events(_, "error"))
     check(errs.isEmpty,
       s"$phase: writers saw only typed conflicts, never errors " +
         s"(${errs.take(2).mkString(";")})")
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = Paths.get(if (args.nonEmpty) args(0)
-      else Files.createTempDirectory("graft-vrace").toString)
-    Files.createDirectories(outDir)
+    val outDir = Race.outDir(args, "graft-vrace")
     val dir = outDir.resolve("table").toString
-    val spark = CommitRace.session(cpus = 4)
+    val spark = Race.session(cpus = 4)
     import spark.implicits._
 
     val BaseRows = 1000L
@@ -117,17 +114,14 @@ object VacuumRace {
       .zipWithIndex.map { case ((n, mode), i) =>
         val log = outDir.resolve(s"$n.jsonl")
         val iters = if (mode == "dml") "12" else "20"
-        (CommitRace.spawn(outDir, n, "graft.tools.RaceWriter",
+        (Race.spawn(outDir, n, "graft.tools.RaceWriter",
           Seq(dir, i.toString, mode, iters, log.toString, barrier.toString)),
           log)
       }
     val rLog1 = outDir.resolve("reader1.jsonl")
-    val reader1 = CommitRace.spawn(outDir, "reader1",
-      "graft.tools.VacuumReader",
+    val reader1 = Race.spawn(outDir, "reader1", "graft.tools.VacuumReader",
       Seq(dir, stop1.toString, rLog1.toString, BaseRows.toString))
-    val vLog1 = outDir.resolve("vacuum1.jsonl")
-    val vac1 = CommitRace.spawn(outDir, "vacuum1", "graft.tools.VacuumLoop",
-      Seq(dir, vstop1.toString, vLog1.toString, "12", "45000", "300"))
+    val (vac1, vLog1) = Race.spawnVacuum(outDir, "vacuum1", dir, vstop1, 300)
     Thread.sleep(500)
     Files.write(barrier, Array.emptyByteArray)
     wLogs.zipWithIndex.foreach { case ((p, _), i) =>
@@ -141,22 +135,19 @@ object VacuumRace {
     Files.write(stop1, Array.emptyByteArray)
     check(reader1.waitFor() == 0,
       "phase1: reader exited 0 (no violation, no FNF within retention)")
-    val rEvents = CommitRace.readLog(rLog1)
-    val rChecks = rEvents.count(_.get("event").contains("check"))
-    val rHolds = rEvents.count(_.get("event").contains("held"))
-    val rViol = rEvents.count(_.get("event").contains("violation"))
+    val rChecks = Race.events(rLog1, "check").size
+    val rHolds = Race.events(rLog1, "held").size
+    val rViol = Race.events(rLog1, "violation").size
     check(rChecks >= 15 && rViol == 0,
       s"phase1: reader audited $rChecks committed snapshots, $rViol violations")
     check(rHolds >= 5,
       s"phase1: reader re-read $rHolds HELD snapshots across the sweep window")
-    val sweeps1 = CommitRace.readLog(vLog1)
-      .filter(_.get("event").contains("sweep"))
+    val sweeps1 = Race.events(vLog1, "sweep")
     val deleted1 = sweeps1.flatMap(_.get("deleted")).map(_.toLong).sum
     check(sweeps1.size >= 10 && deleted1 >= 1,
       s"phase1: vacuum swept ${sweeps1.size} times and reclaimed " +
         s"$deleted1 dead files DURING the race")
-    val vErrs1 = CommitRace.readLog(vLog1)
-      .filter(_.get("event").contains("error"))
+    val vErrs1 = Race.events(vLog1, "error")
     check(vErrs1.isEmpty,
       s"phase1: vacuum loop hit no errors (${vErrs1.take(2).mkString(";")})")
     audit(spark, dir, BaseRows, wLogs.map(_._2), "phase1")
@@ -167,22 +158,12 @@ object VacuumRace {
       case ((n, mode), i) =>
         val log = outDir.resolve(s"$n.jsonl")
         val iters = if (mode == "dml") "8" else "12"
-        (CommitRace.spawn(outDir, n, "graft.tools.RaceWriter",
+        (Race.spawn(outDir, n, "graft.tools.RaceWriter",
           Seq(dir, (3 + i).toString, mode, iters, log.toString,
             barrier.toString)), log)
     }
     (1 to 2).foreach { k =>
-      val vLog = outDir.resolve(s"vacuum2$k.jsonl")
-      val vac = CommitRace.spawn(outDir, s"vacuum2$k",
-        "graft.tools.VacuumLoop",
-        Seq(dir, outDir.resolve(s"nostop$k").toString, vLog.toString,
-          "12", "45000", "150"))
-      val t0 = System.currentTimeMillis()
-      while (CommitRace.readLog(vLog)
-          .count(_.get("event").contains("sweep")) < 3 &&
-          System.currentTimeMillis() - t0 < 120000) Thread.sleep(20)
-      vac.destroyForcibly()
-      val rc = vac.waitFor()
+      val rc = Race.killVacuum(outDir, s"vacuum2$k", dir)
       check(rc == 137, s"phase2: vacuum JVM $k SIGKILLed mid-activity (got $rc)")
       // the chain must resolve and answer correctly IMMEDIATELY after
       val snaps = VersionedTable.snapshots(spark, dir)
@@ -196,21 +177,15 @@ object VacuumRace {
       check(rc == 0, s"phase2: writer${3 + i} exited 0 (got $rc)")
     }
     // a fresh vacuum completes whatever the kills interrupted
-    val vLogF = outDir.resolve("vacuumF.jsonl")
-    val vstopF = outDir.resolve("vstopF")
-    val vacF = CommitRace.spawn(outDir, "vacuumF", "graft.tools.VacuumLoop",
-      Seq(dir, vstopF.toString, vLogF.toString, "12", "45000", "200"))
-    val tF = System.currentTimeMillis()
-    while (CommitRace.readLog(vLogF)
-        .count(_.get("event").contains("sweep")) < 2 &&
-        System.currentTimeMillis() - tF < 120000) Thread.sleep(50)
-    Files.write(vstopF, Array.emptyByteArray)
-    check(vacF.waitFor() == 0,
+    check(Race.finalSweep(outDir, dir)._1 == 0,
       "phase2: post-kill vacuum completed the interrupted sweep cleanly")
     audit(spark, dir, BaseRows, (wLogs ++ wLogs2).map(_._2), "phase2")
 
     // ---- phase 3: past-retention readers fail LOUDLY, never wrong ----
     println("[vrace] phase 3: stale resolved file list past retention")
+    // this JVM commits and vacuums within seconds: with the production
+    // manifest-age grace no version would leave retention
+    VersionedTable.vacuumManifestGraceMs = 0L
     // hold a resolved file list for the CURRENT latest...
     val held = VersionedTable.read(spark, dir)
     val heldTotal = expectedRows(BaseRows, (wLogs ++ wLogs2).map(_._2))
@@ -245,10 +220,7 @@ object VacuumRace {
     check(noVersion,
       "phase3: a vacuumed version raises 'no version', not silent data")
 
-    println(s"[vrace] done: ${if (failures == 0) "ALL CHECKS PASSED"
-      else s"$failures CHECKS FAILED"}")
-    spark.stop()
-    sys.exit(if (failures == 0) 0 else 2)
+    Race.finish("vrace", spark)
   }
 }
 
@@ -260,9 +232,8 @@ object VacuumLoop {
   def main(args: Array[String]): Unit = {
     val Array(dir, stopPath, logPath, retainStr, graceStr, intervalStr) =
       args.take(6)
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     var rc = 0
     while (!Files.exists(Paths.get(stopPath))) {
       try {
@@ -271,10 +242,7 @@ object VacuumLoop {
         log.println(s"""{"event":"sweep","deleted":$d,"orphans":$o}""")
       } catch {
         case e: Throwable =>
-          val msg = String.valueOf(e.getMessage).take(160)
-            .replaceAll("[\"\\\\\n]", " ")
-          log.println(
-            s"""{"event":"error","kind":"${e.getClass.getSimpleName}","msg":"$msg"}""")
+          log.println(Race.errorLine("error", e))
           rc = 1
       }
       Thread.sleep(intervalStr.toLong)
@@ -299,9 +267,8 @@ object VacuumReader {
   def main(args: Array[String]): Unit = {
     val Array(dir, stopPath, logPath, baseStr) = args.take(4)
     val baseRows = baseStr.toLong
-    val spark = CommitRace.session()
-    val log = new java.io.PrintWriter(
-      new java.io.FileWriter(logPath, true), true)
+    val spark = Race.session()
+    val log = Race.logWriter(logPath)
     var violations = 0
     var i = 0
     while (!Files.exists(Paths.get(stopPath))) {

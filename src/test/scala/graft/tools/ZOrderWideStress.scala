@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-level A/B for the round-11 exact-histogram z-order routing
@@ -21,18 +21,11 @@ import org.apache.spark.sql.functions._
 object ZOrderWideStress {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("PARTS", "64"))
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("PARTS", "64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(sfDir)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      sys.env.getOrElse("PARTS", "64"))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+      sys.env.getOrElse("PARTS", "64"))
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targetFiles = 32
