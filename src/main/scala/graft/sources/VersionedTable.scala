@@ -53,8 +53,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * versions stay readable ([[snapshotAt]], [[snapshotAsOf]]) until
   * [[vacuum]] reclaims their unreferenced files.
   *
-  * Scale: a commit is one manifest write + one rename regardless of
-  * table size; manifests list files (not rows), bounded by file count —
+  * Scale: a commit is one manifest write published by one exclusive
+  * create or hard link, regardless of table size; manifests list files
+  * (not rows), bounded by file count —
   * the same contract that lets Delta/Iceberg commit 100 TB tables in
   * milliseconds. Readers plan from the explicit list, so partition
   * pruning and pushdown work unchanged. Multi-writer safety is
@@ -104,7 +105,9 @@ final class ConstraintViolationException(msg: String)
 object VersionedTable {
 
   /** One committed version: `operation` ∈ create|append|overwrite|compact|
-    * merge|cluster (streaming sinks use caller tags). `stats` carries
+    * merge|cluster|delete|update|restore|clone|analyze|rename|drop|
+    * add_column|add_constraint|drop_constraint (streaming sinks use
+    * caller tags). `stats` carries
     * per-file data-skipping metadata ([[DataSkipping.FileStats]]) for
     * files staged by commits that requested it; files without stats are
     * simply never pruned.
@@ -626,10 +629,13 @@ object VersionedTable {
   def latest(spark: SparkSession, dir: String): Option[Snapshot] =
     latestAttempt(spark, dir, retries = 2)
 
+  /** [[latest]] of a table the caller requires to exist. */
+  private def committed(spark: SparkSession, dir: String): Snapshot =
+    latest(spark, dir).getOrElse(sys.error(s"table $dir has no commits"))
+
   private def latestAttempt(spark: SparkSession, dir: String,
       retries: Int): Option[Snapshot] = {
     val (fs, _) = fsFor(spark, dir)
-    val mdir = new Path(dir, ManifestDir)
     manifestFiles(fs, dir)
       .sortBy(_.getPath.getName)(Ordering[String].reverse) // zero-padded
       .iterator
@@ -638,35 +644,22 @@ object VersionedTable {
       .map {
         case FullRec(s) => s
         case d: DeltaRec =>
-          // walk the base chain back to the nearest full manifest, then
-          // fold forward. A complete delta can never sit on a torn base
-          // (a writer only claims v+1 after reading a COMPLETE v), so a
-          // missing/torn base here is (a) the vacuum-materialization
-          // crash state — manifest absent, complete `.ckpt` alongside,
-          // self-healed via [[recoverCkpt]] — (b) a LIVE concurrent
-          // vacuum that swapped an ancestor to a full checkpoint and
-          // swept its bases between our read and this walk — retried
-          // on a fresh listing — or (c) real corruption (loud).
-          var stack = List(d)
-          var full: Option[Snapshot] = None
-          while (full.isEmpty) {
-            val basePath = new Path(mdir, manifestName(stack.head.base))
-            readManifestIfPresent(fs, basePath) match {
-              case Some(FullRec(s)) => full = Some(s)
-              case Some(d2: DeltaRec) =>
-                require(d2.base < d2.version,
-                  s"manifest corruption: version ${d2.version} of $dir " +
-                    s"declares base ${d2.base}")
-                stack = d2 :: stack
-              case None if recoverCkpt(fs, dir, stack.head.base) =>
-                // healed: loop re-reads the just-published manifest
-              case None if retries > 0 =>
-                return latestAttempt(spark, dir, retries - 1)
-              case None => sys.error(
-                s"manifest chain broken at version ${stack.head.base} of $dir")
-            }
+          // resolve the base by name back to the nearest full manifest,
+          // then apply `d`. A complete delta can never sit on a torn base
+          // (a writer only claims v+1 after reading a COMPLETE v), so an
+          // unresolvable base here is (a) the vacuum-materialization
+          // crash state — self-healed inside [[resolveByName]] — (b) a
+          // LIVE concurrent vacuum that swapped an ancestor to a full
+          // checkpoint and swept its bases between our read and this
+          // walk — retried on a fresh listing — or (c) real corruption
+          // (loud).
+          resolveByName(fs, dir, d.base, Map.empty) match {
+            case Some(chain) => applyDelta(chain.last, d)
+            case None if retries > 0 =>
+              return latestAttempt(spark, dir, retries - 1)
+            case None => sys.error(
+              s"manifest chain broken below version ${d.version} of $dir")
           }
-          stack.foldLeft(full.get)(applyDelta)
       }
   }
 
@@ -853,8 +846,7 @@ object VersionedTable {
     require(name.nonEmpty && name.forall(ch =>
       ch.isLetterOrDigit || ch == '_'),
       s"constraint name must be [A-Za-z0-9_]+; got '$name'")
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     require(!prev.constraints.keys.exists(_.equalsIgnoreCase(name)),
       s"constraint $name already exists on $dir")
     val sch = prev.schema.getOrElse(sys.error(
@@ -872,10 +864,9 @@ object VersionedTable {
       throw new ConstraintViolationException(
         s"cannot add CHECK constraint $name ($exprSql) to $dir: " +
           s"existing row violates it: ${bad.head}")
-    commit(spark, dir, prev.version + 1, "add_constraint", prev.files,
-      prev.stats, prev.schemaJson, prev.tableId, prev.dvFiles, prev.dvn,
-      prev.blooms, prev.droppedCols,
-      prev.constraints + (name -> exprSql), prev.generatedCols)
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "add_constraint",
+      constraints = prev.constraints + (name -> exprSql)))
   }
 
   /** DROP a CHECK constraint, metadata-only. Time travel to versions
@@ -884,15 +875,12 @@ object VersionedTable {
     */
   def dropCheckConstraint(spark: SparkSession, dir: String,
       name: String): Snapshot = {
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val key = prev.constraints.keys.find(_.equalsIgnoreCase(name))
       .getOrElse(sys.error(s"no constraint $name on $dir (has " +
         prev.constraints.keys.mkString("[", ",", "]") + ")"))
-    commit(spark, dir, prev.version + 1, "drop_constraint", prev.files,
-      prev.stats, prev.schemaJson, prev.tableId, prev.dvFiles, prev.dvn,
-      prev.blooms, prev.droppedCols, prev.constraints - key,
-      prev.generatedCols)
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "drop_constraint", constraints = prev.constraints - key))
   }
 
   /** RENAME a column, metadata-only: the logical name changes, the
@@ -907,8 +895,7 @@ object VersionedTable {
     */
   def renameColumn(spark: SparkSession, dir: String, oldName: String,
       newName: String): Snapshot = {
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val sch = prev.schema.getOrElse(sys.error(
       s"renameColumn needs a recorded schema on $dir"))
     val field = sch.fields.find(_.name.equalsIgnoreCase(oldName)).getOrElse(
@@ -932,17 +919,14 @@ object VersionedTable {
     val renamed = org.apache.spark.sql.types.StructType(mapped.fields.map(
       f => if (f.name.equalsIgnoreCase(oldName)) f.copy(name = newName)
       else f))
-    def remapCols[A](m: Map[String, A]): Map[String, A] =
-      m.map { case (k, v) =>
-        (if (k.equalsIgnoreCase(field.name)) newName else k) -> v }
-    val stats = prev.stats.view.mapValues(fs =>
-      DataSkipping.FileStats(fs.rowCount, remapCols(fs.cols))).toMap
-    val blooms = prev.blooms.view.mapValues(remapCols).toMap
-    commit(spark, dir, prev.version + 1, "rename", prev.files, stats,
-      Some(renamed.json), prev.tableId, prev.dvFiles, prev.dvn, blooms,
-      prev.droppedCols, prev.constraints,
-      prev.generatedCols.map { case (g, e) =>
-        (if (g.equalsIgnoreCase(oldName)) newName else g) -> e })
+    def rename(k: String) = if (k.equalsIgnoreCase(field.name)) newName else k
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "rename", stats = renameStatCols(prev.stats, rename),
+      schemaJson = Some(renamed.json),
+      blooms = prev.blooms.view.mapValues(
+        _.map { case (c, p) => rename(c) -> p }).toMap,
+      generatedCols = prev.generatedCols.map { case (g, e) =>
+        rename(g) -> e }))
   }
 
   /** DROP a column, metadata-only: the field leaves the logical schema
@@ -953,8 +937,7 @@ object VersionedTable {
     * old files under the recycled name.
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Snapshot = {
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val sch = prev.schema.getOrElse(sys.error(
       s"dropColumn needs a recorded schema on $dir"))
     val mapped = withMapping(sch)
@@ -976,18 +959,19 @@ object VersionedTable {
     }
     val remaining = org.apache.spark.sql.types.StructType(
       mapped.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    val stats = prev.stats.view.mapValues(fs => DataSkipping.FileStats(
-      fs.rowCount,
-      fs.cols.filterNot(_._1.equalsIgnoreCase(field.name)))).toMap
-    val blooms = prev.blooms.view.mapValues(
-      _.filterNot(_._1.equalsIgnoreCase(field.name))).toMap
-      .filter(_._2.nonEmpty)
-    commit(spark, dir, prev.version + 1, "drop", prev.files, stats,
-      Some(remaining.json), prev.tableId, prev.dvFiles, prev.dvn, blooms,
-      prev.droppedCols +
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "drop",
+      stats = prev.stats.view.mapValues(fs => DataSkipping.FileStats(
+        fs.rowCount,
+        fs.cols.filterNot(_._1.equalsIgnoreCase(field.name)))).toMap,
+      schemaJson = Some(remaining.json),
+      blooms = prev.blooms.view.mapValues(
+        _.filterNot(_._1.equalsIgnoreCase(field.name))).toMap
+        .filter(_._2.nonEmpty),
+      droppedCols = prev.droppedCols +
         (physNameOf(field) -> fieldIdOf(field).getOrElse(0L)),
-      prev.constraints,
-      prev.generatedCols.filterNot(_._1.equalsIgnoreCase(name)))
+      generatedCols = prev.generatedCols.filterNot(
+        _._1.equalsIgnoreCase(name))))
   }
 
   /** ADD a column, metadata-only: the field joins the logical schema at
@@ -1001,8 +985,7 @@ object VersionedTable {
     */
   def addColumn(spark: SparkSession, dir: String,
       field: org.apache.spark.sql.types.StructField): Snapshot = {
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val sch = prev.schema.getOrElse(sys.error(
       s"addColumn needs a recorded schema on $dir"))
     require(!sch.fields.exists(_.name.equalsIgnoreCase(field.name)),
@@ -1023,15 +1006,10 @@ object VersionedTable {
         if (i < sch.fields.length) f.copy(nullable = sch.fields(i).nullable)
         else f
       })
-    commit(spark, dir, prev.version + 1, "add_column", prev.files,
-      prev.stats, Some(next.json), prev.tableId, prev.dvFiles, prev.dvn,
-      prev.blooms, prev.droppedCols, prev.constraints, prev.generatedCols)
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "add_column", schemaJson = Some(next.json)))
   }
 
-  /** Stage `df`'s rows as immutable data files for version `v` and
-    * return their table-relative paths. The subdir is random-suffixed so
-    * a crashed or conflict-losing attempt leaves only invisible debris.
-    */
   /** Label the Spark jobs launched inside `f` (guide §1.5) so DML and
     * staging work is attributable in the UI / listeners; thread-local,
     * restores the caller's own description afterwards (SQL-text DML
@@ -1044,6 +1022,10 @@ object VersionedTable {
     try f finally sc.setJobDescription(prev)
   }
 
+  /** Stage `df`'s rows as immutable data files for version `v` and
+    * return their table-relative paths. The subdir is random-suffixed so
+    * a crashed or conflict-losing attempt leaves only invisible debris.
+    */
   private def stageFiles(df: DataFrame, dir: String, v: Long): Seq[String] = {
     val sub = s"data/v${v}_${java.util.UUID.randomUUID.toString.take(8)}"
     withJobDesc(df.sparkSession, s"vt:stage:v$v") {
@@ -1054,6 +1036,29 @@ object VersionedTable {
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .map(s => s"$sub/${s.getPath.getName}")
   }
+
+  /** `cols` (logical names) as the files of a table with `schema` spell
+    * them, and the way back from a physical name to its logical one: the
+    * one column-mapping translation of staging, [[analyze]] and
+    * [[analyzeBloom]]. Identity on a table without a mapping.
+    */
+  private def physicalCols(
+      schema: Option[org.apache.spark.sql.types.StructType],
+      cols: Seq[String]): (Seq[String], String => String) =
+    schema.filter(hasMapping) match {
+      case None => (cols, identity)
+      case Some(sch) =>
+        val phys = cols.map(c => sch.fields.find(_.name.equalsIgnoreCase(c))
+          .map(physNameOf).getOrElse(c))
+        val back = phys.zip(cols).toMap
+        (phys, k => back.getOrElse(k, k))
+    }
+
+  /** `stats` with every column key renamed by `name`. */
+  private def renameStatCols(stats: Map[String, DataSkipping.FileStats],
+      name: String => String): Map[String, DataSkipping.FileStats] =
+    stats.view.mapValues(fs =>
+      fs.copy(cols = fs.cols.map { case (k, c) => name(k) -> c })).toMap
 
   /** [[stageFiles]] plus data-skipping stats over exactly the staged
     * files (empty `statsCols` = no stats job at all). When `tblSchema`
@@ -1066,72 +1071,49 @@ object VersionedTable {
       statsCols: Seq[String],
       tblSchema: Option[org.apache.spark.sql.types.StructType] = None):
       (Seq[String], Map[String, DataSkipping.FileStats]) = {
-    import org.apache.spark.sql.functions.col
-    tblSchema.filter(hasMapping) match {
-      case None =>
-        val files = stageFiles(df, dir, v)
-        (files,
-          DataSkipping.collectStats(df.sparkSession, dir, files, statsCols))
-      case Some(sch) =>
-        def physOf(logical: String): String =
-          sch.fields.find(_.name.equalsIgnoreCase(logical))
-            .map(physNameOf).getOrElse(logical)
-        val phys = df.select(df.schema.fields.map(f =>
-          col(f.name).as(physOf(f.name))).toSeq: _*)
-        val files = stageFiles(phys, dir, v)
-        val physCols = statsCols.map(physOf)
-        val collected = DataSkipping.collectStats(df.sparkSession, dir,
-          files, physCols)
-        val back = physCols.zip(statsCols).toMap
-        (files, collected.view.mapValues(fs => DataSkipping.FileStats(
-          fs.rowCount,
-          fs.cols.map { case (k, v2) => back.getOrElse(k, k) -> v2 }))
-          .toMap)
-    }
+    val names = df.columns.toSeq
+    val (physNames, _) = physicalCols(tblSchema, names)
+    val (physStats, logical) = physicalCols(tblSchema, statsCols)
+    val files = stageFiles(
+      if (physNames == names) df else df.toDF(physNames: _*), dir, v)
+    (files, renameStatCols(
+      DataSkipping.collectStats(df.sparkSession, dir, files, physStats),
+      logical))
   }
 
-  /** Atomically claim-and-commit `files` as manifest version `v`:
-    * exclusive-create the manifest (the claim — exactly one writer can
-    * win it), then write the body and the `end` terminator through the
-    * claimed handle (the commit — readers ignore terminator-less
-    * manifests). Throws on a concurrent-writer conflict. Rename is
-    * deliberately not used: POSIX rename replaces an existing
+  /** Atomically claim-and-commit `next` as manifest version
+    * `next.version`: exclusive-create the manifest (the claim — exactly
+    * one writer can win it), then write the body and the `end`
+    * terminator through the claimed handle (the commit — readers ignore
+    * terminator-less manifests). Throws on a concurrent-writer conflict.
+    * Rename is deliberately not used: POSIX rename replaces an existing
     * destination, which would let a racing writer overwrite the winner.
+    * The one entry of every full-manifest commit: it stamps the commit
+    * time, and at version 1 it mints the table id when `next` has none.
     * Package-visible so the spec can drive the race window directly.
     */
-  private[graft] def commit(spark: SparkSession, dir: String, v: Long,
-      operation: String, files: Seq[String],
-      stats: Map[String, DataSkipping.FileStats] = Map.empty,
-      schemaJson: Option[String] = None,
-      tableId: Option[String] = None,
-      dvFiles: Seq[String] = Nil,
-      dvn: Map[String, Long] = Map.empty,
-      blooms: Map[String, Map[String, String]] = Map.empty,
-      droppedCols: Map[String, Long] = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      generatedCols: Map[String, String] = Map.empty): Snapshot = {
+  private[graft] def commit(spark: SparkSession, dir: String,
+      next: Snapshot): Snapshot = {
     // Version 1 MINTS the table identity; it is carried forward by
     // every later manifest (full manifests re-render it, deltas inherit
     // through applyDelta), so a table deleted and recreated at the same
     // path is distinguishable no matter how far the new incarnation has
     // grown — the device behind the streaming sinks' recreation reset.
-    val tid =
-      if (v == 1L) tableId.orElse(
-        Some(java.util.UUID.randomUUID.toString.take(16)))
-      else tableId
-    val snap = Snapshot(v, System.currentTimeMillis(), operation, files,
-      stats, schemaJson, tid, dvFiles, dvn, blooms, droppedCols,
-      constraints, generatedCols)
-    writeExclusive(spark, dir, v, renderManifest(snap).getBytes("UTF-8"))
+    val snap = next.copy(timestampMs = System.currentTimeMillis(),
+      tableId = next.tableId.orElse(Option.when(next.version == 1L)(
+        java.util.UUID.randomUUID.toString.take(16))))
+    writeExclusive(spark, dir, snap.version,
+      renderManifest(snap).getBytes("UTF-8"))
     snap
   }
 
   /** Commit version `prev.version + 1` as a DELTA manifest (adds +
     * removes against `prev`), or as a full checkpoint manifest on every
     * [[CheckpointEvery]]-th version. Returns the RESOLVED snapshot
-    * either way. This is the incremental-commit primitive behind
-    * append/merge/DML: metadata cost is O(changed files) per commit,
-    * bounded chain length for readers.
+    * either way: [[applyDelta]] of the record, the same rule every
+    * reader resolves it by. This is the incremental-commit primitive
+    * behind append/merge/DML: metadata cost is O(changed files) per
+    * commit, bounded chain length for readers.
     */
   private[graft] def commitDelta(spark: SparkSession, dir: String,
       prev: Snapshot, operation: String,
@@ -1140,29 +1122,13 @@ object VersionedTable {
       schemaJson: Option[String],
       dvAdds: Seq[String] = Nil,
       dvnSets: Map[String, Long] = Map.empty): Snapshot = {
-    val v = prev.version + 1
-    val removed = removes.toSet
-    val newDvn = (prev.dvn -- removed) ++ dvnSets // same algebra as applyDelta
-    val resolved = Snapshot(v, System.currentTimeMillis(), operation,
-      prev.files.filterNot(removed) ++ adds,
-      (prev.stats -- removed) ++ addStats,
-      schemaJson.orElse(prev.schemaJson),
-      prev.tableId,
-      if (newDvn.isEmpty) Nil else (prev.dvFiles ++ dvAdds).distinct,
-      newDvn,
-      prev.blooms -- removed,
-      prev.droppedCols,
-      prev.constraints,
-      prev.generatedCols)
-    if (v % CheckpointEvery == 0) {
-      writeExclusive(spark, dir, v,
-        renderManifest(resolved).getBytes("UTF-8"))
-    } else {
-      writeExclusive(spark, dir, v,
-        renderDelta(DeltaRec(v, resolved.timestampMs, operation,
-          prev.version, adds, removes, addStats,
-          resolved.schemaJson, dvAdds, dvnSets)).getBytes("UTF-8"))
-    }
+    val rec = DeltaRec(prev.version + 1, System.currentTimeMillis(),
+      operation, prev.version, adds, removes, addStats,
+      schemaJson.orElse(prev.schemaJson), dvAdds, dvnSets)
+    val resolved = applyDelta(prev, rec)
+    writeExclusive(spark, dir, rec.version,
+      (if (rec.version % CheckpointEvery == 0) renderManifest(resolved)
+      else renderDelta(rec)).getBytes("UTF-8"))
     resolved
   }
 
@@ -1648,8 +1614,8 @@ object VersionedTable {
   def append(df: DataFrame, dir: String,
       statsCols: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false): Snapshot =
-    write(df, dir, "append", existing(df.sparkSession, dir), statsCols,
-      mergeSchema = mergeSchema)
+    write(df, dir, "append", Some(committed(df.sparkSession, dir)),
+      statsCols, mergeSchema = mergeSchema)
 
   /** [[append]] with automatic conflict REBASE: the write step with up
     * to `maxAttempts` version claims. Appends commute, so when another
@@ -1664,8 +1630,8 @@ object VersionedTable {
       statsCols: Seq[String] = Seq.empty,
       mergeSchema: Boolean = false,
       maxAttempts: Int = 5): Snapshot =
-    write(df, dir, "append", existing(df.sparkSession, dir), statsCols,
-      mergeSchema = mergeSchema, maxAttempts = maxAttempts)
+    write(df, dir, "append", Some(committed(df.sparkSession, dir)),
+      statsCols, mergeSchema = mergeSchema, maxAttempts = maxAttempts)
 
   /** [[append]] with a caller-supplied operation tag, creating the table
     * on first use: the write step as a tagged append with up to five
@@ -1734,13 +1700,8 @@ object VersionedTable {
     */
   def overwrite(df: DataFrame, dir: String,
       statsCols: Seq[String] = Seq.empty): Snapshot =
-    write(df, dir, "overwrite", existing(df.sparkSession, dir), statsCols,
-      overwrite = true)
-
-  /** The latest snapshot of a table a write requires to exist. */
-  private def existing(spark: SparkSession, dir: String): Option[Snapshot] =
-    Some(latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits — use create")))
+    write(df, dir, "overwrite", Some(committed(df.sparkSession, dir)),
+      statsCols, overwrite = true)
 
   /** The CHECK constraints and generation rules of `p` (none for None). */
   private def rulesOf(p: Option[Snapshot]):
@@ -1850,9 +1811,9 @@ object VersionedTable {
       p.filter(_ => !overwrite) match {
         case Some(s) =>
           commitDelta(spark, dir, s, op, files, Nil, st, schema)
-        case None => commit(spark, dir, base + 1, op, files, st, schema,
-          p.flatMap(_.tableId), constraints = constraints,
-          generatedCols = generated)
+        case None => commit(spark, dir, Snapshot(base + 1, 0L, op, files,
+          st, schema, p.flatMap(_.tableId), constraints = constraints,
+          generatedCols = generated))
       }
     } { p =>
       // a tagged retry scans only the versions committed after `prev`
@@ -2000,8 +1961,7 @@ object VersionedTable {
     require(maxAttempts >= 1, "maxAttempts must be at least 1")
     dvThreshold.foreach(t => require(t > 0.0 && t <= 1.0,
       s"densityThreshold must be in (0, 1]; got $t"))
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     // a table from before schema tracking: read the footer schema once;
     // `snap` scans and commits with it, `prev` stays as recorded
     val schema = prev.schema.getOrElse(
@@ -2447,26 +2407,13 @@ object VersionedTable {
   /** Rewrite the current contents into `targetFiles` files as a new
     * version — answer-preserving OPTIMIZE. Readers of any version,
     * including one resolving mid-compact, are untouched: no pre-existing
-    * file is modified or removed.
+    * file is modified or removed. Skipping stats go on `statsCols` plus
+    * every column the table already tracks.
     */
   def compactTable(spark: SparkSession, dir: String,
       targetFiles: Int, statsCols: Seq[String] = Seq.empty): Snapshot = {
     require(targetFiles > 0, "targetFiles must be positive")
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    val v = prev.version + 1
-    val current = readSnapshot(spark, dir, prev)
-    val (files, st) = stageWithStats(
-      current.repartition(targetFiles), dir, v, statsCols)
-    // a full rewrite lands under the CURRENT logical names, so the
-    // mapping re-spells physical = logical (ids persist); the dropped-
-    // name memory survives (old files with dropped data remain
-    // time-travelable until vacuum)
-    val schemaOut = prev.schema.map(s => selfMapped(s).json)
-      .orElse(Some(current.schema.json))
-    commit(spark, dir, v, "compact", files, st, schemaOut,
-      prev.tableId, droppedCols = prev.droppedCols,
-      constraints = prev.constraints, generatedCols = prev.generatedCols)
+    rewrite(spark, dir, "compact", statsCols)(_.repartition(targetFiles))
   }
 
   /** Answer-preserving z-order rewrite committed as a new version — the
@@ -2479,27 +2426,38 @@ object VersionedTable {
     * most files BEFORE the scan starts — the mechanism that turns a
     * 100 TB needle query into a handful of tasks. Both z-columns must
     * be double-castable (numeric); `statsCols` defaults to exactly the
-    * clustering pair.
+    * clustering pair, and every column the table already tracks keeps
+    * its stats.
     */
   def cluster(spark: SparkSession, dir: String, zCols: (String, String),
       targetFiles: Int, statsCols: Seq[String] = Seq.empty,
-      buckets: Int = 256): Snapshot = {
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    val v = prev.version + 1
-    val current = readSnapshot(spark, dir, prev)
-    val arranged = Sources.zArrange(current, zCols, targetFiles, buckets)
-    // always keep previously tracked columns prunable: an OPTIMIZE must
-    // never silently turn off skipping on a column it used to serve
-    val effStats =
-      ((if (statsCols.nonEmpty) statsCols else Seq(zCols._1, zCols._2))
-        ++ prev.stats.values.flatMap(_.cols.keys)).distinct
-    val (files, st) = stageWithStats(arranged, dir, v, effStats)
-    val schemaOut = prev.schema.map(s => selfMapped(s).json)
-      .orElse(Some(arranged.schema.json))
-    commit(spark, dir, v, "cluster", files, st, schemaOut,
-      prev.tableId, droppedCols = prev.droppedCols,
-      constraints = prev.constraints, generatedCols = prev.generatedCols)
+      buckets: Int = 256): Snapshot =
+    rewrite(spark, dir, "cluster",
+      if (statsCols.nonEmpty) statsCols else Seq(zCols._1, zCols._2))(
+      Sources.zArrange(_, zCols, targetFiles, buckets))
+
+  /** The one rewrite step of [[compactTable]] and [[cluster]]: read the
+    * latest version's live rows, `arrange` them, stage them with stats
+    * on `statsCols` plus every column the table already tracks (an
+    * OPTIMIZE must never silently turn off skipping on a column it used
+    * to serve), and commit the result as a full manifest. Deletion
+    * vectors and bloom sidecars fold away with the files they described.
+    * The rewrite lands under the CURRENT logical names, so the mapping
+    * re-spells physical = logical (ids persist); the dropped-name memory
+    * survives (old files with dropped data remain time-travelable until
+    * vacuum).
+    */
+  private def rewrite(spark: SparkSession, dir: String, op: String,
+      statsCols: Seq[String])(arrange: DataFrame => DataFrame): Snapshot = {
+    val prev = committed(spark, dir)
+    val arranged = arrange(readSnapshot(spark, dir, prev))
+    val (files, st) = stageWithStats(arranged, dir, prev.version + 1,
+      (statsCols ++ prev.stats.values.flatMap(_.cols.keys)).distinct)
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = op, files = files, stats = st,
+      schemaJson = prev.schema.map(s => selfMapped(s).json)
+        .orElse(Some(arranged.schema.json)),
+      dvFiles = Nil, dvn = Map.empty, blooms = Map.empty))
   }
 
   /** Schema of a DV sidecar dataset: deleted row positions, keyed by
@@ -2631,8 +2589,7 @@ object VersionedTable {
 
   /** The latest version's contents. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    readSnapshot(spark, dir, latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits")))
+    readSnapshot(spark, dir, committed(spark, dir))
 
   /** The latest version's rows satisfying `predicate`, with data
     * skipping: files whose manifest stats prove no row can match are
@@ -2641,11 +2598,8 @@ object VersionedTable {
     * `read(...).filter(predicate)`, strictly fewer bytes scanned.
     */
   def readWhere(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    val snap = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    DataSkipping.readPruned(spark, dir, snap, predicate)
-  }
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    DataSkipping.readPruned(spark, dir, committed(spark, dir), predicate)
 
   /** Metadata-only (lower, upper) bounds on `COUNT(*) WHERE predicate`
     * against the latest version; answers the count exactly — no scan —
@@ -2653,20 +2607,16 @@ object VersionedTable {
     * See [[DataSkipping.countBounds]].
     */
   def countBounds(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): Option[(Long, Long)] = {
-    val snap = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    DataSkipping.countBounds(spark, dir, snap, predicate)
-  }
+      predicate: org.apache.spark.sql.Column): Option[(Long, Long)] =
+    DataSkipping.countBounds(spark, dir, committed(spark, dir), predicate)
 
   /** (files kept, files pruned) for `predicate` against the latest
     * version — the observability hook for specs and scan planning.
     */
   def pruneInfo(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): (Int, Int) = {
-    val snap = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
-    val (kept, pruned) = DataSkipping.prune(spark, dir, snap, predicate)
+    val (kept, pruned) =
+      DataSkipping.prune(spark, dir, committed(spark, dir), predicate)
     (kept.size, pruned.size)
   }
 
@@ -2697,35 +2647,24 @@ object VersionedTable {
   def analyze(spark: SparkSession, dir: String,
       statsCols: Seq[String]): Snapshot = {
     require(statsCols.nonEmpty, "analyze needs at least one stats column")
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val wanted = statsCols.toSet
     val missing = prev.files.filterNot(f =>
       prev.stats.get(f).exists(fs => wanted.subsetOf(fs.cols.keySet)))
     // under a column mapping, files are read by PHYSICAL name and the
     // stat keys come back in the manifest's logical vocabulary
-    val (readSchema, physCols, back) = prev.schema match {
-      case Some(sch) if hasMapping(sch) =>
-        def physOf(c: String) = sch.fields
-          .find(_.name.equalsIgnoreCase(c)).map(physNameOf).getOrElse(c)
-        val pc = statsCols.map(physOf)
-        (Some(physSchema(sch)), pc, pc.zip(statsCols).toMap)
-      case other => (other, statsCols, Map.empty[String, String])
-    }
-    val fresh0 = DataSkipping.collectStats(spark, dir, missing, physCols,
-      readSchema) // recorded schema: evolved columns stay visible
-    val fresh = fresh0.view.mapValues(fs => DataSkipping.FileStats(
-      fs.rowCount,
-      fs.cols.map { case (k, v) => back.getOrElse(k, k) -> v })).toMap
+    val (physCols, logical) = physicalCols(prev.schema, statsCols)
+    val fresh = renameStatCols(DataSkipping.collectStats(spark, dir, missing,
+      physCols, prev.schema.map(physSchema)), // evolved columns stay visible
+      logical)
     // merge per file: keep any previously tracked columns, add the new
-    val mergedStats = prev.stats ++ fresh.map { case (f, fs) =>
-      f -> prev.stats.get(f).map(old =>
-        DataSkipping.FileStats(fs.rowCount, old.cols ++ fs.cols))
-        .getOrElse(fs)
-    }
-    commit(spark, dir, prev.version + 1, "analyze", prev.files,
-      mergedStats, prev.schemaJson, prev.tableId, prev.dvFiles, prev.dvn,
-      prev.blooms, prev.droppedCols, prev.constraints, prev.generatedCols)
+    commit(spark, dir, prev.copy(version = prev.version + 1,
+      operation = "analyze",
+      stats = prev.stats ++ fresh.map { case (f, fs) =>
+        f -> prev.stats.get(f).map(old =>
+          DataSkipping.FileStats(fs.rowCount, old.cols ++ fs.cols))
+          .getOrElse(fs)
+      }))
   }
 
   /** Backfill per-file BLOOM stats for `cols` on the CURRENT version —
@@ -2742,26 +2681,16 @@ object VersionedTable {
       fpp: Double = 0.01, maxBytes: Int = 1 << 20): Snapshot = {
     require(cols.nonEmpty, "analyzeBloom needs at least one column")
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1); got $fpp")
-    val prev = latest(spark, dir).getOrElse(
-      sys.error(s"table $dir has no commits"))
+    val prev = committed(spark, dir)
     val missing = prev.files.filterNot(f =>
       prev.blooms.get(f).exists(m =>
         cols.forall(c => m.keys.exists(_.equalsIgnoreCase(c)))))
-    // column-mapping translation, mirroring analyze()
-    val (readSchema, physCols, back) = prev.schema match {
-      case Some(sch) if hasMapping(sch) =>
-        def physOf(c: String) = sch.fields
-          .find(_.name.equalsIgnoreCase(c)).map(physNameOf).getOrElse(c)
-        val pc = cols.map(physOf)
-        (Some(physSchema(sch)), pc, pc.zip(cols).toMap)
-      case other => (other, cols, Map.empty[String, String])
-    }
-    val collected0 = BloomStats.collect(spark, dir, missing, physCols, fpp,
-      maxBytes, readSchema,
+    val (physCols, logical) = physicalCols(prev.schema, cols)
+    val collected = BloomStats.collect(spark, dir, missing, physCols, fpp,
+      maxBytes, prev.schema.map(physSchema),
       f => prev.stats.get(f).map(_.rowCount).filter(_ > 0L)
         .getOrElse(BloomStats.DefaultExpected))
-    val collected = collected0.map { case ((f, c), bytes) =>
-      (f, back.getOrElse(c, c)) -> bytes }
+      .map { case ((f, c), bytes) => (f, logical(c)) -> bytes }
     val v = prev.version + 1
     val (fs, _) = fsFor(spark, dir)
     val sub = s"data/v${v}_${java.util.UUID.randomUUID.toString.take(8)}"
@@ -2774,13 +2703,11 @@ object VersionedTable {
       try out.write(bytes) finally out.close()
       (f, c, rel)
     }
-    val merged = prev.blooms ++ refs.groupBy(_._1).map { case (f, rs) =>
-      f -> (prev.blooms.getOrElse(f, Map.empty) ++
-        rs.map(r => r._2 -> r._3).toMap)
-    }
-    commit(spark, dir, v, "analyze", prev.files, prev.stats,
-      prev.schemaJson, prev.tableId, prev.dvFiles, prev.dvn, merged,
-      prev.droppedCols, prev.constraints, prev.generatedCols)
+    commit(spark, dir, prev.copy(version = v, operation = "analyze",
+      blooms = prev.blooms ++ refs.groupBy(_._1).map { case (f, rs) =>
+        f -> (prev.blooms.getOrElse(f, Map.empty) ++
+          rs.map(r => r._2 -> r._3).toMap)
+      }))
   }
 
   /** The table's commit history, newest first — DESCRIBE HISTORY as a
@@ -3103,15 +3030,13 @@ object VersionedTable {
       sys.error(s"table $dir has no version $version"))
     val (fs, _) = fsFor(spark, dir)
     requireFilesPresent(fs, dir, target, s"restore version $version")
-    val schema = target.schemaJson.orElse(Some(
-      spark.read.option("mergeSchema", "true")
-        .parquet(target.files.map(f => resolveRef(dir, f)): _*)
-        .schema.json))
-    val latestV = all.last.version
-    commit(spark, dir, latestV + 1, "restore",
-      target.files, target.stats, schema, all.last.tableId,
-      target.dvFiles, target.dvn, target.blooms, target.droppedCols,
-      target.constraints, target.generatedCols)
+    commit(spark, dir, target.copy(version = all.last.version + 1,
+      operation = "restore",
+      schemaJson = target.schemaJson.orElse(Some(
+        spark.read.option("mergeSchema", "true")
+          .parquet(target.files.map(f => resolveRef(dir, f)): _*)
+          .schema.json)),
+      tableId = all.last.tableId))
   }
 
   /** CLONE a table (Delta's CREATE TABLE ... CLONE): `dstDir` becomes a
@@ -3174,10 +3099,10 @@ object VersionedTable {
     // clone (s3a source, local dest) would commit a manifest whose refs
     // can never resolve. Enforce the documented same-filesystem
     // contract up front instead of stranding the clone at birth.
-    val (dfs0, _) = fsFor(spark, dstDir)
-    require(sfs.getUri == dfs0.getUri,
+    val (dfs, _) = fsFor(spark, dstDir)
+    require(sfs.getUri == dfs.getUri,
       s"clone requires source and target on the same filesystem; " +
-        s"got ${sfs.getUri} vs ${dfs0.getUri}")
+        s"got ${sfs.getUri} vs ${dfs.getUri}")
     // the DV anti-join and per-file stats attribution key rows by
     // part-file BASENAME; a basename collision anywhere in the clone's
     // lineage would silently misattribute rows. Self-staged names are
@@ -3191,41 +3116,32 @@ object VersionedTable {
           bases.diff(bases.distinct).distinct.take(3).mkString(", "))
     }
     val srcAbs = sfs.makeQualified(new Path(srcDir)).toUri.getPath
-    if (shallow) {
-      def abs(f: String) = if (f.startsWith("/")) f else s"$srcAbs/$f"
-      commit(spark, dstDir, 1L, "clone",
-        target.files.map(abs),
-        target.stats.map { case (f, st) => abs(f) -> st },
-        target.schemaJson, None,
-        target.dvFiles.map(abs),
-        target.dvn.map { case (f, n) => abs(f) -> n },
-        target.blooms.map { case (f, m) =>
-          abs(f) -> m.view.mapValues(abs).toMap },
-        target.droppedCols, target.constraints, target.generatedCols)
-    } else {
-      val (dfs, _) = fsFor(spark, dstDir)
-      val conf = spark.sparkContext.hadoopConfiguration
-      def place(f: String): String =
+    // shallow: borrow every relative ref absolutely; deep: keep relative
+    // refs and land borrowed absolute ones under `data/v1_cloneabs/`
+    val ref: String => String =
+      if (shallow) f => if (f.startsWith("/")) f else s"$srcAbs/$f"
+      else f =>
         if (!f.startsWith("/")) f
         else s"data/v1_cloneabs/${f.substring(f.lastIndexOf('/') + 1)}"
+    if (!shallow) {
+      val conf = spark.sparkContext.hadoopConfiguration
       (target.files ++ target.dvFiles ++
         target.blooms.values.flatMap(_.values)).distinct.foreach { f =>
-        val to = new Path(s"$dstDir/${place(f)}")
+        val to = new Path(s"$dstDir/${ref(f)}")
         dfs.mkdirs(to.getParent)
         require(org.apache.hadoop.fs.FileUtil.copy(
           sfs, new Path(resolveRef(srcAbs, f)), dfs, to,
           false, false, conf),
           s"deep clone failed copying $f")
       }
-      commit(spark, dstDir, 1L, "clone",
-        target.files.map(place),
-        target.stats.map { case (f, st) => place(f) -> st },
-        target.schemaJson, None,
-        target.dvFiles.map(place),
-        target.dvn.map { case (f, n) => place(f) -> n },
-        target.blooms.map { case (f, m) =>
-          place(f) -> m.view.mapValues(place).toMap },
-        target.droppedCols, target.constraints, target.generatedCols)
     }
+    commit(spark, dstDir, target.copy(version = 1L, operation = "clone",
+      files = target.files.map(ref),
+      stats = target.stats.map { case (f, st) => ref(f) -> st },
+      tableId = None, // a clone is a new table: v1 mints its own id
+      dvFiles = target.dvFiles.map(ref),
+      dvn = target.dvn.map { case (f, n) => ref(f) -> n },
+      blooms = target.blooms.map { case (f, m) =>
+        ref(f) -> m.view.mapValues(ref).toMap }))
   }
 }

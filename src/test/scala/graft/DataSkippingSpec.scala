@@ -239,6 +239,22 @@ class DataSkippingSpec extends AnyFunSuite {
     assertSame(dir, col("k") < 50L)
   }
 
+  test("compact without stats columns keeps every tracked one, and so " +
+      "does a later append") {
+    val dir = tmp()
+    VersionedTable.create((0L until 100L).toDF("k").coalesce(1), dir, Seq("k"))
+    VersionedTable.append((100L until 200L).toDF("k").coalesce(1), dir)
+    VersionedTable.compactTable(spark, dir, targetFiles = 1)
+    assert(VersionedTable.pruneInfo(spark, dir, col("k") >= 1000L) ===
+      ((0, 1)))
+    VersionedTable.append((200L until 300L).toDF("k").coalesce(1), dir)
+    assert(VersionedTable.pruneInfo(spark, dir, col("k") >= 1000L) ===
+      ((0, 2)))
+    assert(VersionedTable.pruneInfo(spark, dir, col("k") >= 250L) ===
+      ((1, 1)))
+    assertSame(dir, col("k") >= 250L)
+  }
+
   test("cluster: z-order commit is answer-preserving and a 2-D box prunes") {
     val dir = tmp()
     val df = (0L until 10000L).toDF("id")

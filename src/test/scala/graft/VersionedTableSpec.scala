@@ -75,7 +75,8 @@ class VersionedTableSpec extends AnyFunSuite {
     // fail, leaving the winner's manifest untouched.
     VersionedTable.append(Seq((100L, "w")).toDF("id", "v"), dir) // winner: v2
     val e = intercept[java.io.IOException] {
-      VersionedTable.commit(spark, dir, 2L, "append", Seq("data/v2_loser/x.parquet"))
+      VersionedTable.commit(spark, dir,
+        VersionedTable.Snapshot(2L, 0L, "append", Seq("data/v2_loser/x.parquet")))
     }
     assert(e.getMessage.contains("concurrent writer"))
     // the winner's committed state is intact
@@ -258,7 +259,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val dir = tmp()
     val v1 = VersionedTable.create(Seq((1L, "a")).toDF("id", "v"), dir)
     // hand-commit a legacy manifest (no schema line) over the same files
-    VersionedTable.commit(spark, dir, 2L, "legacy", v1.files)
+    VersionedTable.commit(spark, dir,
+      VersionedTable.Snapshot(2L, 0L, "legacy", v1.files))
     assert(VersionedTable.latest(spark, dir).get.schemaJson.isEmpty)
     val snap = VersionedTable.restore(spark, dir, 2L)
     assert(snap.schemaJson.nonEmpty,
@@ -802,8 +804,8 @@ class VersionedTableSpec extends AnyFunSuite {
     var fired = false
     VersionedTable.vacuumPause = () => if (!fired) {
       fired = true
-      VersionedTable.commit(spark, dir, 5L, "restore", v1.files,
-        v1.stats, v1.schemaJson)
+      VersionedTable.commit(spark, dir, VersionedTable.Snapshot(5L, 0L,
+        "restore", v1.files, v1.stats, v1.schemaJson))
     }
     try VersionedTable.vacuum(spark, dir, retainVersions = 2)
     finally VersionedTable.vacuumPause = () => ()
@@ -1619,12 +1621,14 @@ class VersionedTableSpec extends AnyFunSuite {
     // DvRace corruption: a stale auto-rebasing writer claiming a slot
     // vacuum emptied, committing a delta on a base that is gone)
     val e = intercept[ConcurrentCommitException] {
-      VersionedTable.commit(spark, dir, 3L, "append", Seq.empty)
+      VersionedTable.commit(spark, dir,
+        VersionedTable.Snapshot(3L, 0L, "append", Seq.empty))
     }
     assert(e.getMessage.contains("cannot be claimed"), e.getMessage)
     // ...and a claim whose base was never committed (far past the head)
     val e2 = intercept[ConcurrentCommitException] {
-      VersionedTable.commit(spark, dir, 99L, "append", Seq.empty)
+      VersionedTable.commit(spark, dir,
+        VersionedTable.Snapshot(99L, 0L, "append", Seq.empty))
     }
     assert(e2.getMessage.contains("cannot be claimed"), e2.getMessage)
     assert(VersionedTable.latest(spark, dir).get.version === 6L,
@@ -1745,8 +1749,9 @@ class VersionedTableSpec extends AnyFunSuite {
       val dir = tmp()
       val v1 = VersionedTable.create((1L to 20L).map(i => (i, s"v$i"))
         .toDF("id", "v").coalesce(1), dir)
-      VersionedTable.commit(spark, dir, 2L, "legacy", v1.files,
-        schemaJson = if (tracked) v1.schemaJson else None)
+      VersionedTable.commit(spark, dir, VersionedTable.Snapshot(2L, 0L,
+        "legacy", v1.files,
+        schemaJson = if (tracked) v1.schemaJson else None))
       assert(VersionedTable.latest(spark, dir).get.schemaJson.isEmpty ===
         !tracked)
       dir
@@ -1863,8 +1868,9 @@ class VersionedTableSpec extends AnyFunSuite {
         dir)
       // a hand-committed constraint the live rows violate (the public
       // addCheckConstraint would refuse it)
-      VersionedTable.commit(spark, dir, 2L, "legacy", v1.files, v1.stats,
-        v1.schemaJson, constraints = Map("pos" -> "price > 0"))
+      VersionedTable.commit(spark, dir, VersionedTable.Snapshot(2L, 0L,
+        "legacy", v1.files, v1.stats, v1.schemaJson,
+        constraints = Map("pos" -> "price > 0")))
       intercept[graft.sources.ConstraintViolationException] {
         if (dv) VersionedTable.deleteWithDv(spark, dir, col("id") <= 3L,
           densityThreshold = 0.1) // 30% dead: the file rewrites
@@ -1917,9 +1923,10 @@ class VersionedTableSpec extends AnyFunSuite {
       // table from before schema tracking has
       if (seed == 3) {
         val p = VersionedTable.latest(spark, base).get
-        VersionedTable.commit(spark, base, p.version + 1, "legacy", p.files,
-          p.stats, schemaJson = None, tableId = p.tableId,
-          constraints = p.constraints, generatedCols = p.generatedCols)
+        VersionedTable.commit(spark, base, VersionedTable.Snapshot(
+          p.version + 1, 0L, "legacy", p.files, p.stats, schemaJson = None,
+          tableId = p.tableId, constraints = p.constraints,
+          generatedCols = p.generatedCols))
       }
       val batch = (1 to 1 + rnd.nextInt(30))
         .map(i => ((top + i).toLong, s"b$i", rnd.nextInt(7)))

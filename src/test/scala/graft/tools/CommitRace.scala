@@ -388,8 +388,7 @@ object RaceWriter {
           ev("event" -> "conflict", "writer" -> wid, "iter" -> i,
             "kind" -> e.getClass.getSimpleName)
         case e: Throwable =>
-          ev("event" -> "error", "writer" -> wid, "iter" -> i,
-            "kind" -> e.getClass.getSimpleName)
+          log.println(Race.errorLine("error", e, "writer" -> wid, "iter" -> i))
           rc = 1
       }
     }
@@ -434,7 +433,7 @@ object RaceReader {
       } catch {
         case e: Throwable =>
           violations += 1
-          log.println(s"""{"event":"violation","kind":"${e.getClass.getSimpleName}"}""")
+          log.println(Race.errorLine("violation", e))
       }
       Thread.sleep(150)
     }

@@ -321,7 +321,7 @@ object DvReader {
       } catch {
         case e: Throwable =>
           violations += 1
-          log.println(s"""{"event":"violation","kind":"${e.getClass.getSimpleName}"}""")
+          log.println(Race.errorLine("violation", e))
       }
       i += 1
       Thread.sleep(150)

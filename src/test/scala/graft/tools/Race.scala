@@ -99,11 +99,16 @@ object Race {
   def logWriter(path: String): PrintWriter =
     new PrintWriter(new FileWriter(path, true), true)
 
-  /** One log line recording `e` as an `event` record. */
-  def errorLine(event: String, e: Throwable): String = {
+  /** One log line recording `e` as an `event` record, `fields` (the
+    * failing child's own keys) between the event and the cause.
+    */
+  def errorLine(event: String, e: Throwable, fields: (String, Any)*):
+      String = {
     val msg = String.valueOf(e.getMessage).take(160)
       .replaceAll("[\"\\\\\n]", " ")
-    s"""{"event":"$event","kind":"${e.getClass.getSimpleName}","msg":"$msg"}"""
+    (s""""event":"$event"""" +: fields.map { case (k, v) => s""""$k":"$v"""" }
+      :+ s""""kind":"${e.getClass.getSimpleName}","msg":"$msg"""")
+      .mkString("{", ",", "}")
   }
 
   def readLog(p: Path): Seq[Map[String, String]] =

@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The race kit's own contract: a missed [[Race.await]] deadline is one
-  * recorded failure, a met one prints nothing, and [[Race.spawn]]
-  * forwards its extra JVM flags. Starts no Spark.
+  * recorded failure, a met one prints nothing, [[Race.errorLine]] keeps
+  * a failure's cause readable, and [[Race.spawn]] forwards its extra JVM
+  * flags. Starts no Spark.
   */
 class RaceKitSpec extends AnyFunSuite {
 
@@ -37,6 +38,16 @@ class RaceKitSpec extends AnyFunSuite {
       })
     }
     assert(failures == 0 && lines.isEmpty, lines)
+  }
+
+  test("an error line carries the child's fields and the cause's message") {
+    val log = Files.createTempFile("graft-racekit", ".jsonl")
+    Files.writeString(log, Race.errorLine("error",
+      new IllegalStateException("file data/x.parquet vanished"),
+      "writer" -> 2, "iter" -> 7) + "\n")
+    assert(Race.events(log, "error") == Seq(Map("event" -> "error",
+      "writer" -> "2", "iter" -> "7", "kind" -> "IllegalStateException",
+      "msg" -> "file data/x.parquet vanished")))
   }
 
   test("spawn forwards its extra JVM flags") {
