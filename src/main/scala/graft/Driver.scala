@@ -5,6 +5,11 @@ import org.apache.spark.sql.{DataFrame, Row}
 /** Driver-side collects, bounded by construction. */
 object Driver {
 
+  /** The row cap of the program's driver collects: far above any top-k
+    * list or gold view result, far below what strains the driver's heap.
+    */
+  val MaxRows = 100000
+
   /** All rows of `df`, which must hold at most `cap`: fetches `cap + 1`
     * rows and fails loudly, naming `what`, when the extra one arrives.
     */

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Driver
+
 /** Lexical relevance scoring — BM25 of every document against a fixed
   * bag of query terms (reference has no search operator; this is part of
   * the LLM-data extension surface: corpus triage, query-based subset
@@ -133,6 +135,7 @@ object Relevance {
   def topKRanked(scored: DataFrame, scoreCol: String, idCol: String,
       k: Int): DataFrame = {
     require(k > 0, "topKRanked needs k > 0")
+    require(k <= Driver.MaxRows, s"topKRanked needs k <= ${Driver.MaxRows}")
     val order = Seq(col(scoreCol).desc, col(idCol).asc)
     // the k winners come back from the distributed TakeOrdered in rank
     // order — assign `rnk` DRIVER-SIDE over that bounded collect (≤ k
@@ -140,8 +143,8 @@ object Relevance {
     // (bounded here, but an unpartitioned-window shape that logs the
     // 100 TB funnel warning on every execution)
     val spark = scored.sparkSession
-    val rows = scored.orderBy(order: _*).limit(k)
-      .select(col(idCol)).collect()
+    val rows = Driver.collectBounded(scored.orderBy(order: _*).limit(k)
+      .select(col(idCol)), Driver.MaxRows, "topKRanked winners")
     val ranked = rows.toSeq.zipWithIndex.map { case (r, i) =>
       org.apache.spark.sql.Row(r.get(0), i + 1)
     }
@@ -151,8 +154,6 @@ object Relevance {
     spark.createDataFrame(ranked.asJava, StructType(Seq(idField,
       StructField("rnk", IntegerType, nullable = false))))
   }
-
-  private val MaxFusedRows = 100000 // far above any Σkᵢ of real top-k lists
 
   /** Reciprocal-rank fusion of N top-k rankings (the standard hybrid
     * lexical+vector search combiner): each list contributes
@@ -165,7 +166,7 @@ object Relevance {
     * (≤ Σkᵢ rows reach the fusion); never feed a whole-corpus ranking
     * through this. The operator is EAGER, not lazy: the call itself runs
     * the joins and collects the fused list to assign `fused_rank` on the
-    * driver, and fails loudly if that list exceeds `MaxFusedRows`.
+    * driver, and fails loudly if that list exceeds `Driver.MaxRows`.
     */
   def rrf(rankings: Seq[DataFrame], idCol: String, rankCol: String,
       k: Int = 60): DataFrame = {
@@ -187,8 +188,8 @@ object Relevance {
       .withColumn("n_lists", nLists)
       .select(col(idCol), col("n_lists"), col("rrf_score"))
     val spark = fused.sparkSession
-    val rows = graft.Driver.collectBounded(
-      fused.orderBy(col("rrf_score").desc, col(idCol).asc), MaxFusedRows, "rrf fused list")
+    val rows = Driver.collectBounded(
+      fused.orderBy(col("rrf_score").desc, col(idCol).asc), Driver.MaxRows, "rrf fused list")
     val out = rows.toSeq.zipWithIndex.map { case (r, i) =>
       org.apache.spark.sql.Row(r.get(0), r.get(1), r.get(2), (i + 1).toLong)
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Driver
 import graft.dedup.MinHashDedup
 import graft.functions.TextFunctions
 
@@ -335,6 +336,7 @@ object CorpusPipeline {
     */
   def vocabulary(docs: DataFrame, textCol: String, topK: Int): DataFrame = {
     require(topK > 0, "topK must be positive")
+    require(topK <= Driver.MaxRows, s"topK must be at most ${Driver.MaxRows}")
     val top = docs
       .select(explode(TextFunctions.tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("freq"))
@@ -351,7 +353,8 @@ object CorpusPipeline {
     // replays the window exactly (LONG running sum, then one double
     // division per row).
     val spark = docs.sparkSession
-    val winners = top.collect() // ordered: TakeOrdered output
+    // ordered: TakeOrdered output
+    val winners = Driver.collectBounded(top, Driver.MaxRows, "vocabulary top-K")
     val totalTok = total.collect().head.getAs[java.lang.Double](0)
     var cum = 0L
     val ranked = winners.toSeq.zipWithIndex.map { case (r, i) =>

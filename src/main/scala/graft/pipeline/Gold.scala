@@ -4,11 +4,19 @@ import java.lang.ref.WeakReference
 import java.util.{Collections, WeakHashMap}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.TemporaryViewRelation
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.GraftInternal
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.Driver
 import graft.operators.{Aggregates, Rankings}
 
 /** Gold analytic view layer (reference: notebooks/gold.py — 8 views over
@@ -27,9 +35,10 @@ import graft.operators.{Aggregates, Rankings}
   * totals 4). The source view's filters push down into the silver scan
   * (partition pruning on Year). `registerAll` analyses the ten views once
   * per silver snapshot: a call over unchanged silver input files registers
-  * nothing. Its eight aggregate views keep their results: the first read
-  * of a view per snapshot runs the builder's jobs and keeps the result,
-  * and every later read is one job that scans it.
+  * nothing. Its eight aggregate views hold their results on the driver:
+  * the first read of a view per snapshot collects the builder (at most
+  * `Driver.MaxRows` rows), and every later `SELECT *` is answered on the
+  * driver with no Spark job.
   */
 object Gold {
 
@@ -193,20 +202,17 @@ object Gold {
     * file, an in-memory silver, a new session (a fresh process), or any
     * view dropped or replaced since, registers all ten again.
     *
-    * The eight aggregate views are registered over lazily persisted
-    * results (`MEMORY_AND_DISK`): registering launches no job, the first
-    * read of a view materializes its result and later reads scan it. Each
-    * result is keyed by Year × type × {breed, FSA, FSA2, day}, so its size
-    * follows key cardinality, not silver rows; the row-level silver and
-    * source views are never cached. Spark's storage pool caps the memory
-    * and spills the rest to local disk. A session holds at most these
-    * eight entries: registering again releases each view's old entry
-    * before caching the new one, and Spark releases the entry of a view
-    * dropped or replaced by name. Caching plans each view when it is
-    * registered (in a cloned session with adaptive execution off), so a
-    * call over a new snapshot costs more than before, and a fresh-process
-    * retry, which reads each view at most once, pays that and gains
-    * nothing.
+    * The eight aggregate views are registered over their results held
+    * on the driver (see [[Held]]): registering launches no job, the first
+    * read of a view collects its builder once, and every later `SELECT *`
+    * is a local scan that launches no job; SQL that filters or projects
+    * runs one small job over the held rows. Each result is keyed by
+    * Year × type × {breed, FSA, FSA2, day}, so its size follows key
+    * cardinality, not silver rows, and a collect past `Driver.MaxRows` rows
+    * fails the read. Nothing is persisted: the rows live as long as the
+    * temp view that reads them, so a session holds at most eight such
+    * results, and a view dropped or replaced lets its rows go. The
+    * row-level silver and source views stay plain.
     */
   def registerAll(silver: DataFrame): Unit = {
     val spark = silver.sparkSession
@@ -226,45 +232,52 @@ object Gold {
     val s = src(silver)
     silver.createOrReplaceTempView("licensed_pets_silver")
     s.createOrReplaceTempView("licensed_pets_gold_src")
-    cached(totalsByYearType(s), "v_totals_by_year_type")
-    cached(breedStats(s), "v_breed_stats")
-    cached(fsaTop3Breeds(s), "v_fsa_top3_breeds")
-    cached(fsa2Top3Breeds(s), "v_fsa2_top3_breeds")
-    cached(quality(silver), "licensed_pets_gold_quality")
-    cached(dailyTotals(s), "v_daily_totals")
-    cached(breedShareCitywide(s), "v_breed_share_citywide")
-    cached(breedRankCitywide(s), "v_breed_rank_citywide")
+    held(totalsByYearType(s), "v_totals_by_year_type")
+    held(breedStats(s), "v_breed_stats")
+    held(fsaTop3Breeds(s), "v_fsa_top3_breeds")
+    held(fsa2Top3Breeds(s), "v_fsa2_top3_breeds")
+    held(quality(silver), "licensed_pets_gold_quality")
+    held(dailyTotals(s), "v_daily_totals")
+    held(breedShareCitywide(s), "v_breed_share_citywide")
+    held(breedRankCitywide(s), "v_breed_rank_citywide")
     registered.put(spark, Registered(files, timeZone,
       viewNames.map(n => new WeakReference(catalog.getRawTempView(n).get))))
   }
 
-  /** Release the results `registerAll` keeps in `spark` and forget what
-    * it registered there, so its next call registers again. Silver calls
-    * this once its ledger probe misses: an append to the silver directory
-    * re-plans every cached plan that reads it, and the next registration
-    * would drop those entries anyway. A view dropped or replaced since is
-    * left alone; Spark released its entry then.
+  /** Register `view` as `name` over its result held on the driver. */
+  private def held(view: DataFrame, name: String): Unit =
+    new Held(name, view, Driver.MaxRows).frame.createOrReplaceTempView(name)
+
+  /** A gold view's result, held on the driver for the views registered
+    * over one silver snapshot. Its scan is a `LocalScan`, which Spark plans
+    * as a `LocalTableScanExec`, so a read is answered from the held rows.
+    * The first read collects `view` through `Driver.collectBounded` with
+    * `cap`, naming the view, and keeps the rows as compact `UnsafeRow`
+    * copies; a read that fails leaves nothing held, so the next one
+    * collects again.
     */
-  private[pipeline] def release(spark: SparkSession): Unit =
-    Option(registered.remove(spark)).foreach { r =>
-      val catalog = spark.sessionState.catalog
-      // the eight aggregates, after silver and the source view
-      viewNames.zip(r.views).drop(2).foreach { case (name, view) =>
-        if (catalog.getRawTempView(name).exists(_ eq view.get)) spark.catalog.uncacheTable(name)
-      }
+  private[pipeline] final class Held(viewName: String, view: DataFrame, cap: Int)
+      extends Table with SupportsRead {
+    private val readSchema = view.schema
+    private lazy val rows: Array[InternalRow] = {
+      val toRow = ExpressionEncoder(readSchema, true).createSerializer()
+      Driver.collectBounded(view, cap, s"gold view $viewName").map(toRow(_).copy())
     }
 
-  /** Register `view` as `name` over a lazily persisted result: the first
-    * read materializes it, later reads scan it. Replacing a view with a
-    * plan of another result already drops the old entry, as the entry is
-    * cached by view name; one with the same result is dropped here. Over
-    * the same directory such an entry may hold an older snapshot's rows,
-    * as `InMemoryFileIndex` equality compares root paths only.
-    */
-  private def cached(view: DataFrame, name: String): Unit = {
-    val catalog = view.sparkSession.catalog
-    view.createOrReplaceTempView(name)
-    catalog.uncacheTable(name)
-    catalog.cacheTable(name, StorageLevel.MEMORY_AND_DISK)
+    override def name(): String = viewName
+    override def schema(): StructType = readSchema
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+      new ScanBuilder {
+        override def build(): Scan = new LocalScan {
+          override def readSchema(): StructType = Held.this.readSchema
+          override def rows(): Array[InternalRow] = Held.this.rows
+        }
+      }
+
+    /** A DataFrame that reads this table. */
+    def frame: DataFrame = GraftInternal.ofPlan(view.sparkSession,
+      DataSourceV2Relation.create(this, None, None))
   }
 }

@@ -78,11 +78,10 @@ object Orchestrator {
     * schema-inferring read of silver. The bronze and silver ledger probes
     * are directory listings, the breed dim is not built, and gold's views
     * are already registered over that silver snapshot, so nothing is
-    * re-analysed and the results they keep stay. A day whose silver
-    * ledger probe misses releases the eight results gold kept before it
-    * appends; registering the views over the new snapshot then launches
-    * no job and plans the new results, which the first read of each view
-    * materializes.
+    * re-analysed and the results they hold on the driver stay. After a
+    * day that appends to silver, registering the views over the new
+    * snapshot launches no job, and the first read of each view collects
+    * its new result.
     */
   def runAll(spark: SparkSession, cfg: Model.PipelineConfig,
       mapping: Option[DataFrame] = None,

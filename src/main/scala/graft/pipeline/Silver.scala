@@ -24,8 +24,7 @@ import Model._
   * with a silver ledger row is skipped before any read, so its re-run launches
   * no Spark job. A day without one (an empty batch, or a run that failed
   * after its append) goes through the guards again, and the anti-join
-  * keeps that re-run from landing any row twice. Such a day first releases
-  * the results gold's views keep, so its append re-plans no cached plan.
+  * keeps that re-run from landing any row twice.
   */
 object Silver {
 
@@ -49,7 +48,6 @@ object Silver {
     // ledger probe: a day that already landed rows is a no-op
     if (LoadControl.alreadyLoaded(spark, cfg.controlDir, Dataset, cfg.ingestionDate))
       return SkippedEmptyBatch
-    Gold.release(spark)
 
     val bronze = spark.read.schema(bronzeSchema).parquet(cfg.bronzeDir)
       .filter(col("ingestion_date") === to_date(lit(cfg.ingestionDate)))

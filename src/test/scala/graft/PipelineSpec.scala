@@ -318,8 +318,8 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  /** Each cached gold view with its builder over a silver DataFrame. */
-  private val cachedViews: Seq[(String, DataFrame => DataFrame)] = Seq(
+  /** Each held gold view with its builder over a silver DataFrame. */
+  private val heldViews: Seq[(String, DataFrame => DataFrame)] = Seq(
     "v_totals_by_year_type" -> (s => Gold.totalsByYearType(Gold.src(s))),
     "v_breed_stats" -> (s => Gold.breedStats(Gold.src(s))),
     "v_fsa_top3_breeds" -> (s => Gold.fsaTop3Breeds(Gold.src(s))),
@@ -351,14 +351,14 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  /** Whether each cached view answers what its builder answers over a
-    * copy of `silverDir` (another root path, so no cache entry matches),
-    * both ways under `exceptAll`, with an equal schema.
+  /** Whether each held view answers what its builder answers over a
+    * copy of `silverDir`, a silver no registration reads, both ways under
+    * `exceptAll`, with an equal schema.
     */
   private def assertViewsMatchBuilders(silverDir: String, copyDir: String): Unit = {
     copyParquet(silverDir, copyDir)
     val copy = spark.read.parquet(copyDir)
-    cachedViews.foreach { case (name, build) =>
+    heldViews.foreach { case (name, build) =>
       val got = spark.table(name)
       val want = build(copy)
       assert(got.schema == want.schema, name)
@@ -383,17 +383,61 @@ class PipelineSpec extends AnyFunSuite {
       .map(_.cachedRepresentation.cacheBuilder.tableName.getOrElse("<unnamed>"))
   }
 
-  test("a second read of each cached gold view launches one Spark job") {
+  test("a second read of each gold view launches no Spark job") {
     withPipelineDirs { (_, cfg) =>
       writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
       Bronze.run(spark, cfg)
       Silver.run(spark, cfg, mapping(spark))
       val silver = spark.read.parquet(cfg.silverDir)
       assert(jobs(Gold.registerAll(silver)) == 0)
-      cachedViews.foreach { case (name, _) =>
+      heldViews.foreach { case (name, _) =>
         spark.table(name).collect()
-        assert(jobs(spark.table(name).collect()) == 1, name)
+        assert(jobs(spark.table(name).collect()) == 0, name)
       }
+    }
+  }
+
+  test("the first read of each gold view over a new snapshot launches no more jobs " +
+    "than collecting its builder") {
+    withPipelineDirs { (_, cfg) =>
+      loadDays(cfg, 2)
+      val silver = spark.read.parquet(cfg.silverDir)
+      heldViews.foreach { case (name, build) =>
+        val direct = jobs(build(silver).collect())
+        val first = jobs(spark.table(name).collect())
+        assert(first <= direct, s"$name: $first jobs, its builder $direct")
+      }
+    }
+  }
+
+  test("a first gold read that fails is retried by the next read, never answered empty") {
+    withPipelineDirs { (root, cfg) =>
+      loadDays(cfg, 2)
+      // no view has been read over this snapshot yet
+      val silverFile = Files.walk(Path.of(cfg.silverDir)).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSeq.head
+      val aside = root.resolve("aside.parquet")
+      Files.move(silverFile, aside)
+      (1 to 2).foreach(_ => intercept[Exception](spark.table("v_daily_totals").collect()))
+      Files.move(aside, silverFile)
+      val got = spark.table("v_daily_totals").collect().toSeq
+      assert(got.map(_.getLong(2)).sum == 2, got)
+    }
+  }
+
+  test("two sessions over one silver directory each answer their own snapshot") {
+    withPipelineDirs { (_, cfg) =>
+      loadDays(cfg, 1)
+      val other = spark.newSession()
+      Gold.registerAll(other.read.parquet(cfg.silverDir))
+      def total(s: org.apache.spark.sql.SparkSession) =
+        s.sql("SELECT SUM(total) FROM v_daily_totals").first().getLong(0)
+      assert((total(spark), total(other)) == ((1L, 1L)))
+      // `spark` appends a day and registers over it; `other` keeps its own
+      loadDays(cfg.copy(ingestionDate = "2025-06-02"), 1, firstId = 2)
+      assert((total(spark), total(other)) == ((2L, 1L)))
+      Gold.registerAll(other.read.parquet(cfg.silverDir))
+      assert((total(spark), total(other)) == ((2L, 2L)))
     }
   }
 
@@ -402,46 +446,51 @@ class PipelineSpec extends AnyFunSuite {
       writeRawCsv(cfg.rawDir, cfg.ingestionDate, day1Rows)
       assert(Orchestrator.runAll(spark, cfg, Some(mapping(spark)), _ => ()).succeeded)
       loadDays(cfg.copy(ingestionDate = "2025-06-02"), 2, firstId = 6)
-      cachedViews.foreach { case (name, _) => spark.table(name).collect() }
+      heldViews.foreach { case (name, _) => spark.table(name).collect() }
       assertViewsMatchBuilders(cfg.silverDir, s"$root/copy")
       val days = spark.table("v_daily_totals").collect().map(_.getDate(0).toString).toSeq
       assert(days.distinct.size == 3 && days == days.sorted, days)
     }
   }
 
-  test("gold holds eight cache entries over successive snapshots and silver directories") {
+  test("gold caches and persists nothing across snapshots and silver directories") {
     withPipelineDirs { (root, cfg) =>
-      val gold = cachedViews.map(_._1).sorted
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      def assertNothingKept(when: String): Unit = {
+        assert(cachedUnder(root).isEmpty, when)
+        assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, when)
+      }
+      def readAll(): Unit = heldViews.foreach { case (name, _) => spark.table(name).collect() }
       (1 to 3).foreach { day =>
         loadDays(cfg.copy(ingestionDate = s"2025-06-0$day"), 1, firstId = day)
-        cachedViews.foreach { case (name, _) => spark.table(name).collect() }
-        assert(cachedUnder(root).sorted == gold, s"after day $day")
+        readAll()
+        assertNothingKept(s"after day $day")
       }
-      // a silver run that may append releases them first
       val day4 = cfg.copy(ingestionDate = "2025-06-04",
         now = Timestamp.valueOf("2025-06-04 10:00:41"))
       writeRawCsv(cfg.rawDir, day4.ingestionDate, Seq("4,2024,M4V,DOG,MIX"))
       assert(Bronze.run(spark, day4) == Bronze.Loaded(1))
       assert(Silver.run(spark, day4, mapping(spark)) == Silver.Loaded(1))
-      assert(cachedUnder(root).isEmpty)
+      assertNothingKept("after a silver run")
       Gold.registerAll(spark.read.parquet(cfg.silverDir))
-      assert(cachedUnder(root).sorted == gold)
+      readAll()
+      assertNothingKept("after day 4")
       val silver2 = s"$root/silver2"
       copyParquet(cfg.silverDir, silver2)
       Gold.registerAll(spark.read.parquet(silver2))
-      assert(cachedUnder(root).sorted == gold)
-      assert(cachedUnder(Path.of(silver2)).sorted == gold)
+      readAll()
+      assertNothingKept("over a second silver directory")
 
       spark.catalog.dropTempView("v_breed_stats")
       spark.range(1).createOrReplaceTempView("v_daily_totals")
-      assert(cachedUnder(root).sorted == gold.diff(Seq("v_breed_stats", "v_daily_totals")))
+      assertNothingKept("after a dropped and a replaced view")
     }
   }
 
   test("registerAll over a silver that another process appended to answers the new rows") {
     withPipelineDirs { (root, cfg) =>
       loadDays(cfg, 2)
-      cachedViews.foreach { case (name, _) => spark.table(name).collect() }
+      heldViews.foreach { case (name, _) => spark.table(name).collect() }
       // another writer's silver day, copied in past this session's writers
       val other = cfg.copy(rawDir = s"$root/raw2", bronzeDir = s"$root/bronze2",
         silverDir = s"$root/silver2", controlDir = s"$root/control2",
